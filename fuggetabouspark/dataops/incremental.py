@@ -32,6 +32,19 @@ intra-shard first-occurrence), one broadcast probe map, one
 broadcast-semi-join against the ledger restricted to candidate fps,
 zero joins against corpus text. State grows O(retained docs) in the
 ledger and O(1) in the sketch.
+
+Commit shape per ingest: the two shard-sized artifacts (the ledger
+rows and, in the guard, the clean output) are Spark writes. The small
+ones — the shard's membership-sketch delta row, its lineage row and
+compaction's shard=-1 row — are committed FROM THE DRIVER by one
+helper (_commit_row): pyarrow writes the row under a '_'-prefixed
+temp name, and an atomic ``os.replace`` publishes it. The sketch
+delta itself is one mapInArrow pass of the library's update kernel
+over the survivors as they are partitioned, merged on the driver; no
+one-row Spark write and no merge stage pays Python-worker start-up.
+Reads of the same artifacts are driver-side pyarrow too
+(_pa_read_table), so lineage, state loads and compaction run no Spark
+job at all.
 """
 
 from __future__ import annotations
@@ -119,6 +132,100 @@ def _pa_read_table(path: str, columns=None):
     return ds.dataset(path, format="parquet").to_table(columns=columns)
 
 
+# pyarrow types of the driver-committed artifacts' columns: the state
+# row (spec, group, payload, n_items, shard) and the lineage row
+# (shard, meta) — the types Spark's writer gives the same DDL
+_ARTIFACT_TYPES = {
+    "spec": "string", "group": "string", "payload": "binary",
+    "n_items": "int64", "shard": "int32", "meta": "string",
+}
+
+
+def _commit_row(path: str, **row) -> None:
+    """Append ONE row to the parquet directory ``path`` from the driver
+    — the single commit path of every small checkpoint artifact the
+    incremental families write (state rows, lineage rows, compaction's
+    shard=-1 row). A one-row ``createDataFrame(...).write`` is a
+    Python-RDD job of several Python tasks, each paying the worker's
+    fixed start-up cost before it touches its single row; pyarrow
+    writes the same row in-process with no Spark job at all.
+
+    The file is written under a '_'-prefixed name and then
+    ``os.replace``d to its final name: the rename is atomic, and both
+    pyarrow.dataset and Spark's reader skip '_' files, so a crash
+    between write and rename leaves an invisible temp file, never a
+    torn part. Column order follows ``row``; types follow
+    _ARTIFACT_TYPES, so driver- and Spark-written parts of one
+    directory read back under one schema."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.table({
+        k: pa.array([v], type=getattr(pa, _ARTIFACT_TYPES[k])())
+        for k, v in row.items()
+    })
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, "_" + name)
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))
+
+
+def _append_state_row(state_path: str, spec: str, sk, shard: int) -> None:
+    """The shard's membership-sketch row (group '' — the incremental
+    families never group their state)."""
+    _commit_row(
+        state_path, spec=spec, group="", payload=sk.to_bytes(),
+        n_items=int(sk.n_items), shard=int(shard),
+    )
+
+
+def _write_lineage(lineage_path: str, meta: dict) -> None:
+    """The shard's lineage row — the family's commit marker, always
+    its LAST write."""
+    _commit_row(
+        lineage_path, shard=int(meta["shard"]),
+        meta=json.dumps(meta, sort_keys=True),
+    )
+
+
+def _commit_sketch_delta(
+    state_path: str, frame: DataFrame, key, tick, name: str, params,
+    shard: int, partitions: int | None,
+) -> None:
+    """Fold ``frame``'s ``key`` column (one 64-bit key per row, at
+    ``tick``) into a TBF/STBF delta and append it as the shard's state
+    row. The partials come from the library's own update kernel
+    (pipeline.make_update_fn) run over the frame AS IT IS partitioned —
+    no repartition, no applyInPandas merge stage — and are merged on
+    the driver with merge_rows_to_sketches, as the corpus build does.
+    Merges are byte-order-invariant monoid merges and n_items counts
+    raw items, so a TBF delta's bytes do not depend on the partitioning
+    (an STBF's inner-tier counters are batching-dependent by
+    construction, as in every build).
+
+    ``partitions`` caps the partials collected to the driver
+    (``coalesce``, which does not shuffle): driver memory for the
+    delta is at most ``partitions`` × payload. An empty frame commits
+    no row — a shard that retained nothing adds nothing to the sketch."""
+    from ..params import ScalingParams
+    from ..pipeline import PARTIAL_DDL, SketchSpec, make_update_fn, merge_rows_to_sketches
+
+    kind = "stbf" if isinstance(params, ScalingParams) else "tbf"
+    spec = SketchSpec(name, kind, params, value="tokens")
+    rows = frame.select(F.array(key).alias("tokens"), tick.cast("long").alias("tick"))
+    if partitions is not None:
+        rows = rows.coalesce(int(partitions))
+    partials = rows.mapInArrow(
+        make_update_fn([spec], (), 1), schema=PARTIAL_DDL
+    ).collect()
+    sk = merge_rows_to_sketches(partials).get((name, ""))
+    if sk is not None:
+        _append_state_row(state_path, name, sk, shard)
+
+
 def _completed_metas(spark, lineage_path: str) -> list[dict]:
     """Lineage metadata of completed shards at ``lineage_path``, in
     shard order — shared by all three incremental operators
@@ -142,21 +249,26 @@ def _load_sketch_state(spark, state_path: str, done: list[int], spec: str,
     exactly ONE row contributed, the merged sketch IS that row's
     payload, and the probe path can broadcast the stored bytes as-is
     instead of paying a zlib re-compress of the full bucket array
-    (round 6; post-compaction steady state is exactly one row)."""
+    (round 6; post-compaction steady state is exactly one row).
+
+    Only UNGROUPED rows (``group == ''``) are merged: every incremental
+    writer commits group '' (_append_state_row), and a grouped row in
+    the same directory is a different sketch that must not be folded
+    into the membership state."""
     from ..sketches import sketch_from_bytes
 
     if not os.path.exists(state_path) and os.path.exists(state_path + "_old"):
         state_path = state_path + "_old"
     if not done or not os.path.exists(state_path):
         return (None, None) if with_raw else None
-    tbl = _pa_read_table(state_path, columns=["spec", "payload", "shard"])
+    tbl = _pa_read_table(state_path, columns=["spec", "group", "payload", "shard"])
     ok = set(done) | {-1}
     payloads = [
-        p.as_py()
-        for s, p, sh in zip(
-            tbl.column("spec"), tbl.column("payload"), tbl.column("shard")
-        )
-        if s.as_py() == spec and sh.as_py() in ok
+        p
+        for s, g, p, sh in zip(*(
+            tbl.column(c).to_pylist() for c in ("spec", "group", "payload", "shard")
+        ))
+        if s == spec and g == "" and sh in ok
     ]
     if not payloads:
         return (None, None) if with_raw else None
@@ -227,23 +339,18 @@ def compact_dedup_checkpoint(spark, checkpoint_dir: str):
     checkpoint is empty)."""
     state_path, _, _ = _paths(checkpoint_dir)
     return _compact_sketch_state(
-        spark, state_path, load_dedup_state(spark, checkpoint_dir), DEDUP_SPEC
+        state_path, load_dedup_state(spark, checkpoint_dir), DEDUP_SPEC
     )
 
 
-def _compact_sketch_state(spark, state_path: str, sk, spec: str):
-    """Shared body of the exact/near compactors: fold the merged
-    sketch into ONE always-valid shard=-1 row via the _swap_dir crash
+def _compact_sketch_state(state_path: str, sk, spec: str):
+    """Shared body of the four compactors: fold the merged sketch into
+    ONE always-valid shard=-1 row, written from the driver
+    (_append_state_row — no Spark job), via the _swap_dir crash
     protocol."""
     if sk is None:
         return None
-    _swap_dir(
-        lambda tmp: spark.createDataFrame(
-            [(spec, "", bytearray(sk.to_bytes()), int(sk.n_items), -1)],
-            "spec string, group string, payload binary, n_items long, shard int",
-        ).coalesce(1).write.mode("overwrite").parquet(tmp),
-        state_path,
-    )
+    _swap_dir(lambda tmp: _append_state_row(tmp, spec, sk, -1), state_path)
     return sk
 
 
@@ -482,13 +589,14 @@ def incremental_dedup(
     expected shard count via params.max_fill_factor yourself.
     ``window`` narrows the query window below the sketch's configured
     ``window_ticks`` (never above — queries._with_window semantics).
-    """
-    from ..params import ScalingParams, TimingParams
-    from ..pipeline import SketchSpec, build_sketches
+    ``partitions`` caps the sketch-delta partials the state commit
+    collects to the driver (``coalesce``, no shuffle): driver memory
+    for the delta is at most ``partitions`` × payload; None keeps the
+    survivor frame's own partitioning (_commit_sketch_delta)."""
+    from ..params import TimingParams
 
     if params is None:
         params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    kind = "stbf" if isinstance(params, ScalingParams) else "tbf"
     state_path, ledger_path, lineage_path = _paths(checkpoint_dir)
 
     # one scan of the shard text: the annotated plan references the fp
@@ -515,31 +623,19 @@ def incremental_dedup(
     if update_state:
         shard = len(completed_shards(spark, checkpoint_dir))
         survivors = ann.where(~F.col("is_dup_history") & ~F.col("is_dup_intra"))
-        # membership build over the survivors' fps, through the SAME
-        # partial/merge machinery as every other sketch build (tokens
-        # stream = [fp]; per-batch dedup keeps max tick, which for
-        # distinct fps is THE tick)
-        shaped = survivors.select(
-            "doc_id",
-            F.array("fp").alias("tokens"),
-            F.lit(1).alias("n_tok"),
-            "tick",
-        )
-        spec = SketchSpec(DEDUP_SPEC, kind, params, value="tokens")
-        built = build_sketches(
-            shaped, [spec], group_cols=(), tick_col=F.col("tick"),
-            partitions=partitions,
-        ).where(F.col("spec") == DEDUP_SPEC)
-        # durability order mirrors state.build_resumable: sketch rows
+        # durability order mirrors state.build_resumable: sketch row
         # first, ledger second, lineage LAST — a shard is only complete
         # once everything before its lineage row is durable. Heal any
         # crashed expiry/compaction swap first: appending to a missing
         # primary dir would shadow the _old history (code-review r05)
         _heal_swap(state_path)
         _heal_swap(ledger_path)
-        built.withColumn("shard", F.lit(shard)).selectExpr(
-            "spec", "group", "payload", "n_items", "cast(shard as int) shard"
-        ).write.mode("append").parquet(state_path)
+        # membership delta over the survivors' fps (per-batch dedup
+        # keeps max tick, which for distinct fps is THE tick)
+        _commit_sketch_delta(
+            state_path, survivors, F.col("fp"), F.col("tick"), DEDUP_SPEC,
+            params, shard, partitions,
+        )
         survivors.select("fp", "doc_id", "tick", F.lit(shard).cast("int").alias("shard")) \
             .write.mode("append").parquet(ledger_path)
         if pre_lineage_hook is not None:
@@ -563,9 +659,7 @@ def incremental_dedup(
             "n_retained": n_new - n_h - n_i,
             **(meta_extra or {}),
         }
-        spark.createDataFrame(
-            [(shard, json.dumps(meta, sort_keys=True))], "shard int, meta string"
-        ).write.mode("append").parquet(lineage_path)
+        _write_lineage(lineage_path, meta)
     return ann
 
 
@@ -599,6 +693,15 @@ class StreamingIngestGuard:
     ``now_for_epoch`` maps epoch_id → the dedup clock tick (default
     epoch_id + 1, monotone per trigger); pass your own to tie decay to
     event time.
+
+    Commit path: every family's sketch delta, lineage row and
+    compaction row is written from the driver (_commit_row: a pyarrow
+    file under a '_' temp name, then an atomic ``os.replace``), so a
+    crash mid-commit leaves an invisible temp file, never a torn row,
+    and the epoch marker is either fully present or absent. Only the
+    ledgers and the clean output are Spark writes. ``partitions`` is
+    passed to every family: it caps the sketch-delta partials each
+    commit collects to the driver (``coalesce``, no shuffle).
 
     ``near=True`` (round 5, VERDICT r04 #3) additionally runs
     incremental_near_dup per micro-batch under the SAME epoch
@@ -1100,14 +1203,14 @@ def incremental_near_dup(
     ``meta_extra`` / ``pre_lineage_hook`` / ``exclude_epoch`` mirror
     incremental_dedup exactly (epoch tagging, caller-durable output
     strictly before the lineage marker, and same-epoch shard exclusion
-    on multi-operator replay — see StreamingIngestGuard)."""
-    from ..params import ScalingParams, TimingParams
-    from ..pipeline import SketchSpec, build_sketches
+    on multi-operator replay — see StreamingIngestGuard).
+    ``partitions`` caps the sketch-delta partials the state commit
+    collects to the driver, as in incremental_dedup."""
+    from ..params import TimingParams
     from .dedup import banded_signatures, minhash_signatures
 
     if params is None:
         params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    kind = "stbf" if isinstance(params, ScalingParams) else "tbf"
     state_path, band_path, sig_path, lineage_path = _near_paths(checkpoint_dir)
 
     src = new_df.select(
@@ -1187,22 +1290,12 @@ def incremental_near_dup(
             ~F.col("is_near_dup_history") & ~F.col("is_near_dup_intra")
         ).select("doc_id")
         kept_banded = banded.join(F.broadcast(keep), "doc_id")
-        shaped = kept_banded.select(
-            F.col("doc_id"),
-            F.array("bkey").alias("tokens"),
-            F.lit(1).alias("n_tok"),
-            F.lit(now).cast("long").alias("tick"),
-        )
-        spec = SketchSpec(NEAR_SPEC, kind, params, value="tokens")
-        built = build_sketches(
-            shaped, [spec], group_cols=(), tick_col=F.col("tick"),
-            partitions=partitions,
-        ).where(F.col("spec") == NEAR_SPEC)
         for _pth in (state_path, band_path, sig_path):
             _heal_swap(_pth)  # see incremental_dedup (code-review r05)
-        built.withColumn("shard", F.lit(shard)).selectExpr(
-            "spec", "group", "payload", "n_items", "cast(shard as int) shard"
-        ).write.mode("append").parquet(state_path)
+        _commit_sketch_delta(
+            state_path, kept_banded, F.col("bkey"), F.lit(now), NEAR_SPEC,
+            params, shard, partitions,
+        )
         kept_banded.select(
             "bkey", "doc_id", F.lit(now).cast("long").alias("tick"),
             F.lit(shard).cast("int").alias("shard"),
@@ -1227,9 +1320,7 @@ def incremental_near_dup(
             "n_retained": n - h - i,
             **(meta_extra or {}),
         }
-        spark.createDataFrame(
-            [(shard, json.dumps(meta, sort_keys=True))], "shard int, meta string"
-        ).write.mode("append").parquet(lineage_path)
+        _write_lineage(lineage_path, meta)
     return ann
 
 
@@ -1260,7 +1351,7 @@ def compact_near_checkpoint(spark, checkpoint_dir: str):
     time."""
     state_path = _near_paths(checkpoint_dir)[0]
     return _compact_sketch_state(
-        spark, state_path, _load_near_state(spark, checkpoint_dir), NEAR_SPEC
+        state_path, _load_near_state(spark, checkpoint_dir), NEAR_SPEC
     )
 
 
@@ -1315,7 +1406,7 @@ def compact_passages_checkpoint(spark, checkpoint_dir: str):
     row (same protocol as compact_dedup_checkpoint)."""
     state_path = _passage_paths(checkpoint_dir)[0]
     return _compact_sketch_state(
-        spark, state_path, _load_passage_state(spark, checkpoint_dir), PASSAGE_SPEC
+        state_path, _load_passage_state(spark, checkpoint_dir), PASSAGE_SPEC
     )
 
 
@@ -1364,15 +1455,14 @@ def incremental_passages(
     not the doc count. Intra-shard repetition is deliberately out of
     scope — run the batch operator (mask_repeated_passages) on the
     shard first, then this against history.
-    """
-    from ..params import ScalingParams, TimingParams
-    from ..pipeline import SketchSpec, build_sketches
+    ``partitions`` caps the sketch-delta partials the state commit
+    collects to the driver, as in incremental_dedup."""
+    from ..params import TimingParams
     from ..queries import _with_window, seen_within_payloads, sk_window
     from .dedup import passage_fingerprints
 
     if params is None:
         params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    kind = "stbf" if isinstance(params, ScalingParams) else "tbf"
     state_path, ledger_path, lineage_path = _passage_paths(checkpoint_dir)
 
     src = new_df.select(
@@ -1504,22 +1594,12 @@ def incremental_passages(
             )
             .localCheckpoint(eager=True)
         )
-        shaped = newfp.select(
-            F.col("keep_doc").alias("doc_id"),
-            F.array("fp").alias("tokens"),
-            F.lit(1).alias("n_tok"),
-            F.lit(now).cast("long").alias("tick"),
-        )
-        spec = SketchSpec(PASSAGE_SPEC, kind, params, value="tokens")
-        built = build_sketches(
-            shaped, [spec], group_cols=(), tick_col=F.col("tick"),
-            partitions=partitions,
-        ).where(F.col("spec") == PASSAGE_SPEC)
         _heal_swap(state_path)
         _heal_swap(ledger_path)  # see incremental_dedup (code-review r05)
-        built.withColumn("shard", F.lit(shard)).selectExpr(
-            "spec", "group", "payload", "n_items", "cast(shard as int) shard"
-        ).write.mode("append").parquet(state_path)
+        _commit_sketch_delta(
+            state_path, newfp, F.col("fp"), F.lit(now), PASSAGE_SPEC,
+            params, shard, partitions,
+        )
         newfp.select(
             "fp", "keep_doc", "keep_pos",
             F.lit(now).cast("long").alias("tick"),
@@ -1545,9 +1625,7 @@ def incremental_passages(
             "n_hist_windows": int(counts["h"] or 0),
             **(meta_extra or {}),
         }
-        spark.createDataFrame(
-            [(shard, json.dumps(meta, sort_keys=True))], "shard int, meta string"
-        ).write.mode("append").parquet(lineage_path)
+        _write_lineage(lineage_path, meta)
     return ann
 
 
@@ -1660,7 +1738,7 @@ def compact_emb_checkpoint(spark, checkpoint_dir: str):
     row (same protocol as compact_dedup_checkpoint)."""
     state_path = _emb_paths(checkpoint_dir)[0]
     return _compact_sketch_state(
-        spark, state_path, _load_emb_state(spark, checkpoint_dir), EMB_SPEC
+        state_path, _load_emb_state(spark, checkpoint_dir), EMB_SPEC
     )
 
 
@@ -2107,7 +2185,9 @@ def incremental_embedding_dedup(
     cos 0.99 with the defaults), reproducible because planes and
     vectors are fixed. Intra-shard duplicates are out of scope — run
     embedding_near_dup on the shard first (same composition rule as
-    incremental_passages)."""
+    incremental_passages).
+    ``partitions`` caps the sketch-delta partials the state commit
+    collects to the driver, as in incremental_dedup."""
     from ..params import TimingParams
 
     if params is None:
@@ -2174,29 +2254,15 @@ def _commit_emb_rows(
     FULL batch but retain only the PUBLISHED survivors (code-review
     r05 fifth pass #1 — the passages survivor-keeper rule applied to
     the semantic half)."""
-    from ..params import ScalingParams
-    from ..pipeline import SketchSpec, build_sketches
-
-    kind = "stbf" if isinstance(params, ScalingParams) else "tbf"
     state_path, bucket_path, vec_path, lineage_path = _emb_paths(checkpoint_dir)
     shard = len(_emb_completed(spark, checkpoint_dir))
-    shaped = key_rows.select(
-        F.col("vec_id").alias("doc_id"),
-        F.array("bkey").alias("tokens"),
-        F.lit(1).alias("n_tok"),
-        F.lit(now).cast("long").alias("tick"),
-    )
-    spec = SketchSpec(EMB_SPEC, kind, params, value="tokens")
-    built = build_sketches(
-        shaped, [spec], group_cols=(), tick_col=F.col("tick"),
-        partitions=partitions,
-    ).where(F.col("spec") == EMB_SPEC)
     _heal_swap(state_path)
     _heal_swap(bucket_path)
     _heal_swap(vec_path)
-    built.withColumn("shard", F.lit(shard)).selectExpr(
-        "spec", "group", "payload", "n_items", "cast(shard as int) shard"
-    ).write.mode("append").parquet(state_path)
+    _commit_sketch_delta(
+        state_path, key_rows, F.col("bkey"), F.lit(now), EMB_SPEC,
+        params, shard, partitions,
+    )
     key_rows.select(
         "bkey", "vec_id", F.lit(now).cast("long").alias("tick"),
         F.lit(shard).cast("int").alias("shard"),
@@ -2215,9 +2281,7 @@ def _commit_emb_rows(
         pre_lineage()
     kind_ = meta_fields.pop("kind_", "emb_dup")
     meta = {"shard": shard, "now": int(now), "kind": kind_, **meta_fields}
-    spark.createDataFrame(
-        [(shard, json.dumps(meta, sort_keys=True))], "shard int, meta string"
-    ).write.mode("append").parquet(lineage_path)
+    _write_lineage(lineage_path, meta)
 
 
 def commit_emb_state(
@@ -2240,7 +2304,9 @@ def commit_emb_state(
     published, then commit exactly the published set here (the guard's
     embeddings mode does this; committing unpublished vectors would
     let them suppress future docs with no published keeper). Geometry
-    must match the checkpoint's (validated, like the probe path)."""
+    must match the checkpoint's (validated, like the probe path).
+    ``partitions`` caps the sketch-delta partials the commit collects
+    to the driver, as in incremental_dedup."""
     from ..params import TimingParams
 
     if params is None:

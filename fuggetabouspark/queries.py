@@ -31,8 +31,30 @@ _PROBE_CACHE_SLOTS = 4
 # state version hasn't changed — the steady-state shape of incremental
 # ingest is MANY probe jobs per state version. Evicted entries are
 # unpersist()ed (not destroyed), so a lazy plan that still references
-# one simply re-fetches from the driver.
+# one simply re-fetches from the driver. Keyed by (id(sc), content
+# key) and holding the context itself: a Broadcast handle lives and
+# dies with its SparkContext, so after a session restart the same
+# state bytes must get a NEW broadcast, not the dead context's handle.
 _STATE_BC_CACHE: dict = {}
+
+
+def _state_broadcast(sc, payloads, cache_key: str):
+    """The cached broadcast of ``payloads`` on context ``sc`` (see
+    _STATE_BC_CACHE). Entries of any other context are dropped without
+    unpersist — their broadcasts went with their context — and the
+    stored context pins its id, so a new context can never be served
+    a stale handle through a recycled id."""
+    key = (id(sc), cache_key)
+    hit = _STATE_BC_CACHE.get(key)
+    if hit is not None:
+        return hit[1]
+    for k in [k for k, (c, _) in _STATE_BC_CACHE.items() if c is not sc]:
+        del _STATE_BC_CACHE[k]
+    bc = sc.broadcast(payloads)
+    while len(_STATE_BC_CACHE) >= _PROBE_CACHE_SLOTS:
+        _STATE_BC_CACHE.pop(next(iter(_STATE_BC_CACHE)))[1].unpersist()
+    _STATE_BC_CACHE[key] = (sc, bc)
+    return bc
 
 
 def _payload_cache_key(payloads) -> str:
@@ -150,12 +172,7 @@ def seen_within_payloads(
     import pyarrow as pa
 
     cache_key = _payload_cache_key(payloads)
-    bc = _STATE_BC_CACHE.get(cache_key)
-    if bc is None:
-        bc = spark.sparkContext.broadcast(payloads)
-        while len(_STATE_BC_CACHE) >= _PROBE_CACHE_SLOTS:
-            _STATE_BC_CACHE.pop(next(iter(_STATE_BC_CACHE))).unpersist()
-        _STATE_BC_CACHE[cache_key] = bc
+    bc = _state_broadcast(spark.sparkContext, payloads, cache_key)
 
     def probe(iterator):
         import fuggetabouspark.queries as _q
