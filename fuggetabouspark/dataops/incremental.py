@@ -45,12 +45,25 @@ one-row Spark write and no merge stage pays Python-worker start-up.
 Reads of the same artifacts are driver-side pyarrow too
 (_pa_read_table), so lineage, state loads and compaction run no Spark
 job at all.
+
+One record per family: the four granularities (exact doc, near doc,
+passage, embedding) keep the SAME three artifacts — a decaying
+membership sketch, one or two ledgers, and a lineage dir — under their
+own subdirectory, so each is described by one _Family record (EXACT,
+NEAR, PASSAGES, EMB: subdir, sketch spec, ledger report name → (dir,
+DDL)). Every per-family step is written once over that record: lineage
+read (_metas), state load (_load_state), compaction (_compact), the
+lineage-gated ledger read (_ledger), the sketch probe (_probe), the
+shard commit in recovery order (_commit_shard), and expiry
+(expire_ledgers loops over _FAMILIES). The operators only add what
+differs: how keys are derived and how sketch hits are verified.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -61,14 +74,61 @@ ANNOTATED_DDL = (
     "doc_id string, fp long, tick long, "
     "is_dup_history boolean, is_dup_intra boolean, hist_doc_id string"
 )
+NEAR_SPEC = "near_dup_band"
+BAND_LEDGER_DDL = "bkey long, doc_id string, tick long, shard int"
+SIG_LEDGER_DDL = "doc_id string, sig array<long>, tick long, shard int"
+NEAR_ANNOTATED_DDL = (
+    "doc_id string, is_near_dup_history boolean, is_near_dup_intra boolean, "
+    "hist_doc_id string, est_jaccard double"
+)
+PASSAGE_SPEC = "passage_fp"
+PASSAGE_LEDGER_DDL = "fp long, keep_doc string, keep_pos int, tick long, shard int"
+PASSAGE_ANNOTATED_DDL = (
+    "doc_id string, n_windows int, n_hist_windows int, hist_positions array<int>"
+)
+EMB_SPEC = "emb_dup_bucket"
+EMB_BUCKET_LEDGER_DDL = "bkey long, vec_id string, tick long, shard int"
+EMB_VEC_LEDGER_DDL = "vec_id string, embedding array<float>, tick long, shard int"
+EMB_ANNOTATED_DDL = (
+    "vec_id string, is_emb_dup_history boolean, hist_vec_id string, cosine double"
+)
 
 
-def _paths(checkpoint_dir: str) -> tuple[str, str, str]:
-    return (
-        os.path.join(checkpoint_dir, "sketch_state"),
-        os.path.join(checkpoint_dir, "fp_ledger"),
-        os.path.join(checkpoint_dir, "lineage"),
-    )
+class _Family(NamedTuple):
+    """One granularity's history store under ``<checkpoint>/<subdir>``:
+    ``sketch_state`` (membership sketch rows of spec ``spec``),
+    ``lineage`` (one commit-marker row per shard) and ``ledgers``
+    (expiry report name → (dir name, DDL)). Every family owns its own
+    directories — disjoint sketch_state and lineage, so no family's
+    compaction, shard numbering or recovery can touch another's
+    (code-review r04). The FIRST ledger is keyed by the sketch key: it
+    is what verifies sketch hits, and the shard commit folds its key
+    column into the sketch delta."""
+
+    subdir: str
+    spec: str
+    ledgers: dict
+
+    def path(self, checkpoint_dir: str, name: str) -> str:
+        """The directory of artifact ``name``: 'sketch_state',
+        'lineage', or a ledger's report name."""
+        leaf = self.ledgers[name][0] if name in self.ledgers else name
+        return os.path.join(checkpoint_dir, self.subdir, leaf)
+
+
+EXACT = _Family("", DEDUP_SPEC, {"fp_ledger": ("fp_ledger", LEDGER_DDL)})
+NEAR = _Family("near", NEAR_SPEC, {
+    "band_ledger": ("band_ledger", BAND_LEDGER_DDL),
+    "sig_ledger": ("sig_ledger", SIG_LEDGER_DDL),
+})
+PASSAGES = _Family("passages", PASSAGE_SPEC, {
+    "passage_ledger": ("fp_ledger", PASSAGE_LEDGER_DDL),
+})
+EMB = _Family("emb", EMB_SPEC, {
+    "bucket_ledger": ("bucket_ledger", EMB_BUCKET_LEDGER_DDL),
+    "vec_ledger": ("vec_ledger", EMB_VEC_LEDGER_DDL),
+})
+_FAMILIES = (EXACT, NEAR, PASSAGES, EMB)
 
 
 def _read_swap(spark, path: str, ddl: str) -> DataFrame | None:
@@ -209,10 +269,15 @@ def _commit_sketch_delta(
     ``partitions`` caps the partials collected to the driver
     (``coalesce``, which does not shuffle): driver memory for the
     delta is at most ``partitions`` × payload. An empty frame commits
-    no row — a shard that retained nothing adds nothing to the sketch."""
-    from ..params import ScalingParams
+    no row — a shard that retained nothing adds nothing to the sketch.
+
+    ``params`` None means every family's default: a TBF of capacity
+    2M at error 0.001 that never decays (window 2**31 ticks)."""
+    from ..params import ScalingParams, TimingParams
     from ..pipeline import PARTIAL_DDL, SketchSpec, make_update_fn, merge_rows_to_sketches
 
+    if params is None:
+        params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
     kind = "stbf" if isinstance(params, ScalingParams) else "tbf"
     spec = SketchSpec(name, kind, params, value="tokens")
     rows = frame.select(F.array(key).alias("tokens"), tick.cast("long").alias("tick"))
@@ -226,10 +291,11 @@ def _commit_sketch_delta(
         _append_state_row(state_path, name, sk, shard)
 
 
-def _completed_metas(spark, lineage_path: str) -> list[dict]:
-    """Lineage metadata of completed shards at ``lineage_path``, in
-    shard order — shared by all three incremental operators
-    (code-review r05: the recovery rules must live once)."""
+def _metas(checkpoint_dir: str, fam: _Family) -> list[dict]:
+    """Lineage metadata of ``fam``'s completed shards, in shard order —
+    the one lineage reader of all four families (code-review r05: the
+    recovery rules must live once)."""
+    lineage_path = fam.path(checkpoint_dir, "lineage")
     if not os.path.exists(lineage_path):
         return []
     metas = _pa_read_table(lineage_path, columns=["meta"]).column("meta").to_pylist()
@@ -241,7 +307,8 @@ def _load_sketch_state(spark, state_path: str, done: list[int], spec: str,
     """Merged membership sketch over the completed shards' rows (plus
     the always-valid shard=-1 compacted row), with the _old fallback
     for a compaction that crashed mid-swap — the single implementation
-    behind all three operators' state loaders. Merge-all within the
+    behind every family's state load (_load_state, _probe; ``spark`` is
+    unused). Merge-all within the
     completed set: union-only monoids are one-sided safe under
     crash-retried shard ids (see load_dedup_state's docstring).
 
@@ -294,6 +361,18 @@ def _done_shards(metas: list[dict], exclude_epoch) -> list[int]:
     ]
 
 
+def _load_state(checkpoint_dir: str, fam: _Family, exclude_epoch=None,
+                with_raw: bool = False):
+    """``fam``'s merged membership sketch over its completed shards
+    (lineage-gated, merge-all, same-epoch exclusion — the recovery
+    rules load_dedup_state documents, for every family)."""
+    done = _done_shards(_metas(checkpoint_dir, fam), exclude_epoch)
+    return _load_sketch_state(
+        None, fam.path(checkpoint_dir, "sketch_state"), done, fam.spec,
+        with_raw=with_raw,
+    )
+
+
 def load_dedup_state(spark, checkpoint_dir: str, exclude_epoch=None,
                      with_raw: bool = False):
     """Merged membership sketch from all COMPLETED shards (those with
@@ -320,10 +399,23 @@ def load_dedup_state(spark, checkpoint_dir: str, exclude_epoch=None,
     compacted row because compaction only runs after an epoch FULLY
     commits, so a same-epoch shard can never have been folded into it
     by the time a replay needs the exclusion."""
-    state_path, _, _ = _paths(checkpoint_dir)
-    done = _done_shards(completed_shards(spark, checkpoint_dir), exclude_epoch)
-    return _load_sketch_state(spark, state_path, done, DEDUP_SPEC,
-                              with_raw=with_raw)
+    return _load_state(checkpoint_dir, EXACT, exclude_epoch, with_raw)
+
+
+def _compact(checkpoint_dir: str, fam: _Family):
+    """Fold every completed shard's sketch rows of ``fam`` into ONE
+    always-valid shard=-1 row, written from the driver
+    (_append_state_row — no Spark job), via the _swap_dir crash
+    protocol. Returns the merged sketch (None if the family has no
+    completed shard)."""
+    sk = _load_state(checkpoint_dir, fam)
+    if sk is None:
+        return None
+    _swap_dir(
+        lambda tmp: _append_state_row(tmp, fam.spec, sk, -1),
+        fam.path(checkpoint_dir, "sketch_state"),
+    )
+    return sk
 
 
 def compact_dedup_checkpoint(spark, checkpoint_dir: str):
@@ -337,21 +429,23 @@ def compact_dedup_checkpoint(spark, checkpoint_dir: str):
     code-review r04 flagged for long-running streaming ingest. Safe
     and idempotent any time; returns the merged sketch (None if the
     checkpoint is empty)."""
-    state_path, _, _ = _paths(checkpoint_dir)
-    return _compact_sketch_state(
-        state_path, load_dedup_state(spark, checkpoint_dir), DEDUP_SPEC
-    )
+    return _compact(checkpoint_dir, EXACT)
 
 
-def _compact_sketch_state(state_path: str, sk, spec: str):
-    """Shared body of the four compactors: fold the merged sketch into
-    ONE always-valid shard=-1 row, written from the driver
-    (_append_state_row — no Spark job), via the _swap_dir crash
-    protocol."""
-    if sk is None:
-        return None
-    _swap_dir(lambda tmp: _append_state_row(tmp, spec, sk, -1), state_path)
-    return sk
+def _ledger(spark, checkpoint_dir: str, fam: _Family, name: str, done: list[int],
+            now: int | None = None, w: int | None = None) -> DataFrame:
+    """Ledger ``name`` of ``fam`` restricted to the completed shards
+    ``done`` and, when ``w`` is given, to ticks in [now - w + 1, now] —
+    the window filter mirrors TimingBloomFilter.contains_batch. Only
+    called once a probe found a non-empty sketch, which implies a
+    completed shard, whose lineage row is only written after its ledger
+    appends: a missing ledger is a broken checkpoint."""
+    df = _read_swap(spark, fam.path(checkpoint_dir, name), fam.ledgers[name][1])
+    assert df is not None, f"completed {fam.spec} shard without its {name}"
+    df = df.where(F.col("shard").isin(done))
+    if w is not None:
+        df = df.where((F.col("tick") >= F.lit(now - w + 1)) & (F.col("tick") <= F.lit(now)))
+    return df
 
 
 def ledger_df(
@@ -360,86 +454,158 @@ def ledger_df(
     """The fp ledger, restricted (by default) to completed shards so a
     half-written ingest's rows are invisible — the same recovery rule
     as load_dedup_state."""
-    _, ledger_path, _ = _paths(checkpoint_dir)
-    df = _read_swap(spark, ledger_path, LEDGER_DDL)
-    if df is None:
-        return None
-    if completed_only:
-        done = _done_shards(completed_shards(spark, checkpoint_dir), exclude_epoch)
-        df = df.where(F.col("shard").isin(done))
-    return df
+    df = _read_swap(spark, EXACT.path(checkpoint_dir, "fp_ledger"), LEDGER_DDL)
+    if df is None or not completed_only:
+        return df
+    done = _done_shards(completed_shards(spark, checkpoint_dir), exclude_epoch)
+    return df.where(F.col("shard").isin(done))
 
 
 def expire_ledgers(
     spark, checkpoint_dir: str, now: int, window: int | None = None
 ) -> dict:
     """Prune DECAYED rows from every ledger under ``checkpoint_dir`` —
-    the exact-dedup fp ledger and, if present, the near-dup band and
-    sig ledgers. Without this, ledgers grow monotonically: the query
-    path filters out-of-window rows (so correctness never depended on
-    expiry) but "state = O(retained docs)" silently becomes O(all docs
-    ever) on a month-long ingest (VERDICT r04 "What's missing" #1).
+    every family's ledgers that exist (exact fp; near band and sig;
+    passage; emb bucket and vec). Without this, ledgers grow
+    monotonically: the query path filters out-of-window rows (so
+    correctness never depended on expiry) but "state = O(retained
+    docs)" silently becomes O(all docs ever) on a month-long ingest
+    (VERDICT r04 "What's missing" #1).
 
     A row is retained iff ``tick >= now - window + 1`` — the oldest
     tick any future query can see, because query windows may only ever
     NARROW a sketch's configured window (queries._with_window) and
-    ``now`` is monotone. ``window`` defaults to each path's own sketch
-    window_ticks. Each ledger is rewritten via the same aside-rename
-    swap as compaction (crash between renames → _read_swap falls back
-    to the _old copy). Safe and idempotent any time; the sketch itself
-    needs no pruning — it decays by construction. Returns
-    {ledger_name: rows_kept}."""
+    ``now`` is monotone. ``window`` defaults to each family's own
+    sketch window_ticks (a family without a sketch is skipped). Each
+    ledger is rewritten via the same aside-rename swap as compaction
+    (crash between renames → _read_swap falls back to the _old copy).
+    Safe and idempotent any time; the sketch itself needs no pruning —
+    it decays by construction. Returns {ledger_name: rows_kept}."""
     from ..queries import sk_window
 
     kept: dict[str, int] = {}
-    _, fp_path, _ = _paths(checkpoint_dir)
-    band_path, sig_path = _near_paths(checkpoint_dir)[1:3]
-    wcache: dict[str, int | None] = {}
-
-    def win_of(kind: str, loader) -> int | None:
-        # one state load per operator family, not per ledger (the near
-        # sketch backs both the band and sig ledgers)
-        if kind not in wcache:
-            sketch = loader()
-            wcache[kind] = None if sketch is None else sk_window(sketch)
-        return wcache[kind]
-
-    for name, path, ddl, kind, loader in (
-        ("fp_ledger", fp_path, LEDGER_DDL, "exact",
-         lambda: load_dedup_state(spark, checkpoint_dir)),
-        ("band_ledger", band_path, BAND_LEDGER_DDL, "near",
-         lambda: _load_near_state(spark, checkpoint_dir)),
-        ("sig_ledger", sig_path, SIG_LEDGER_DDL, "near",
-         lambda: _load_near_state(spark, checkpoint_dir)),
-        ("passage_ledger", _passage_paths(checkpoint_dir)[1], PASSAGE_LEDGER_DDL,
-         "passages", lambda: _load_passage_state(spark, checkpoint_dir)),
-        ("bucket_ledger", _emb_paths(checkpoint_dir)[1], EMB_BUCKET_LEDGER_DDL,
-         "emb", lambda: _load_emb_state(spark, checkpoint_dir)),
-        ("vec_ledger", _emb_paths(checkpoint_dir)[2], EMB_VEC_LEDGER_DDL,
-         "emb", lambda: _load_emb_state(spark, checkpoint_dir)),
-    ):
-        df = _read_swap(spark, path, ddl)
-        if df is None:
-            continue
-        w = window if window is not None else win_of(kind, loader)
+    for fam in _FAMILIES:
+        w = window
         if w is None:
-            continue
-        live = df.where(F.col("tick") >= F.lit(int(now) - int(w) + 1))
-        # localCheckpoint BEFORE the swap: the plan reads the very
-        # directory the swap replaces (same cache-invalidation trap as
-        # incremental_dedup's annotated frame)
-        live = live.localCheckpoint(eager=True)
-        _swap_dir(
-            lambda tmp, live=live: live.write.mode("overwrite").parquet(tmp), path
-        )
-        kept[name] = live.count()
-        live.unpersist()
+            # one state load per family, not per ledger
+            sk = _load_state(checkpoint_dir, fam)
+            if sk is None:
+                continue
+            w = sk_window(sk)
+        for name, (_, ddl) in fam.ledgers.items():
+            path = fam.path(checkpoint_dir, name)
+            df = _read_swap(spark, path, ddl)
+            if df is None:
+                continue
+            live = df.where(F.col("tick") >= F.lit(int(now) - int(w) + 1))
+            # localCheckpoint BEFORE the swap: the plan reads the very
+            # directory the swap replaces (same cache-invalidation trap
+            # as incremental_dedup's annotated frame)
+            live = live.localCheckpoint(eager=True)
+            _swap_dir(
+                lambda tmp, live=live: live.write.mode("overwrite").parquet(tmp), path
+            )
+            kept[name] = live.count()
+            live.unpersist()
     return kept
 
 
 def completed_shards(spark, checkpoint_dir: str) -> list[dict]:
     """Lineage metadata of completed ingests, in shard order."""
-    return _completed_metas(spark, _paths(checkpoint_dir)[2])
+    return _metas(checkpoint_dir, EXACT)
+
+
+def _probe(spark, checkpoint_dir: str, fam: _Family, keys: DataFrame, now: int,
+           window: int | None, exclude_epoch):
+    """Probe ``fam``'s broadcast sketch with the one-column frame
+    ``keys``: ``(hits, w, done)`` — the DISTINCT keys the sketch has
+    seen within the query window ``w`` (same column name as ``keys``),
+    the window itself, and the completed shards the state was merged
+    from (the shards the ledger verify must read). None when the family
+    has no history yet.
+
+    ``window`` (None = the sketch's own window_ticks) may only NARROW
+    the sketch's window: older sightings may already be decayed. The
+    stored payload goes straight to the broadcast (content-cached) when
+    one row makes up the state and no re-window is needed, skipping a
+    zlib re-compress of the bucket array per probe (round 6)."""
+    from ..queries import _with_window, seen_within_payloads, sk_window
+
+    done = _done_shards(_metas(checkpoint_dir, fam), exclude_epoch)
+    sk, raw = _load_sketch_state(
+        None, fam.path(checkpoint_dir, "sketch_state"), done, fam.spec, with_raw=True
+    )
+    if sk is None:
+        return None
+    w = window if window is not None else sk_window(sk)
+    if w > sk_window(sk):
+        raise ValueError(
+            f"window {w} exceeds the sketch's window_ticks "
+            f"{sk_window(sk)}: older sightings may already be decayed, "
+            "so widening at query time would produce false negatives"
+        )
+    if w != sk_window(sk):
+        sk = _with_window(sk, w)
+        raw = None  # re-windowed: stored payload no longer matches
+    (col,) = keys.columns
+    hits = (
+        seen_within_payloads(
+            spark, [("", raw if raw is not None else sk.to_bytes())],
+            keys.select(F.col(col).alias("key")), now, only_seen=True,
+        )
+        .select(F.col("key").alias(col))
+        .distinct()
+    )
+    return hits, w, done
+
+
+def _commit_shard(
+    checkpoint_dir: str, fam: _Family, rows: dict, tick, now: int, params,
+    partitions: int | None, meta: dict, ann: DataFrame | None = None,
+    pre_lineage_hook=None,
+) -> None:
+    """Append one shard to ``fam``'s history in the family write order,
+    which is what makes lineage-gated recovery work (it mirrors
+    state.build_resumable):
+
+    1. heal any crashed expiry/compaction swap of every directory about
+       to be appended to — appending to a missing primary dir would
+       shadow the _old history (code-review r05);
+    2. the sketch delta over the FIRST ledger's key column;
+    3. each ledger's rows (``rows``: report name → frame carrying the
+       DDL's data columns), with ``tick`` (a Column) and the shard id
+       added and every column cast to the ledger DDL's type at ingest
+       — e.g. an ``array<double>`` embedding committed uncast would
+       write fine once and then fail every later probe with a parquet
+       schema-conversion error when _read_swap applies the DDL
+       (ADVICE r05 #2);
+    4. ``pre_lineage_hook(ann)``: caller-durable output (e.g. the
+       guard's clean stream) must land BEFORE the lineage marker — once
+       lineage commits, a replay is skipped, so anything written after
+       it would be lost to a crash in between;
+    5. the lineage row ``{shard, now, **meta}`` — LAST: a shard is only
+       complete once everything before it is durable."""
+    shard = len(_metas(checkpoint_dir, fam))
+    state_path = fam.path(checkpoint_dir, "sketch_state")
+    for path in [state_path] + [fam.path(checkpoint_dir, n) for n in fam.ledgers]:
+        _heal_swap(path)
+    first = next(iter(fam.ledgers))
+    key = fam.ledgers[first][1].split(" ", 1)[0]
+    _commit_sketch_delta(
+        state_path, rows[first], F.col(key), tick, fam.spec, params, shard, partitions,
+    )
+    derived = {"tick": tick, "shard": F.lit(shard)}
+    for name, (_, ddl) in fam.ledgers.items():
+        # the DDLs hold no struct types, so ", " separates columns
+        cols = [c.split(" ", 1) for c in ddl.split(", ")]
+        rows[name].select(*(
+            derived.get(c, F.col(c)).cast(t).alias(c) for c, t in cols
+        )).write.mode("append").parquet(fam.path(checkpoint_dir, name))
+    if pre_lineage_hook is not None:
+        pre_lineage_hook(ann)
+    _write_lineage(
+        fam.path(checkpoint_dir, "lineage"), {"shard": shard, "now": int(now), **meta}
+    )
 
 
 def _shard_fps(new_df: DataFrame, text_col: str, tick_col, now: int) -> DataFrame:
@@ -477,51 +643,23 @@ def annotate_against_history(
     left side), so a caller that materializes it once saves two
     scan+hash passes over the shard text per action (round 6, guide
     §2.4; incremental_dedup does exactly this)."""
-    from ..queries import _with_window, seen_within_payloads, sk_window
-
     fps = fps_df if fps_df is not None else _shard_fps(new_df, text_col, tick_col, now)
 
     # ---- history probe: broadcast sketch, then exact ledger verify ----
-    sk, raw = load_dedup_state(
-        spark, checkpoint_dir, exclude_epoch=exclude_epoch, with_raw=True
+    probe = _probe(
+        spark, checkpoint_dir, EXACT, fps.select("fp"), now, window, exclude_epoch
     )
-    if sk is not None:
-        w = window if window is not None else sk_window(sk)
-        if w > sk_window(sk):
-            raise ValueError(
-                f"window {w} exceeds the sketch's window_ticks "
-                f"{sk_window(sk)}: older sightings may already be decayed, "
-                "so widening at query time would produce false negatives"
-            )
-        if w != sk_window(sk):
-            sk = _with_window(sk, w)
-            raw = None  # re-windowed: stored payload no longer matches
-        # seen_within_payloads: the payload goes straight to the
-        # broadcast (content-cached), skipping the createDataFrame →
-        # collect round trip of ~state-size bytes per probe (round 6)
-        payload = raw if raw is not None else sk.to_bytes()
-        hits = (
-            seen_within_payloads(
-                spark, [("", payload)],
-                fps.select(F.col("fp").alias("key")), now, only_seen=True,
-            )
-            .select(F.col("key").alias("fp"))
-            .distinct()
-        )
+    if probe is not None:
+        hits, w, done = probe
         # candidates are the tiny side: broadcast them INTO the ledger
         # scan so history is filtered, never shuffled. max(tick) per fp
-        # is the latest retained sighting (re-ingests after decay append
-        # a fresh ledger row — and a crash-retried shard may have
-        # appended its ledger rows twice, which this max collapses);
-        # the window filter mirrors TimingBloomFilter.contains_batch:
-        # tick in [now - w + 1, now]. led is never None here: a
-        # non-None sketch implies a completed shard, whose lineage row
-        # is only written after its ledger append.
-        led = ledger_df(spark, checkpoint_dir, exclude_epoch=exclude_epoch)
-        assert led is not None, "completed shard without a ledger directory"
+        # is the latest retained in-window sighting (re-ingests after
+        # decay append a fresh ledger row — and a crash-retried shard
+        # may have appended its ledger rows twice, which this max
+        # collapses)
         verified = (
-            led.join(F.broadcast(hits), "fp")
-            .where((F.col("tick") >= F.lit(now - w + 1)) & (F.col("tick") <= F.lit(now)))
+            _ledger(spark, checkpoint_dir, EXACT, "fp_ledger", done, now, w)
+            .join(F.broadcast(hits), "fp")
             .groupBy("fp")
             .agg(F.max(F.struct("tick", "doc_id")).alias("_best"))
             .select("fp", F.col("_best.doc_id").alias("hist_doc_id"))
@@ -593,12 +731,6 @@ def incremental_dedup(
     collects to the driver (``coalesce``, no shuffle): driver memory
     for the delta is at most ``partitions`` × payload; None keeps the
     survivor frame's own partitioning (_commit_sketch_delta)."""
-    from ..params import TimingParams
-
-    if params is None:
-        params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    state_path, ledger_path, lineage_path = _paths(checkpoint_dir)
-
     # one scan of the shard text: the annotated plan references the fp
     # frame three times (probe keys, intra-shard firsts, the annotated
     # left side) and an un-materialized fps would re-scan + re-hash the
@@ -621,45 +753,28 @@ def incremental_dedup(
     ann = ann.localCheckpoint(eager=True)
 
     if update_state:
-        shard = len(completed_shards(spark, checkpoint_dir))
-        survivors = ann.where(~F.col("is_dup_history") & ~F.col("is_dup_intra"))
-        # durability order mirrors state.build_resumable: sketch row
-        # first, ledger second, lineage LAST — a shard is only complete
-        # once everything before its lineage row is durable. Heal any
-        # crashed expiry/compaction swap first: appending to a missing
-        # primary dir would shadow the _old history (code-review r05)
-        _heal_swap(state_path)
-        _heal_swap(ledger_path)
-        # membership delta over the survivors' fps (per-batch dedup
-        # keeps max tick, which for distinct fps is THE tick)
-        _commit_sketch_delta(
-            state_path, survivors, F.col("fp"), F.col("tick"), DEDUP_SPEC,
-            params, shard, partitions,
-        )
-        survivors.select("fp", "doc_id", "tick", F.lit(shard).cast("int").alias("shard")) \
-            .write.mode("append").parquet(ledger_path)
-        if pre_lineage_hook is not None:
-            # caller-side durable output (e.g. the streaming guard's
-            # clean stream) must land BEFORE the lineage marker: once
-            # lineage commits, a replay is skipped, so anything written
-            # after it would be lost to a crash in between
-            pre_lineage_hook(ann)
         counts = ann.agg(
             F.count("*").alias("n"),
             F.sum(F.col("is_dup_history").cast("long")).alias("h"),
             F.sum(F.col("is_dup_intra").cast("long")).alias("i"),
         ).collect()[0]
         n_new, n_h, n_i = int(counts["n"]), int(counts["h"] or 0), int(counts["i"] or 0)
-        meta = {
-            "shard": shard,
-            "now": int(now),
-            "n_docs": n_new,
-            "n_dup_history": n_h,
-            "n_dup_intra": n_i,
-            "n_retained": n_new - n_h - n_i,
-            **(meta_extra or {}),
-        }
-        _write_lineage(lineage_path, meta)
+        # the survivors' fps enter the sketch and the ledger at their own
+        # tick (per-batch dedup keeps max tick, which for distinct fps
+        # is THE tick)
+        survivors = ann.where(~F.col("is_dup_history") & ~F.col("is_dup_intra"))
+        _commit_shard(
+            checkpoint_dir, EXACT, {"fp_ledger": survivors}, F.col("tick"), now,
+            params, partitions,
+            {
+                "n_docs": n_new,
+                "n_dup_history": n_h,
+                "n_dup_intra": n_i,
+                "n_retained": n_new - n_h - n_i,
+                **(meta_extra or {}),
+            },
+            ann, pre_lineage_hook,
+        )
     return ann
 
 
@@ -980,13 +1095,10 @@ class StreamingIngestGuard:
             emb_ann.unpersist()
         self._batches_done += 1
         if self.compact_every and self._batches_done % self.compact_every == 0:
-            compact_dedup_checkpoint(self.spark, self.checkpoint_dir)
-            if self.near:
-                compact_near_checkpoint(self.spark, self.checkpoint_dir)
-            if self.passages:
-                compact_passages_checkpoint(self.spark, self.checkpoint_dir)
-            if self.embeddings:
-                compact_emb_checkpoint(self.spark, self.checkpoint_dir)
+            for fam, on in ((EXACT, True), (NEAR, self.near),
+                            (PASSAGES, self.passages), (EMB, self.embeddings)):
+                if on:
+                    _compact(self.checkpoint_dir, fam)
         if self.expire_every and self._batches_done % self.expire_every == 0:
             expire_ledgers(self.spark, self.checkpoint_dir, now=now)
 
@@ -1014,29 +1126,14 @@ class StreamingIngestGuard:
 # state (round 4 — rounds out the exact-fp guard above)
 # --------------------------------------------------------------------
 
-NEAR_SPEC = "near_dup_band"
-BAND_LEDGER_DDL = "bkey long, doc_id string, tick long, shard int"
-SIG_LEDGER_DDL = "doc_id string, sig array<long>, tick long, shard int"
-NEAR_ANNOTATED_DDL = (
-    "doc_id string, is_near_dup_history boolean, is_near_dup_intra boolean, "
-    "hist_doc_id string, est_jaccard double"
-)
-
-
-def _near_paths(checkpoint_dir: str) -> tuple[str, str, str, str]:
-    """All near-dup state lives under <checkpoint_dir>/near — its OWN
-    sketch_state and lineage, fully disjoint from incremental_dedup's
-    (code-review r04: a shared sketch_state dir meant exact-dedup
-    compaction would atomically replace the directory and destroy the
-    band sketch; shared lineage let one operator's committed shard
-    number validate the other's half-committed orphan rows)."""
-    base = os.path.join(checkpoint_dir, "near")
-    return (
-        os.path.join(base, "sketch_state"),
-        os.path.join(base, "band_ledger"),
-        os.path.join(base, "sig_ledger"),
-        os.path.join(base, "lineage"),
-    )
+def _match_frac(a: str, b: str, num_hashes: int):
+    """The MinHash Jaccard estimate of two signature columns: the
+    fraction of the ``num_hashes`` positions where they agree."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    ) / F.lit(num_hashes)
 
 
 def near_history_matches(
@@ -1070,51 +1167,24 @@ def near_history_matches(
       the shard's own signature frame.
     The only exchanges left are distinct/groupBy over SHARD-sized
     candidate rows."""
-    from ..queries import _with_window, seen_within_payloads, sk_window
-
-    empty = spark.createDataFrame(
-        [], "doc_id string, hist_doc_id string, est_jaccard double"
+    probe = _probe(
+        spark, checkpoint_dir, NEAR, banded.select("bkey"), now, window, exclude_epoch
     )
-    sk, raw = _load_near_state(
-        spark, checkpoint_dir, exclude_epoch=exclude_epoch, with_raw=True
-    )
-    if sk is None:
-        return empty
-    w = window if window is not None else sk_window(sk)
-    if w > sk_window(sk):
-        raise ValueError(
-            f"window {w} exceeds the sketch's window_ticks {sk_window(sk)}"
+    if probe is None:
+        return spark.createDataFrame(
+            [], "doc_id string, hist_doc_id string, est_jaccard double"
         )
-    if w != sk_window(sk):
-        sk = _with_window(sk, w)
-        raw = None  # re-windowed: stored payload no longer matches
-    hits = (
-        seen_within_payloads(
-            spark, [("", raw if raw is not None else sk.to_bytes())],
-            banded.select(F.col("bkey").alias("key")), now, only_seen=True,
-        )
-        .select(F.col("key").alias("bkey"))
-        .distinct()
-    )
-    done = _done_shards(_near_completed(spark, checkpoint_dir), exclude_epoch)
-    band_path, sig_path = _near_paths(checkpoint_dir)[1:3]
-    band_raw = _read_swap(spark, band_path, BAND_LEDGER_DDL)
-    sig_raw = _read_swap(spark, sig_path, SIG_LEDGER_DDL)
-    assert band_raw is not None and sig_raw is not None, (
-        "completed near shard without its ledgers"
-    )
-    band_led = band_raw.where(
-        (F.col("shard").isin(done))
-        & (F.col("tick") >= F.lit(now - w + 1)) & (F.col("tick") <= F.lit(now))
-    )
+    hits, w, done = probe
+    band_led = _ledger(spark, checkpoint_dir, NEAR, "band_ledger", done, now, w)
+    sig_hist = _ledger(spark, checkpoint_dir, NEAR, "sig_ledger", done)
     # candidate pairs: new docs sharing a hit band key with a retained
     # doc. The shard side (banded ⋈ hits — bounded by shard size × hit
     # rate) is broadcast INTO the band-ledger scan, so the O(retained ×
     # bands) ledger is the streamed side and never shuffles
-    probe = banded.join(F.broadcast(hits), "bkey")
+    shard_hits = banded.join(F.broadcast(hits), "bkey")
     cand = (
         band_led.select("bkey", F.col("doc_id").alias("hist_doc_id"))
-        .join(F.broadcast(probe), "bkey")
+        .join(F.broadcast(shard_hits), "bkey")
         .select("doc_id", "hist_doc_id")
         .distinct()
     )
@@ -1123,20 +1193,15 @@ def near_history_matches(
     # ledger's columnar scan, which likewise never shuffles
     hist_ids = cand.select(F.col("hist_doc_id").alias("doc_id")).distinct()
     sig_led = (
-        sig_raw
-        .where(F.col("shard").isin(done))
+        sig_hist
         .join(F.broadcast(hist_ids), "doc_id", "left_semi")
         .select(F.col("doc_id").alias("hist_doc_id"), F.col("sig").alias("hsig"))
     )
-    est = F.aggregate(
-        F.zip_with("sig", "hsig", lambda a, b: (a == b).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(num_hashes)
     return (
         sig.join(F.broadcast(cand), "doc_id")
         .join(F.broadcast(sig_led), "hist_doc_id")
-        .select("doc_id", "hist_doc_id", est.alias("est_jaccard"))
+        .select("doc_id", "hist_doc_id",
+                _match_frac("sig", "hsig", num_hashes).alias("est_jaccard"))
         .where(F.col("est_jaccard") >= threshold)
         .groupBy("doc_id")
         .agg(F.max(F.struct("est_jaccard", "hist_doc_id")).alias("_best"))
@@ -1206,12 +1271,7 @@ def incremental_near_dup(
     on multi-operator replay — see StreamingIngestGuard).
     ``partitions`` caps the sketch-delta partials the state commit
     collects to the driver, as in incremental_dedup."""
-    from ..params import TimingParams
     from .dedup import banded_signatures, minhash_signatures
-
-    if params is None:
-        params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    state_path, band_path, sig_path, lineage_path = _near_paths(checkpoint_dir)
 
     src = new_df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -1239,11 +1299,6 @@ def incremental_near_dup(
     intra_cand = minhash_lsh_candidates(
         sig.select("doc_id", "sig"), bands, rows_per_band
     )
-    intra_est = F.aggregate(
-        F.zip_with("sa", "sb", lambda a, b: (a == b).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(num_hashes)
     # chain-safe keep-one (code-review r04: pairwise "larger id
     # loses" could delete BOTH ends of a chain): verified pairs form
     # transitive clusters via connected components — the same
@@ -1257,7 +1312,7 @@ def incremental_near_dup(
         intra_cand
         .join(sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa")), "doc_a")
         .join(sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb")), "doc_b")
-        .where(intra_est >= threshold)
+        .where(_match_frac("sa", "sb", num_hashes) >= threshold)
         .select("doc_a", "doc_b")
     ).localCheckpoint(eager=True)
     # connected_components short-circuits on an empty pair graph
@@ -1285,74 +1340,43 @@ def incremental_near_dup(
     ).localCheckpoint(eager=True)
 
     if update_state:
-        shard = len(_near_completed(spark, checkpoint_dir))
-        keep = ann.where(
-            ~F.col("is_near_dup_history") & ~F.col("is_near_dup_intra")
-        ).select("doc_id")
-        kept_banded = banded.join(F.broadcast(keep), "doc_id")
-        for _pth in (state_path, band_path, sig_path):
-            _heal_swap(_pth)  # see incremental_dedup (code-review r05)
-        _commit_sketch_delta(
-            state_path, kept_banded, F.col("bkey"), F.lit(now), NEAR_SPEC,
-            params, shard, partitions,
-        )
-        kept_banded.select(
-            "bkey", "doc_id", F.lit(now).cast("long").alias("tick"),
-            F.lit(shard).cast("int").alias("shard"),
-        ).write.mode("append").parquet(band_path)
-        sig.join(F.broadcast(keep), "doc_id").select(
-            "doc_id", "sig", F.lit(now).cast("long").alias("tick"),
-            F.lit(shard).cast("int").alias("shard"),
-        ).write.mode("append").parquet(sig_path)
-        if pre_lineage_hook is not None:
-            # caller-durable output must land BEFORE the lineage
-            # marker (same contract as incremental_dedup)
-            pre_lineage_hook(ann)
         counts = ann.agg(
             F.count("*").alias("n"),
             F.sum(F.col("is_near_dup_history").cast("long")).alias("h"),
             F.sum(F.col("is_near_dup_intra").cast("long")).alias("i"),
         ).collect()[0]
         n, h, i = int(counts["n"]), int(counts["h"] or 0), int(counts["i"] or 0)
-        meta = {
-            "shard": shard, "now": int(now), "kind": "near_dup",
-            "n_docs": n, "n_near_dup_history": h, "n_near_dup_intra": i,
-            "n_retained": n - h - i,
-            **(meta_extra or {}),
-        }
-        _write_lineage(lineage_path, meta)
+        keep = ann.where(
+            ~F.col("is_near_dup_history") & ~F.col("is_near_dup_intra")
+        ).select("doc_id")
+        _commit_shard(
+            checkpoint_dir, NEAR,
+            {
+                "band_ledger": banded.join(F.broadcast(keep), "doc_id"),
+                "sig_ledger": sig.join(F.broadcast(keep), "doc_id"),
+            },
+            F.lit(now), now, params, partitions,
+            {
+                "kind": "near_dup",
+                "n_docs": n, "n_near_dup_history": h, "n_near_dup_intra": i,
+                "n_retained": n - h - i,
+                **(meta_extra or {}),
+            },
+            ann, pre_lineage_hook,
+        )
     return ann
-
-
-def _near_completed(spark, checkpoint_dir: str) -> list[dict]:
-    """Near-dup lineage metadata (its OWN lineage dir under near/)."""
-    return _completed_metas(spark, _near_paths(checkpoint_dir)[3])
-
-
-def _load_near_state(spark, checkpoint_dir: str, exclude_epoch=None,
-                     with_raw: bool = False):
-    """Merged band-key membership sketch over completed shards (same
-    lineage-gated, merge-all recovery + same-epoch-exclusion rules as
-    load_dedup_state — one implementation, _load_sketch_state)."""
-    done = _done_shards(_near_completed(spark, checkpoint_dir), exclude_epoch)
-    return _load_sketch_state(
-        spark, _near_paths(checkpoint_dir)[0], done, NEAR_SPEC, with_raw=with_raw
-    )
 
 
 def compact_near_checkpoint(spark, checkpoint_dir: str):
     """Near-dup analogue of compact_dedup_checkpoint: fold every
     completed near shard's band-key sketch rows into ONE shard=-1 row
-    (the row _load_near_state already accepted but nothing wrote —
+    (the row the state loader already accepted but nothing wrote —
     VERDICT r04 "What's missing" #1). Without it a long-running
     near-dup ingest re-merges O(shards × payload) sketch rows on every
     probe. Ledgers and lineage are untouched (columnar-pushdown reads);
     expire_ledgers handles their growth. Safe and idempotent any
     time."""
-    state_path = _near_paths(checkpoint_dir)[0]
-    return _compact_sketch_state(
-        state_path, _load_near_state(spark, checkpoint_dir), NEAR_SPEC
-    )
+    return _compact(checkpoint_dir, NEAR)
 
 
 # --------------------------------------------------------------------
@@ -1364,50 +1388,10 @@ def compact_near_checkpoint(spark, checkpoint_dir: str):
 # sub-document passage (this).
 # --------------------------------------------------------------------
 
-PASSAGE_SPEC = "passage_fp"
-PASSAGE_LEDGER_DDL = "fp long, keep_doc string, keep_pos int, tick long, shard int"
-PASSAGE_ANNOTATED_DDL = (
-    "doc_id string, n_windows int, n_hist_windows int, hist_positions array<int>"
-)
-
-
-def _passage_paths(checkpoint_dir: str) -> tuple[str, str, str]:
-    """All passage state lives under <checkpoint_dir>/passages — its
-    own sketch_state, fp ledger, and lineage, disjoint from both the
-    exact-dedup and near-dup state (the namespacing rule code-review
-    r04 established: no operator's compaction/recovery/shard numbering
-    may touch another's)."""
-    base = os.path.join(checkpoint_dir, "passages")
-    return (
-        os.path.join(base, "sketch_state"),
-        os.path.join(base, "fp_ledger"),
-        os.path.join(base, "lineage"),
-    )
-
-
-def _passage_completed(spark, checkpoint_dir: str) -> list[dict]:
-    return _completed_metas(spark, _passage_paths(checkpoint_dir)[2])
-
-
-def _load_passage_state(spark, checkpoint_dir: str, exclude_epoch=None,
-                        with_raw: bool = False):
-    """Merged window-fp membership sketch over completed passage
-    shards (lineage-gated, merge-all, same-epoch-exclusion — the
-    recovery rules of load_dedup_state, one implementation)."""
-    done = _done_shards(_passage_completed(spark, checkpoint_dir), exclude_epoch)
-    return _load_sketch_state(
-        spark, _passage_paths(checkpoint_dir)[0], done, PASSAGE_SPEC,
-        with_raw=with_raw,
-    )
-
-
 def compact_passages_checkpoint(spark, checkpoint_dir: str):
     """Fold completed passage shards' sketch rows into one shard=-1
     row (same protocol as compact_dedup_checkpoint)."""
-    state_path = _passage_paths(checkpoint_dir)[0]
-    return _compact_sketch_state(
-        state_path, _load_passage_state(spark, checkpoint_dir), PASSAGE_SPEC
-    )
+    return _compact(checkpoint_dir, PASSAGES)
 
 
 def incremental_passages(
@@ -1457,13 +1441,7 @@ def incremental_passages(
     shard first, then this against history.
     ``partitions`` caps the sketch-delta partials the state commit
     collects to the driver, as in incremental_dedup."""
-    from ..params import TimingParams
-    from ..queries import _with_window, seen_within_payloads, sk_window
     from .dedup import passage_fingerprints
-
-    if params is None:
-        params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    state_path, ledger_path, lineage_path = _passage_paths(checkpoint_dir)
 
     src = new_df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -1475,37 +1453,16 @@ def incremental_passages(
         src, window=window, stride=stride, with_positions=True
     ).localCheckpoint(eager=True)
 
-    sk, raw = _load_passage_state(
-        spark, checkpoint_dir, exclude_epoch=exclude_epoch, with_raw=True
+    probe = _probe(
+        spark, checkpoint_dir, PASSAGES, wf.select("fp").distinct(), now,
+        query_window, exclude_epoch,
     )
-    if sk is not None:
-        w = query_window if query_window is not None else sk_window(sk)
-        if w > sk_window(sk):
-            raise ValueError(
-                f"window {w} exceeds the sketch's window_ticks {sk_window(sk)}"
-            )
-        if w != sk_window(sk):
-            sk = _with_window(sk, w)
-            raw = None  # re-windowed: stored payload no longer matches
-        hits = (
-            seen_within_payloads(
-                spark, [("", raw if raw is not None else sk.to_bytes())],
-                wf.select(F.col("fp").alias("key")).distinct(), now, only_seen=True,
-            )
-            .select(F.col("key").alias("fp"))
-            .distinct()
-        )
-        done = _done_shards(_passage_completed(spark, checkpoint_dir), exclude_epoch)
-        led = _read_swap(spark, ledger_path, PASSAGE_LEDGER_DDL)
-        assert led is not None, "completed passage shard without a ledger"
+    if probe is not None:
+        hits, w, done = probe
         # hit fps (tiny) broadcast into the ledger scan — history
         # filtered in place, never shuffled (the check-12/13 shape)
         verified = (
-            led.where(
-                (F.col("shard").isin(done))
-                & (F.col("tick") >= F.lit(now - w + 1))
-                & (F.col("tick") <= F.lit(now))
-            )
+            _ledger(spark, checkpoint_dir, PASSAGES, "passage_ledger", done, now, w)
             .join(hits, "fp")
             .select("fp")
             .distinct()
@@ -1545,7 +1502,11 @@ def incremental_passages(
     ).localCheckpoint(eager=True)
 
     if update_state:
-        shard = len(_passage_completed(spark, checkpoint_dir))
+        counts = ann.agg(
+            F.count("*").alias("n"),
+            F.sum("n_windows").alias("w"),
+            F.sum("n_hist_windows").alias("h"),
+        ).collect()[0]
         # only NEW fps enter history (suppressed spans don't refresh
         # ticks — decay semantics), and only via OCCURRENCES whose span
         # does not overlap a historical span of the same doc: a
@@ -1594,38 +1555,22 @@ def incremental_passages(
             )
             .localCheckpoint(eager=True)
         )
-        _heal_swap(state_path)
-        _heal_swap(ledger_path)  # see incremental_dedup (code-review r05)
-        _commit_sketch_delta(
-            state_path, newfp, F.col("fp"), F.lit(now), PASSAGE_SPEC,
-            params, shard, partitions,
+        # pre_lineage_hook: without it a crash after lineage but before
+        # the caller persisted the masked text would re-run against
+        # history that now contains this very shard and mask the
+        # entire shard away (code-review r05 #2)
+        _commit_shard(
+            checkpoint_dir, PASSAGES, {"passage_ledger": newfp}, F.lit(now), now,
+            params, partitions,
+            {
+                "kind": "passages",
+                "n_docs": int(counts["n"]),
+                "n_windows": int(counts["w"] or 0),
+                "n_hist_windows": int(counts["h"] or 0),
+                **(meta_extra or {}),
+            },
+            ann, pre_lineage_hook,
         )
-        newfp.select(
-            "fp", "keep_doc", "keep_pos",
-            F.lit(now).cast("long").alias("tick"),
-            F.lit(shard).cast("int").alias("shard"),
-        ).write.mode("append").parquet(ledger_path)
-        if pre_lineage_hook is not None:
-            # caller-durable output (e.g. the masked clean shard) must
-            # land BEFORE the lineage marker — same exactly-once
-            # contract as incremental_dedup; without it a crash after
-            # lineage but before the caller persisted the masked text
-            # would re-run against history that now contains this very
-            # shard and mask the entire shard away (code-review r05 #2)
-            pre_lineage_hook(ann)
-        counts = ann.agg(
-            F.count("*").alias("n"),
-            F.sum("n_windows").alias("w"),
-            F.sum("n_hist_windows").alias("h"),
-        ).collect()[0]
-        meta = {
-            "shard": shard, "now": int(now), "kind": "passages",
-            "n_docs": int(counts["n"]),
-            "n_windows": int(counts["w"] or 0),
-            "n_hist_windows": int(counts["h"] or 0),
-            **(meta_extra or {}),
-        }
-        _write_lineage(lineage_path, meta)
     return ann
 
 
@@ -1700,60 +1645,36 @@ def mask_against_history(
 # deterministic seeded planes so bucket keys agree across shards.
 # --------------------------------------------------------------------
 
-EMB_SPEC = "emb_dup_bucket"
-EMB_BUCKET_LEDGER_DDL = "bkey long, vec_id string, tick long, shard int"
-EMB_VEC_LEDGER_DDL = "vec_id string, embedding array<float>, tick long, shard int"
-EMB_ANNOTATED_DDL = (
-    "vec_id string, is_emb_dup_history boolean, hist_vec_id string, cosine double"
-)
-
-
-def _emb_paths(checkpoint_dir: str) -> tuple[str, str, str, str]:
-    """All embedding-dedup state lives under <checkpoint_dir>/emb —
-    its own sketch_state, bucket/vec ledgers, and lineage (operator
-    namespacing rule, code-review r04)."""
-    base = os.path.join(checkpoint_dir, "emb")
-    return (
-        os.path.join(base, "sketch_state"),
-        os.path.join(base, "bucket_ledger"),
-        os.path.join(base, "vec_ledger"),
-        os.path.join(base, "lineage"),
-    )
-
-
-def _emb_completed(spark, checkpoint_dir: str) -> list[dict]:
-    return _completed_metas(spark, _emb_paths(checkpoint_dir)[3])
-
-
-def _load_emb_state(spark, checkpoint_dir: str, exclude_epoch=None,
-                    with_raw: bool = False):
-    done = _done_shards(_emb_completed(spark, checkpoint_dir), exclude_epoch)
-    return _load_sketch_state(
-        spark, _emb_paths(checkpoint_dir)[0], done, EMB_SPEC, with_raw=with_raw
-    )
-
-
 def compact_emb_checkpoint(spark, checkpoint_dir: str):
     """Fold completed embedding shards' sketch rows into one shard=-1
     row (same protocol as compact_dedup_checkpoint)."""
-    state_path = _emb_paths(checkpoint_dir)[0]
-    return _compact_sketch_state(
-        state_path, _load_emb_state(spark, checkpoint_dir), EMB_SPEC
-    )
+    return _compact(checkpoint_dir, EMB)
 
 
-def _emb_planes(dim: int, bits: int, tables: int, seed_base: int = 101):
-    """The stacked (tables·bits, dim) hyperplane matrix — the
-    per-table plane sets (identical construction to
-    similarity.hyperplane_buckets, seed_base + 13·t) concatenated so
-    one matmul yields every table's projections. Pure function of the
-    seed: the key kernel and the round-6 verify kernel both call this,
-    so bucket keys can never drift between them."""
+def _emb_bucket_keys(dim: int, bits: int, tables: int, seed_base: int = 101):
+    """The emb family's one bucket-key function: ``keys(col)`` maps an
+    Arrow list column of n vectors to ``(vecs, bkey)`` — the (n, dim)
+    float32 matrix and the n·tables int64 bucket keys, vector i's at
+    [i·tables, (i+1)·tables). The key kernel (_emb_src_keyed) and the
+    verify kernel (_make_emb_verify_udf) both call it, so bucket keys
+    can never drift between them.
+
+    Planes: ``tables`` sets of ``bits`` seeded ±1 hyperplanes
+    (identical construction to similarity.hyperplane_buckets,
+    seed_base + 13·t) stacked into one (tables·bits, dim) matrix, so
+    ONE matmul per batch yields every table's projections. A pure
+    function of the seed: keys are splitmix64(bucket ⊕ mix(t)),
+    deterministic across shards and partitionings.
+
+    Null and wrong-length vectors fail loudly: a null list contributes
+    0 elements, so an unguarded reshape either aborts cryptically or —
+    if length errors cancel — shifts every later row onto WRONG bucket
+    keys (silent false negatives; code-review r05 fifth pass #3)."""
     import numpy as np
 
     from ..hashing import splitmix64
 
-    return np.concatenate([
+    planes = np.concatenate([
         np.where(
             (splitmix64(
                 np.arange(bits * dim, dtype=np.uint64)
@@ -1763,69 +1684,65 @@ def _emb_planes(dim: int, bits: int, tables: int, seed_base: int = 101):
         ).reshape(bits, dim)
         for t in range(tables)
     ]).astype(np.float32)
-
-
-def _emb_table_keys(
-    df: DataFrame, dim: int, bits: int, tables: int,
-    vec_col: str = "embedding", id_col: str = "vec_id", seed_base: int = 101,
-) -> DataFrame:
-    """(vec_id, bkey): ``tables`` bucket keys per vector from ONE
-    matmul per Arrow batch — the stacked plane matrix (_emb_planes)
-    means the input plan executes once instead of ``tables`` times and
-    the key frame never carries the vectors (code-review r05 third
-    pass #3/#4). Keys are splitmix64(bucket ⊕ mix(t)) — deterministic
-    across shards and partitionings."""
-    import numpy as np
-    import pyarrow as pa
-
-    from ..hashing import splitmix64
-
-    planes = _emb_planes(dim, bits, tables, seed_base)
     weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
     tsalt = splitmix64(np.arange(tables, dtype=np.uint64) + np.uint64(0xE3B))
 
+    def keys(col):
+        n = len(col)
+        if col.null_count:
+            raise ValueError(f"embedding contains {col.null_count} null vectors")
+        flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float32)
+        if flat.size != n * dim:
+            raise ValueError(
+                f"embedding is ragged: {n} vectors yield {flat.size} "
+                f"floats, expected {n * dim} (dim={dim})"
+            )
+        vecs = flat.reshape(n, dim)
+        signs = (vecs @ planes.T > 0).astype(np.int64).reshape(n, tables, bits)
+        buckets = (signs * weights).sum(axis=2)           # (n, T)
+        with np.errstate(over="ignore"):
+            bkey = splitmix64(buckets.astype(np.uint64) ^ tsalt)
+        return vecs, bkey.reshape(-1).view(np.int64)
+
+    return keys
+
+
+def _emb_src_keyed(
+    new_df: DataFrame, dim: int, bits: int, tables: int, vec_col: str, id_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The emb operators' two shard frames: ``src`` = (vec_id string,
+    embedding) and ``keyed`` = (vec_id, bkey), ``tables`` bucket keys
+    per vector from ONE mapInArrow pass (all tables in one matmul, and
+    the key frame never carries the vectors — code-review r05 third
+    pass #3/#4), frozen so probe and state commit never recompute it."""
+    import numpy as np
+    import pyarrow as pa
+
+    src = new_df.select(
+        F.col(id_col).cast("string").alias("vec_id"),
+        F.col(vec_col).alias("embedding"),
+    )
+    keys = _emb_bucket_keys(dim, bits, tables)
+
     def assign(iterator):
         for tbl in iterator:
-            col = tbl.column(vec_col)
-            n = len(tbl)
-            # fail loudly on null / wrong-length vectors: a null list
-            # contributes 0 elements, so an unguarded reshape either
-            # aborts cryptically or — if length errors cancel — shifts
-            # every later row onto WRONG bucket keys (silent false
-            # negatives; code-review r05 fifth pass #3)
-            if col.null_count:
-                raise ValueError(f"{vec_col} contains {col.null_count} null vectors")
-            flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float32)
-            if flat.size != n * dim:
-                raise ValueError(
-                    f"{vec_col} is ragged: {n} vectors yield {flat.size} "
-                    f"floats, expected {n * dim} (dim={dim})"
-                )
-            proj = flat.reshape(n, dim) @ planes.T            # (n, T*B)
-            signs = (proj > 0).astype(np.int64).reshape(n, tables, bits)
-            buckets = (signs * weights).sum(axis=2)           # (n, T)
-            with np.errstate(over="ignore"):
-                bkey = splitmix64(buckets.astype(np.uint64) ^ tsalt)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    id_col: tbl.column(id_col).take(
-                        pa.array(np.repeat(np.arange(n, dtype=np.int64), tables))
-                    ),
-                    "bkey": pa.array(bkey.reshape(-1).view(np.int64), pa.int64()),
-                }
-            )
+            _, bkey = keys(tbl.column("embedding"))
+            rows = np.repeat(np.arange(len(tbl), dtype=np.int64), tables)
+            yield pa.RecordBatch.from_pydict({
+                "vec_id": tbl.column("vec_id").take(pa.array(rows)),
+                "bkey": pa.array(bkey, pa.int64()),
+            })
 
-    src = df.select(id_col, vec_col)
-    id_t = src.schema[id_col].dataType.simpleString()
-    return src.mapInArrow(assign, schema=f"{id_col} {id_t}, bkey long")
+    keyed = src.mapInArrow(assign, schema="vec_id string, bkey long")
+    return src, keyed.localCheckpoint(eager=True)
 
 
-def _emb_check_geometry(spark, checkpoint_dir: str, bits: int, tables: int, dim: int):
+def _emb_check_geometry(checkpoint_dir: str, bits: int, tables: int, dim: int):
     """Bucket-key geometry must match the checkpoint's: keys computed
     with different bits/tables/dim never collide with retained keys,
     so every probe would silently miss (code-review r05 third pass
     #2). The geometry is recorded in each shard's lineage meta."""
-    prior = [m for m in _emb_completed(spark, checkpoint_dir) if "bits" in m]
+    prior = [m for m in _metas(checkpoint_dir, EMB) if "bits" in m]
     if prior:
         g = prior[-1]
         if (int(g["bits"]), int(g["tables"]), int(g["dim"])) != (bits, tables, dim):
@@ -1838,56 +1755,21 @@ def _emb_check_geometry(spark, checkpoint_dir: str, bits: int, tables: int, dim:
 
 
 def _emb_hist_matches(
-    spark,
-    src: DataFrame,
-    keyed: DataFrame,
-    checkpoint_dir: str,
-    now: int,
-    threshold: float,
-    dim: int,
-    bits: int,
-    tables: int,
-    window: int | None = None,
-    exclude_epoch=None,
+    spark, src: DataFrame, keyed: DataFrame, checkpoint_dir: str, now: int,
+    threshold: float, dim: int, bits: int, tables: int, window, exclude_epoch,
 ) -> DataFrame:
     """The LAZY history-match plan of incremental_embedding_dedup —
     sketch probe over bucket keys, bucket-ledger candidate fetch, exact
     cosine verify against the vec ledger. Exposed (via
     emb_annotate_plan) so plan tools can explain the REAL operator."""
-    from ..queries import _with_window, seen_within_payloads, sk_window
-
-    empty = spark.createDataFrame(
-        [], "vec_id string, hist_vec_id string, cosine double"
+    probe = _probe(
+        spark, checkpoint_dir, EMB, keyed.select("bkey"), now, window, exclude_epoch
     )
-    sk, raw = _load_emb_state(
-        spark, checkpoint_dir, exclude_epoch=exclude_epoch, with_raw=True
-    )
-    if sk is None:
-        return empty
-    w = window if window is not None else sk_window(sk)
-    if w > sk_window(sk):
-        raise ValueError(
-            f"window {w} exceeds the sketch's window_ticks {sk_window(sk)}"
+    if probe is None:
+        return spark.createDataFrame(
+            [], "vec_id string, hist_vec_id string, cosine double"
         )
-    if w != sk_window(sk):
-        sk = _with_window(sk, w)
-        raw = None  # re-windowed: stored payload no longer matches
-    hits = (
-        seen_within_payloads(
-            spark, [("", raw if raw is not None else sk.to_bytes())],
-            keyed.select(F.col("bkey").alias("key")),
-            now, only_seen=True,
-        )
-        .select(F.col("key").alias("bkey"))
-        .distinct()
-    )
-    _, bucket_path, vec_path, _ = _emb_paths(checkpoint_dir)
-    done = _done_shards(_emb_completed(spark, checkpoint_dir), exclude_epoch)
-    bucket_led = _read_swap(spark, bucket_path, EMB_BUCKET_LEDGER_DDL)
-    vec_led = _read_swap(spark, vec_path, EMB_VEC_LEDGER_DDL)
-    assert bucket_led is not None and vec_led is not None, (
-        "completed emb shard without its ledgers"
-    )
+    hits, w, done = probe
     # exact-cosine verify, round-6 shape (guide §8: decide with small
     # rows, move heavy bytes once; §4.2: vectorized native code inside
     # the kernel). The round-5 plan fetched candidates via a
@@ -1913,11 +1795,7 @@ def _emb_hist_matches(
     # The whole verify is one pure map over the shard — zero joins,
     # zero pair-stream shuffles, vectors crossing Arrow once.
     led_hits = (
-        bucket_led.where(
-            (F.col("shard").isin(done))
-            & (F.col("tick") >= F.lit(now - w + 1))
-            & (F.col("tick") <= F.lit(now))
-        )
+        _ledger(spark, checkpoint_dir, EMB, "bucket_ledger", done, now, w)
         .select("bkey", F.col("vec_id").alias("hist_vec_id"))
         .join(F.broadcast(hits), "bkey")
         .toArrow()
@@ -1935,7 +1813,7 @@ def _emb_hist_matches(
         schema="vec_id string",  # explicit: inference fails on empty
     )
     hvec_rows = (
-        vec_led.where(F.col("shard").isin(done))
+        _ledger(spark, checkpoint_dir, EMB, "vec_ledger", done)
         .join(F.broadcast(hist_ids_df), "vec_id", "left_semi")
         .select("vec_id", "embedding")
         .toArrow()
@@ -2016,8 +1894,8 @@ def _broadcast_emb_candidates(spark, led_hits, hvec_rows):
 def _make_emb_verify_udf(bc_cand, threshold: float, dim: int, bits: int, tables: int):
     """mapInArrow verify kernel over the bare shard (vec_id,
     embedding) rows: re-derive each vector's ``tables`` bucket keys
-    from the same seeded planes (_emb_planes — deterministic, shared
-    with _emb_table_keys), look the keys up in the broadcast CSR,
+    with the key kernel's own function (_emb_bucket_keys — same seeded
+    planes, same input guards), look the keys up in the broadcast CSR,
     gather partner vectors from the broadcast matrix, and emit every
     (vec_id, hist_vec_id, cosine) pair at cosine >= threshold. All
     double precision, fully vectorized — no per-row Python, no joins,
@@ -2026,15 +1904,20 @@ def _make_emb_verify_udf(bc_cand, threshold: float, dim: int, bits: int, tables:
     downstream max-per-vec aggregation is insensitive to that, and
     deduplicating here would cost a per-batch sort for nothing.
     Zero-norm guard preserved: an all-zero embedding has no direction
-    and never matches anything (code-review r05 third pass #1)."""
+    and never matches anything (code-review r05 third pass #1).
+
+    Precision: the shard's vectors are downcast to float32 on purpose
+    (an ``array<double>`` input included), because history is stored
+    as float32 (the vec ledger's ``array<float>``): both sides of every
+    pair round the same way, so an exact re-upload of a double vector
+    scores cosine 1 to double precision, and the cosine itself is
+    accumulated in float64. A pair whose float64 cosine lies within
+    float32 rounding of ``threshold`` may land on either side of it —
+    the same either way a vector enters history."""
     import numpy as np
     import pyarrow as pa
 
-    from ..hashing import splitmix64
-
-    planes = _emb_planes(dim, bits, tables)
-    weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
-    tsalt = splitmix64(np.arange(tables, dtype=np.uint64) + np.uint64(0xE3B))
+    keys = _emb_bucket_keys(dim, bits, tables)
 
     def verify(iterator):
         uniq_bkeys, csr_off, partner_rows, id_arr, mat, hnorms = bc_cand.value
@@ -2042,22 +1925,7 @@ def _make_emb_verify_udf(bc_cand, threshold: float, dim: int, bits: int, tables:
             n = len(tbl)
             if n == 0 or uniq_bkeys.size == 0:
                 continue
-            col = tbl.column("embedding")
-            if col.null_count:
-                raise ValueError(f"embedding contains {col.null_count} null vectors")
-            flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float32)
-            if flat.size != n * dim:
-                raise ValueError(
-                    f"embedding is ragged: {n} vectors yield {flat.size} "
-                    f"floats, expected {n * dim} (dim={dim})"
-                )
-            evec = flat.reshape(n, dim)
-            proj = evec @ planes.T
-            signs = (proj > 0).astype(np.int64).reshape(n, tables, bits)
-            buckets = (signs * weights).sum(axis=2)
-            with np.errstate(over="ignore"):
-                bkey = splitmix64(buckets.astype(np.uint64) ^ tsalt).reshape(-1)
-            kf = bkey.view(np.int64)
+            evec, kf = keys(tbl.column("embedding"))
             pos = np.searchsorted(uniq_bkeys, kf)
             pos[pos == uniq_bkeys.size] = 0  # clamp; equality check below
             found = uniq_bkeys[pos] == kf
@@ -2094,6 +1962,31 @@ def _make_emb_verify_udf(bc_cand, threshold: float, dim: int, bits: int, tables:
     return verify
 
 
+def _emb_annotate(
+    spark, new_df, checkpoint_dir, now, dim, threshold, bits, tables, window,
+    vec_col, id_col, exclude_epoch,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(src, keyed, lazy annotated plan) — the probe half shared by
+    emb_annotate_plan and incremental_embedding_dedup."""
+    _emb_check_geometry(checkpoint_dir, bits, tables, dim)
+    src, keyed = _emb_src_keyed(new_df, dim, bits, tables, vec_col, id_col)
+    hist_matches = _emb_hist_matches(
+        spark, src, keyed, checkpoint_dir, now, threshold, dim, bits, tables,
+        window, exclude_epoch,
+    )
+    ann = (
+        src.select("vec_id")
+        .join(hist_matches, "vec_id", "left")
+        .select(
+            "vec_id",
+            F.col("hist_vec_id").isNotNull().alias("is_emb_dup_history"),
+            "hist_vec_id",
+            "cosine",
+        )
+    )
+    return src, keyed, ann
+
+
 def emb_annotate_plan(
     spark,
     new_df: DataFrame,
@@ -2114,30 +2007,10 @@ def emb_annotate_plan(
     .explain() the real operator. Callers who want the flags should
     use incremental_embedding_dedup(update_state=False): this raw plan
     re-reads the checkpoint on every action."""
-    _emb_check_geometry(spark, checkpoint_dir, bits, tables, dim)
-    src = new_df.select(
-        F.col(id_col).cast("string").alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-    )
-    keyed = _emb_table_keys(
-        src, dim=dim, bits=bits, tables=tables,
-        vec_col="embedding", id_col="vec_id",
-    ).localCheckpoint(eager=True)
-    hist_matches = _emb_hist_matches(
-        spark, src, keyed, checkpoint_dir, now,
-        threshold=threshold, dim=dim, bits=bits, tables=tables,
-        window=window, exclude_epoch=exclude_epoch,
-    )
-    return (
-        src.select("vec_id")
-        .join(hist_matches, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("hist_vec_id").isNotNull().alias("is_emb_dup_history"),
-            "hist_vec_id",
-            "cosine",
-        )
-    )
+    return _emb_annotate(
+        spark, new_df, checkpoint_dir, now, dim, threshold, bits, tables,
+        window, vec_col, id_col, exclude_epoch,
+    )[2]
 
 
 def incremental_embedding_dedup(
@@ -2188,100 +2061,34 @@ def incremental_embedding_dedup(
     incremental_passages).
     ``partitions`` caps the sketch-delta partials the state commit
     collects to the driver, as in incremental_dedup."""
-    from ..params import TimingParams
-
-    if params is None:
-        params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    _emb_check_geometry(spark, checkpoint_dir, bits, tables, dim)
-
-    src = new_df.select(
-        F.col(id_col).cast("string").alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
+    src, keyed, ann = _emb_annotate(
+        spark, new_df, checkpoint_dir, now, dim, threshold, bits, tables,
+        window, vec_col, id_col, exclude_epoch,
     )
-    # one fused kernel pass (all tables in one matmul, vectors not
-    # carried); frozen so probe and state-update never recompute it
-    keyed = _emb_table_keys(
-        src, dim=dim, bits=bits, tables=tables,
-        vec_col="embedding", id_col="vec_id",
-    ).localCheckpoint(eager=True)
-
-    hist_matches = _emb_hist_matches(
-        spark, src, keyed, checkpoint_dir, now,
-        threshold=threshold, dim=dim, bits=bits, tables=tables,
-        window=window, exclude_epoch=exclude_epoch,
-    )
-
-    ann = (
-        src.select("vec_id")
-        .join(hist_matches, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("hist_vec_id").isNotNull().alias("is_emb_dup_history"),
-            "hist_vec_id",
-            "cosine",
-        )
-    ).localCheckpoint(eager=True)
+    ann = ann.localCheckpoint(eager=True)
 
     if update_state:
         counts = ann.agg(
             F.count("*").alias("n"),
             F.sum(F.col("is_emb_dup_history").cast("long")).alias("h"),
         ).collect()[0]
+        n, h = int(counts["n"]), int(counts["h"] or 0)
         keep = ann.where(~F.col("is_emb_dup_history")).select("vec_id")
-        _commit_emb_rows(
-            spark, src.join(F.broadcast(keep), "vec_id"),
-            keyed.join(F.broadcast(keep), "vec_id"),
-            checkpoint_dir, now,
-            dict(bits=bits, tables=tables, dim=dim, kind_="emb_dup",
-                 n_vecs=int(counts["n"]),
-                 n_emb_dup_history=int(counts["h"] or 0),
-                 n_retained=int(counts["n"]) - int(counts["h"] or 0),
-                 **(meta_extra or {})),
-            params=params, partitions=partitions,
-            pre_lineage=lambda: pre_lineage_hook(ann) if pre_lineage_hook else None,
+        _commit_shard(
+            checkpoint_dir, EMB,
+            {
+                "bucket_ledger": keyed.join(F.broadcast(keep), "vec_id"),
+                "vec_ledger": src.join(F.broadcast(keep), "vec_id"),
+            },
+            F.lit(now), now, params, partitions,
+            {
+                "kind": "emb_dup", "bits": bits, "tables": tables, "dim": dim,
+                "n_vecs": n, "n_emb_dup_history": h, "n_retained": n - h,
+                **(meta_extra or {}),
+            },
+            ann, pre_lineage_hook,
         )
     return ann
-
-
-def _commit_emb_rows(
-    spark, vec_rows, key_rows, checkpoint_dir, now, meta_fields,
-    params, partitions, pre_lineage=None,
-):
-    """Append (vec_id, embedding) rows + their bucket keys to the emb
-    history state — sketch first, ledgers, caller-durable output,
-    lineage LAST (the family write order). No probing: commit is
-    independent of annotation, which is what lets the guard flag the
-    FULL batch but retain only the PUBLISHED survivors (code-review
-    r05 fifth pass #1 — the passages survivor-keeper rule applied to
-    the semantic half)."""
-    state_path, bucket_path, vec_path, lineage_path = _emb_paths(checkpoint_dir)
-    shard = len(_emb_completed(spark, checkpoint_dir))
-    _heal_swap(state_path)
-    _heal_swap(bucket_path)
-    _heal_swap(vec_path)
-    _commit_sketch_delta(
-        state_path, key_rows, F.col("bkey"), F.lit(now), EMB_SPEC,
-        params, shard, partitions,
-    )
-    key_rows.select(
-        "bkey", "vec_id", F.lit(now).cast("long").alias("tick"),
-        F.lit(shard).cast("int").alias("shard"),
-    ).write.mode("append").parquet(bucket_path)
-    # cast to the ledger DDL's array<float> at ingest (ADVICE r05 #2):
-    # an uncast array<double> caller would commit fine on shard 1 and
-    # then poison every later probe with a parquet schema-conversion
-    # error when _read_swap applies EMB_VEC_LEDGER_DDL
-    vec_rows.select(
-        "vec_id",
-        F.col("embedding").cast("array<float>").alias("embedding"),
-        F.lit(now).cast("long").alias("tick"),
-        F.lit(shard).cast("int").alias("shard"),
-    ).write.mode("append").parquet(vec_path)
-    if pre_lineage is not None:
-        pre_lineage()
-    kind_ = meta_fields.pop("kind_", "emb_dup")
-    meta = {"shard": shard, "now": int(now), "kind": kind_, **meta_fields}
-    _write_lineage(lineage_path, meta)
 
 
 def commit_emb_state(
@@ -2303,35 +2110,21 @@ def commit_emb_state(
     annotate the full batch with update_state=False, decide what gets
     published, then commit exactly the published set here (the guard's
     embeddings mode does this; committing unpublished vectors would
-    let them suppress future docs with no published keeper). Geometry
-    must match the checkpoint's (validated, like the probe path).
+    let them suppress future docs with no published keeper —
+    code-review r05 fifth pass #1, the passages survivor-keeper rule
+    applied to the semantic half). Geometry must match the
+    checkpoint's (validated, like the probe path).
     ``partitions`` caps the sketch-delta partials the commit collects
     to the driver, as in incremental_dedup."""
-    from ..params import TimingParams
-
-    if params is None:
-        params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    prior = [m for m in _emb_completed(spark, checkpoint_dir) if "bits" in m]
-    if prior:
-        g = prior[-1]
-        if (int(g["bits"]), int(g["tables"]), int(g["dim"])) != (bits, tables, dim):
-            raise ValueError(
-                f"emb checkpoint geometry bits={g['bits']} tables={g['tables']} "
-                f"dim={g['dim']} != bits={bits} tables={tables} dim={dim}"
-            )
-    src = new_df.select(
-        F.col(id_col).cast("string").alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-    )
-    keyed = _emb_table_keys(
-        src, dim=dim, bits=bits, tables=tables,
-        vec_col="embedding", id_col="vec_id",
-    ).localCheckpoint(eager=True)
-    n = src.count()
-    _commit_emb_rows(
-        spark, src, keyed, checkpoint_dir, now,
-        dict(bits=bits, tables=tables, dim=dim, kind_="emb_dup",
-             n_vecs=int(n), n_emb_dup_history=0, n_retained=int(n),
-             **(meta_extra or {})),
-        params=params, partitions=partitions,
+    _emb_check_geometry(checkpoint_dir, bits, tables, dim)
+    src, keyed = _emb_src_keyed(new_df, dim, bits, tables, vec_col, id_col)
+    n = int(src.count())
+    _commit_shard(
+        checkpoint_dir, EMB, {"bucket_ledger": keyed, "vec_ledger": src},
+        F.lit(now), now, params, partitions,
+        {
+            "kind": "emb_dup", "bits": bits, "tables": tables, "dim": dim,
+            "n_vecs": n, "n_emb_dup_history": 0, "n_retained": n,
+            **(meta_extra or {}),
+        },
     )

@@ -1,0 +1,93 @@
+"""Input guards and precision of the embedding history family.
+
+- the shared bucket-key function rejects null and wrong-length vectors
+  loudly instead of shifting later rows onto wrong bucket keys;
+- ``array<double>`` input is cast to the vec ledger's ``array<float>``
+  at ingest, and exact re-uploads still score cosine 1;
+- commit_emb_state refuses a checkpoint of another geometry and
+  commits nothing.
+"""
+
+import shutil
+import tempfile
+
+import numpy as np
+import pytest
+from pyspark.errors import PythonException
+from pyspark.sql.types import ArrayType, FloatType
+
+from fuggetabouspark.dataops import commit_emb_state, incremental_embedding_dedup
+from fuggetabouspark.dataops.incremental import EMB, _metas
+from fuggetabouspark.params import TimingParams
+
+P = TimingParams(capacity=10_000, error=0.001, window_ticks=2**31)
+DIM = 8
+
+
+@pytest.fixture()
+def ck():
+    d = tempfile.mkdtemp(prefix="fgs_emb_")
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def _rows(n, seed, start=0):
+    rng = np.random.default_rng(seed)
+    return [(start + i, [float(x) for x in v])
+            for i, v in enumerate(rng.standard_normal((n, DIM)))]
+
+
+class TestBucketKeyGuards:
+    def test_null_vector_fails_loudly(self, spark, ck):
+        df = spark.createDataFrame(
+            _rows(3, 1) + [(9, None)], "vec_id long, embedding array<float>"
+        )
+        with pytest.raises(PythonException, match="null vectors"):
+            incremental_embedding_dedup(spark, df, ck, now=1, dim=DIM, params=P)
+
+    def test_wrong_length_vector_fails_loudly(self, spark, ck):
+        df = spark.createDataFrame(
+            _rows(3, 2) + [(9, [1.0] * (DIM - 1))], "vec_id long, embedding array<float>"
+        )
+        with pytest.raises(PythonException, match="ragged"):
+            incremental_embedding_dedup(spark, df, ck, now=1, dim=DIM, params=P)
+
+
+class TestDoubleInput:
+    def test_double_vectors_reuploaded_score_cosine_one(self, spark, ck):
+        first = _rows(20, 3)
+        ddl = "vec_id long, embedding array<double>"
+        incremental_embedding_dedup(
+            spark, spark.createDataFrame(first, ddl), ck, now=1, dim=DIM, params=P
+        ).unpersist()
+        led = spark.read.parquet(EMB.path(ck, "vec_ledger"))
+        assert led.schema["embedding"].dataType == ArrayType(FloatType())
+        # shard 2: every shard-1 vector re-uploaded under a new id
+        second = [(100 + i, v) for i, v in first]
+        ann = incremental_embedding_dedup(
+            spark, spark.createDataFrame(second, ddl), ck, now=2, dim=DIM,
+            params=P, update_state=False,
+        )
+        got = ann.collect()
+        ann.unpersist()
+        assert len(got) == len(second)
+        for r in got:
+            assert r.is_emb_dup_history
+            assert int(r.hist_vec_id) == int(r.vec_id) - 100
+            assert abs(r.cosine - 1.0) < 1e-9
+
+
+class TestCommitGeometry:
+    def test_mismatched_bits_commits_nothing(self, spark, ck):
+        ddl = "vec_id long, embedding array<float>"
+        commit_emb_state(
+            spark, spark.createDataFrame(_rows(5, 4), ddl), ck, now=1, dim=DIM,
+            bits=6, params=P,
+        )
+        assert len(_metas(ck, EMB)) == 1
+        with pytest.raises(ValueError, match="bits"):
+            commit_emb_state(
+                spark, spark.createDataFrame(_rows(5, 5, start=10), ddl), ck,
+                now=2, dim=DIM, bits=8, params=P,
+            )
+        assert len(_metas(ck, EMB)) == 1

@@ -372,19 +372,19 @@ class TestRound5StateBounding:
             compact_near_checkpoint,
             incremental_near_dup,
         )
-        from fuggetabouspark.dataops.incremental import _load_near_state
+        from fuggetabouspark.dataops.incremental import NEAR, _load_state
 
         texts = [" ".join(f"t{j}v{i}" for j in range(40)) for i in range(3)]
         for i, t in enumerate(texts):
             incremental_near_dup(
                 spark, self._mk(spark, i, t), ck, now=i + 1, params=self.P
             ).unpersist()
-        before = _load_near_state(spark, ck)
+        before = _load_state(ck, NEAR)
         sk = compact_near_checkpoint(spark, ck)
         assert sk is not None
         rows = spark.read.parquet(os.path.join(ck, "near", "sketch_state")).collect()
         assert [r.shard for r in rows] == [-1]
-        after = _load_near_state(spark, ck)
+        after = _load_state(ck, NEAR)
         assert after.to_bytes() == before.to_bytes()
         # post-compaction ingest still near-dedups against ALL prior
         # shards: an exact clone of texts[1] matches with certainty
@@ -396,7 +396,7 @@ class TestRound5StateBounding:
         q.unpersist()
         # idempotent
         compact_near_checkpoint(spark, ck)
-        assert _load_near_state(spark, ck) is not None
+        assert _load_state(ck, NEAR) is not None
 
     def test_expire_ledgers_bounds_state(self, spark, ck):
         from fuggetabouspark.dataops import (
@@ -478,7 +478,7 @@ class TestRound5StateBounding:
             StreamingIngestGuard,
             incremental_near_dup,
         )
-        from fuggetabouspark.dataops.incremental import _near_completed
+        from fuggetabouspark.dataops.incremental import NEAR, _metas
 
         clean = os.path.join(ck, "clean")
         g = StreamingIngestGuard(
@@ -507,7 +507,7 @@ class TestRound5StateBounding:
         # both attempts' shards are in the near lineage for epoch 1 —
         # duplicate state rows are merge-all-safe and bounded by
         # compaction/expiry
-        epochs = [m.get("epoch") for m in _near_completed(spark, ck)]
+        epochs = [m.get("epoch") for m in _metas(ck, NEAR)]
         assert epochs.count(1) == 2
 
     def test_many_shard_state_stays_bounded(self, spark, ck):

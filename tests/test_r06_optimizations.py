@@ -161,13 +161,13 @@ class TestEmbVerifyMissingPartner:
         # empty the vec ledger (keep schema) — simulates a partner
         # whose vector row is gone while its bucket keys remain
         from fuggetabouspark.dataops.incremental import (
+            EMB,
             EMB_VEC_LEDGER_DDL,
-            _emb_paths,
             _read_swap,
             _swap_dir,
         )
 
-        vec_path = _emb_paths(ck)[2]
+        vec_path = EMB.path(ck, "vec_ledger")
         empty = spark.createDataFrame([], EMB_VEC_LEDGER_DDL)
         _swap_dir(
             lambda tmp: empty.write.mode("overwrite").parquet(tmp), vec_path
