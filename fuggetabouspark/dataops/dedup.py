@@ -19,8 +19,19 @@ Four families, each chosen for a different scale/recall point:
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ByteType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..hashing import splitmix64
 
@@ -323,6 +334,13 @@ def simhash_buckets(df: DataFrame, text_col: str = "text", band_bits: int = 16) 
     return out.select("doc_id", "source", "simhash", *bandcols)
 
 
+# Pair graphs with at most this many edge rows are clustered on the
+# driver (_cc_local); the probe reads one row more to tell.
+_LOCAL_CC_EDGES = 1 << 20
+
+_LOCAL_CC_TYPES = (ByteType(), ShortType(), IntegerType(), LongType(), StringType())
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
@@ -335,6 +353,8 @@ def connected_components(
     the duplicate-CLUSTERING step after candidate generation (LSH) and
     verification (jaccard): near-dup pairs chain transitively, and
     keep-one-per-cluster needs the transitive closure, not the pairs.
+    Null ids are not nodes: an edge with one null endpoint is a
+    self-loop of the other endpoint, and an all-null edge is dropped.
 
     Min-label propagation + pointer jumping: every node starts labeled
     with itself; each round, labels flow across edges (both
@@ -344,30 +364,44 @@ def connected_components(
     instead of O(diameter) (round 3, VERDICT r02 #5: a pathological
     long-chain dup graph — version histories, boilerplate drift —
     would otherwise need diameter rounds; near-clique dedup graphs
-    converge in 2-3 either way). Per-round cost: the edges⋈labels
-    join, the union + groupBy.min, the labels⋈labels hop, and a
-    labels⋈labels join for change detection — all on O(E)/O(V) rows.
-    The edge frame is localCheckpoint()ed ONCE (it is reused every
-    round — ADVICE r02) and labels are localCheckpoint()ed per round
-    so the loop doesn't accumulate an unbounded lineage/plan.
-    Converges when no label changes (limit(1).count() on the diff —
-    stops at the first changed row; at the fixpoint the hop is the
-    identity, so the check is exact); raises if max_iter rounds don't
-    converge rather than returning partial components.
-    ``return_rounds=True`` returns ((node, component) frame, rounds) —
-    the round count is the scaling evidence the chain bench reports."""
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    # empty graph short-circuit (VERDICT r04 advisory #2): callers no
-    # longer need their own emptiness probe before calling — one cheap
-    # job on the checkpointed edges replaces the label init + round 1
-    if e.limit(1).count() == 0:
-        out = e.select(F.col("a").alias("node"), F.col("a").alias("comp"))
-        return (out, 0) if return_rounds else out
+    converge in 2-3 either way). Converges when a propagation changes
+    no label (at that fixpoint the hop is the identity); raises if
+    max_iter rounds don't converge rather than returning partial
+    components. ``return_rounds=True`` returns ((node, component)
+    frame, rounds) — the round count is the scaling evidence the chain
+    bench reports.
+
+    Two executions of the same rounds, with identical rows, round
+    counts, errors and output schema:
+
+    - driver: when both id columns share an integral or (binary
+      collation) string type, one bounded read
+      ``limit(_LOCAL_CC_EDGES + 1).toArrow()`` fetches the edges; if at
+      most ``_LOCAL_CC_EDGES`` (2^20) rows come back, _cc_local runs the
+      rounds in numpy and returns a driver-built, single-partition
+      frame — 1 Spark job in all, and driver memory bounded by 2^20
+      edge rows plus four int64 arrays. A dedup pair graph is usually
+      this small: verified pairs are few even when the corpus is large.
+    - Spark: larger graphs (and other id types) run each round as
+      joins + groupBy.min over O(E)/O(V) rows. The edge frame is
+      localCheckpoint()ed ONCE (it is reused every round — ADVICE r02)
+      and labels are localCheckpoint()ed per round so the loop doesn't
+      accumulate an unbounded lineage/plan.
+
+    Above the budget, the probe's partial read of ``edges`` comes on
+    top of the loop's own evaluation, so a caller with a large graph
+    should pass materialized (checkpointed or cached) edges."""
+    pair = edges.select(src, dst)
+    fields = pair.schema.fields
+    if fields[0].dataType == fields[1].dataType and fields[0].dataType in _LOCAL_CC_TYPES:
+        tbl = pair.limit(_LOCAL_CC_EDGES + 1).toArrow()
+        if tbl.num_rows <= _LOCAL_CC_EDGES:
+            out, rounds = _cc_local(edges.sparkSession, tbl, fields, max_iter)
+            return (out, rounds) if return_rounds else out
+    ab = edges.select(
+        F.coalesce(src, dst).alias("a"), F.coalesce(dst, src).alias("b")
+    ).where(F.col("a").isNotNull())
+    e = ab.union(ab.select("b", "a")).distinct().localCheckpoint()
     lab = None  # round 1 runs off identity labels synthesized from e
     for rounds in range(1, max_iter + 1):
         if lab is None:
@@ -421,6 +455,41 @@ def connected_components(
             .localCheckpoint()
         )
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+
+
+def _cc_local(spark, tbl: pa.Table, fields, max_iter: int):
+    """connected_components' rounds in numpy over the driver-held edge
+    table ``tbl`` (columns: src, dst). Ids become ranks in sorted order
+    — arrow sorts strings by UTF-8 bytes, as Spark's min compares them —
+    so min over ranks is min over ids; labels are ranks throughout."""
+    a, b = tbl.column(0), tbl.column(1)
+    a, b = pc.coalesce(a, b), pc.coalesce(b, a)
+    valid = pc.is_valid(a)
+    a, b = a.filter(valid), b.filter(valid)
+    ids = pc.unique(pa.chunked_array(a.chunks + b.chunks, a.type))
+    ids = ids.take(pc.sort_indices(ids))
+    ra = pc.index_in(a, ids).to_numpy().astype(np.int64)
+    rb = pc.index_in(b, ids).to_numpy().astype(np.int64)
+    to, frm = np.concatenate([ra, rb]), np.concatenate([rb, ra])
+    lab = np.arange(len(ids), dtype=np.int64)
+    for rounds in range(1, max_iter + 1):
+        prop = lab.copy()
+        np.minimum.at(prop, to, lab[frm])
+        if np.array_equal(prop, lab):
+            break
+        lab = np.minimum(prop, prop[prop])
+    else:
+        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    id_type = fields[0].dataType
+    schema = StructType([
+        StructField("node", id_type, fields[0].nullable or fields[1].nullable),
+        StructField("comp", id_type, True),
+    ])
+    out = pa.table({"node": ids, "comp": ids.take(pa.array(lab))})
+    # one partition, as the rows sit on the driver anyway: it satisfies
+    # every required distribution, so an aggregation over the clusters
+    # (counting them, grouping by comp) runs in one job, no shuffle
+    return spark.createDataFrame(out, schema).coalesce(1), rounds
 
 
 def ngram_jaccard_pairs(

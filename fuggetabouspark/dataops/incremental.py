@@ -1315,8 +1315,9 @@ def incremental_near_dup(
         .where(_match_frac("sa", "sb", num_hashes) >= threshold)
         .select("doc_a", "doc_b")
     ).localCheckpoint(eager=True)
-    # connected_components short-circuits on an empty pair graph
-    # (round 5, VERDICT r04 advisory #2), so no separate probe here
+    # intra_pairs is materialized, so connected_components' bounded
+    # read of it is cheap, and an empty or driver-sized pair graph is
+    # clustered within that one Spark job: no separate emptiness probe
     intra = (
         connected_components(intra_pairs)
         .where(F.col("node") != F.col("comp"))

@@ -29,3 +29,12 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def cc_spark_loop(monkeypatch):
+    """Force connected_components onto its distributed Spark loop: with
+    a zero driver budget only the empty graph stays on the driver."""
+    from fuggetabouspark.dataops import dedup
+
+    monkeypatch.setattr(dedup, "_LOCAL_CC_EDGES", 0)

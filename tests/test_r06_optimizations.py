@@ -61,6 +61,12 @@ class TestConnectedComponentsRestructure:
         assert rounds == 1
 
 
+@pytest.mark.usefixtures("cc_spark_loop")
+class TestConnectedComponentsRestructureSparkLoop(TestConnectedComponentsRestructure):
+    """The same tests on connected_components' distributed loop (the
+    parent class runs them on the driver path)."""
+
+
 class TestSeenWithinPayloadPath:
     def test_payloads_match_state_df_path(self, spark):
         from fuggetabouspark.queries import (
