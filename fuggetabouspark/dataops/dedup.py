@@ -826,7 +826,14 @@ def mask_repeated_passages(
         .groupBy("doc_id")
         .agg(F.flatten(F.collect_list("_d")).alias("_drops"))
     )
-    words = F.split(F.col(text_col), " ")
+    return _mask_spans(df.join(drops, "doc_id", "left"), text_col, window)
+
+
+def _mask_spans(df, text_col: str, window: int):
+    """(doc_id, text_clean, n_tokens_removed) of ``df``, whose
+    ``_drops`` column lists the word positions at which a
+    ``window``-word span is removed (null: nothing to remove) — the
+    mask of mask_repeated_passages and incremental.mask_against_history."""
     # the no-drops branch is hoisted OUT of the per-element lambda
     # (round 6): the old formulation re-evaluated the _drops-is-null
     # test once per TOKEN, so the ~95% of docs with nothing to remove
@@ -840,8 +847,7 @@ def mask_repeated_passages(
         )
     )
     return (
-        df.join(drops, "doc_id", "left")
-        .withColumn("_words", words)
+        df.withColumn("_words", F.split(F.col(text_col), " "))
         .withColumn("_kept", kept)
         .select(
             "doc_id",

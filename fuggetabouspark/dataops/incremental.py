@@ -36,9 +36,10 @@ ledger and O(1) in the sketch.
 Commit shape per ingest: the two shard-sized artifacts (the ledger
 rows and, in the guard, the clean output) are Spark writes. The small
 ones — the shard's membership-sketch delta row, its lineage row and
-compaction's shard=-1 row — are committed FROM THE DRIVER by one
-helper (_commit_row): pyarrow writes the row under a '_'-prefixed
-temp name, and an atomic ``os.replace`` publishes it. The sketch
+compaction's shard=-1 row — are committed FROM THE DRIVER through
+the library's checkpoint store (fuggetabouspark.state: _commit_row
+writes the row under a '_'-prefixed temp name and an atomic
+``os.replace`` publishes it; _swap_dir replaces a directory). The sketch
 delta itself is one mapInArrow pass of the library's update kernel
 over the survivors as they are partitioned, merged on the driver; no
 one-row Spark write and no merge stage pays Python-worker start-up.
@@ -67,6 +68,8 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..state import _commit_row, _heal_swap, _live, _pa_read_table, _swap_dir
 
 DEDUP_SPEC = "dedup_fp"
 LEDGER_DDL = "fp long, doc_id string, tick long, shard int"
@@ -137,100 +140,10 @@ def _read_swap(spark, path: str, ddl: str) -> DataFrame | None:
     rename(tmp, path), so a crash between the renames leaves only
     ``path_old`` — fall back to it. The explicit schema makes an
     EMPTY rewritten ledger (zero part files) readable."""
-    if not os.path.exists(path) and os.path.exists(path + "_old"):
-        path = path + "_old"
+    path = _live(path)
     if not os.path.exists(path):
         return None
     return spark.read.schema(ddl).parquet(path)
-
-
-def _swap_dir(write_fn, path: str) -> None:
-    """Atomic-enough directory replacement shared by compaction and
-    ledger expiry: write_fn(tmp) produces the replacement, then the
-    two-rename swap leaves either the old dir, the _old fallback, or
-    the new dir visible at every crash point (_read_swap handles all
-    three)."""
-    import shutil
-
-    tmp, old = path + "_swapping", path + "_old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_fn(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.move(path, old)  # crash here → loader uses _old
-    shutil.move(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _heal_swap(path: str) -> None:
-    """Finish a crashed _swap_dir before APPENDING to ``path``: if only
-    the _old copy exists, restore it as the primary. A plain
-    mode('append') write would otherwise recreate the primary
-    directory containing ONLY the new rows — _read_swap then prefers
-    it, shadowing the whole history in _old, and the next expiry
-    rmtree's _old forever (code-review r05). Readers never heal (no
-    mutation on a query path); every state/ledger writer must call
-    this first."""
-    if not os.path.exists(path) and os.path.exists(path + "_old"):
-        os.rename(path + "_old", path)
-
-
-def _pa_read_table(path: str, columns=None):
-    """Driver-side parquet read via pyarrow — NO Spark job. The
-    lineage and sketch-state directories are small driver-local
-    artifacts read on EVERY ingest/probe; a full Spark job per read
-    (plan + schedule + collect through py4j) dominated steady-state
-    per-trigger cost (round 6, guide §5: the driver should do almost
-    no data work — and these reads ARE driver work either way, the
-    Spark detour just made them slower). pyarrow.dataset skips
-    '_'-prefixed files (_SUCCESS) exactly as Spark's reader does; the
-    incremental checkpoint layout already assumes a filesystem path
-    (os.path/shutil swap protocol), so a pyarrow-readable location is
-    an existing module-wide invariant, not a new one."""
-    import pyarrow.dataset as ds
-
-    return ds.dataset(path, format="parquet").to_table(columns=columns)
-
-
-# pyarrow types of the driver-committed artifacts' columns: the state
-# row (spec, group, payload, n_items, shard) and the lineage row
-# (shard, meta) — the types Spark's writer gives the same DDL
-_ARTIFACT_TYPES = {
-    "spec": "string", "group": "string", "payload": "binary",
-    "n_items": "int64", "shard": "int32", "meta": "string",
-}
-
-
-def _commit_row(path: str, **row) -> None:
-    """Append ONE row to the parquet directory ``path`` from the driver
-    — the single commit path of every small checkpoint artifact the
-    incremental families write (state rows, lineage rows, compaction's
-    shard=-1 row). A one-row ``createDataFrame(...).write`` is a
-    Python-RDD job of several Python tasks, each paying the worker's
-    fixed start-up cost before it touches its single row; pyarrow
-    writes the same row in-process with no Spark job at all.
-
-    The file is written under a '_'-prefixed name and then
-    ``os.replace``d to its final name: the rename is atomic, and both
-    pyarrow.dataset and Spark's reader skip '_' files, so a crash
-    between write and rename leaves an invisible temp file, never a
-    torn part. Column order follows ``row``; types follow
-    _ARTIFACT_TYPES, so driver- and Spark-written parts of one
-    directory read back under one schema."""
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    table = pa.table({
-        k: pa.array([v], type=getattr(pa, _ARTIFACT_TYPES[k])())
-        for k, v in row.items()
-    })
-    os.makedirs(path, exist_ok=True)
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(path, "_" + name)
-    pq.write_table(table, tmp)
-    os.replace(tmp, os.path.join(path, name))
 
 
 def _append_state_row(state_path: str, spec: str, sk, shard: int) -> None:
@@ -324,8 +237,7 @@ def _load_sketch_state(spark, state_path: str, done: list[int], spec: str,
     into the membership state."""
     from ..sketches import sketch_from_bytes
 
-    if not os.path.exists(state_path) and os.path.exists(state_path + "_old"):
-        state_path = state_path + "_old"
+    state_path = _live(state_path)
     if not done or not os.path.exists(state_path):
         return (None, None) if with_raw else None
     tbl = _pa_read_table(state_path, columns=["spec", "group", "payload", "shard"])
@@ -506,7 +418,6 @@ def expire_ledgers(
                 lambda tmp, live=live: live.write.mode("overwrite").parquet(tmp), path
             )
             kept[name] = live.count()
-            live.unpersist()
     return kept
 
 
@@ -1016,8 +927,13 @@ class StreamingIngestGuard:
                 .drop("_k")
                 .withColumn("_epoch", F.lit(int(epoch_id)))
             )
-            if self.embeddings:
+            if self.embeddings or self.passages:
+                # frozen once: the survivor frame feeds the emb state
+                # commit, the passage kernel AND the mask join-back
+                # (code-review r05 — an uncached self-referential join
+                # would re-execute the batch scan + both semi-joins)
                 out = out.localCheckpoint(eager=True)
+            if self.embeddings:
                 # survivor-only semantic state commit (flags were
                 # computed on the full batch above); no probe happens
                 # here, so replay safety needs no epoch exclusion —
@@ -1031,11 +947,6 @@ class StreamingIngestGuard:
                     meta_extra={"epoch": ep},
                 )
             if self.passages:
-                # frozen once: the survivor frame feeds the passage
-                # kernel AND the mask join-back (code-review r05 —
-                # an uncached self-referential join would re-execute
-                # the batch scan + both semi-joins)
-                out = out.localCheckpoint(eager=True)
                 # passage state commits HERE — survivors only, so
                 # every retained passage has a published keeper; own
                 # lineage lands strictly before the exact marker
@@ -1068,14 +979,8 @@ class StreamingIngestGuard:
             out.write.mode("overwrite").option(
                 "partitionOverwriteMode", "dynamic"
             ).partitionBy("_epoch").parquet(self.clean_dir)
-            if self.passages:
-                # only AFTER the write: the mask join consumes the
-                # checkpointed annotation lazily, and unpersisting a
-                # localCheckpoint before its consumer runs would lose
-                # the truncated lineage's only copy
-                pann.unpersist()
 
-        ann = incremental_dedup(
+        incremental_dedup(
             self.spark,
             batch_df,
             self.checkpoint_dir,
@@ -1088,11 +993,6 @@ class StreamingIngestGuard:
             pre_lineage_hook=publish_clean,
             exclude_epoch=ep,
         )
-        ann.unpersist()
-        if near_ann is not None:
-            near_ann.unpersist()
-        if emb_ann is not None:
-            emb_ann.unpersist()
         self._batches_done += 1
         if self.compact_every and self._batches_done % self.compact_every == 0:
             for fam, on in ((EXACT, True), (NEAR, self.near),
@@ -1603,6 +1503,8 @@ def mask_against_history(
     with a durable masked output, call incremental_passages with a
     ``pre_lineage_hook`` that persists
     ``mask_against_history(..., ann=hook_arg)``."""
+    from .dedup import _mask_spans
+
     if ann is None:
         kwargs.setdefault("update_state", False)
         ann = incremental_passages(
@@ -1612,29 +1514,11 @@ def mask_against_history(
     drops = ann.where(F.size("hist_positions") > 0).select(
         F.col("doc_id").alias("_k"), F.col("hist_positions").alias("_drops")
     )
-    words = F.split(F.col(text_col), " ")
-    # no-drops branch hoisted out of the per-element lambda (round 6,
-    # same reasoning as mask_repeated_passages): docs with nothing to
-    # mask skip the per-token filter entirely
-    kept = F.when(F.col("_drops").isNull(), F.col("_words")).otherwise(
-        F.filter(
-            F.col("_words"),
-            lambda w, i: ~F.exists(
-                F.col("_drops"), lambda p: (i >= p) & (i < p + F.lit(window))
-            ),
-        )
-    )
-    return (
-        new_df.withColumn("_k", F.col("doc_id").cast("string"))
-        .join(drops, "_k", "left")  # shard-sized both sides; no broadcast
-        # hint — a boilerplate-heavy shard's drop table can be wide
-        .withColumn("_words", words)
-        .withColumn("_kept", kept)
-        .select(
-            "doc_id",
-            F.array_join("_kept", " ").alias("text_clean"),
-            (F.size("_words") - F.size("_kept")).cast("int").alias("n_tokens_removed"),
-        )
+    # shard-sized both sides; no broadcast hint — a boilerplate-heavy
+    # shard's drop table can be wide
+    return _mask_spans(
+        new_df.withColumn("_k", F.col("doc_id").cast("string")).join(drops, "_k", "left"),
+        text_col, window,
     )
 
 

@@ -332,7 +332,6 @@ def build_sketches(
     tick_col=None,
     partitions: int | None = None,
     salt_mod: int = 16,
-    two_stage: bool | None = None,
     stbf_fanin: int | None = None,
     align: str = "shuffle",
 ):
@@ -344,12 +343,12 @@ def build_sketches(
       column keeps decay deterministic (SURVEY.md §7.6).
     - ``partitions``: explicit repartition width; default
       2 × defaultParallelism (BASELINE.json:6 explicit repartitioning).
-    - ``salt_mod``: stage-1 salt fan-out for hot groups.
-    - ``two_stage``: force/skip the salted pre-merge. Default: on only
-      when a group would otherwise collect > 64 partials in a single
-      merge task (the two-stage plan costs an extra shuffle, which only
-      pays off once per-group partial counts are large — at 1000
-      executors it is essential, at local scale it is pure overhead).
+    - ``salt_mod``: stage-1 salt fan-out for hot groups. The salted
+      pre-merge runs only when ``partitions`` > 64, i.e. when a group
+      would otherwise collect > 64 partials in a single merge task (the
+      two-stage plan costs an extra shuffle, which only pays off once
+      per-group partial counts are large — at 1000 executors it is
+      essential, at local scale it is pure overhead).
     - ``stbf_fanin``: guarantees the merged STBF's FPR bound when tier
       growth actually happens, by giving each partial
       max_fill_factor / fanin of every tier's budget (set it to the
@@ -383,8 +382,7 @@ def build_sketches(
     spark = df.sparkSession
     if partitions is None:
         partitions = 2 * spark.sparkContext.defaultParallelism
-    if two_stage is None:
-        two_stage = partitions > 64
+    two_stage = partitions > 64
     specs = [_split_stbf_budget(s, stbf_fanin or 1) for s in specs]
     cols = list(dict.fromkeys([*group_cols, "doc_id", "tokens", "n_tok"]))
     sel = df.select(*cols, (tick_col if tick_col is not None else F.lit(1)).cast("long").alias("tick"))

@@ -150,8 +150,10 @@ def seen_within_distributed(
     200 k-probe job. Python workers are reused across tasks AND jobs
     (spark.python.worker.reuse), so each worker decodes a given state
     VERSION once, however many probe jobs hit it — the steady-state
-    shape of incremental ingest. The cache keeps only the newest
-    entry, bounding worker memory at one state-set."""
+    shape of incremental ingest. The cache keeps the newest
+    _PROBE_CACHE_SLOTS (4) entries, evicting the oldest, so worker
+    memory is bounded at four state-sets — one per state a
+    four-family ingest guard probes per batch."""
     rows = state_df.where(f"spec = '{spec_name}'").select("group", "payload").collect()
     payloads = [(r["group"], bytes(r["payload"])) for r in rows]
     return seen_within_payloads(spark, payloads, probes_df, now, key_col, only_seen)

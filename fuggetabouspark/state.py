@@ -1,17 +1,35 @@
 """Checkpointed, resumable builds with per-shard lineage
 (SURVEY.md §3.3; BASELINE.json:6 "per-partition lineage rows and
-checkpointed sketch state for resumable runs").
+checkpointed sketch state for resumable runs"), and the checkpoint
+store through which the library commits and reads its small checkpoint
+artifacts.
 
 Granularity: the input is split into ``n_shards`` deterministic shards
-by ``pmod(xxhash64(doc_id), n_shards)``. Each shard is built and its
-final per-shard sketch rows + lineage row are appended to the
-checkpoint directory; a lineage row is only visible after its shard's
-sketch rows were durably written (written in the same job, lineage
-last). Resume lists completed shard ids from lineage and anti-joins
-them away — a killed run re-does at most one shard. The final answer
-merges every shard's sketch rows; correctness under retries holds
-because shard partials are deduplicated by (spec, group, shard) before
-the merge, so a half-written retry can never double-count.
+by ``pmod(xxhash64(doc_id), n_shards)``. Each shard is one
+``build_sketches(...).collect()``; the driver splits the collected rows
+into the shard's sketch rows and its per-partition lineage rows, then
+commits the sketch rows and, LAST, the shard's lineage row. A lineage
+row is therefore only visible after its shard's sketch rows are
+durable. Resume lists completed shard ids from lineage and skips them
+— a killed run re-does at most one shard. The final answer merges
+every shard's sketch rows; correctness under retries holds because
+shard partials are deduplicated by (spec, group, shard) before the
+merge, so an orphaned attempt can never double-count.
+
+The checkpoint store (shared with dataops.incremental and
+streaming.StreamingSketchBuilder): sketch state, lineage and streaming
+versions are small, so they are committed and read FROM THE DRIVER
+with pyarrow, never through a Spark job (shard-sized ledgers stay
+Spark writes). _commit_row writes a parquet file under a
+'_'-prefixed temp name and publishes it with an atomic ``os.replace``
+(both pyarrow.dataset and Spark's reader skip '_' files, so a crash
+leaves an invisible temp, never a torn part); _pa_read_table reads a
+directory back. _swap_dir replaces a whole directory (compaction,
+expiry, a streaming version) by a two-rename swap, _live resolves the
+``_old`` copy a crash between those renames leaves, and _heal_swap
+restores it before an append. The layout assumes a filesystem path —
+on an object store, replace the renames with a manifest swap (Iceberg
+snapshot commit).
 
 At cluster scale, shards double as a unit of incremental ingest: a new
 partition of an Iceberg table is just one more shard appended to the
@@ -22,10 +40,95 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
 
 from .pipeline import LINEAGE_SPEC, SketchSpec, build_sketches, merge_rows_to_sketches
 
-SHARD_DDL = "spec string, group string, payload binary, n_items long, shard int"
+# pyarrow types of the checkpoint artifacts' columns: state rows
+# (spec, group, payload, n_items[, shard]) and lineage rows
+# (shard, meta) — the types Spark's writer gives the same DDL, so
+# driver- and Spark-written parts of one directory share one schema
+_ARTIFACT_TYPES = {
+    "spec": "string", "group": "string", "payload": "binary",
+    "n_items": "int64", "shard": "int32", "meta": "string",
+}
+
+
+def _live(path: str) -> str:
+    """``path``, or its ``_old`` copy when a crash struck between
+    _swap_dir's two renames and left only that copy."""
+    if not os.path.exists(path) and os.path.exists(path + "_old"):
+        return path + "_old"
+    return path
+
+
+def _swap_dir(write_fn, path: str) -> None:
+    """Atomic-enough directory replacement: write_fn(tmp) produces the
+    replacement, then the two-rename swap leaves either the old dir,
+    the _old fallback, or the new dir visible at every crash point
+    (_live resolves all three)."""
+    tmp, old = path + "_swapping", path + "_old"
+    shutil.rmtree(tmp, ignore_errors=True)
+    write_fn(tmp)
+    if os.path.exists(path):
+        shutil.rmtree(old, ignore_errors=True)
+        shutil.move(path, old)  # crash here → loader uses _old
+    shutil.move(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _heal_swap(path: str) -> None:
+    """Finish a crashed _swap_dir before APPENDING to ``path``: if only
+    the _old copy exists, restore it as the primary. An append would
+    otherwise recreate the primary directory containing ONLY the new
+    rows — _live then prefers it, shadowing the whole history in _old,
+    and the next swap rmtree's _old forever (code-review r05). Readers
+    never heal (no mutation on a query path); every appending writer
+    must call this first."""
+    if _live(path) != path:
+        os.rename(path + "_old", path)
+
+
+def _pa_read_table(path: str, columns=None):
+    """Driver-side parquet read via pyarrow — NO Spark job. Checkpoint
+    artifacts are small and read on every ingest, probe and resume; a
+    Spark job per read (plan + schedule + collect through py4j) costs
+    more than the read (round 6, guide §5: the driver should do almost
+    no data work). pyarrow.dataset skips '_'-prefixed files (_SUCCESS,
+    _commit_row's temps) exactly as Spark's reader does."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(path, format="parquet").to_table(columns=columns)
+
+
+def _commit_row(path: str, *rows: dict, **row) -> None:
+    """Append rows — several dicts, or one row as keywords — to the
+    parquet directory ``path`` as ONE file, from the driver. A
+    ``createDataFrame(...).write`` of a few rows is a Python-RDD job
+    whose tasks each pay the worker's fixed start-up cost; pyarrow
+    writes the same rows in-process with no Spark job at all.
+
+    The file is written under a '_'-prefixed name and then
+    ``os.replace``d to its final name: the rename is atomic, so the
+    rows appear all at once or not at all. Column order follows the
+    first row; types follow _ARTIFACT_TYPES. ``path`` is created even
+    when there are no rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = rows or (row,)
+    os.makedirs(path, exist_ok=True)
+    if not rows[0]:
+        return
+    table = pa.table({
+        k: pa.array([r[k] for r in rows], type=getattr(pa, _ARTIFACT_TYPES[k])())
+        for k in rows[0]
+    })
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, "_" + name)
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def _paths(checkpoint_dir: str) -> tuple[str, str]:
@@ -37,12 +140,13 @@ def completed_shards(spark, checkpoint_dir: str, expect_n_shards: int | None = N
     given, refuses to resume a checkpoint built with a different shard
     count — shard membership is pmod(hash, n_shards), so mixing counts
     would re-process documents already covered by completed shards and
-    double-count every additive sketch."""
+    double-count every additive sketch. A missing lineage dir means no
+    shard completed; an unreadable one raises rather than silently
+    rebuilding every shard."""
     _, lineage_path = _paths(checkpoint_dir)
-    try:
-        rows = spark.read.parquet(lineage_path).select("shard", "meta").collect()
-    except Exception:
+    if not os.path.exists(lineage_path):
         return set()
+    rows = _pa_read_table(lineage_path, columns=["shard", "meta"]).to_pylist()
     if expect_n_shards is not None and rows:
         recorded = json.loads(rows[0]["meta"]).get("n_shards")
         if recorded != expect_n_shards:
@@ -67,16 +171,19 @@ def build_resumable(
     fail_after_shard: int | None = None,
 ):
     """Build shard-by-shard with checkpointing; safe to re-invoke after
-    a crash — completed shards are skipped via the lineage anti-join.
+    a crash — completed shards (those with a lineage row) are skipped.
 
     ``fail_after_shard`` deliberately raises after N shards (test hook
     for the kill-and-resume gate in BASELINE.md).
-    Returns the merged final sketch rows as a list of pyspark Rows.
+    Returns the merged final sketches as {(spec, group): sketch}.
     """
     from pyspark.sql import functions as F
 
+    from .pipeline import corpus_digest, lineage_from_rows
+
     state_path, lineage_path = _paths(checkpoint_dir)
     done = completed_shards(spark, checkpoint_dir, expect_n_shards=n_shards)
+    _heal_swap(state_path)
     shard_col = F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
 
     built = 0
@@ -84,32 +191,29 @@ def build_resumable(
         if shard in done:
             continue
         sub = df.where(shard_col == shard)
-        final = build_sketches(
+        rows = build_sketches(
             sub, specs, group_cols=group_cols, tick_col=tick_col,
             partitions=partitions, salt_mod=salt_mod,
             # an STBF tier's union spans every shard's partials, so a
             # caller-requested split is multiplied by the shard count;
             # fanin<=1 means "no split" and must stay that way
             stbf_fanin=(stbf_fanin * n_shards) if stbf_fanin and stbf_fanin > 1 else None,
-        ).withColumn("shard", F.lit(shard)).persist()
-        try:
-            # sketch rows first, lineage row last: a shard is only
-            # "completed" once its state is durable
-            sketch_rows = final.where(F.col("spec") != LINEAGE_SPEC)
-            sketch_rows.write.mode("append").parquet(state_path)
-            # shard-level audit lineage (SURVEY §3.3, round 3): exact
-            # per-shard row/token totals + ingest digest from the cached
-            # build's per-partition lineage rows (no recompute), plus
-            # the file-level provenance of the scan. Hash shards read
-            # every input file (membership is pmod(hash, n_shards)), so
-            # input_files is the full file set per shard — plan
-            # metadata, not an extra data pass; empty for
-            # non-file-backed frames.
-            from .pipeline import corpus_digest, lineage_from_rows
-
-            lin_rows = final.where(F.col("spec") == LINEAGE_SPEC).collect()
-        finally:
-            final.unpersist()
+        ).collect()
+        lin_rows = [r for r in rows if r["spec"] == LINEAGE_SPEC]
+        # sketch rows first, lineage row last: a shard is only
+        # "completed" once its state is durable
+        _commit_row(state_path, *(
+            {"spec": r["spec"], "group": r["group"], "payload": bytes(r["payload"]),
+             "n_items": r["n_items"], "shard": shard}
+            for r in rows if r["spec"] != LINEAGE_SPEC
+        ))
+        # shard-level audit lineage (SURVEY §3.3, round 3): exact
+        # per-shard row/token totals + ingest digest from the build's
+        # per-partition lineage rows, plus the file-level provenance of
+        # the scan. Hash shards read every input file (membership is
+        # pmod(hash, n_shards)), so input_files is the full file set
+        # per shard — plan metadata, not an extra data pass; empty for
+        # non-file-backed frames.
         lin = lineage_from_rows(lin_rows)
         meta = {
             "shard": shard,
@@ -120,9 +224,7 @@ def build_resumable(
             "token_digest": corpus_digest(lin_rows),
             "input_files": sorted(sub.inputFiles()),
         }
-        spark.createDataFrame(
-            [(shard, json.dumps(meta, sort_keys=True))], "shard int, meta string"
-        ).write.mode("append").parquet(lineage_path)
+        _commit_row(lineage_path, shard=shard, meta=json.dumps(meta, sort_keys=True))
         built += 1
         if fail_after_shard is not None and built >= fail_after_shard:
             raise RuntimeError(f"injected failure after shard {shard}")
@@ -135,23 +237,15 @@ def compact_checkpoint(spark, checkpoint_dir: str, now: int, drop_groups_before:
     ring buckets (group suffix '\\x1f<bucket>' older than
     ``drop_groups_before``), and rewrite the state as one compacted
     shard (-1). Safe to run any time: merges are idempotent-per-partial
-    and the rewrite replaces the directory atomically at the end.
+    and the rewrite replaces the directory by _swap_dir at the end.
 
     This is the batch analogue of upstream's periodic IOLoop decay —
     at 10^12 scale it also bounds checkpoint growth: state stays
     O(groups × m) forever instead of O(shards × groups × m).
-
-    Crash-safety: the rewrite renames the old state aside before
-    moving the new state in, and load_state falls back to the aside
-    copy if a crash struck between the two renames. NOTE this uses
-    driver-local filesystem renames — on an object store deployment
-    replace with a manifest swap (Iceberg snapshot commit).
     """
-    import shutil
-
     from .pipeline import GROUP_SEP
 
-    state_path, lineage_path = _paths(checkpoint_dir)
+    state_path, _ = _paths(checkpoint_dir)
     sketches = load_state(spark, checkpoint_dir)
     rows = []
     for (spec, group), sk in sorted(sketches.items()):
@@ -163,36 +257,24 @@ def compact_checkpoint(spark, checkpoint_dir: str, now: int, drop_groups_before:
                 pass
         if hasattr(sk, "decay"):
             sk.decay(now)
-        rows.append((spec, group, bytearray(sk.to_bytes()), sk.n_items, -1))
-    tmp = state_path + "_compacting"
-    old = state_path + "_old"
-    spark.createDataFrame(rows, SHARD_DDL).coalesce(4).write.mode("overwrite").parquet(tmp)
-    # re-entrant swap: only retire the _old fallback once a live
-    # state_path exists. If a previous compaction crashed between the
-    # two renames (state missing, _old = the only live copy — which
-    # load_state above just read), we must NOT delete _old before the
-    # new state is in place.
-    if os.path.exists(state_path):
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.move(state_path, old)  # crash here → load_state falls back to _old
-    shutil.move(tmp, state_path)
-    shutil.rmtree(old, ignore_errors=True)
+        rows.append({"spec": spec, "group": group, "payload": sk.to_bytes(),
+                     "n_items": sk.n_items, "shard": -1})
+    # load_state above read the _old copy if a previous compaction
+    # crashed mid-swap; _swap_dir keeps it until the new state is in
+    _swap_dir(lambda tmp: _commit_row(tmp, *rows), state_path)
     return load_state(spark, checkpoint_dir)
 
 
 def load_state(spark, checkpoint_dir: str):
     """Read checkpointed shard rows, dedupe retries, return
-    {(spec, group): merged sketch}."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    import os
-
+    {(spec, group): merged sketch}. ``spark`` is unused: the read is
+    driver-side."""
     state_path, _ = _paths(checkpoint_dir)
-    if not os.path.exists(state_path) and os.path.exists(state_path + "_old"):
-        state_path = state_path + "_old"  # compaction crashed mid-swap
-    df = spark.read.parquet(state_path)
-    # dedupe half-written retries: keep one row per (spec, group, shard)
-    w = Window.partitionBy("spec", "group", "shard").orderBy(F.col("n_items").desc())
-    df = df.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
-    return merge_rows_to_sketches(df.collect())
+    # dedupe retried shards: keep one row per (spec, group, shard), the
+    # one with the largest n_items
+    best: dict = {}
+    for r in _pa_read_table(_live(state_path)).to_pylist():
+        key = (r["spec"], r["group"], r["shard"])
+        if key not in best or r["n_items"] > best[key]["n_items"]:
+            best[key] = r
+    return merge_rows_to_sketches(best[k] for k in sorted(best))

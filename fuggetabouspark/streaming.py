@@ -12,6 +12,15 @@ batch id, the sink is exactly-once under Structured Streaming's
 at-least-once foreachBatch contract: a replayed batch overwrites its
 own version rather than double-counting.
 
+State I/O runs on the driver through the library's checkpoint store
+(fuggetabouspark.state), not through Spark jobs: an epoch's merged
+state is one pyarrow file (_commit_row) that _swap_dir moves in as
+``versions/epoch=N``, replacing a replayed epoch's earlier version
+whole — CMS and CBF are additive, so a second file in the same version
+would double-count — and versions are read back with _pa_read_table.
+The only Spark work per trigger is the emptiness check and the
+micro-batch's own build_sketches collect.
+
 Scale note: state is O(groups × m) bytes independent of stream
 length, and each micro-batch shuffles only its own partials — the
 same plan a 1000-executor cluster would run per trigger. A future
@@ -22,9 +31,11 @@ applyInPandasWithState; per-source sketch state does not need it.
 from __future__ import annotations
 
 import os
+import shutil
 
 from .pipeline import SketchSpec, build_sketches, merge_rows_to_sketches
 from .sketches import Sketch, sketch_from_bytes
+from .state import _commit_row, _pa_read_table, _swap_dir
 
 
 class StreamingSketchBuilder:
@@ -59,18 +70,17 @@ class StreamingSketchBuilder:
         return sorted(out)
 
     def _load_version(self, epoch: int) -> dict[tuple[str, str], Sketch]:
-        rows = self.spark.read.parquet(
-            os.path.join(self._versions_dir(), f"epoch={epoch}")
-        ).collect()
-        return merge_rows_to_sketches(rows)
+        path = os.path.join(self._versions_dir(), f"epoch={epoch}")
+        return merge_rows_to_sketches(_pa_read_table(path).to_pylist())
 
     def load_state(self) -> dict[tuple[str, str], Sketch]:
-        # newest READABLE version: the newest directory may be mid-write
-        # when polled concurrently with a trigger
+        # newest version still on disk: polled concurrently with a
+        # trigger, a listed version may be swapped or GC'd before it
+        # is read
         for epoch in reversed(self._epochs_on_disk()):
             try:
                 return self._load_version(epoch)
-            except Exception:
+            except FileNotFoundError:
                 continue
         return {}
 
@@ -102,20 +112,14 @@ class StreamingSketchBuilder:
         # is deterministic, so replays still rewrite identical bytes)
         state = {k: (sk.compressed() if hasattr(sk, "compressed") else sk) for k, sk in state.items()}
         out = [
-            (spec, group, bytearray(sk.to_bytes()), sk.n_items)
+            {"spec": spec, "group": group, "payload": sk.to_bytes(), "n_items": sk.n_items}
             for (spec, group), sk in sorted(state.items())
         ]
-        (
-            self.spark.createDataFrame(
-                out, "spec string, group string, payload binary, n_items long"
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(self._versions_dir(), f"epoch={epoch_id}"))
+        _swap_dir(
+            lambda tmp: _commit_row(tmp, *out),
+            os.path.join(self._versions_dir(), f"epoch={epoch_id}"),
         )
         # GC: keep the last two versions (current + predecessor)
-        import shutil
-
         for e in self._epochs_on_disk()[:-2]:
             shutil.rmtree(os.path.join(self._versions_dir(), f"epoch={e}"), ignore_errors=True)
 

@@ -31,6 +31,18 @@ def spark():
     s.stop()
 
 
+def jobs_in_group(spark, group, fn):
+    """Run fn() in Spark job group ``group``: (fn's result, the number
+    of Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture()
 def cc_spark_loop(monkeypatch):
     """Force connected_components onto its distributed Spark loop: with

@@ -12,19 +12,10 @@ Pinned here, with the distributed Spark loop as the reference:
 
 import numpy as np
 import pytest
+from conftest import jobs_in_group
 from pyspark.sql import functions as F
 
 from fuggetabouspark.dataops import connected_components, dedup
-
-
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _both_paths(monkeypatch, fn):
@@ -114,12 +105,12 @@ class TestJobCount:
             [(i, i + 1) for i in range(30)] + [(100, 101)], "doc_a long, doc_b long"
         ).cache()
         df.count()
-        cc, jobs = _jobs_in_group(spark, "cc_small", lambda: connected_components(df))
+        cc, jobs = jobs_in_group(spark, "cc_small", lambda: connected_components(df))
         assert jobs == 1
         assert _rows(cc) == [(i, 0) for i in range(31)] + [(100, 100), (101, 100)]
         # the driver-built result is one partition: counting clusters
         # needs no shuffle stage
-        n, jobs = _jobs_in_group(
+        n, jobs = jobs_in_group(
             spark, "cc_count", lambda: cc.agg(F.countDistinct("comp")).collect()[0][0]
         )
         assert (n, jobs) == (2, 1)
@@ -132,7 +123,7 @@ class TestJobCount:
         df.count()
         want = _rows(connected_components(df))
         monkeypatch.setattr(dedup, "_LOCAL_CC_EDGES", 5)
-        cc, jobs = _jobs_in_group(spark, "cc_big", lambda: connected_components(df))
+        cc, jobs = jobs_in_group(spark, "cc_big", lambda: connected_components(df))
         # the Spark loop's checkpoints and per-round probes: far more
         # than the driver path's single read
         assert jobs > 1

@@ -25,6 +25,7 @@ import numpy as np
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
+from conftest import jobs_in_group
 from pyspark.sql import functions as F
 
 from fuggetabouspark.dataops import (
@@ -72,16 +73,6 @@ def _rows(spark, path):
         for r in spark.read.parquet(path).collect()
     )
     return via_pa, via_spark
-
-
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class TestCrashSafety:
@@ -189,13 +180,13 @@ class TestDriverCommitMechanism:
             _append_state_row(os.path.join(scratch, "state"), DEDUP_SPEC, sk, 0)
             merged.extend(c(spark, ck) for c in compactions)
 
-        assert _jobs_in_group(spark, "fgs-driver-commit", commit) == []
+        assert jobs_in_group(spark, "fgs-driver-commit", commit)[1] == 0
         assert all(m is not None for m in merged)
         for sub in ("", "near", "passages", "emb"):
             shards = ds.dataset(os.path.join(ck, sub, "sketch_state")).to_table()
             assert shards.column("shard").to_pylist() == [-1]
         # the group does see jobs when there are some
-        assert _jobs_in_group(spark, "fgs-control", lambda: spark.range(3).count())
+        assert jobs_in_group(spark, "fgs-control", lambda: spark.range(3).count())[1]
 
     @pytest.mark.parametrize("nparts", [1, 3, 8])
     def test_driver_delta_matches_build_sketches(self, spark, ck, nparts):
