@@ -33,19 +33,38 @@ broadcast-semi-join against the ledger restricted to candidate fps,
 zero joins against corpus text. State grows O(retained docs) in the
 ledger and O(1) in the sketch.
 
-Commit shape per ingest: the two shard-sized artifacts (the ledger
-rows and, in the guard, the clean output) are Spark writes. The small
-ones — the shard's membership-sketch delta row, its lineage row and
-compaction's shard=-1 row — are committed FROM THE DRIVER through
-the library's checkpoint store (fuggetabouspark.state: _commit_row
-writes the row under a '_'-prefixed temp name and an atomic
-``os.replace`` publishes it; _swap_dir replaces a directory). The sketch
-delta itself is one mapInArrow pass of the library's update kernel
-over the survivors as they are partitioned, merged on the driver; no
-one-row Spark write and no merge stage pays Python-worker start-up.
-Reads of the same artifacts are driver-side pyarrow too
-(_pa_read_table), so lineage, state loads and compaction run no Spark
-job at all.
+Commit shape per ingest: the small artifacts — the shard's
+membership-sketch delta row, its lineage row and compaction's shard=-1
+row — are committed FROM THE DRIVER through the library's checkpoint
+store (fuggetabouspark.state: _commit_row writes the row under a
+'_'-prefixed temp name and an atomic ``os.replace`` publishes it;
+_swap_dir replaces a directory). Reads of the same artifacts are
+driver-side pyarrow too (_pa_read_table), so lineage, state loads and
+compaction run no Spark job at all. The shard-sized artifacts (the
+ledger rows and, in the guard, the clean output) are written one of
+two ways:
+
+- the operators (incremental_dedup, incremental_near_dup,
+  incremental_passages, incremental_embedding_dedup) run as Spark
+  plans over a DataFrame of any size: ledger rows are Spark writes,
+  and the sketch delta is one mapInArrow pass of the library's update
+  kernel over the survivors as they are partitioned, merged on the
+  driver;
+- StreamingIngestGuard runs a trigger whose batch holds at most
+  _LOCAL_TRIGGER_ROWS (2^14) rows on the driver: ONE bounded Spark
+  read fetches the batch as Arrow (the JVM computes its fingerprints,
+  word hashes and words), every family then runs the same kernels
+  over it with numpy/pyarrow in place of joins, and the ledgers, the
+  sketch deltas and the clean partition are written by pyarrow
+  (state._commit_table, _swap_dir) — one Spark job per trigger. Driver
+  memory for it is the batch (≤ 2^14 rows with their word lists),
+  the ledger rows whose key is a sketch hit (the exact, near and
+  embedding Spark plans broadcast the same sets through the driver),
+  and at most _LOCAL_NEAR_PAIRS (2^20) intra-batch candidate pairs. Larger
+  batches, other column types, non-unique or null doc ids and hotter
+  band buckets take the Spark path unchanged, with identical
+  artifacts. expire_ledgers likewise rewrites a ledger of at most
+  2^14 rows on the driver.
 
 One record per family: the four granularities (exact doc, near doc,
 passage, embedding) keep the SAME three artifacts — a decaying
@@ -66,10 +85,35 @@ import json
 import os
 from typing import NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+)
 
-from ..state import _commit_row, _heal_swap, _live, _pa_read_table, _swap_dir
+from ..hashing import spark_xxhash64
+from ..state import (
+    _commit_row,
+    _commit_table,
+    _ddl_schema,
+    _heal_swap,
+    _live,
+    _pa_read_table,
+    _publish,
+    _swap_dir,
+)
 
 DEDUP_SPEC = "dedup_fp"
 LEDGER_DDL = "fp long, doc_id string, tick long, shard int"
@@ -94,6 +138,23 @@ EMB_BUCKET_LEDGER_DDL = "bkey long, vec_id string, tick long, shard int"
 EMB_VEC_LEDGER_DDL = "vec_id string, embedding array<float>, tick long, shard int"
 EMB_ANNOTATED_DDL = (
     "vec_id string, is_emb_dup_history boolean, hist_vec_id string, cosine double"
+)
+
+
+# A guard trigger whose batch has at most this many rows runs every
+# family on the driver (StreamingIngestGuard.process_batch); the read
+# fetches one row more to tell. expire_ledgers rewrites a ledger of at
+# most this many rows on the driver too.
+_LOCAL_TRIGGER_ROWS = 1 << 14
+# The driver path enumerates at most this many intra-batch LSH
+# candidate pairs; a batch with more (a hot band bucket) takes the
+# Spark path.
+_LOCAL_NEAR_PAIRS = 1 << 20
+# Column types a batch may hold to take the driver path (arrays of
+# them too).
+_LOCAL_SCALARS = (
+    ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType,
+    BooleanType, StringType, BinaryType,
 )
 
 
@@ -164,6 +225,20 @@ def _write_lineage(lineage_path: str, meta: dict) -> None:
     )
 
 
+def _delta_spec(name: str, params):
+    """The SketchSpec of a family's membership-sketch delta: one 64-bit
+    key per row (value 'tokens'). ``params`` None means every family's
+    default: a TBF of capacity 2M at error 0.001 that never decays
+    (window 2**31 ticks)."""
+    from ..params import ScalingParams, TimingParams
+    from ..pipeline import SketchSpec
+
+    if params is None:
+        params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
+    kind = "stbf" if isinstance(params, ScalingParams) else "tbf"
+    return SketchSpec(name, kind, params, value="tokens")
+
+
 def _commit_sketch_delta(
     state_path: str, frame: DataFrame, key, tick, name: str, params,
     shard: int, partitions: int | None,
@@ -183,22 +258,42 @@ def _commit_sketch_delta(
     (``coalesce``, which does not shuffle): driver memory for the
     delta is at most ``partitions`` × payload. An empty frame commits
     no row — a shard that retained nothing adds nothing to the sketch.
+    ``params``: see _delta_spec."""
+    from ..pipeline import PARTIAL_DDL, make_update_fn
 
-    ``params`` None means every family's default: a TBF of capacity
-    2M at error 0.001 that never decays (window 2**31 ticks)."""
-    from ..params import ScalingParams, TimingParams
-    from ..pipeline import PARTIAL_DDL, SketchSpec, make_update_fn, merge_rows_to_sketches
-
-    if params is None:
-        params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    kind = "stbf" if isinstance(params, ScalingParams) else "tbf"
-    spec = SketchSpec(name, kind, params, value="tokens")
+    spec = _delta_spec(name, params)
     rows = frame.select(F.array(key).alias("tokens"), tick.cast("long").alias("tick"))
     if partitions is not None:
         rows = rows.coalesce(int(partitions))
     partials = rows.mapInArrow(
         make_update_fn([spec], (), 1), schema=PARTIAL_DDL
     ).collect()
+    _append_merged_delta(state_path, partials, name, shard)
+
+
+def _commit_sketch_keys(
+    state_path: str, keys, tick: int, name: str, params, shard: int
+) -> None:
+    """_commit_sketch_delta over a driver-held int64 Arrow array: the
+    same update kernel, run in-process over one batch — the same delta
+    bytes for a TBF."""
+    from ..pipeline import make_update_fn
+
+    batch = pa.RecordBatch.from_pydict({
+        "tokens": pa.ListArray.from_arrays(
+            pa.array(np.arange(len(keys) + 1, dtype=np.int32)), keys
+        ),
+        "tick": pa.array(np.full(len(keys), tick, np.int64)),
+    })
+    update = make_update_fn([_delta_spec(name, params)], (), 1)
+    _append_merged_delta(
+        state_path, [r for b in update(iter([batch])) for r in b.to_pylist()], name, shard
+    )
+
+
+def _append_merged_delta(state_path: str, partials, name: str, shard: int) -> None:
+    from ..pipeline import merge_rows_to_sketches
+
     sk = merge_rows_to_sketches(partials).get((name, ""))
     if sk is not None:
         _append_state_row(state_path, name, sk, shard)
@@ -392,7 +487,14 @@ def expire_ledgers(
     ledger is rewritten via the same aside-rename swap as compaction
     (crash between renames → _read_swap falls back to the _old copy).
     Safe and idempotent any time; the sketch itself needs no pruning —
-    it decays by construction. Returns {ledger_name: rows_kept}."""
+    it decays by construction. Returns {ledger_name: rows_kept}.
+
+    A ledger of at most _LOCAL_TRIGGER_ROWS rows (counted from the
+    parquet footers) is filtered and rewritten on the driver: one
+    pyarrow read, one file typed from the ledger's DDL, no Spark job.
+    Larger ledgers are rewritten by Spark."""
+    import pyarrow.dataset as ds
+
     from ..queries import sk_window
 
     kept: dict[str, int] = {}
@@ -404,12 +506,19 @@ def expire_ledgers(
             if sk is None:
                 continue
             w = sk_window(sk)
+        lo = int(now) - int(w) + 1
         for name, (_, ddl) in fam.ledgers.items():
             path = fam.path(checkpoint_dir, name)
-            df = _read_swap(spark, path, ddl)
-            if df is None:
+            src = _live(path)
+            if not os.path.exists(src):
                 continue
-            live = df.where(F.col("tick") >= F.lit(int(now) - int(w) + 1))
+            schema = _ddl_schema(ddl)
+            if ds.dataset(src, format="parquet", schema=schema).count_rows() <= _LOCAL_TRIGGER_ROWS:
+                tbl = _pa_read_table(src, filter=ds.field("tick") >= lo, schema=schema)
+                _swap_dir(lambda tmp, tbl=tbl, ddl=ddl: _commit_table(tmp, tbl, ddl), path)
+                kept[name] = tbl.num_rows
+                continue
+            live = _read_swap(spark, path, ddl).where(F.col("tick") >= F.lit(lo))
             # localCheckpoint BEFORE the swap: the plan reads the very
             # directory the swap replaces (same cache-invalidation trap
             # as incremental_dedup's annotated frame)
@@ -426,37 +535,47 @@ def completed_shards(spark, checkpoint_dir: str) -> list[dict]:
     return _metas(checkpoint_dir, EXACT)
 
 
+def _query_window(sk, window: int | None):
+    """``(sketch, w)``: the query window ``w`` (None = the sketch's own
+    window_ticks) may only NARROW the sketch's window — older sightings
+    may already be decayed — and the sketch re-windowed to ``w`` when
+    it differs from its own."""
+    from ..queries import _with_window, sk_window
+
+    own = sk_window(sk)
+    w = window if window is not None else own
+    if w > own:
+        raise ValueError(
+            f"window {w} exceeds the sketch's window_ticks "
+            f"{own}: older sightings may already be decayed, "
+            "so widening at query time would produce false negatives"
+        )
+    return (sk if w == own else _with_window(sk, w)), w
+
+
 def _probe(spark, checkpoint_dir: str, fam: _Family, keys: DataFrame, now: int,
            window: int | None, exclude_epoch):
     """Probe ``fam``'s broadcast sketch with the one-column frame
     ``keys``: ``(hits, w, done)`` — the DISTINCT keys the sketch has
     seen within the query window ``w`` (same column name as ``keys``),
-    the window itself, and the completed shards the state was merged
-    from (the shards the ledger verify must read). None when the family
-    has no history yet.
+    the window itself (_query_window), and the completed shards the
+    state was merged from (the shards the ledger verify must read).
+    None when the family has no history yet.
 
-    ``window`` (None = the sketch's own window_ticks) may only NARROW
-    the sketch's window: older sightings may already be decayed. The
-    stored payload goes straight to the broadcast (content-cached) when
-    one row makes up the state and no re-window is needed, skipping a
-    zlib re-compress of the bucket array per probe (round 6)."""
-    from ..queries import _with_window, seen_within_payloads, sk_window
+    The stored payload goes straight to the broadcast (content-cached)
+    when one row makes up the state and no re-window is needed,
+    skipping a zlib re-compress of the bucket array per probe (round
+    6)."""
+    from ..queries import seen_within_payloads
 
     done = _done_shards(_metas(checkpoint_dir, fam), exclude_epoch)
-    sk, raw = _load_sketch_state(
+    stored, raw = _load_sketch_state(
         None, fam.path(checkpoint_dir, "sketch_state"), done, fam.spec, with_raw=True
     )
-    if sk is None:
+    if stored is None:
         return None
-    w = window if window is not None else sk_window(sk)
-    if w > sk_window(sk):
-        raise ValueError(
-            f"window {w} exceeds the sketch's window_ticks "
-            f"{sk_window(sk)}: older sightings may already be decayed, "
-            "so widening at query time would produce false negatives"
-        )
-    if w != sk_window(sk):
-        sk = _with_window(sk, w)
+    sk, w = _query_window(stored, window)
+    if sk is not stored:
         raw = None  # re-windowed: stored payload no longer matches
     (col,) = keys.columns
     hits = (
@@ -468,6 +587,40 @@ def _probe(spark, checkpoint_dir: str, fam: _Family, keys: DataFrame, now: int,
         .distinct()
     )
     return hits, w, done
+
+
+def _probe_local(checkpoint_dir: str, fam: _Family, keys, now: int,
+                 window: int | None, exclude_epoch):
+    """_probe on the driver, for the int64 key array ``keys``:
+    ``(hits, w, done)`` with ``hits`` the sorted distinct keys the
+    driver-held sketch has seen within ``w`` — no broadcast, no job."""
+    done = _done_shards(_metas(checkpoint_dir, fam), exclude_epoch)
+    sk = _load_sketch_state(None, fam.path(checkpoint_dir, "sketch_state"), done, fam.spec)
+    if sk is None:
+        return None
+    sk, w = _query_window(sk, window)
+    keys = np.unique(np.asarray(keys, np.int64))
+    return keys[sk.contains_batch(keys, now)], w, done
+
+
+def _ledger_local(checkpoint_dir: str, fam: _Family, name: str, done: list[int],
+                  key: str, values, columns: list[str], now: int | None = None,
+                  w: int | None = None) -> pa.Table:
+    """_ledger on the driver: the ``columns`` of ledger ``name``'s rows
+    in the completed shards ``done`` (and, when ``w`` is given, at
+    ticks in [now - w + 1, now]) whose ``key`` is one of ``values``.
+    pyarrow applies the filter while it scans, so only matching rows
+    are held."""
+    import pyarrow.dataset as ds
+
+    path = _live(fam.path(checkpoint_dir, name))
+    assert os.path.exists(path), f"completed {fam.spec} shard without its {name}"
+    cond = ds.field("shard").isin(pa.array(done, pa.int32())) & ds.field(key).isin(values)
+    if w is not None:
+        cond = cond & (ds.field("tick") >= now - w + 1) & (ds.field("tick") <= now)
+    return _pa_read_table(
+        path, columns=columns, filter=cond, schema=_ddl_schema(fam.ledgers[name][1])
+    )
 
 
 def _commit_shard(
@@ -495,23 +648,41 @@ def _commit_shard(
        lineage commits, a replay is skipped, so anything written after
        it would be lost to a crash in between;
     5. the lineage row ``{shard, now, **meta}`` — LAST: a shard is only
-       complete once everything before it is durable."""
+       complete once everything before it is durable.
+
+    ``rows`` may instead hold driver-side pyarrow tables (the guard's
+    driver path), with ``tick`` an int: the delta then runs the update
+    kernel in-process (_commit_sketch_keys) and each ledger's rows are
+    one driver-written file typed from its DDL (state._commit_table) —
+    no Spark job, same order."""
     shard = len(_metas(checkpoint_dir, fam))
     state_path = fam.path(checkpoint_dir, "sketch_state")
     for path in [state_path] + [fam.path(checkpoint_dir, n) for n in fam.ledgers]:
         _heal_swap(path)
     first = next(iter(fam.ledgers))
     key = fam.ledgers[first][1].split(" ", 1)[0]
-    _commit_sketch_delta(
-        state_path, rows[first], F.col(key), tick, fam.spec, params, shard, partitions,
-    )
-    derived = {"tick": tick, "shard": F.lit(shard)}
-    for name, (_, ddl) in fam.ledgers.items():
-        # the DDLs hold no struct types, so ", " separates columns
-        cols = [c.split(" ", 1) for c in ddl.split(", ")]
-        rows[name].select(*(
-            derived.get(c, F.col(c)).cast(t).alias(c) for c, t in cols
-        )).write.mode("append").parquet(fam.path(checkpoint_dir, name))
+    if isinstance(rows[first], pa.Table):
+        _commit_sketch_keys(
+            state_path, rows[first].column(key).combine_chunks(), tick, fam.spec,
+            params, shard,
+        )
+        for name, (_, ddl) in fam.ledgers.items():
+            t = rows[name]
+            t = t.append_column("tick", pa.array(np.full(t.num_rows, tick, np.int64)))
+            t = t.append_column("shard", pa.array(np.full(t.num_rows, shard, np.int32)))
+            _commit_table(fam.path(checkpoint_dir, name), t, ddl)
+    else:
+        _commit_sketch_delta(
+            state_path, rows[first], F.col(key), tick, fam.spec, params, shard,
+            partitions,
+        )
+        derived = {"tick": tick, "shard": F.lit(shard)}
+        for name, (_, ddl) in fam.ledgers.items():
+            # the DDLs hold no struct types, so ", " separates columns
+            cols = [c.split(" ", 1) for c in ddl.split(", ")]
+            rows[name].select(*(
+                derived.get(c, F.col(c)).cast(t).alias(c) for c, t in cols
+            )).write.mode("append").parquet(fam.path(checkpoint_dir, name))
     if pre_lineage_hook is not None:
         pre_lineage_hook(ann)
     _write_lineage(
@@ -724,10 +895,20 @@ class StreamingIngestGuard:
     compaction row is written from the driver (_commit_row: a pyarrow
     file under a '_' temp name, then an atomic ``os.replace``), so a
     crash mid-commit leaves an invisible temp file, never a torn row,
-    and the epoch marker is either fully present or absent. Only the
-    ledgers and the clean output are Spark writes. ``partitions`` is
-    passed to every family: it caps the sketch-delta partials each
-    commit collects to the driver (``coalesce``, no shuffle).
+    and the epoch marker is either fully present or absent. Each
+    trigger first reads the batch once, bounded: ``limit(2^14 + 1)
+    .toArrow()`` (_read_local). A batch that fits — at most
+    _LOCAL_TRIGGER_ROWS = 2^14 rows, columns of integral, float,
+    double, boolean, string or binary type or arrays of them, unique
+    non-null doc ids — runs every family on the driver over that Arrow
+    batch and writes its ledgers and its clean partition with pyarrow
+    too: one Spark job per trigger, driver memory bounded by the batch
+    plus the hit-matching ledger rows. Any other batch runs each
+    family's Spark operator, whose ledgers and clean output are Spark
+    writes; ``partitions`` caps the sketch-delta partials each of
+    those commits collects to the driver (``coalesce``, no shuffle).
+    Both paths commit in the same order and leave identical artifacts,
+    so one checkpoint may mix them.
 
     ``near=True`` (round 5, VERDICT r04 #3) additionally runs
     incremental_near_dup per micro-batch under the SAME epoch
@@ -864,7 +1045,128 @@ class StreamingIngestGuard:
         if any(m.get("epoch") == int(epoch_id) for m in done):
             return  # fully committed (incl. clean output — see class doc)
         ep, now = int(epoch_id), self.now_for_epoch(epoch_id)
+        tbl = _read_local(
+            batch_df, self.text_col, self.near or self.passages, self.passages
+        )
+        if tbl is None or not self._process_local(tbl, ep, now):
+            self._process_spark(batch_df, ep, now)
+        self._batches_done += 1
+        if self.compact_every and self._batches_done % self.compact_every == 0:
+            for fam, on in ((EXACT, True), (NEAR, self.near),
+                            (PASSAGES, self.passages), (EMB, self.embeddings)):
+                if on:
+                    _compact(self.checkpoint_dir, fam)
+        if self.expire_every and self._batches_done % self.expire_every == 0:
+            expire_ledgers(self.spark, self.checkpoint_dir, now=now)
 
+    def _process_local(self, tbl, ep: int, now: int) -> bool:
+        """One trigger over the driver-held batch ``tbl`` (_read_local):
+        every enabled family's flags first, then the commits in the
+        Spark path's order — near shard, exact sketch and ledger, the
+        publish hook (emb state, passage shard, mask, clean partition),
+        the exact lineage row last. False, with nothing written, when
+        the near family's intra-batch candidate pairs exceed
+        _LOCAL_NEAR_PAIRS."""
+        ck = self.checkpoint_dir
+        ids, n = tbl.column("_fgs_id"), tbl.num_rows
+        keep = np.ones(n, bool)  # survives every doc-level family
+        if self.embeddings:
+            keep &= ~_emb_flags_local(
+                ck, ids, tbl.column(self.emb_vec_col), now, self.emb_dim,
+                self.emb_threshold, self.emb_bits, self.emb_tables, self.window, ep,
+            )
+        if self.near:
+            near = _near_local(
+                ck, ids, tbl.column("_fgs_wh"), now, self.near_threshold,
+                self.near_num_hashes, self.near_bands, self.near_rows_per_band,
+                self.window, ep,
+            )
+            if near is None:
+                return False
+        fps = tbl.column("_fgs_fp").to_numpy()
+        hist, intra = _exact_local(ck, ids, fps, now, self.window, ep)
+        if self.near:
+            near_hist, near_intra, sig, bkeys = near
+            near_keep = ~near_hist & ~near_intra
+            _commit_shard(
+                ck, NEAR,
+                {
+                    "band_ledger": pa.table({
+                        "bkey": bkeys[near_keep].ravel(),
+                        "doc_id": ids.take(np.repeat(np.flatnonzero(near_keep), self.near_bands)),
+                    }),
+                    "sig_ledger": pa.table({
+                        "doc_id": ids.filter(pa.array(near_keep)),
+                        "sig": sig.filter(pa.array(near_keep)),
+                    }),
+                },
+                now, now, self.near_params, None,
+                {
+                    "kind": "near_dup", "n_docs": n,
+                    "n_near_dup_history": int(near_hist.sum()),
+                    "n_near_dup_intra": int(near_intra.sum()),
+                    "n_retained": int(near_keep.sum()), "epoch": ep,
+                },
+            )
+            keep &= near_keep
+        exact_keep = ~hist & ~intra
+        _commit_shard(
+            ck, EXACT,
+            {"fp_ledger": pa.table({
+                "fp": fps[exact_keep], "doc_id": ids.filter(pa.array(exact_keep)),
+            })},
+            now, now, self.params, None,
+            {
+                "n_docs": n, "n_dup_history": int(hist.sum()),
+                "n_dup_intra": int(intra.sum()), "n_retained": int(exact_keep.sum()),
+                "epoch": ep,
+            },
+            None,
+            lambda _: self._publish_local(tbl.filter(pa.array(keep & exact_keep)), ep, now),
+        )
+        return True
+
+    def _publish_local(self, out, ep: int, now: int) -> None:
+        """The driver path's publish hook over the survivors ``out``:
+        the emb state and passage shard commits, the mask, then the
+        clean ``_epoch=ep`` partition — the batch's own columns and
+        types, written as one file through a hidden-name _swap_dir, so
+        a replay replaces exactly its own partition. Like Spark's
+        dynamic overwrite, an epoch without survivors writes no
+        partition."""
+        if self.clean_dir is None:
+            return
+        ids = out.column("_fgs_id")
+        if self.embeddings:
+            _emb_commit_local(
+                self.checkpoint_dir, ids, out.column(self.emb_vec_col), now,
+                self.emb_dim, self.emb_bits, self.emb_tables, self.emb_params,
+                {"epoch": ep},
+            )
+        names = [c for c in out.schema.names if not c.startswith("_fgs_")]
+        cols = [out.column(c) for c in names]
+        if self.passages:
+            text, removed = _passages_local(
+                self.checkpoint_dir, out, now, self.passage_window,
+                self.passage_stride, self.window, self.passage_params,
+                {"epoch": ep}, ep,
+            )
+            cols[names.index(self.text_col)] = text
+            names.append("_passage_tokens_removed")
+            cols.append(removed)
+        os.makedirs(self.clean_dir, exist_ok=True)
+        if out.num_rows:
+            clean = pa.Table.from_arrays(cols, names=names)
+
+            def write(tmp):
+                os.makedirs(tmp)
+                _publish(tmp, clean)
+
+            _swap_dir(write, os.path.join(self.clean_dir, f"_epoch={ep}"), hidden=True)
+
+    def _process_spark(self, batch_df, ep: int, now: int) -> None:
+        """One trigger as Spark jobs: each family's operator over
+        ``batch_df``, in the commit order the driver path mirrors."""
         emb_ann = None
         if self.embeddings:
             # FLAGS ONLY here (update_state=False): semantic state is
@@ -925,7 +1227,7 @@ class StreamingIngestGuard:
                 batch_df.withColumn("_k", F.col("doc_id").cast("string"))
                 .join(F.broadcast(keep), "_k", "left_semi")
                 .drop("_k")
-                .withColumn("_epoch", F.lit(int(epoch_id)))
+                .withColumn("_epoch", F.lit(ep))
             )
             if self.embeddings or self.passages:
                 # frozen once: the survivor frame feeds the emb state
@@ -993,14 +1295,6 @@ class StreamingIngestGuard:
             pre_lineage_hook=publish_clean,
             exclude_epoch=ep,
         )
-        self._batches_done += 1
-        if self.compact_every and self._batches_done % self.compact_every == 0:
-            for fam, on in ((EXACT, True), (NEAR, self.near),
-                            (PASSAGES, self.passages), (EMB, self.embeddings)):
-                if on:
-                    _compact(self.checkpoint_dir, fam)
-        if self.expire_every and self._batches_done % self.expire_every == 0:
-            expire_ledgers(self.spark, self.checkpoint_dir, now=now)
 
     def start(self, input_path: str, schema, trigger_seconds: int | None = 2,
               stream_checkpoint: str | None = None):
@@ -1540,9 +1834,9 @@ def _emb_bucket_keys(dim: int, bits: int, tables: int, seed_base: int = 101):
     """The emb family's one bucket-key function: ``keys(col)`` maps an
     Arrow list column of n vectors to ``(vecs, bkey)`` — the (n, dim)
     float32 matrix and the n·tables int64 bucket keys, vector i's at
-    [i·tables, (i+1)·tables). The key kernel (_emb_src_keyed) and the
-    verify kernel (_make_emb_verify_udf) both call it, so bucket keys
-    can never drift between them.
+    [i·tables, (i+1)·tables). The key kernel (_emb_keyed) and the
+    verify kernel (_emb_verify) both call it, so bucket keys can never
+    drift between them.
 
     Planes: ``tables`` sets of ``bits`` seeded ±1 hyperplanes
     (identical construction to similarity.hyperplane_buckets,
@@ -1555,8 +1849,6 @@ def _emb_bucket_keys(dim: int, bits: int, tables: int, seed_base: int = 101):
     0 elements, so an unguarded reshape either aborts cryptically or —
     if length errors cancel — shifts every later row onto WRONG bucket
     keys (silent false negatives; code-review r05 fifth pass #3)."""
-    import numpy as np
-
     from ..hashing import splitmix64
 
     planes = np.concatenate([
@@ -1600,9 +1892,6 @@ def _emb_src_keyed(
     per vector from ONE mapInArrow pass (all tables in one matmul, and
     the key frame never carries the vectors — code-review r05 third
     pass #3/#4), frozen so probe and state commit never recompute it."""
-    import numpy as np
-    import pyarrow as pa
-
     src = new_df.select(
         F.col(id_col).cast("string").alias("vec_id"),
         F.col(vec_col).alias("embedding"),
@@ -1611,15 +1900,21 @@ def _emb_src_keyed(
 
     def assign(iterator):
         for tbl in iterator:
-            _, bkey = keys(tbl.column("embedding"))
-            rows = np.repeat(np.arange(len(tbl), dtype=np.int64), tables)
-            yield pa.RecordBatch.from_pydict({
-                "vec_id": tbl.column("vec_id").take(pa.array(rows)),
-                "bkey": pa.array(bkey, pa.int64()),
-            })
+            yield pa.RecordBatch.from_pydict(_emb_keyed(tbl, keys, tables))
 
     keyed = src.mapInArrow(assign, schema="vec_id string, bkey long")
     return src, keyed.localCheckpoint(eager=True)
+
+
+def _emb_keyed(tbl, keys, tables: int) -> dict:
+    """The key kernel's body over one (vec_id, embedding) batch: the
+    ``(vec_id, bkey)`` columns, ``tables`` rows per vector."""
+    _, bkey = keys(tbl.column("embedding"))
+    rows = np.repeat(np.arange(len(tbl), dtype=np.int64), tables)
+    return {
+        "vec_id": tbl.column("vec_id").take(pa.array(rows)),
+        "bkey": pa.array(bkey, pa.int64()),
+    }
 
 
 def _emb_check_geometry(checkpoint_dir: str, bits: int, tables: int, dim: int):
@@ -1703,7 +1998,7 @@ def _emb_hist_matches(
         .select("vec_id", "embedding")
         .toArrow()
     )
-    bc_cand = _broadcast_emb_candidates(spark, led_hits, hvec_rows)
+    bc_cand = spark.sparkContext.broadcast(_emb_candidates(led_hits, hvec_rows))
     scored = src.mapInArrow(
         _make_emb_verify_udf(bc_cand, threshold, dim, bits, tables),
         schema="vec_id string, hist_vec_id string, cosine double",
@@ -1719,20 +2014,17 @@ def _emb_hist_matches(
     )
 
 
-def _broadcast_emb_candidates(spark, led_hits, hvec_rows):
-    """Build + broadcast the verify kernel's lookup state from the
-    hit-restricted bucket-ledger rows and the candidate partners'
-    vectors: a sorted-bkey CSR (bkey → partner matrix rows) plus the
-    float32 vector matrix and its float64 norms. Memory bound =
-    O(hit-key ledger rows + candidate partners × dim) — the same
+def _emb_candidates(led_hits, hvec_rows) -> tuple:
+    """The verify kernel's lookup state, from the hit-restricted
+    bucket-ledger rows and the candidate partners' vectors: a
+    sorted-bkey CSR (bkey → partner matrix rows) plus the float32
+    vector matrix and its float64 norms. Memory bound = O(hit-key
+    ledger rows + candidate partners × dim) — the same
     candidate-restricted set the round-5 plan drove through
     F.broadcast(cand)/F.broadcast(hvecs) JVM relations (which are
     driver-collected too), so the worst-case-re-crawl ceiling noted in
     VERDICT r05 is unchanged, just relocated and paid once instead of
     three times."""
-    import numpy as np
-    import pyarrow.compute as pc
-
     ids = hvec_rows.column("vec_id").combine_chunks()
     emb = hvec_rows.column("embedding").combine_chunks()
     flat = emb.flatten().to_numpy(zero_copy_only=False).astype(np.float32)
@@ -1771,25 +2063,40 @@ def _broadcast_emb_candidates(spark, led_hits, hvec_rows):
     # ids stay a pyarrow Array end to end: it pickles via Arrow IPC
     # (no 10^5-element Python string list), and the kernel can .take()
     # it directly instead of rebuilding a string array per task
-    return spark.sparkContext.broadcast(
-        (uniq_bkeys, csr_off, partner_rows, ids, mat, norms)
-    )
+    return uniq_bkeys, csr_off, partner_rows, ids, mat, norms
 
 
 def _make_emb_verify_udf(bc_cand, threshold: float, dim: int, bits: int, tables: int):
-    """mapInArrow verify kernel over the bare shard (vec_id,
-    embedding) rows: re-derive each vector's ``tables`` bucket keys
-    with the key kernel's own function (_emb_bucket_keys — same seeded
-    planes, same input guards), look the keys up in the broadcast CSR,
-    gather partner vectors from the broadcast matrix, and emit every
-    (vec_id, hist_vec_id, cosine) pair at cosine >= threshold. All
-    double precision, fully vectorized — no per-row Python, no joins,
-    shard vectors cross the Arrow boundary exactly once. A partner
-    reachable through several tables is scored more than once; the
-    downstream max-per-vec aggregation is insensitive to that, and
-    deduplicating here would cost a per-batch sort for nothing.
-    Zero-norm guard preserved: an all-zero embedding has no direction
-    and never matches anything (code-review r05 third pass #1).
+    """mapInArrow wrapper of the verify kernel (_emb_verify) over the
+    bare shard (vec_id, embedding) rows, reading the candidate tuple
+    from the broadcast ``bc_cand``."""
+    keys = _emb_bucket_keys(dim, bits, tables)
+
+    def verify(iterator):
+        cand = bc_cand.value
+        for tbl in iterator:
+            cols = _emb_verify(tbl, cand, keys, threshold, tables)
+            if cols is not None:
+                yield pa.RecordBatch.from_pydict(cols)
+
+    return verify
+
+
+def _emb_verify(tbl, cand: tuple, keys, threshold: float, tables: int):
+    """The verify kernel over one (vec_id, embedding) batch: re-derive
+    each vector's ``tables`` bucket keys with the key kernel's own
+    function (``keys`` = _emb_bucket_keys — same seeded planes, same
+    input guards), look the keys up in the candidate CSR
+    (_emb_candidates), gather partner vectors from its matrix, and
+    return every (vec_id, hist_vec_id, cosine) pair at cosine >=
+    threshold as Arrow columns (None: no pair). All double precision,
+    fully vectorized — no per-row Python, no joins, shard vectors cross
+    the Arrow boundary exactly once. A partner reachable through
+    several tables is scored more than once; the downstream max-per-vec
+    aggregation is insensitive to that, and deduplicating here would
+    cost a per-batch sort for nothing. Zero-norm guard preserved: an
+    all-zero embedding has no direction and never matches anything
+    (code-review r05 third pass #1).
 
     Precision: the shard's vectors are downcast to float32 on purpose
     (an ``array<double>`` input included), because history is stored
@@ -1799,52 +2106,41 @@ def _make_emb_verify_udf(bc_cand, threshold: float, dim: int, bits: int, tables:
     accumulated in float64. A pair whose float64 cosine lies within
     float32 rounding of ``threshold`` may land on either side of it —
     the same either way a vector enters history."""
-    import numpy as np
-    import pyarrow as pa
-
-    keys = _emb_bucket_keys(dim, bits, tables)
-
-    def verify(iterator):
-        uniq_bkeys, csr_off, partner_rows, id_arr, mat, hnorms = bc_cand.value
-        for tbl in iterator:
-            n = len(tbl)
-            if n == 0 or uniq_bkeys.size == 0:
-                continue
-            evec, kf = keys(tbl.column("embedding"))
-            pos = np.searchsorted(uniq_bkeys, kf)
-            pos[pos == uniq_bkeys.size] = 0  # clamp; equality check below
-            found = uniq_bkeys[pos] == kf
-            cnt = np.where(found, csr_off[pos + 1] - csr_off[pos], 0)
-            total = int(cnt.sum())
-            if total == 0:
-                continue
-            out_off = np.concatenate([np.zeros(1, np.int64), np.cumsum(cnt)])
-            idxs = (
-                np.arange(total, dtype=np.int64)
-                - np.repeat(out_off[:-1], cnt)
-                + np.repeat(np.where(found, csr_off[pos], 0), cnt)
-            )
-            pidx = partner_rows[idxs].astype(np.int64)
-            rows = np.repeat(np.arange(n * tables, dtype=np.int64) // tables, cnt)
-            e64 = evec.astype(np.float64)
-            enorm = np.sqrt((e64 * e64).sum(axis=1))
-            dots = (e64[rows] * mat[pidx].astype(np.float64)).sum(axis=1)
-            nprod = enorm[rows] * hnorms[pidx]
-            posn = nprod > 0
-            cos = np.full(rows.size, -1.0)
-            cos[posn] = dots[posn] / nprod[posn]
-            keep = cos >= threshold
-            if not keep.any():
-                continue
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "vec_id": tbl.column("vec_id").take(pa.array(rows[keep])),
-                    "hist_vec_id": id_arr.take(pa.array(pidx[keep])),
-                    "cosine": pa.array(cos[keep], pa.float64()),
-                }
-            )
-
-    return verify
+    uniq_bkeys, csr_off, partner_rows, id_arr, mat, hnorms = cand
+    n = len(tbl)
+    if n == 0 or uniq_bkeys.size == 0:
+        return None
+    evec, kf = keys(tbl.column("embedding"))
+    pos = np.searchsorted(uniq_bkeys, kf)
+    pos[pos == uniq_bkeys.size] = 0  # clamp; equality check below
+    found = uniq_bkeys[pos] == kf
+    cnt = np.where(found, csr_off[pos + 1] - csr_off[pos], 0)
+    total = int(cnt.sum())
+    if total == 0:
+        return None
+    out_off = np.concatenate([np.zeros(1, np.int64), np.cumsum(cnt)])
+    idxs = (
+        np.arange(total, dtype=np.int64)
+        - np.repeat(out_off[:-1], cnt)
+        + np.repeat(np.where(found, csr_off[pos], 0), cnt)
+    )
+    pidx = partner_rows[idxs].astype(np.int64)
+    rows = np.repeat(np.arange(n * tables, dtype=np.int64) // tables, cnt)
+    e64 = evec.astype(np.float64)
+    enorm = np.sqrt((e64 * e64).sum(axis=1))
+    dots = (e64[rows] * mat[pidx].astype(np.float64)).sum(axis=1)
+    nprod = enorm[rows] * hnorms[pidx]
+    posn = nprod > 0
+    cos = np.full(rows.size, -1.0)
+    cos[posn] = dots[posn] / nprod[posn]
+    keep = cos >= threshold
+    if not keep.any():
+        return None
+    return {
+        "vec_id": tbl.column("vec_id").take(pa.array(rows[keep])),
+        "hist_vec_id": id_arr.take(pa.array(pidx[keep])),
+        "cosine": pa.array(cos[keep], pa.float64()),
+    }
 
 
 def _emb_annotate(
@@ -2013,3 +2309,326 @@ def commit_emb_state(
             **(meta_extra or {}),
         },
     )
+
+
+# --------------------------------------------------------------------
+# the guard's driver path: a trigger whose batch fits _LOCAL_TRIGGER_ROWS
+# runs every family over ONE bounded Spark read, in Arrow on the driver
+# --------------------------------------------------------------------
+
+def _local_type(t) -> bool:
+    if isinstance(t, ArrayType):
+        t = t.elementType
+    return isinstance(t, _LOCAL_SCALARS)
+
+
+def _read_local(batch_df: DataFrame, text_col: str, wh: bool, words: bool):
+    """The guard's one bounded read of a batch, as one Arrow
+    RecordBatch: the batch's own columns plus what the families derive
+    from them, computed by the JVM — the string doc id (``_fgs_id``),
+    the exact fingerprint xxhash64(text) (``_fgs_fp``), and when asked
+    the word hashes (``_fgs_wh``) and the words and their count for the
+    mask (``_fgs_words``, ``_fgs_nw``) — so each equals the Spark
+    path's value by construction, null and empty text included.
+
+    None — take the Spark path — when a column's type is not one of
+    _LOCAL_SCALARS or an array of one, the text is not a string, the
+    batch has more than _LOCAL_TRIGGER_ROWS rows, or its doc ids are
+    not unique and non-null (the Spark path's doc-id joins then drop or
+    repeat rows, which the driver path does not reproduce)."""
+    schema = batch_df.schema
+    if not all(_local_type(f.dataType) for f in schema.fields) or not (
+        text_col in schema.names and isinstance(schema[text_col].dataType, StringType)
+    ):
+        return None
+    split = F.split(F.col(text_col), " ")
+    cols = [
+        F.col("doc_id").cast("string").alias("_fgs_id"),
+        F.xxhash64(F.col(text_col)).alias("_fgs_fp"),
+    ]
+    if wh:
+        cols.append(F.transform(split, lambda w: F.xxhash64(w)).alias("_fgs_wh"))
+    if words:
+        cols += [split.alias("_fgs_words"), F.size(split).alias("_fgs_nw")]
+    tbl = batch_df.select("*", *cols).limit(_LOCAL_TRIGGER_ROWS + 1).toArrow()
+    ids = tbl.column("_fgs_id")
+    if (tbl.num_rows > _LOCAL_TRIGGER_ROWS or ids.null_count
+            or pc.count_distinct(ids).as_py() != tbl.num_rows):
+        return None
+    return pa.RecordBatch.from_arrays(
+        [pa.concat_arrays(c.chunks) if c.num_chunks else pa.array([], c.type)
+         for c in tbl.columns],
+        schema=tbl.schema,
+    )
+
+
+def _id_rank(ids) -> np.ndarray:
+    """Each (unique) string id's rank in UTF-8 byte order — the order
+    Spark compares strings in, so ``rank[a] < rank[b]`` iff
+    ``doc_a < doc_b`` there."""
+    rank = np.empty(len(ids), np.int64)
+    rank[pc.sort_indices(ids).to_numpy()] = np.arange(len(ids))
+    return rank
+
+
+def _run_starts(*keys) -> np.ndarray:
+    """Start indices of the runs of equal rows in the sorted key
+    arrays ``keys``."""
+    new = np.ones(len(keys[0]), bool)
+    if new.size > 1:
+        new[1:] = np.logical_or.reduce([k[1:] != k[:-1] for k in keys])
+    return np.flatnonzero(new)
+
+
+def _exact_local(checkpoint_dir: str, ids, fps: np.ndarray, now: int, window,
+                 exclude_epoch):
+    """annotate_against_history's flags over a driver-held batch
+    (unique string ids, int64 fingerprints): ``(is_dup_history,
+    is_dup_intra)``. Same rules: a history dup's fp is in the sketch
+    AND in an fp-ledger row of a completed shard inside the window; an
+    intra dup is any other doc that is not its fp's min doc id."""
+    hist = np.zeros(len(ids), bool)
+    probe = _probe_local(checkpoint_dir, EXACT, fps, now, window, exclude_epoch)
+    if probe is not None and probe[0].size:
+        hits, w, done = probe
+        led = _ledger_local(checkpoint_dir, EXACT, "fp_ledger", done, "fp",
+                            pa.array(hits), ["fp"], now, w)
+        hist = np.isin(fps, led.column("fp").to_numpy())
+    order = np.lexsort((_id_rank(ids), fps))
+    first = np.zeros(len(ids), bool)
+    first[order[_run_starts(fps[order])]] = True
+    return hist, ~hist & ~first
+
+
+def _lsh_pairs(buckets: np.ndarray, rank: np.ndarray):
+    """minhash_lsh_candidates over a (docs, bands) bucket matrix: the
+    distinct doc pairs ``(a, b)`` (row indices, ``rank[a] < rank[b]``)
+    sharing a (band, bucket), or None when there are more than
+    _LOCAL_NEAR_PAIRS of them before the distinct."""
+    n, bands = buckets.shape
+    band, bucket = np.tile(np.arange(bands), n), buckets.ravel()
+    doc = np.repeat(np.arange(n), bands)
+    order = np.lexsort((bucket, band))
+    starts = _run_starts(band[order], bucket[order])
+    sizes = np.diff(np.append(starts, order.size))
+    if int((sizes * (sizes - 1) // 2).sum()) > _LOCAL_NEAR_PAIRS:
+        return None
+    # each element of a run pairs with the run's later elements
+    cnt = np.repeat(starts + sizes, sizes) - 1 - np.arange(order.size)
+    left = np.repeat(np.arange(order.size), cnt)
+    right = left + 1 + np.arange(int(cnt.sum())) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    da, db = doc[order][left], doc[order][right]
+    swap = rank[da] > rank[db]
+    da, db = np.where(swap, db, da), np.where(swap, da, db)
+    code = np.unique(da * n + db)
+    return code // n, code % n
+
+
+def _near_local(checkpoint_dir: str, ids, wh, now: int, threshold: float,
+                num_hashes: int, bands: int, rows_per_band: int, window,
+                exclude_epoch):
+    """incremental_near_dup's flags over a driver-held batch:
+    ``(is_dup_history, is_dup_intra, sig, bkeys)`` with the signature
+    column and the (docs, bands) band keys the commit appends — or None
+    when the batch has more than _LOCAL_NEAR_PAIRS intra-batch
+    candidate pairs. Same rules: band keys are Spark's
+    xxhash64(band, xxhash64(slice(sig))) bit for bit
+    (dedup._band_buckets); a history dup shares a sketch-hit band key
+    with a retained in-window doc whose signature match fraction
+    reaches ``threshold``; an intra dup is any other doc that is not
+    the min id of its cluster — connected components over the doc pairs
+    sharing a (band, bucket) whose match fraction reaches
+    ``threshold``."""
+    from .dedup import _band_buckets, _cc_rounds, _minhash_sigs, _sig_list
+
+    n = len(ids)
+    sigs = _minhash_sigs(wh, num_hashes, 3)
+    buckets = _band_buckets(sigs, bands, rows_per_band)
+    bkeys = spark_xxhash64(
+        np.tile(np.arange(bands, dtype=np.int32), n), buckets.ravel()
+    ).reshape(n, bands)
+    pairs = _lsh_pairs(buckets, _id_rank(ids))
+    if pairs is None:
+        return None
+    a, b = pairs
+    a, b = (x[(sigs[a] == sigs[b]).sum(axis=1) / num_hashes >= threshold] for x in (a, b))
+    intra = np.zeros(n, bool)
+    if a.size:
+        nodes, comps, _ = _cc_rounds(pa.table({"a": ids.take(a), "b": ids.take(b)}), 25)
+        intra = pc.is_in(ids, value_set=nodes.filter(pc.not_equal(nodes, comps))).to_numpy(
+            zero_copy_only=False
+        )
+
+    hist = np.zeros(n, bool)
+    probe = _probe_local(checkpoint_dir, NEAR, bkeys.ravel(), now, window, exclude_epoch)
+    if probe is not None and probe[0].size:
+        hits, w, done = probe
+        hit = np.isin(bkeys.ravel(), hits)
+        band_led = _ledger_local(checkpoint_dir, NEAR, "band_ledger", done, "bkey",
+                                 pa.array(hits), ["bkey", "doc_id"], now, w)
+        cand = (
+            pa.table({"bkey": bkeys.ravel()[hit], "row": np.repeat(np.arange(n), bands)[hit]})
+            .join(band_led, "bkey", join_type="inner")
+            .group_by(["row", "doc_id"]).aggregate([])
+        )
+        sig_led = _ledger_local(checkpoint_dir, NEAR, "sig_ledger", done, "doc_id",
+                                pc.unique(cand.column("doc_id")), ["doc_id", "sig"])
+        # every ledger signature of every candidate partner (a retried
+        # shard may have appended a doc twice)
+        sig_led = sig_led.append_column("i", pa.array(np.arange(sig_led.num_rows)))
+        cand = cand.join(sig_led.select(["doc_id", "i"]), "doc_id", join_type="inner")
+        hsig = sig_led.column("sig").combine_chunks().take(cand.column("i").to_numpy())
+        ok = pc.list_value_length(hsig).to_numpy(zero_copy_only=False) == num_hashes
+        rows = cand.column("row").to_numpy()[ok]
+        mat = pc.list_flatten(hsig.filter(pa.array(ok))).to_numpy().reshape(-1, num_hashes)
+        hist[rows[(sigs[rows] == mat).sum(axis=1) / num_hashes >= threshold]] = True
+    return hist, ~hist & intra, _sig_list(sigs), bkeys
+
+
+def _emb_flags_local(checkpoint_dir: str, ids, vecs, now: int, dim: int,
+                     threshold: float, bits: int, tables: int, window,
+                     exclude_epoch) -> np.ndarray:
+    """incremental_embedding_dedup's is_emb_dup_history over a
+    driver-held batch: the sketch-hit bucket-ledger rows and the
+    candidates' vectors feed the verify kernel (_emb_verify) directly —
+    the same candidate state the Spark path broadcasts."""
+    _emb_check_geometry(checkpoint_dir, bits, tables, dim)
+    keys = _emb_bucket_keys(dim, bits, tables)
+    _, bkey = keys(vecs)  # the key kernel's null / ragged guards
+    dup = np.zeros(len(ids), bool)
+    probe = _probe_local(checkpoint_dir, EMB, bkey, now, window, exclude_epoch)
+    if probe is None or not probe[0].size:
+        return dup
+    hits, w, done = probe
+    led_hits = _ledger_local(
+        checkpoint_dir, EMB, "bucket_ledger", done, "bkey", pa.array(hits),
+        ["bkey", "vec_id"], now, w,
+    ).rename_columns(["bkey", "hist_vec_id"])
+    hvec_rows = _ledger_local(checkpoint_dir, EMB, "vec_ledger", done, "vec_id",
+                              pc.unique(led_hits.column("hist_vec_id")),
+                              ["vec_id", "embedding"])
+    src = pa.RecordBatch.from_arrays([ids, vecs], ["vec_id", "embedding"])
+    scored = _emb_verify(src, _emb_candidates(led_hits, hvec_rows), keys, threshold, tables)
+    if scored is not None:
+        dup = pc.is_in(ids, value_set=scored["vec_id"]).to_numpy(zero_copy_only=False)
+    return dup
+
+
+def _emb_commit_local(checkpoint_dir: str, ids, vecs, now: int, dim: int,
+                      bits: int, tables: int, params, meta_extra: dict) -> None:
+    """commit_emb_state over driver-held survivors."""
+    _emb_check_geometry(checkpoint_dir, bits, tables, dim)
+    src = pa.RecordBatch.from_arrays([ids, vecs], ["vec_id", "embedding"])
+    n = len(ids)
+    _commit_shard(
+        checkpoint_dir, EMB,
+        {
+            "bucket_ledger": pa.table(_emb_keyed(src, _emb_bucket_keys(dim, bits, tables), tables)),
+            "vec_ledger": pa.Table.from_batches([src]),
+        },
+        now, now, params, None,
+        {
+            "kind": "emb_dup", "bits": bits, "tables": tables, "dim": dim,
+            "n_vecs": n, "n_emb_dup_history": 0, "n_retained": n, **meta_extra,
+        },
+    )
+
+
+def _passages_local(checkpoint_dir: str, out, now: int, window: int, stride: int,
+                    query_window, params, meta_extra: dict, exclude_epoch):
+    """incremental_passages then mask_against_history over the
+    driver-held survivors ``out`` (a _read_local batch): commits the
+    passage shard and returns the masked text and
+    n_tokens_removed columns. Same rules: a history window's fp is in
+    the sketch AND in a passage-ledger row of a completed shard inside
+    the window; a new fp enters history through its first occurrence
+    that overlaps no history window of its doc, keeper = min (doc_id,
+    pos); the mask drops every word of every history window."""
+    from .dedup import _passage_rollup
+
+    ids, n = out.column("_fgs_id"), out.num_rows
+    rows = _passage_rollup(
+        pa.RecordBatch.from_arrays([pa.array(np.arange(n)), out.column("_fgs_wh")],
+                                   ["doc_id", "wh"]),
+        window, stride, with_positions=True,
+    )
+    if rows is None:
+        row = fp = pos = np.zeros(0, np.int64)
+        sizes = np.zeros(0, np.int64)
+    else:
+        row, fp = rows["doc_id"].to_numpy(), rows["fp"].to_numpy()
+        pos = rows["pos_list"].values.to_numpy().astype(np.int64)
+        sizes = np.diff(rows["pos_list"].offsets.to_numpy())
+    verified = np.zeros(0, np.int64)
+    probe = _probe_local(checkpoint_dir, PASSAGES, fp, now, query_window, exclude_epoch)
+    if probe is not None and probe[0].size:
+        hits, w, done = probe
+        verified = _ledger_local(checkpoint_dir, PASSAGES, "passage_ledger", done, "fp",
+                                 pa.array(hits), ["fp"], now, w).column("fp").to_numpy()
+    hist_row = np.isin(fp, verified)
+    # one entry per window occurrence: its (fp row, doc, position)
+    owner = np.repeat(np.arange(row.size), sizes)
+    pdoc = row[owner]
+    is_hist = hist_row[owner]
+    hd, hp = pdoc[is_hist], pos[is_hist]
+    o = np.lexsort((hp, hd))
+    hd, hp = hd[o], hp[o]
+    # an occurrence overlaps a history window of its doc iff the
+    # nearest one on either side starts less than ``window`` away
+    span = np.int64(1) << 32
+    hkey = hd * span + hp
+    i = np.searchsorted(hkey, pdoc * span + pos)
+    overlap = np.zeros(pos.size, bool)
+    if hkey.size:
+        for j in (i - 1, i):
+            jj = np.clip(j, 0, hkey.size - 1)
+            overlap |= (j >= 0) & (j < hkey.size) & (hd[jj] == pdoc) & (
+                np.abs(hp[jj] - pos) < window)
+    # new fps: each fp row's first clean occurrence (positions ascend
+    # per row), keeper = min (doc_id, pos) per fp
+    c_owner, c_pos = owner[~overlap], pos[~overlap]
+    s = _run_starts(c_owner)
+    k_row, k_pos = c_owner[s], c_pos[s]
+    new = ~hist_row[k_row]
+    k_row, k_pos = k_row[new], k_pos[new]
+    order = np.lexsort((k_pos, _id_rank(ids)[row[k_row]], fp[k_row]))
+    keep = order[_run_starts(fp[k_row][order])]
+    _commit_shard(
+        checkpoint_dir, PASSAGES,
+        {"passage_ledger": pa.table({
+            "fp": pa.array(fp[k_row][keep], pa.int64()),
+            "keep_doc": ids.take(pa.array(row[k_row][keep])),
+            "keep_pos": pa.array(k_pos[keep], pa.int32()),
+        })},
+        now, now, params, None,
+        {
+            "kind": "passages", "n_docs": n, "n_windows": int(sizes.sum()),
+            "n_hist_windows": int(is_hist.sum()), **meta_extra,
+        },
+    )
+
+    # the mask (dedup._mask_spans): drop the words [p, p + window) of
+    # every history window p; a doc's text is the join of what is left
+    words = out.column("_fgs_words")
+    lens = pc.fill_null(pc.list_value_length(words), 0).to_numpy().astype(np.int64)
+    starts = np.concatenate([np.zeros(1, np.int64), np.cumsum(lens)])
+    edge = np.zeros(int(starts[-1]) + 1, np.int64)
+    np.add.at(edge, starts[hd] + hp, 1)
+    np.add.at(edge, starts[hd] + np.minimum(hp + window, lens[hd]), -1)
+    dropped = np.cumsum(edge[:-1]) > 0
+    kept = lens - np.bincount(np.repeat(np.arange(n), lens)[dropped], minlength=n)
+    text = pc.binary_join(
+        pa.ListArray.from_arrays(
+            pa.array(np.concatenate([np.zeros(1, np.int64), np.cumsum(kept)]).astype(np.int32)),
+            pc.list_flatten(words).filter(pa.array(~dropped)),
+            mask=pc.is_null(words),
+        ),
+        " ",
+    )
+    # size(words) - size(kept): for a null text that is the session's
+    # size(null) minus itself, so it is taken from the JVM's word count
+    nw = out.column("_fgs_nw")
+    removed = pc.if_else(
+        pc.is_null(words), pc.subtract(nw, nw), pa.array(lens - kept, pa.int32())
+    )
+    return text, removed

@@ -175,6 +175,49 @@ def bloom_indexes(keys: np.ndarray, k: int, m: int, seed: int = 0) -> np.ndarray
     return indexes_from_pair(h1, h2, k, m)
 
 
+_XXH_P1 = _U64(0x9E3779B185EBCA87)
+_XXH_P2 = _U64(0xC2B2AE3D27D4EB4F)
+_XXH_P3 = _U64(0x165667B19E3779F9)
+_XXH_P4 = _U64(0x85EBCA77C2B2AE63)
+_XXH_P5 = _U64(0x27D4EB2F165667C5)
+
+
+def _rotl64(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << _U64(r)) | (x >> _U64(64 - r))
+
+
+def spark_xxhash64(*cols, seed: int = 42) -> np.ndarray:
+    """Spark's ``xxhash64(c1, ..., cn)`` over equal-length integer
+    arrays → int64: the XXH64 ``hashInt``/``hashLong`` chain of
+    org.apache.spark.sql.catalyst.expressions.XXH64, each column's hash
+    seeding the next. A 4-byte column hashes as an IntegerType value,
+    an 8-byte one as a LongType value. ``xxhash64`` of an
+    ``array<long>`` value is the same chain over its elements, so the
+    columns may also be the element positions of equal-length arrays.
+    Lets driver-side code reproduce band keys the JVM computed with
+    ``F.xxhash64`` bit for bit."""
+    h = None
+    with np.errstate(over="ignore"):
+        for c in cols:
+            c = np.asarray(c)
+            s = np.full(c.shape, seed, np.int64).view(_U64) if h is None else h
+            if c.dtype.itemsize == 4:
+                x = s + _XXH_P5 + _U64(4)
+                x ^= c.astype(np.int32).view(np.uint32).astype(_U64) * _XXH_P1
+                x = _rotl64(x, 23) * _XXH_P2 + _XXH_P3
+            else:
+                x = s + _XXH_P5 + _U64(8)
+                x ^= _rotl64(c.astype(np.int64).view(_U64) * _XXH_P2, 31) * _XXH_P1
+                x = _rotl64(x, 27) * _XXH_P1 + _XXH_P4
+            x ^= x >> _U64(33)
+            x *= _XXH_P2
+            x ^= x >> _U64(29)
+            x *= _XXH_P3
+            x ^= x >> _U64(32)
+            h = x
+    return h.view(np.int64)
+
+
 def clz64(x: np.ndarray) -> np.ndarray:
     """Count of leading zeros of each uint64 (vectorized, exact).
 

@@ -83,7 +83,3 @@ def write_sketch_state(state_df: DataFrame, path: str, mode: str = "append") -> 
     """Persist final sketch rows; parquet keeps binary payloads
     columnar and splittable."""
     state_df.write.mode(mode).parquet(path)
-
-
-def read_sketch_state(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

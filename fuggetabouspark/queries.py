@@ -125,11 +125,6 @@ def _with_window(sk: Sketch, window: int) -> Sketch:
     return out
 
 
-def seen_within_df(spark, sketches, spec_name, probes, now, window=None, groups=None):
-    rows = seen_within(sketches, spec_name, probes, now, window, groups)
-    return spark.createDataFrame(rows, SEEN_DDL)
-
-
 def seen_within_distributed(
     spark, state_df, spec_name, probes_df, now, key_col="key", only_seen=False
 ):

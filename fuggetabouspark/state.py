@@ -63,12 +63,22 @@ def _live(path: str) -> str:
     return path
 
 
-def _swap_dir(write_fn, path: str) -> None:
+def _swap_dir(write_fn, path: str, hidden: bool = False) -> None:
     """Atomic-enough directory replacement: write_fn(tmp) produces the
     replacement, then the two-rename swap leaves either the old dir,
     the _old fallback, or the new dir visible at every crash point
-    (_live resolves all three)."""
-    tmp, old = path + "_swapping", path + "_old"
+    (_live resolves all three).
+
+    ``hidden=True`` names the replacement and the aside copy with a
+    leading '.', which every parquet reader skips — for a directory
+    that is itself a partition ``k=v`` of a dataset, where ``k=v_old``
+    would be read as one more partition. Nothing falls back to a hidden
+    aside copy: its owner re-runs the write."""
+    head, leaf = os.path.split(path)
+    if hidden:
+        tmp, old = os.path.join(head, f".{leaf}_swapping"), os.path.join(head, f".{leaf}_old")
+    else:
+        tmp, old = path + "_swapping", path + "_old"
     shutil.rmtree(tmp, ignore_errors=True)
     write_fn(tmp)
     if os.path.exists(path):
@@ -90,45 +100,104 @@ def _heal_swap(path: str) -> None:
         os.rename(path + "_old", path)
 
 
-def _pa_read_table(path: str, columns=None):
+def _pa_read_table(path: str, columns=None, filter=None, schema=None):
     """Driver-side parquet read via pyarrow — NO Spark job. Checkpoint
     artifacts are small and read on every ingest, probe and resume; a
     Spark job per read (plan + schedule + collect through py4j) costs
     more than the read (round 6, guide §5: the driver should do almost
     no data work). pyarrow.dataset skips '_'-prefixed files (_SUCCESS,
-    _commit_row's temps) exactly as Spark's reader does."""
+    _commit_row's temps) exactly as Spark's reader does. ``filter`` (a
+    pyarrow.dataset expression) is applied while scanning, so only
+    matching rows are held; ``schema`` (e.g. _ddl_schema of a ledger)
+    reads Spark- and driver-written parts of one directory as one
+    schema."""
     import pyarrow.dataset as ds
 
-    return ds.dataset(path, format="parquet").to_table(columns=columns)
+    return ds.dataset(path, format="parquet", schema=schema).to_table(
+        columns=columns, filter=filter
+    )
+
+
+def _publish(path: str, table) -> None:
+    """Write ``table`` into the existing directory ``path`` as one
+    parquet file: under a '_'-prefixed name, then ``os.replace``d to
+    its final name — the rename is atomic, so the rows appear all at
+    once or not at all. Only columns whose values repeat (at most half
+    of them distinct: a tick, a shard id, a doc id repeated per key)
+    are dictionary-encoded. On near-unique columns — hashes, vectors,
+    texts, payloads — a dictionary only adds bytes, and pyarrow, unlike
+    Spark's writer, does not fall back from it, so a driver-written
+    ledger would be larger than the same rows written by Spark."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, "_" + name)
+    pq.write_table(table, tmp, use_dictionary=[
+        c for c, col in zip(table.column_names, table.columns)
+        if not pa.types.is_list(col.type) and 2 * pc.count_distinct(col).as_py() <= len(col)
+    ])
+    os.replace(tmp, os.path.join(path, name))
 
 
 def _commit_row(path: str, *rows: dict, **row) -> None:
     """Append rows — several dicts, or one row as keywords — to the
-    parquet directory ``path`` as ONE file, from the driver. A
-    ``createDataFrame(...).write`` of a few rows is a Python-RDD job
+    parquet directory ``path`` as ONE file, from the driver (_publish).
+    A ``createDataFrame(...).write`` of a few rows is a Python-RDD job
     whose tasks each pay the worker's fixed start-up cost; pyarrow
     writes the same rows in-process with no Spark job at all.
 
-    The file is written under a '_'-prefixed name and then
-    ``os.replace``d to its final name: the rename is atomic, so the
-    rows appear all at once or not at all. Column order follows the
-    first row; types follow _ARTIFACT_TYPES. ``path`` is created even
-    when there are no rows."""
+    Column order follows the first row; types follow _ARTIFACT_TYPES.
+    ``path`` is created even when there are no rows."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     rows = rows or (row,)
     os.makedirs(path, exist_ok=True)
     if not rows[0]:
         return
-    table = pa.table({
+    _publish(path, pa.table({
         k: pa.array([r[k] for r in rows], type=getattr(pa, _ARTIFACT_TYPES[k])())
         for k in rows[0]
-    })
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(path, "_" + name)
-    pq.write_table(table, tmp)
-    os.replace(tmp, os.path.join(path, name))
+    }))
+
+
+def _ddl_type(t: str):
+    import pyarrow as pa
+
+    if t.startswith("array<") and t.endswith(">"):
+        return pa.list_(_ddl_type(t[6:-1]))
+    return {
+        "boolean": pa.bool_(), "int": pa.int32(), "long": pa.int64(),
+        "float": pa.float32(), "double": pa.float64(), "string": pa.string(),
+        "binary": pa.binary(),
+    }[t]
+
+
+def _ddl_schema(ddl: str):
+    """The pyarrow schema of a flat Spark DDL string (``"fp long,
+    doc_id string, sig array<long>"``) — the types Spark's writer gives
+    those columns."""
+    import pyarrow as pa
+
+    # flat DDLs only: no struct type, so ", " separates columns
+    return pa.schema([
+        pa.field(name, _ddl_type(t)) for name, t in (c.split(" ", 1) for c in ddl.split(", "))
+    ])
+
+
+def _commit_table(path: str, table, ddl: str) -> None:
+    """Append the rows of the pyarrow ``table`` to the parquet
+    directory ``path`` as ONE file from the driver (_publish) —
+    _commit_row's sibling for shard-sized rows such as ledger appends.
+    Columns are selected in ``ddl`` order and cast to its types, so the
+    file reads back through ``spark.read.schema(ddl)`` like a part
+    Spark wrote. A table with no rows still writes its typed, empty
+    file, as Spark's writer does, so a schema-less read of the
+    directory keeps working."""
+    schema = _ddl_schema(ddl)
+    os.makedirs(path, exist_ok=True)
+    _publish(path, table.select(schema.names).cast(schema))
 
 
 def _paths(checkpoint_dir: str) -> tuple[str, str]:

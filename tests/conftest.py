@@ -50,3 +50,32 @@ def cc_spark_loop(monkeypatch):
     from fuggetabouspark.dataops import dedup
 
     monkeypatch.setattr(dedup, "_LOCAL_CC_EDGES", 0)
+
+
+@pytest.fixture()
+def guard_spark_path(monkeypatch):
+    """Force StreamingIngestGuard.process_batch onto its Spark path: with
+    a zero driver budget only an empty batch stays on the driver (and
+    expire_ledgers rewrites only empty ledgers on the driver)."""
+    from fuggetabouspark.dataops import incremental
+
+    monkeypatch.setattr(incremental, "_LOCAL_TRIGGER_ROWS", 0)
+
+
+@pytest.fixture(params=["driver", "spark"])
+def guard_path(request):
+    """Run a test once on each StreamingIngestGuard path."""
+    if request.param == "spark":
+        request.getfixturevalue("guard_spark_path")
+    return request.param
+
+
+def on_guard_spark_path(base, *tests):
+    """A subclass of test class ``base`` that reruns only its
+    StreamingIngestGuard tests ``tests``, with the guard forced onto its
+    Spark path (guard_spark_path); ``base``'s own run covers the driver
+    path. Hiding the other inherited tests (set to None) keeps them from
+    running twice."""
+    hidden = {t: None for t in dir(base) if t.startswith("test_") and t not in tests}
+    cls = type(f"{base.__name__}SparkPath", (base,), hidden)
+    return pytest.mark.usefixtures("guard_spark_path")(cls)

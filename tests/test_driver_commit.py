@@ -11,7 +11,8 @@ Pinned here:
   the mixed directories read the same through pyarrow and Spark;
 - the mechanism: lineage rows, state rows and all four compactions run
   zero Spark jobs, and the driver-merged delta is byte-identical to
-  build_sketches' payload whatever the input partitioning;
+  build_sketches' payload whatever the input partitioning — and to the
+  in-process delta the guard's driver path commits;
 - the loader merges only ungrouped (group '') state rows;
 - the probe broadcast cache never serves one SparkContext's broadcast
   to another.
@@ -22,6 +23,7 @@ import shutil
 import tempfile
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
@@ -44,6 +46,7 @@ from fuggetabouspark.dataops.incremental import (
     DEDUP_SPEC,
     _append_state_row,
     _commit_sketch_delta,
+    _commit_sketch_keys,
     _load_sketch_state,
     _write_lineage,
 )
@@ -216,6 +219,18 @@ class TestDriverCommitMechanism:
         capped = os.path.join(ck, f"capped{nparts}")
         _commit_sketch_delta(capped, df, F.col("key"), F.col("tick"), DEDUP_SPEC, P, 0, 2)
         assert pq.read_table(capped).column("payload").to_pylist() == [got[0]["payload"]]
+
+    def test_in_process_delta_matches_spark_delta(self, spark, ck):
+        keys = np.random.default_rng(9).integers(-(2**62), 2**62, size=2000)
+        keys[::5] = keys[1]
+        df = spark.createDataFrame([(int(k),) for k in keys], "key long").repartition(3)
+        via_spark, in_process = os.path.join(ck, "spark"), os.path.join(ck, "driver")
+        _commit_sketch_delta(via_spark, df, F.col("key"), F.lit(7), DEDUP_SPEC, P, 0, None)
+        _commit_sketch_keys(in_process, pa.array(keys), 7, DEDUP_SPEC, P, 0)
+        assert pq.read_table(in_process).to_pylist() == pq.read_table(via_spark).to_pylist()
+        none = os.path.join(ck, "none")
+        _commit_sketch_keys(none, pa.array([], pa.int64()), 7, DEDUP_SPEC, P, 0)
+        assert not os.path.exists(none)
 
     def test_empty_delta_commits_no_row(self, spark, ck):
         empty = spark.createDataFrame([], "key long, tick long")

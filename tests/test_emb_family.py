@@ -5,9 +5,14 @@
 - ``array<double>`` input is cast to the vec ledger's ``array<float>``
   at ingest, and exact re-uploads still score cosine 1;
 - commit_emb_state refuses a checkpoint of another geometry and
-  commits nothing.
+  commits nothing;
+- the same through StreamingIngestGuard, on both of its paths: a batch
+  with a null vector fails loudly before anything is committed, and
+  ``array<double>`` re-uploads are dropped while the clean output keeps
+  the batch's ``array<double>`` type.
 """
 
+import os
 import shutil
 import tempfile
 
@@ -16,8 +21,12 @@ import pytest
 from pyspark.errors import PythonException
 from pyspark.sql.types import ArrayType, FloatType
 
-from fuggetabouspark.dataops import commit_emb_state, incremental_embedding_dedup
-from fuggetabouspark.dataops.incremental import EMB, _metas
+from fuggetabouspark.dataops import (
+    StreamingIngestGuard,
+    commit_emb_state,
+    incremental_embedding_dedup,
+)
+from fuggetabouspark.dataops.incremental import EMB, EXACT, _metas
 from fuggetabouspark.params import TimingParams
 
 P = TimingParams(capacity=10_000, error=0.001, window_ticks=2**31)
@@ -91,3 +100,34 @@ class TestCommitGeometry:
                 now=2, dim=DIM, bits=8, params=P,
             )
         assert len(_metas(ck, EMB)) == 1
+
+
+class TestGuardEmbeddings:
+    DDL = "doc_id long, text string, embedding array<double>"
+
+    def _guard(self, spark, ck):
+        return StreamingIngestGuard(
+            spark, ck, clean_dir=os.path.join(ck, "clean"), embeddings=True,
+            emb_dim=DIM, params=P, emb_params=P, compact_every=None,
+        )
+
+    def test_null_vector_commits_nothing(self, spark, ck, guard_path):
+        rows = [(i, f"text {i}", v) for i, v in _rows(3, 6)] + [(9, "text 9", None)]
+        with pytest.raises((ValueError, PythonException), match="null vectors"):
+            self._guard(spark, ck).process_batch(spark.createDataFrame(rows, self.DDL), 0)
+        assert _metas(ck, EMB) == [] and _metas(ck, EXACT) == []
+
+    def test_double_reuploads_dropped_and_type_kept(self, spark, ck, guard_path):
+        g = self._guard(spark, ck)
+        first = _rows(10, 7)
+        g.process_batch(spark.createDataFrame(
+            [(i, f"first {i}", v) for i, v in first], self.DDL), 0)
+        led = spark.read.parquet(EMB.path(ck, "vec_ledger"))
+        assert led.schema["embedding"].dataType == ArrayType(FloatType())
+        # every vector re-uploaded under a new id and a new text
+        g.process_batch(spark.createDataFrame(
+            [(100 + i, f"second {i}", v) for i, v in first], self.DDL), 1)
+        clean = spark.read.parquet(os.path.join(ck, "clean"))
+        assert clean.schema["embedding"].dataType.simpleString() == "array<double>"
+        assert {r.doc_id for r in clean.collect()} == {i for i, _ in first}
+

@@ -17,6 +17,7 @@ import shutil
 import tempfile
 
 import pytest
+from conftest import on_guard_spark_path
 from pyspark.sql import functions as F
 
 from fuggetabouspark.dataops import (
@@ -1018,3 +1019,27 @@ class TestIncrementalEmbeddingDedup:
         # doc 4: v2 again — NOW suppressed by doc 3's published copy
         g.process_batch(spark.createDataFrame([(4, "text four", v2)], ddl), 3)
         assert spark.read.parquet(clean).where("_epoch = 3").count() == 0
+
+
+# ---- the StreamingIngestGuard tests above, on the guard's Spark path ----
+
+TestStreamingIngestGuardSparkPath = on_guard_spark_path(
+    TestStreamingIngestGuard,
+    "test_process_batch_semantics_and_replay", "test_real_stream_available_now",
+)
+TestCompactionSparkPath = on_guard_spark_path(TestCompaction, "test_guard_auto_compacts")
+TestRound5StateBoundingSparkPath = on_guard_spark_path(
+    TestRound5StateBounding,
+    "test_guard_near_mode_clean_and_replay",
+    "test_guard_near_crash_replay_excludes_own_epoch",
+    "test_many_shard_state_stays_bounded",
+)
+TestIncrementalPassagesSparkPath = on_guard_spark_path(
+    TestIncrementalPassages,
+    "test_guard_passages_mode_masks_clean_output",
+    "test_passage_state_covers_published_survivors_only",
+)
+TestIncrementalEmbeddingDedupSparkPath = on_guard_spark_path(
+    TestIncrementalEmbeddingDedup,
+    "test_guard_embeddings_mode", "test_guard_emb_state_covers_published_survivors_only",
+)
