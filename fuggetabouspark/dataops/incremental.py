@@ -114,6 +114,7 @@ from ..state import (
     _publish,
     _swap_dir,
 )
+from .dedup import _id_rank, _mask_words, _read_bounded, _run_starts
 
 DEDUP_SPEC = "dedup_fp"
 LEDGER_DDL = "fp long, doc_id string, tick long, shard int"
@@ -835,24 +836,28 @@ def incremental_dedup(
     ann = ann.localCheckpoint(eager=True)
 
     if update_state:
+        # a survivor is a row whose flags are both false: a null doc id
+        # leaves is_dup_intra null, so that row is no survivor (it
+        # enters neither the ledger nor the clean output)
+        kept = ~F.col("is_dup_history") & ~F.col("is_dup_intra")
         counts = ann.agg(
             F.count("*").alias("n"),
             F.sum(F.col("is_dup_history").cast("long")).alias("h"),
             F.sum(F.col("is_dup_intra").cast("long")).alias("i"),
+            F.sum(kept.cast("long")).alias("r"),
         ).collect()[0]
-        n_new, n_h, n_i = int(counts["n"]), int(counts["h"] or 0), int(counts["i"] or 0)
         # the survivors' fps enter the sketch and the ledger at their own
         # tick (per-batch dedup keeps max tick, which for distinct fps
         # is THE tick)
-        survivors = ann.where(~F.col("is_dup_history") & ~F.col("is_dup_intra"))
+        survivors = ann.where(kept)
         _commit_shard(
             checkpoint_dir, EXACT, {"fp_ledger": survivors}, F.col("tick"), now,
             params, partitions,
             {
-                "n_docs": n_new,
-                "n_dup_history": n_h,
-                "n_dup_intra": n_i,
-                "n_retained": n_new - n_h - n_i,
+                "n_docs": int(counts["n"]),
+                "n_dup_history": int(counts["h"] or 0),
+                "n_dup_intra": int(counts["i"] or 0),
+                "n_retained": int(counts["r"] or 0),
                 **(meta_extra or {}),
             },
             ann, pre_lineage_hook,
@@ -896,8 +901,8 @@ class StreamingIngestGuard:
     file under a '_' temp name, then an atomic ``os.replace``), so a
     crash mid-commit leaves an invisible temp file, never a torn row,
     and the epoch marker is either fully present or absent. Each
-    trigger first reads the batch once, bounded: ``limit(2^14 + 1)
-    .toArrow()`` (_read_local). A batch that fits — at most
+    trigger first reads the batch once, bounded: at most 2^14 + 1 rows
+    in one Spark job (_read_local). A batch that fits — at most
     _LOCAL_TRIGGER_ROWS = 2^14 rows, columns of integral, float,
     double, boolean, string or binary type or arrays of them, unique
     non-null doc ids — runs every family on the driver over that Arrow
@@ -2323,61 +2328,28 @@ def _local_type(t) -> bool:
 
 
 def _read_local(batch_df: DataFrame, text_col: str, wh: bool, words: bool):
-    """The guard's one bounded read of a batch, as one Arrow
-    RecordBatch: the batch's own columns plus what the families derive
-    from them, computed by the JVM — the string doc id (``_fgs_id``),
-    the exact fingerprint xxhash64(text) (``_fgs_fp``), and when asked
-    the word hashes (``_fgs_wh``) and the words and their count for the
-    mask (``_fgs_words``, ``_fgs_nw``) — so each equals the Spark
-    path's value by construction, null and empty text included.
+    """The guard's one bounded read of a batch (dedup._read_bounded),
+    as one Arrow RecordBatch: the batch's own columns plus what the
+    families derive from them, computed by the JVM — the string doc id
+    (``_fgs_id``), the exact fingerprint xxhash64(text) (``_fgs_fp``),
+    and when asked the word hashes (``_fgs_wh``) and the words and
+    their count for the mask (``_fgs_words``, ``_fgs_nw``) — so each
+    equals the Spark path's value by construction, null and empty text
+    included.
 
     None — take the Spark path — when a column's type is not one of
     _LOCAL_SCALARS or an array of one, the text is not a string, the
     batch has more than _LOCAL_TRIGGER_ROWS rows, or its doc ids are
     not unique and non-null (the Spark path's doc-id joins then drop or
     repeat rows, which the driver path does not reproduce)."""
-    schema = batch_df.schema
-    if not all(_local_type(f.dataType) for f in schema.fields) or not (
-        text_col in schema.names and isinstance(schema[text_col].dataType, StringType)
-    ):
+    if not all(_local_type(f.dataType) for f in batch_df.schema.fields):
         return None
-    split = F.split(F.col(text_col), " ")
     cols = [
+        *[F.col("`" + c.replace("`", "``") + "`") for c in batch_df.columns],
         F.col("doc_id").cast("string").alias("_fgs_id"),
         F.xxhash64(F.col(text_col)).alias("_fgs_fp"),
     ]
-    if wh:
-        cols.append(F.transform(split, lambda w: F.xxhash64(w)).alias("_fgs_wh"))
-    if words:
-        cols += [split.alias("_fgs_words"), F.size(split).alias("_fgs_nw")]
-    tbl = batch_df.select("*", *cols).limit(_LOCAL_TRIGGER_ROWS + 1).toArrow()
-    ids = tbl.column("_fgs_id")
-    if (tbl.num_rows > _LOCAL_TRIGGER_ROWS or ids.null_count
-            or pc.count_distinct(ids).as_py() != tbl.num_rows):
-        return None
-    return pa.RecordBatch.from_arrays(
-        [pa.concat_arrays(c.chunks) if c.num_chunks else pa.array([], c.type)
-         for c in tbl.columns],
-        schema=tbl.schema,
-    )
-
-
-def _id_rank(ids) -> np.ndarray:
-    """Each (unique) string id's rank in UTF-8 byte order — the order
-    Spark compares strings in, so ``rank[a] < rank[b]`` iff
-    ``doc_a < doc_b`` there."""
-    rank = np.empty(len(ids), np.int64)
-    rank[pc.sort_indices(ids).to_numpy()] = np.arange(len(ids))
-    return rank
-
-
-def _run_starts(*keys) -> np.ndarray:
-    """Start indices of the runs of equal rows in the sorted key
-    arrays ``keys``."""
-    new = np.ones(len(keys[0]), bool)
-    if new.size > 1:
-        new[1:] = np.logical_or.reduce([k[1:] != k[:-1] for k in keys])
-    return np.flatnonzero(new)
+    return _read_bounded(batch_df, cols, "_fgs_id", text_col, _LOCAL_TRIGGER_ROWS, None, wh, words)
 
 
 def _exact_local(checkpoint_dir: str, ids, fps: np.ndarray, now: int, window,
@@ -2608,27 +2580,5 @@ def _passages_local(checkpoint_dir: str, out, now: int, window: int, stride: int
     )
 
     # the mask (dedup._mask_spans): drop the words [p, p + window) of
-    # every history window p; a doc's text is the join of what is left
-    words = out.column("_fgs_words")
-    lens = pc.fill_null(pc.list_value_length(words), 0).to_numpy().astype(np.int64)
-    starts = np.concatenate([np.zeros(1, np.int64), np.cumsum(lens)])
-    edge = np.zeros(int(starts[-1]) + 1, np.int64)
-    np.add.at(edge, starts[hd] + hp, 1)
-    np.add.at(edge, starts[hd] + np.minimum(hp + window, lens[hd]), -1)
-    dropped = np.cumsum(edge[:-1]) > 0
-    kept = lens - np.bincount(np.repeat(np.arange(n), lens)[dropped], minlength=n)
-    text = pc.binary_join(
-        pa.ListArray.from_arrays(
-            pa.array(np.concatenate([np.zeros(1, np.int64), np.cumsum(kept)]).astype(np.int32)),
-            pc.list_flatten(words).filter(pa.array(~dropped)),
-            mask=pc.is_null(words),
-        ),
-        " ",
-    )
-    # size(words) - size(kept): for a null text that is the session's
-    # size(null) minus itself, so it is taken from the JVM's word count
-    nw = out.column("_fgs_nw")
-    removed = pc.if_else(
-        pc.is_null(words), pc.subtract(nw, nw), pa.array(lens - kept, pa.int32())
-    )
-    return text, removed
+    # every history window p
+    return _mask_words(out.column("_fgs_words"), out.column("_fgs_nw"), hd, hp, window)

@@ -335,18 +335,6 @@ def quantiles(sketches, spec_name: str, qs) -> dict[str, np.ndarray]:
     }
 
 
-def heavy_hitters_mg(sketches, spec_name: str, k: int) -> dict[str, list[tuple[int, int]]]:
-    """Top-k per group straight from the Misra–Gries summary — the
-    self-contained alternative to CMS+candidates: one sketch carries
-    both the candidate set and the counts, with the PODS'12 mergeable
-    guarantee (undercount <= N/(k_mg+1)) under any merge tree."""
-    return {
-        group: sk.top_k(k)
-        for (sname, group), sk in sorted(sketches.items())
-        if sname == spec_name
-    }
-
-
 def heavy_hitters(
     cms_sketches,
     cms_spec: str,

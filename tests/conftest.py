@@ -53,6 +53,15 @@ def cc_spark_loop(monkeypatch):
 
 
 @pytest.fixture()
+def mask_spark_path(monkeypatch):
+    """Force mask_repeated_passages onto its Spark plan: with a zero
+    driver budget only an empty corpus stays on the driver."""
+    from fuggetabouspark.dataops import dedup
+
+    monkeypatch.setattr(dedup, "_LOCAL_ROWS", 0)
+
+
+@pytest.fixture()
 def guard_spark_path(monkeypatch):
     """Force StreamingIngestGuard.process_batch onto its Spark path: with
     a zero driver budget only an empty batch stays on the driver (and

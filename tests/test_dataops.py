@@ -1156,3 +1156,9 @@ class TestMaskRepeatedPassages:
                 " ".join(w for i, w in enumerate(ws) if i not in cover.get(did, ())),
             )
             assert got[did] == want, did
+
+
+@pytest.mark.usefixtures("mask_spark_path")
+class TestMaskRepeatedPassagesSparkPath(TestMaskRepeatedPassages):
+    """The same tests on mask_repeated_passages' Spark plan (the parent
+    class runs them on the driver path)."""

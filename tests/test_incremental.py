@@ -130,6 +130,16 @@ class TestIncrementalDedup:
         assert ledger_df(spark, ck).count() == 2
         ann.unpersist()
 
+    def test_null_doc_id_is_not_retained(self, spark, ck):
+        # a null id's is_dup_intra is null, so the row is no survivor:
+        # it enters neither the ledger nor n_retained
+        rows = [(1, "aa"), (None, "bb"), (3, "cc"), (4, "dd")]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        incremental_dedup(spark, df, ck, now=1).unpersist()
+        (meta,) = dedup_completed_shards(spark, ck)
+        assert ledger_df(spark, ck).count() == 3
+        assert meta["n_docs"] == 4 and meta["n_retained"] == 3
+
     def test_query_only_mode_mutates_nothing(self, spark, docs, ck):
         shard_a = docs.where("doc_id % 2 = 0")
         incremental_dedup(spark, shard_a, ck, now=1).unpersist()

@@ -146,6 +146,12 @@ class TestMaskKeeperEquivalence:
         assert "a0" in out["d0"]["text_clean"] and "b0" in out["d1"]["text_clean"]
 
 
+
+@pytest.mark.usefixtures("mask_spark_path")
+class TestMaskKeeperEquivalenceSparkPath(TestMaskKeeperEquivalence):
+    """The same test on mask_repeated_passages' Spark plan (the parent
+    class runs it on the driver path)."""
+
 class TestEmbVerifyMissingPartner:
     def test_partner_missing_from_vec_ledger_is_dropped(self, spark, tmp_path):
         # commit day-1 vectors, then delete the vec ledger's rows by

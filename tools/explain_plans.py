@@ -226,6 +226,39 @@ def main():
         "passages",
     ))
 
+    # 8b. passage mask, Spark plan: the corpus would fit the driver
+    # path, so the budget is zeroed to explain the plan larger corpora
+    # run. The kernel output is persisted once and read by both the
+    # detect and the drop branch: ONE MapInArrow node, under the
+    # InMemoryRelation, and no Window.
+    import re
+
+    from fuggetabouspark.dataops import dedup, mask_repeated_passages
+
+    budget, dedup._LOCAL_ROWS = dedup._LOCAL_ROWS, 0
+    try:
+        p9b = plan_of(mask_repeated_passages(docs, window=50))
+    finally:
+        dedup._LOCAL_ROWS = budget
+    tree = p9b.split("\n\n")[0].splitlines()
+    above_kernel = [tree[i - 1] for i, line in enumerate(tree) if "MapInArrow" in line]
+    sections.append((
+        "passage mask, Spark plan (one cached kernel pass, no Window)",
+        p9b,
+        "The rolling-fingerprint kernel runs once: its per-(doc, fp) "
+        "rollup is persisted and both the repeated-fp detection and "
+        "the drop-list join read the cache. The keeper is a plain "
+        "min(doc_id) aggregation, never a Window over the rollup.",
+    ))
+    checks.append((
+        "mask Spark plan: one MapInArrow kernel, under InMemoryRelation, no Window",
+        len(set(re.findall(r"MapInArrow \((\d+)\)", p9b))) == 1
+        and bool(above_kernel)
+        and all("InMemoryRelation" in line for line in above_kernel)
+        and "Window" not in p9b,
+        "mask",
+    ))
+
     # 9. incremental-dedup annotated plan — the REAL operator, not a
     # replica (code-review r04): build a small checkpoint, then explain
     # annotate_against_history (the exact lazy plan incremental_dedup
