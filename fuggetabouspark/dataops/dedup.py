@@ -920,16 +920,16 @@ def mask_repeated_passages(
     return _mask_spans(df.join(drops, "doc_id", "left"), text_col, window)
 
 
-def _mask_spans(df, text_col: str, window: int):
-    """(doc_id, text_clean, n_tokens_removed) of ``df``, whose
-    ``_drops`` column lists the word positions at which a
-    ``window``-word span is removed (null: nothing to remove) — the
-    mask of mask_repeated_passages and incremental.mask_against_history."""
+def _kept_words(window: int):
+    """The words of the ``_words`` column outside every ``window``-word
+    span starting at a word position listed in ``_drops`` (null:
+    nothing to remove) — the mask of mask_repeated_passages,
+    incremental.mask_against_history and the guard's Spark path."""
     # the no-drops branch is hoisted OUT of the per-element lambda
     # (round 6): the old formulation re-evaluated the _drops-is-null
     # test once per TOKEN, so the ~95% of docs with nothing to remove
     # still paid a full filter pass over their words
-    kept = F.when(F.col("_drops").isNull(), F.col("_words")).otherwise(
+    return F.when(F.col("_drops").isNull(), F.col("_words")).otherwise(
         F.filter(
             F.col("_words"),
             lambda w, i: ~F.exists(
@@ -937,9 +937,15 @@ def _mask_spans(df, text_col: str, window: int):
             ),
         )
     )
+
+
+def _mask_spans(df, text_col: str, window: int):
+    """(doc_id, text_clean, n_tokens_removed) of ``df``, whose
+    ``_drops`` column lists the word positions at which a
+    ``window``-word span is removed (_kept_words)."""
     return (
         df.withColumn("_words", F.split(F.col(text_col), " "))
-        .withColumn("_kept", kept)
+        .withColumn("_kept", _kept_words(window))
         .select(
             "doc_id",
             F.array_join("_kept", " ").alias("text_clean"),

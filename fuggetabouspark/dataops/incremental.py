@@ -33,16 +33,13 @@ broadcast-semi-join against the ledger restricted to candidate fps,
 zero joins against corpus text. State grows O(retained docs) in the
 ledger and O(1) in the sketch.
 
-Commit shape per ingest: the small artifacts — the shard's
-membership-sketch delta row, its lineage row and compaction's shard=-1
-row — are committed FROM THE DRIVER through the library's checkpoint
-store (fuggetabouspark.state: _commit_row writes the row under a
-'_'-prefixed temp name and an atomic ``os.replace`` publishes it;
-_swap_dir replaces a directory). Reads of the same artifacts are
-driver-side pyarrow too (_pa_read_table), so lineage, state loads and
-compaction run no Spark job at all. The shard-sized artifacts (the
-ledger rows and, in the guard, the clean output) are written one of
-two ways:
+Commit shape per ingest: each family's sketch state and lineage are
+one shard log (fuggetabouspark.state.ShardLog, union merge rule): the
+shard's membership-sketch delta row, its lineage row and compaction's
+fold are committed and read FROM THE DRIVER with pyarrow, so lineage,
+state loads and compaction run no Spark job at all. The shard-sized
+artifacts (the ledger rows and, in the guard, the clean output) are
+the caller's step of ShardLog.commit, written one of two ways:
 
 - the operators (incremental_dedup, incremental_near_dup,
   incremental_passages, incremental_embedding_dedup) run as Spark
@@ -68,20 +65,22 @@ two ways:
 
 One record per family: the four granularities (exact doc, near doc,
 passage, embedding) keep the SAME three artifacts — a decaying
-membership sketch, one or two ledgers, and a lineage dir — under their
-own subdirectory, so each is described by one _Family record (EXACT,
-NEAR, PASSAGES, EMB: subdir, sketch spec, ledger report name → (dir,
-DDL)). Every per-family step is written once over that record: lineage
-read (_metas), state load (_load_state), compaction (_compact), the
-lineage-gated ledger read (_ledger), the sketch probe (_probe), the
-shard commit in recovery order (_commit_shard), and expiry
-(expire_ledgers loops over _FAMILIES). The operators only add what
-differs: how keys are derived and how sketch hits are verified.
+membership sketch and a lineage dir (the family's ShardLog) plus one or
+two ledgers — under their own subdirectory, so each is described by
+one _Family record (EXACT, NEAR, PASSAGES, EMB: subdir, sketch spec,
+ledger report name → (dir, DDL)). The recovery rules — lineage-gated
+loads, merge-all, same-epoch exclusion, the commit order, compaction —
+are ShardLog's, stated once in fuggetabouspark.state. Every other
+per-family step is written once over the record: the lineage-gated
+ledger read (_ledger), the sketch probe (_probe), the shard commit
+(_commit_shard: the delta, then the ledgers inside ShardLog.commit),
+and expiry (expire_ledgers loops over _FAMILIES). The operators only
+add what differs: how keys are derived and how sketch hits are
+verified.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from typing import NamedTuple
 
@@ -105,7 +104,7 @@ from pyspark.sql.types import (
 
 from ..hashing import spark_xxhash64
 from ..state import (
-    _commit_row,
+    ShardLog,
     _commit_table,
     _ddl_schema,
     _heal_swap,
@@ -114,7 +113,7 @@ from ..state import (
     _publish,
     _swap_dir,
 )
-from .dedup import _id_rank, _mask_words, _read_bounded, _run_starts
+from .dedup import _id_rank, _kept_words, _mask_words, _read_bounded, _run_starts
 
 DEDUP_SPEC = "dedup_fp"
 LEDGER_DDL = "fp long, doc_id string, tick long, shard int"
@@ -161,24 +160,24 @@ _LOCAL_SCALARS = (
 
 class _Family(NamedTuple):
     """One granularity's history store under ``<checkpoint>/<subdir>``:
-    ``sketch_state`` (membership sketch rows of spec ``spec``),
-    ``lineage`` (one commit-marker row per shard) and ``ledgers``
-    (expiry report name → (dir name, DDL)). Every family owns its own
-    directories — disjoint sketch_state and lineage, so no family's
-    compaction, shard numbering or recovery can touch another's
-    (code-review r04). The FIRST ledger is keyed by the sketch key: it
-    is what verifies sketch hits, and the shard commit folds its key
-    column into the sketch delta."""
+    a union-rule ShardLog (membership sketch rows of spec ``spec`` and
+    one lineage row per shard) plus ``ledgers`` (expiry report name →
+    (dir name, DDL)). Every family owns its own directories — disjoint
+    logs, so no family's compaction, shard numbering or recovery can
+    touch another's (code-review r04). The FIRST ledger is keyed by the
+    sketch key: it is what verifies sketch hits, and the shard commit
+    folds its key column into the sketch delta."""
 
     subdir: str
     spec: str
     ledgers: dict
 
+    def log(self, checkpoint_dir: str) -> ShardLog:
+        return ShardLog(os.path.join(checkpoint_dir, self.subdir), additive=False)
+
     def path(self, checkpoint_dir: str, name: str) -> str:
-        """The directory of artifact ``name``: 'sketch_state',
-        'lineage', or a ledger's report name."""
-        leaf = self.ledgers[name][0] if name in self.ledgers else name
-        return os.path.join(checkpoint_dir, self.subdir, leaf)
+        """The directory of the ledger whose report name is ``name``."""
+        return os.path.join(checkpoint_dir, self.subdir, self.ledgers[name][0])
 
 
 EXACT = _Family("", DEDUP_SPEC, {"fp_ledger": ("fp_ledger", LEDGER_DDL)})
@@ -197,33 +196,14 @@ _FAMILIES = (EXACT, NEAR, PASSAGES, EMB)
 
 
 def _read_swap(spark, path: str, ddl: str) -> DataFrame | None:
-    """Read a checkpoint parquet dir that may be mid-swap: expiry and
-    compaction replace directories via tmp → rename(path, path_old) →
-    rename(tmp, path), so a crash between the renames leaves only
-    ``path_old`` — fall back to it. The explicit schema makes an
-    EMPTY rewritten ledger (zero part files) readable."""
+    """Spark read of the ledger dir ``path``, through _live (an expiry
+    that crashed mid-swap leaves only the _old copy); None when it does
+    not exist. The explicit schema makes an EMPTY rewritten ledger
+    (zero part files) readable."""
     path = _live(path)
     if not os.path.exists(path):
         return None
     return spark.read.schema(ddl).parquet(path)
-
-
-def _append_state_row(state_path: str, spec: str, sk, shard: int) -> None:
-    """The shard's membership-sketch row (group '' — the incremental
-    families never group their state)."""
-    _commit_row(
-        state_path, spec=spec, group="", payload=sk.to_bytes(),
-        n_items=int(sk.n_items), shard=int(shard),
-    )
-
-
-def _write_lineage(lineage_path: str, meta: dict) -> None:
-    """The shard's lineage row — the family's commit marker, always
-    its LAST write."""
-    _commit_row(
-        lineage_path, shard=int(meta["shard"]),
-        meta=json.dumps(meta, sort_keys=True),
-    )
 
 
 def _delta_spec(name: str, params):
@@ -240,13 +220,12 @@ def _delta_spec(name: str, params):
     return SketchSpec(name, kind, params, value="tokens")
 
 
-def _commit_sketch_delta(
-    state_path: str, frame: DataFrame, key, tick, name: str, params,
-    shard: int, partitions: int | None,
-) -> None:
+def _sketch_delta(
+    frame: DataFrame, key, tick, name: str, params, partitions: int | None,
+) -> list[dict]:
     """Fold ``frame``'s ``key`` column (one 64-bit key per row, at
-    ``tick``) into a TBF/STBF delta and append it as the shard's state
-    row. The partials come from the library's own update kernel
+    ``tick``) into a TBF/STBF delta: the shard's state rows for
+    ShardLog.commit. The partials come from the library's own update kernel
     (pipeline.make_update_fn) run over the frame AS IT IS partitioned —
     no repartition, no applyInPandas merge stage — and are merged on
     the driver with merge_rows_to_sketches, as the corpus build does.
@@ -257,8 +236,8 @@ def _commit_sketch_delta(
 
     ``partitions`` caps the partials collected to the driver
     (``coalesce``, which does not shuffle): driver memory for the
-    delta is at most ``partitions`` × payload. An empty frame commits
-    no row — a shard that retained nothing adds nothing to the sketch.
+    delta is at most ``partitions`` × payload. An empty frame gives no
+    row — a shard that retained nothing adds nothing to the sketch.
     ``params``: see _delta_spec."""
     from ..pipeline import PARTIAL_DDL, make_update_fn
 
@@ -269,15 +248,13 @@ def _commit_sketch_delta(
     partials = rows.mapInArrow(
         make_update_fn([spec], (), 1), schema=PARTIAL_DDL
     ).collect()
-    _append_merged_delta(state_path, partials, name, shard)
+    return _merged_delta(partials, name)
 
 
-def _commit_sketch_keys(
-    state_path: str, keys, tick: int, name: str, params, shard: int
-) -> None:
-    """_commit_sketch_delta over a driver-held int64 Arrow array: the
-    same update kernel, run in-process over one batch — the same delta
-    bytes for a TBF."""
+def _sketch_keys(keys, tick: int, name: str, params) -> list[dict]:
+    """_sketch_delta over a driver-held int64 Arrow array: the same
+    update kernel, run in-process over one batch — the same delta bytes
+    for a TBF."""
     from ..pipeline import make_update_fn
 
     batch = pa.RecordBatch.from_pydict({
@@ -287,152 +264,57 @@ def _commit_sketch_keys(
         "tick": pa.array(np.full(len(keys), tick, np.int64)),
     })
     update = make_update_fn([_delta_spec(name, params)], (), 1)
-    _append_merged_delta(
-        state_path, [r for b in update(iter([batch])) for r in b.to_pylist()], name, shard
-    )
+    return _merged_delta([r for b in update(iter([batch])) for r in b.to_pylist()], name)
 
 
-def _append_merged_delta(state_path: str, partials, name: str, shard: int) -> None:
+def _merged_delta(partials, name: str) -> list[dict]:
+    """The state row of the partials' merged delta (group '' — the
+    incremental families never group their state); none without
+    partials."""
     from ..pipeline import merge_rows_to_sketches
 
     sk = merge_rows_to_sketches(partials).get((name, ""))
-    if sk is not None:
-        _append_state_row(state_path, name, sk, shard)
-
-
-def _metas(checkpoint_dir: str, fam: _Family) -> list[dict]:
-    """Lineage metadata of ``fam``'s completed shards, in shard order —
-    the one lineage reader of all four families (code-review r05: the
-    recovery rules must live once)."""
-    lineage_path = fam.path(checkpoint_dir, "lineage")
-    if not os.path.exists(lineage_path):
+    if sk is None:
         return []
-    metas = _pa_read_table(lineage_path, columns=["meta"]).column("meta").to_pylist()
-    return sorted((json.loads(m) for m in metas), key=lambda m: m["shard"])
+    return [{"spec": name, "group": "", "payload": sk.to_bytes(), "n_items": int(sk.n_items)}]
 
 
-def _load_sketch_state(spark, state_path: str, done: list[int], spec: str,
-                       with_raw: bool = False):
-    """Merged membership sketch over the completed shards' rows (plus
-    the always-valid shard=-1 compacted row), with the _old fallback
-    for a compaction that crashed mid-swap — the single implementation
-    behind every family's state load (_load_state, _probe; ``spark`` is
-    unused). Merge-all within the
-    completed set: union-only monoids are one-sided safe under
-    crash-retried shard ids (see load_dedup_state's docstring).
-
-    ``with_raw=True`` returns ``(sketch, raw_payload_or_None)``: when
-    exactly ONE row contributed, the merged sketch IS that row's
-    payload, and the probe path can broadcast the stored bytes as-is
-    instead of paying a zlib re-compress of the full bucket array
-    (round 6; post-compaction steady state is exactly one row).
-
-    Only UNGROUPED rows (``group == ''``) are merged: every incremental
-    writer commits group '' (_append_state_row), and a grouped row in
-    the same directory is a different sketch that must not be folded
-    into the membership state."""
-    from ..sketches import sketch_from_bytes
-
-    state_path = _live(state_path)
-    if not done or not os.path.exists(state_path):
-        return (None, None) if with_raw else None
-    tbl = _pa_read_table(state_path, columns=["spec", "group", "payload", "shard"])
-    ok = set(done) | {-1}
-    payloads = [
-        p
-        for s, g, p, sh in zip(*(
-            tbl.column(c).to_pylist() for c in ("spec", "group", "payload", "shard")
-        ))
-        if s == spec and g == "" and sh in ok
-    ]
-    if not payloads:
-        return (None, None) if with_raw else None
-    sk = sketch_from_bytes(payloads[0])
-    for p in payloads[1:]:
-        sk = sk.merge(sketch_from_bytes(p))
-    if with_raw:
-        return sk, (payloads[0] if len(payloads) == 1 else None)
-    return sk
-
-
-def _done_shards(metas: list[dict], exclude_epoch) -> list[int]:
-    """Completed shard ids, optionally excluding shards committed by a
-    prior ATTEMPT of the same stream epoch: when a multi-operator guard
-    crashes after operator 1 committed but before the final epoch
-    marker, the replay must not treat operator 1's own half-epoch
-    output as history (every doc would be flagged a duplicate of
-    itself and the epoch's clean output would be lost)."""
-    return [
-        int(m["shard"])
-        for m in metas
-        if exclude_epoch is None or m.get("epoch") != int(exclude_epoch)
-    ]
-
-
-def _load_state(checkpoint_dir: str, fam: _Family, exclude_epoch=None,
-                with_raw: bool = False):
-    """``fam``'s merged membership sketch over its completed shards
-    (lineage-gated, merge-all, same-epoch exclusion — the recovery
-    rules load_dedup_state documents, for every family)."""
-    done = _done_shards(_metas(checkpoint_dir, fam), exclude_epoch)
-    return _load_sketch_state(
-        None, fam.path(checkpoint_dir, "sketch_state"), done, fam.spec,
-        with_raw=with_raw,
-    )
+def _family_state(checkpoint_dir: str, fam: _Family, exclude_epoch=None):
+    """``(done, sketch, raw)``: ``fam``'s completed shards (without the
+    shards of ``exclude_epoch``), its membership sketch merged over them
+    (None before the first) and the stored payload when one row makes
+    it up (ShardLog.load). Only the ungrouped ``(spec, '')`` sketch is
+    the family's: a grouped row in the same directory is a different
+    sketch."""
+    log = fam.log(checkpoint_dir)
+    done = log.done(exclude_epoch)
+    sk, raw = log.load(done, with_raw=True).get((fam.spec, ""), (None, None))
+    return done, sk, raw
 
 
 def load_dedup_state(spark, checkpoint_dir: str, exclude_epoch=None,
                      with_raw: bool = False):
     """Merged membership sketch from all COMPLETED shards (those with
-    a durable lineage row), or None if no shard ever completed.
-
-    Filtering by lineage is what makes the sketch-first / ledger-second
-    / lineage-last write order an actual recovery protocol (code-review
-    r04): an ingest that died between the sketch write and the ledger
-    write leaves orphan sketch rows, and before this fix a
-    missing-ledger checkpoint crashed the probe outright.
-
-    Within the completed shards, ALL rows are merged — deliberately
-    NOT the pick-one-row-per-shard retry dedupe state.load_state uses
-    for additive sketches: a crash-retried ingest reuses the orphan's
-    shard id, and picking one row could keep the orphan and DROP the
-    retry's fingerprints — a false negative, i.e. a silently missed
-    duplicate forever. The membership sketch is a union-only monoid,
-    so over-merging is one-sided safe: an orphan's extra fingerprints
-    only create candidate hits the ledger verification kills, while
-    n_items (advisory here) may double-count.
-
-    ``exclude_epoch`` drops shards whose lineage meta carries that
-    stream epoch (see _done_shards). Safe against the shard=-1
-    compacted row because compaction only runs after an epoch FULLY
-    commits, so a same-epoch shard can never have been folded into it
-    by the time a replay needs the exclusion."""
-    return _load_state(checkpoint_dir, EXACT, exclude_epoch, with_raw)
+    a durable lineage row), or None if no shard ever completed — the
+    exact family's union-rule ShardLog load (fuggetabouspark.state
+    states the recovery rules). ``exclude_epoch`` drops the shards of
+    an earlier attempt of that stream epoch; ``with_raw=True`` returns
+    ``(sketch, raw_payload_or_None)``."""
+    _, sk, raw = _family_state(checkpoint_dir, EXACT, exclude_epoch)
+    return (sk, raw) if with_raw else sk
 
 
 def _compact(checkpoint_dir: str, fam: _Family):
-    """Fold every completed shard's sketch rows of ``fam`` into ONE
-    always-valid shard=-1 row, written from the driver
-    (_append_state_row — no Spark job), via the _swap_dir crash
-    protocol. Returns the merged sketch (None if the family has no
-    completed shard)."""
-    sk = _load_state(checkpoint_dir, fam)
-    if sk is None:
-        return None
-    _swap_dir(
-        lambda tmp: _append_state_row(tmp, fam.spec, sk, -1),
-        fam.path(checkpoint_dir, "sketch_state"),
-    )
-    return sk
+    """ShardLog.compact of ``fam``: its merged sketch, or None if the
+    family has no completed shard."""
+    return fam.log(checkpoint_dir).compact().get((fam.spec, ""))
 
 
 def compact_dedup_checkpoint(spark, checkpoint_dir: str):
-    """Fold every completed shard's sketch rows into ONE shard=-1 row,
-    atomically replacing the sketch_state directory (aside-rename swap,
-    same crash protocol as state.compact_checkpoint — load falls back
-    to the _old copy if a crash lands between the renames). Ledger and
-    lineage are untouched: the ledger is read with columnar pushdown
-    and lineage rows are tiny, but the sketch-state merge was
+    """Fold every completed shard's sketch rows into ONE shard=-1 row
+    (ShardLog.compact: no Spark job, a crash-safe directory swap).
+    Ledger and lineage are untouched: the ledger is read with columnar
+    pushdown and lineage rows are tiny, but the sketch-state merge was
     O(shards × payload) per load — the unbounded per-trigger cost
     code-review r04 flagged for long-running streaming ingest. Safe
     and idempotent any time; returns the merged sketch (None if the
@@ -465,7 +347,7 @@ def ledger_df(
     df = _read_swap(spark, EXACT.path(checkpoint_dir, "fp_ledger"), LEDGER_DDL)
     if df is None or not completed_only:
         return df
-    done = _done_shards(completed_shards(spark, checkpoint_dir), exclude_epoch)
+    done = EXACT.log(checkpoint_dir).done(exclude_epoch)
     return df.where(F.col("shard").isin(done))
 
 
@@ -503,7 +385,7 @@ def expire_ledgers(
         w = window
         if w is None:
             # one state load per family, not per ledger
-            sk = _load_state(checkpoint_dir, fam)
+            sk = _family_state(checkpoint_dir, fam)[1]
             if sk is None:
                 continue
             w = sk_window(sk)
@@ -516,6 +398,13 @@ def expire_ledgers(
             schema = _ddl_schema(ddl)
             if ds.dataset(src, format="parquet", schema=schema).count_rows() <= _LOCAL_TRIGGER_ROWS:
                 tbl = _pa_read_table(src, filter=ds.field("tick") >= lo, schema=schema)
+                # the parts list in name order and their names are
+                # random, so the kept rows are put in a total order of
+                # their non-list columns: the same rows always rewrite
+                # to the same bytes
+                tbl = tbl.sort_by([
+                    (f.name, "ascending") for f in schema if not pa.types.is_list(f.type)
+                ])
                 _swap_dir(lambda tmp, tbl=tbl, ddl=ddl: _commit_table(tmp, tbl, ddl), path)
                 kept[name] = tbl.num_rows
                 continue
@@ -533,7 +422,7 @@ def expire_ledgers(
 
 def completed_shards(spark, checkpoint_dir: str) -> list[dict]:
     """Lineage metadata of completed ingests, in shard order."""
-    return _metas(checkpoint_dir, EXACT)
+    return EXACT.log(checkpoint_dir).metas()
 
 
 def _query_window(sk, window: int | None):
@@ -569,10 +458,7 @@ def _probe(spark, checkpoint_dir: str, fam: _Family, keys: DataFrame, now: int,
     6)."""
     from ..queries import seen_within_payloads
 
-    done = _done_shards(_metas(checkpoint_dir, fam), exclude_epoch)
-    stored, raw = _load_sketch_state(
-        None, fam.path(checkpoint_dir, "sketch_state"), done, fam.spec, with_raw=True
-    )
+    done, stored, raw = _family_state(checkpoint_dir, fam, exclude_epoch)
     if stored is None:
         return None
     sk, w = _query_window(stored, window)
@@ -595,8 +481,7 @@ def _probe_local(checkpoint_dir: str, fam: _Family, keys, now: int,
     """_probe on the driver, for the int64 key array ``keys``:
     ``(hits, w, done)`` with ``hits`` the sorted distinct keys the
     driver-held sketch has seen within ``w`` — no broadcast, no job."""
-    done = _done_shards(_metas(checkpoint_dir, fam), exclude_epoch)
-    sk = _load_sketch_state(None, fam.path(checkpoint_dir, "sketch_state"), done, fam.spec)
+    done, sk, _ = _family_state(checkpoint_dir, fam, exclude_epoch)
     if sk is None:
         return None
     sk, w = _query_window(sk, window)
@@ -629,66 +514,59 @@ def _commit_shard(
     partitions: int | None, meta: dict, ann: DataFrame | None = None,
     pre_lineage_hook=None,
 ) -> None:
-    """Append one shard to ``fam``'s history in the family write order,
-    which is what makes lineage-gated recovery work (it mirrors
-    state.build_resumable):
+    """Append one shard to ``fam``'s history: the sketch delta over the
+    FIRST ledger's key column is the shard's state row of
+    ShardLog.commit, whose caller step — between the state row and the
+    lineage row ``{now, **meta}`` — is:
 
-    1. heal any crashed expiry/compaction swap of every directory about
-       to be appended to — appending to a missing primary dir would
-       shadow the _old history (code-review r05);
-    2. the sketch delta over the FIRST ledger's key column;
-    3. each ledger's rows (``rows``: report name → frame carrying the
+    1. heal any crashed expiry swap of each ledger — appending to a
+       missing primary dir would shadow the _old history (code-review
+       r05);
+    2. each ledger's rows (``rows``: report name → frame carrying the
        DDL's data columns), with ``tick`` (a Column) and the shard id
        added and every column cast to the ledger DDL's type at ingest
        — e.g. an ``array<double>`` embedding committed uncast would
        write fine once and then fail every later probe with a parquet
        schema-conversion error when _read_swap applies the DDL
        (ADVICE r05 #2);
-    4. ``pre_lineage_hook(ann)``: caller-durable output (e.g. the
-       guard's clean stream) must land BEFORE the lineage marker — once
-       lineage commits, a replay is skipped, so anything written after
-       it would be lost to a crash in between;
-    5. the lineage row ``{shard, now, **meta}`` — LAST: a shard is only
-       complete once everything before it is durable.
+    3. ``pre_lineage_hook(ann)``: caller-durable output (e.g. the
+       guard's clean stream), which must land before the lineage row.
 
     ``rows`` may instead hold driver-side pyarrow tables (the guard's
     driver path), with ``tick`` an int: the delta then runs the update
-    kernel in-process (_commit_sketch_keys) and each ledger's rows are
-    one driver-written file typed from its DDL (state._commit_table) —
-    no Spark job, same order."""
-    shard = len(_metas(checkpoint_dir, fam))
-    state_path = fam.path(checkpoint_dir, "sketch_state")
-    for path in [state_path] + [fam.path(checkpoint_dir, n) for n in fam.ledgers]:
-        _heal_swap(path)
+    kernel in-process (_sketch_keys) and each ledger's rows are one
+    driver-written file typed from its DDL (state._commit_table) — no
+    Spark job, same order."""
+    log = fam.log(checkpoint_dir)
+    shard = len(log.metas())
     first = next(iter(fam.ledgers))
     key = fam.ledgers[first][1].split(" ", 1)[0]
-    if isinstance(rows[first], pa.Table):
-        _commit_sketch_keys(
-            state_path, rows[first].column(key).combine_chunks(), tick, fam.spec,
-            params, shard,
-        )
-        for name, (_, ddl) in fam.ledgers.items():
-            t = rows[name]
-            t = t.append_column("tick", pa.array(np.full(t.num_rows, tick, np.int64)))
-            t = t.append_column("shard", pa.array(np.full(t.num_rows, shard, np.int32)))
-            _commit_table(fam.path(checkpoint_dir, name), t, ddl)
+    local = isinstance(rows[first], pa.Table)
+    if local:
+        delta = _sketch_keys(rows[first].column(key).combine_chunks(), tick, fam.spec, params)
     else:
-        _commit_sketch_delta(
-            state_path, rows[first], F.col(key), tick, fam.spec, params, shard,
-            partitions,
-        )
-        derived = {"tick": tick, "shard": F.lit(shard)}
+        delta = _sketch_delta(rows[first], F.col(key), tick, fam.spec, params, partitions)
+
+    def ledgers_then_hook():
         for name, (_, ddl) in fam.ledgers.items():
+            path = fam.path(checkpoint_dir, name)
+            _heal_swap(path)
+            if local:
+                t = rows[name]
+                t = t.append_column("tick", pa.array(np.full(t.num_rows, tick, np.int64)))
+                t = t.append_column("shard", pa.array(np.full(t.num_rows, shard, np.int32)))
+                _commit_table(path, t, ddl)
+                continue
+            derived = {"tick": tick, "shard": F.lit(shard)}
             # the DDLs hold no struct types, so ", " separates columns
             cols = [c.split(" ", 1) for c in ddl.split(", ")]
             rows[name].select(*(
                 derived.get(c, F.col(c)).cast(t).alias(c) for c, t in cols
-            )).write.mode("append").parquet(fam.path(checkpoint_dir, name))
-    if pre_lineage_hook is not None:
-        pre_lineage_hook(ann)
-    _write_lineage(
-        fam.path(checkpoint_dir, "lineage"), {"shard": shard, "now": int(now), **meta}
-    )
+            )).write.mode("append").parquet(path)
+        if pre_lineage_hook is not None:
+            pre_lineage_hook(ann)
+
+    log.commit(shard, delta, {"now": int(now), **meta}, ledgers_then_hook)
 
 
 def _shard_fps(new_df: DataFrame, text_col: str, tick_col, now: int) -> DataFrame:
@@ -813,7 +691,7 @@ def incremental_dedup(
     ``partitions`` caps the sketch-delta partials the state commit
     collects to the driver (``coalesce``, no shuffle): driver memory
     for the delta is at most ``partitions`` × payload; None keeps the
-    survivor frame's own partitioning (_commit_sketch_delta)."""
+    survivor frame's own partitioning (_sketch_delta)."""
     # one scan of the shard text: the annotated plan references the fp
     # frame three times (probe keys, intra-shard firsts, the annotated
     # left side) and an un-materialized fps would re-scan + re-hash the
@@ -897,7 +775,7 @@ class StreamingIngestGuard:
     event time.
 
     Commit path: every family's sketch delta, lineage row and
-    compaction row is written from the driver (_commit_row: a pyarrow
+    compaction row is written from the driver (its ShardLog: a pyarrow
     file under a '_' temp name, then an atomic ``os.replace``), so a
     crash mid-commit leaves an invisible temp file, never a torn row,
     and the epoch marker is either fully present or absent. Each
@@ -1236,7 +1114,7 @@ class StreamingIngestGuard:
             )
             if self.embeddings or self.passages:
                 # frozen once: the survivor frame feeds the emb state
-                # commit, the passage kernel AND the mask join-back
+                # commit, the passage kernel AND the mask
                 # (code-review r05 — an uncached self-referential join
                 # would re-execute the batch scan + both semi-joins)
                 out = out.localCheckpoint(eager=True)
@@ -1264,22 +1142,25 @@ class StreamingIngestGuard:
                     text_col=self.text_col, partitions=self.partitions,
                     meta_extra={"epoch": ep}, exclude_epoch=ep,
                 )
-                # annotation reused — no second kernel pass; the
-                # collision-proof temp name keeps the original-columns
-                # contract even if the batch already has text_clean
-                masked = mask_against_history(
-                    self.spark, out, window=self.passage_window,
-                    text_col=self.text_col, ann=pann,
-                ).select(
-                    F.col("doc_id").cast("string").alias("_k"),
-                    F.col("text_clean").alias("_fgs_text_clean"),
-                    F.col("n_tokens_removed").alias("_passage_tokens_removed"),
-                )
+                # the survivors are masked in place, each row its own
+                # text, with the annotation reused (no second kernel
+                # pass). One drops row per doc id: a batch holding a doc
+                # id twice has it twice in the annotation too, and a
+                # join on it would repeat those rows
+                drops = pann.where(F.size("hist_positions") > 0).select(
+                    F.col("doc_id").alias("_k"), F.col("hist_positions").alias("_drops")
+                ).dropDuplicates(["_k"])
                 out = (
                     out.withColumn("_k", F.col("doc_id").cast("string"))
-                    .join(masked, "_k", "left")
-                    .withColumn(self.text_col, F.col("_fgs_text_clean"))
-                    .drop("_k", "_fgs_text_clean")
+                    .join(drops, "_k", "left")
+                    .withColumn("_words", F.split(F.col(self.text_col), " "))
+                    .withColumn("_kept", _kept_words(self.passage_window))
+                    .withColumn(self.text_col, F.array_join("_kept", " "))
+                    .withColumn(
+                        "_passage_tokens_removed",
+                        (F.size("_words") - F.size("_kept")).cast("int"),
+                    )
+                    .drop("_k", "_drops", "_words", "_kept")
                 )
             # epoch-partitioned dynamic overwrite: a re-run of a
             # half-committed epoch replaces exactly its own partition
@@ -1569,13 +1450,11 @@ def incremental_near_dup(
 
 def compact_near_checkpoint(spark, checkpoint_dir: str):
     """Near-dup analogue of compact_dedup_checkpoint: fold every
-    completed near shard's band-key sketch rows into ONE shard=-1 row
-    (the row the state loader already accepted but nothing wrote —
-    VERDICT r04 "What's missing" #1). Without it a long-running
-    near-dup ingest re-merges O(shards × payload) sketch rows on every
-    probe. Ledgers and lineage are untouched (columnar-pushdown reads);
-    expire_ledgers handles their growth. Safe and idempotent any
-    time."""
+    completed near shard's band-key sketch rows into ONE shard=-1 row.
+    Without it a long-running near-dup ingest re-merges O(shards ×
+    payload) sketch rows on every probe. Ledgers and lineage are
+    untouched; expire_ledgers handles the ledgers' growth. Safe and
+    idempotent any time."""
     return _compact(checkpoint_dir, NEAR)
 
 
@@ -1927,7 +1806,7 @@ def _emb_check_geometry(checkpoint_dir: str, bits: int, tables: int, dim: int):
     with different bits/tables/dim never collide with retained keys,
     so every probe would silently miss (code-review r05 third pass
     #2). The geometry is recorded in each shard's lineage meta."""
-    prior = [m for m in _metas(checkpoint_dir, EMB) if "bits" in m]
+    prior = [m for m in EMB.log(checkpoint_dir).metas() if "bits" in m]
     if prior:
         g = prior[-1]
         if (int(g["bits"]), int(g["tables"]), int(g["dim"])) != (bits, tables, dim):

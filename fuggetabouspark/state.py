@@ -1,35 +1,72 @@
 """Checkpointed, resumable builds with per-shard lineage
 (SURVEY.md §3.3; BASELINE.json:6 "per-partition lineage rows and
-checkpointed sketch state for resumable runs"), and the checkpoint
-store through which the library commits and reads its small checkpoint
-artifacts.
+checkpointed sketch state for resumable runs"), the shard log every
+sharded checkpoint commits through, and the checkpoint store beneath
+it.
 
-Granularity: the input is split into ``n_shards`` deterministic shards
-by ``pmod(xxhash64(doc_id), n_shards)``. Each shard is one
-``build_sketches(...).collect()``; the driver splits the collected rows
-into the shard's sketch rows and its per-partition lineage rows, then
-commits the sketch rows and, LAST, the shard's lineage row. A lineage
-row is therefore only visible after its shard's sketch rows are
-durable. Resume lists completed shard ids from lineage and skips them
-— a killed run re-does at most one shard. The final answer merges
-every shard's sketch rows; correctness under retries holds because
-shard partials are deduplicated by (spec, group, shard) before the
-merge, so an orphaned attempt can never double-count.
+Granularity: build_resumable splits the input into ``n_shards``
+deterministic shards by ``pmod(xxhash64(doc_id), n_shards)``. Each
+shard is one ``build_sketches(...).collect()``; the driver splits the
+collected rows into the shard's sketch rows and its per-partition
+lineage rows and commits them as one shard of a ShardLog. Resume lists
+completed shard ids from lineage and skips them — a killed run re-does
+at most one shard.
+
+The shard log (ShardLog) is a directory holding ``sketch_state/``, rows
+``(spec, group, payload, n_items, shard)``, and ``lineage/``, one row
+``(shard, meta)`` per completed shard. A resumable build is one log;
+each of the four incremental dedup families (dataops.incremental) is
+one more, under its own subdirectory. Its protocol:
+
+- commit: the shard's state rows first, then the caller's own writes
+  that must be durable with the shard (a family's ledgers, the guard's
+  clean output), then the lineage row LAST. A shard is complete once
+  its lineage row is visible, and by then everything before it is.
+- load: only the rows of completed shards, plus the shard=-1 rows a
+  compaction wrote, are merged. A crash before the lineage row leaves
+  orphan state rows that every load ignores and the retry re-commits.
+- compaction: folds that same load into one shard=-1 row per (spec,
+  group) and swaps the state directory in; lineage is untouched, so
+  the folded shards stay complete. Because the fold is lineage-gated
+  too, an orphan is never folded in and then rebuilt by a resume,
+  which would double-count every additive sketch.
+- ``done(exclude_epoch)`` leaves out the shards whose meta carries
+  that stream epoch: when a multi-family guard crashes after one
+  family committed the epoch but before the final marker, the replay
+  must not treat that family's own half-epoch output as history (every
+  doc would be flagged a duplicate of itself). A shard=-1 row never
+  holds such a shard, because compaction only runs after an epoch
+  fully commits.
+
+The log's owner picks one of two merge rules:
+
+- additive (resumable builds: CMS counts, HLL registers, t-digest
+  centroids add up): a retried shard can leave its orphan's rows next
+  to the retry's under the same shard id, so one row per (spec, group,
+  shard) is kept, the one with the largest n_items, before merging;
+- union (the incremental families' membership sketches): every row is
+  merged. Picking one row per shard could keep a crashed attempt's row
+  and drop the retry's keys — a silently missed duplicate forever —
+  while a union-only monoid is one-sided safe under over-merging: an
+  orphan's extra keys only create sketch hits that the exact ledger
+  verification rejects, and n_items (advisory there) may over-count.
 
 The checkpoint store (shared with dataops.incremental and
-streaming.StreamingSketchBuilder): sketch state, lineage and streaming
-versions are small, so they are committed and read FROM THE DRIVER
-with pyarrow, never through a Spark job (shard-sized ledgers stay
-Spark writes). _commit_row writes a parquet file under a
-'_'-prefixed temp name and publishes it with an atomic ``os.replace``
+streaming.StreamingSketchBuilder): sketch state, lineage, streaming
+versions and the guard's driver-path ledger appends and clean
+partitions are committed and read FROM THE DRIVER with pyarrow, never
+through a Spark job. _commit_row (a few rows) and _commit_table
+(shard-sized rows, typed from a Spark DDL) write a parquet file under a
+'_'-prefixed temp name and publish it with an atomic ``os.replace``
 (both pyarrow.dataset and Spark's reader skip '_' files, so a crash
 leaves an invisible temp, never a torn part); _pa_read_table reads a
-directory back. _swap_dir replaces a whole directory (compaction,
-expiry, a streaming version) by a two-rename swap, _live resolves the
-``_old`` copy a crash between those renames leaves, and _heal_swap
-restores it before an append. The layout assumes a filesystem path —
-on an object store, replace the renames with a manifest swap (Iceberg
-snapshot commit).
+directory back. The incremental operators' Spark plans still append
+their ledgers with Spark writes, into the same directories. _swap_dir
+replaces a whole directory (compaction, expiry, a streaming version)
+by a two-rename swap, _live resolves the ``_old`` copy a crash between
+those renames leaves, and _heal_swap restores it before an append. The
+layout assumes a filesystem path — on an object store, replace the
+renames with a manifest swap (Iceberg snapshot commit).
 
 At cluster scale, shards double as a unit of incremental ingest: a new
 partition of an Iceberg table is just one more shard appended to the
@@ -42,6 +79,8 @@ import json
 import os
 import shutil
 import uuid
+from collections import Counter
+from typing import NamedTuple
 
 from .pipeline import LINEAGE_SPEC, SketchSpec, build_sketches, merge_rows_to_sketches
 
@@ -200,8 +239,105 @@ def _commit_table(path: str, table, ddl: str) -> None:
     _publish(path, table.select(schema.names).cast(schema))
 
 
-def _paths(checkpoint_dir: str) -> tuple[str, str]:
-    return os.path.join(checkpoint_dir, "sketch_state"), os.path.join(checkpoint_dir, "lineage")
+class ShardLog(NamedTuple):
+    """The shard log rooted at ``root`` (see the module docstring).
+    ``additive`` is its merge rule: True for a resumable build's
+    additive sketches, False for the incremental families' union-only
+    membership sketches."""
+
+    root: str
+    additive: bool
+
+    @property
+    def state(self) -> str:
+        return os.path.join(self.root, "sketch_state")
+
+    @property
+    def lineage(self) -> str:
+        return os.path.join(self.root, "lineage")
+
+    def metas(self) -> list[dict]:
+        """The lineage metas of the completed shards, in shard order. A
+        missing lineage dir means no shard completed; an unreadable part
+        raises rather than silently rebuilding every shard."""
+        if not os.path.exists(self.lineage):
+            return []
+        metas = _pa_read_table(self.lineage, columns=["meta"]).column("meta").to_pylist()
+        return sorted((json.loads(m) for m in metas), key=lambda m: m["shard"])
+
+    def done(self, exclude_epoch=None) -> list[int]:
+        """Completed shard ids, without the shards an earlier attempt of
+        stream epoch ``exclude_epoch`` committed."""
+        return [
+            int(m["shard"])
+            for m in self.metas()
+            if exclude_epoch is None or m.get("epoch") != int(exclude_epoch)
+        ]
+
+    def commit(self, shard: int, state_rows: list[dict], meta: dict,
+               before_lineage=None) -> None:
+        """Commit shard ``shard`` in the log's order: _heal_swap the
+        state dir, append ``state_rows`` (spec, group, payload, n_items;
+        none, no file), run ``before_lineage()``, then write the lineage
+        row ``{**meta, "shard": shard}``."""
+        _heal_swap(self.state)
+        if state_rows:
+            _commit_row(self.state, *({**r, "shard": int(shard)} for r in state_rows))
+        if before_lineage is not None:
+            before_lineage()
+        _commit_row(
+            self.lineage, shard=int(shard),
+            meta=json.dumps({**meta, "shard": int(shard)}, sort_keys=True),
+        )
+
+    def load(self, done: list[int], with_raw: bool = False) -> dict:
+        """{(spec, group): sketch} merged by the log's merge rule from
+        the rows of the completed shards ``done`` and the shard=-1
+        rows, read through _live; {} when ``done`` is empty.
+
+        ``with_raw=True`` maps each key to ``(sketch, payload)``:
+        ``payload`` is the stored bytes when exactly one row made up
+        the sketch (else None), so a probe can broadcast them as they
+        are instead of paying a zlib re-compress of the bucket array
+        (round 6; post-compaction steady state is exactly one row)."""
+        path = _live(self.state)
+        if not done or not os.path.exists(path):
+            return {}
+        ok = set(done) | {-1}
+        rows = [r for r in _pa_read_table(path).to_pylist() if r["shard"] in ok]
+        if self.additive:
+            best: dict = {}
+            for r in rows:
+                key = (r["spec"], r["group"], r["shard"])
+                if key not in best or r["n_items"] > best[key]["n_items"]:
+                    best[key] = r
+            rows = [best[k] for k in sorted(best)]
+        sketches = merge_rows_to_sketches(rows)
+        if not with_raw:
+            return sketches
+        n = Counter((r["spec"], r["group"]) for r in rows)
+        raw = {(r["spec"], r["group"]): r["payload"] for r in rows}
+        return {k: (sk, raw[k] if n[k] == 1 else None) for k, sk in sketches.items()}
+
+    def compact(self, fold=None) -> dict:
+        """Swap in one shard=-1 row per (spec, group): the load over
+        every completed shard, mapped by ``fold`` (dict to dict) when
+        given. Returns the rows' sketches; {}, writing nothing, when the
+        load is empty."""
+        sketches = self.load(self.done())
+        if not sketches:
+            return sketches
+        if fold is not None:
+            sketches = fold(sketches)
+        rows = [
+            {"spec": spec, "group": group, "payload": sk.to_bytes(),
+             "n_items": int(sk.n_items), "shard": -1}
+            for (spec, group), sk in sorted(sketches.items())
+        ]
+        # the load above read the _old copy if a previous compaction
+        # crashed mid-swap; _swap_dir keeps it until the new state is in
+        _swap_dir(lambda tmp: _commit_row(tmp, *rows), self.state)
+        return sketches
 
 
 def completed_shards(spark, checkpoint_dir: str, expect_n_shards: int | None = None) -> set[int]:
@@ -209,21 +345,16 @@ def completed_shards(spark, checkpoint_dir: str, expect_n_shards: int | None = N
     given, refuses to resume a checkpoint built with a different shard
     count — shard membership is pmod(hash, n_shards), so mixing counts
     would re-process documents already covered by completed shards and
-    double-count every additive sketch. A missing lineage dir means no
-    shard completed; an unreadable one raises rather than silently
-    rebuilding every shard."""
-    _, lineage_path = _paths(checkpoint_dir)
-    if not os.path.exists(lineage_path):
-        return set()
-    rows = _pa_read_table(lineage_path, columns=["shard", "meta"]).to_pylist()
-    if expect_n_shards is not None and rows:
-        recorded = json.loads(rows[0]["meta"]).get("n_shards")
+    double-count every additive sketch (ShardLog.metas)."""
+    metas = ShardLog(checkpoint_dir, additive=True).metas()
+    if expect_n_shards is not None and metas:
+        recorded = metas[0].get("n_shards")
         if recorded != expect_n_shards:
             raise ValueError(
                 f"checkpoint was built with n_shards={recorded}; resuming with "
                 f"n_shards={expect_n_shards} would double-count — use the original value"
             )
-    return {r["shard"] for r in rows}
+    return {m["shard"] for m in metas}
 
 
 def build_resumable(
@@ -250,9 +381,8 @@ def build_resumable(
 
     from .pipeline import corpus_digest, lineage_from_rows
 
-    state_path, lineage_path = _paths(checkpoint_dir)
+    log = ShardLog(checkpoint_dir, additive=True)
     done = completed_shards(spark, checkpoint_dir, expect_n_shards=n_shards)
-    _heal_swap(state_path)
     shard_col = F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
 
     built = 0
@@ -269,13 +399,6 @@ def build_resumable(
             stbf_fanin=(stbf_fanin * n_shards) if stbf_fanin and stbf_fanin > 1 else None,
         ).collect()
         lin_rows = [r for r in rows if r["spec"] == LINEAGE_SPEC]
-        # sketch rows first, lineage row last: a shard is only
-        # "completed" once its state is durable
-        _commit_row(state_path, *(
-            {"spec": r["spec"], "group": r["group"], "payload": bytes(r["payload"]),
-             "n_items": r["n_items"], "shard": shard}
-            for r in rows if r["spec"] != LINEAGE_SPEC
-        ))
         # shard-level audit lineage (SURVEY §3.3, round 3): exact
         # per-shard row/token totals + ingest digest from the build's
         # per-partition lineage rows, plus the file-level provenance of
@@ -285,7 +408,6 @@ def build_resumable(
         # non-file-backed frames.
         lin = lineage_from_rows(lin_rows)
         meta = {
-            "shard": shard,
             "n_shards": n_shards,
             "specs": [s.name for s in specs],
             "n_rows": sum(e["n_rows"] for e in lin),
@@ -293,7 +415,11 @@ def build_resumable(
             "token_digest": corpus_digest(lin_rows),
             "input_files": sorted(sub.inputFiles()),
         }
-        _commit_row(lineage_path, shard=shard, meta=json.dumps(meta, sort_keys=True))
+        log.commit(shard, [
+            {"spec": r["spec"], "group": r["group"], "payload": bytes(r["payload"]),
+             "n_items": r["n_items"]}
+            for r in rows if r["spec"] != LINEAGE_SPEC
+        ], meta)
         built += 1
         if fail_after_shard is not None and built >= fail_after_shard:
             raise RuntimeError(f"injected failure after shard {shard}")
@@ -301,12 +427,13 @@ def build_resumable(
 
 
 def compact_checkpoint(spark, checkpoint_dir: str, now: int, drop_groups_before: int | None = None):
-    """Decay-aware checkpoint GC: fold all shard rows per (spec, group),
-    apply decay(now) to every time-decaying sketch, drop expired HLL
-    ring buckets (group suffix '\\x1f<bucket>' older than
+    """Decay-aware checkpoint GC: fold all completed shards' rows per
+    (spec, group), apply decay(now) to every time-decaying sketch, drop
+    expired HLL ring buckets (group suffix '\\x1f<bucket>' older than
     ``drop_groups_before``), and rewrite the state as one compacted
-    shard (-1). Safe to run any time: merges are idempotent-per-partial
-    and the rewrite replaces the directory by _swap_dir at the end.
+    shard (-1) — ShardLog.compact. Safe to run any time: the fold reads
+    only completed shards and the rewrite replaces the directory by
+    _swap_dir at the end.
 
     This is the batch analogue of upstream's periodic IOLoop decay —
     at 10^12 scale it also bounds checkpoint growth: state stays
@@ -314,36 +441,27 @@ def compact_checkpoint(spark, checkpoint_dir: str, now: int, drop_groups_before:
     """
     from .pipeline import GROUP_SEP
 
-    state_path, _ = _paths(checkpoint_dir)
-    sketches = load_state(spark, checkpoint_dir)
-    rows = []
-    for (spec, group), sk in sorted(sketches.items()):
-        if drop_groups_before is not None and GROUP_SEP in group:
-            try:
-                if int(group.rsplit(GROUP_SEP, 1)[1]) < drop_groups_before:
-                    continue
-            except ValueError:
-                pass
-        if hasattr(sk, "decay"):
-            sk.decay(now)
-        rows.append({"spec": spec, "group": group, "payload": sk.to_bytes(),
-                     "n_items": sk.n_items, "shard": -1})
-    # load_state above read the _old copy if a previous compaction
-    # crashed mid-swap; _swap_dir keeps it until the new state is in
-    _swap_dir(lambda tmp: _commit_row(tmp, *rows), state_path)
+    def fold(sketches):
+        kept = {}
+        for (spec, group), sk in sketches.items():
+            if drop_groups_before is not None and GROUP_SEP in group:
+                try:
+                    if int(group.rsplit(GROUP_SEP, 1)[1]) < drop_groups_before:
+                        continue
+                except ValueError:
+                    pass
+            if hasattr(sk, "decay"):
+                sk.decay(now)
+            kept[(spec, group)] = sk
+        return kept
+
+    ShardLog(checkpoint_dir, additive=True).compact(fold)
     return load_state(spark, checkpoint_dir)
 
 
 def load_state(spark, checkpoint_dir: str):
-    """Read checkpointed shard rows, dedupe retries, return
-    {(spec, group): merged sketch}. ``spark`` is unused: the read is
-    driver-side."""
-    state_path, _ = _paths(checkpoint_dir)
-    # dedupe retried shards: keep one row per (spec, group, shard), the
-    # one with the largest n_items
-    best: dict = {}
-    for r in _pa_read_table(_live(state_path)).to_pylist():
-        key = (r["spec"], r["group"], r["shard"])
-        if key not in best or r["n_items"] > best[key]["n_items"]:
-            best[key] = r
-    return merge_rows_to_sketches(best[k] for k in sorted(best))
+    """{(spec, group): merged sketch} over the completed shards, retries
+    deduplicated (the additive ShardLog load). ``spark`` is unused: the
+    read is driver-side."""
+    log = ShardLog(checkpoint_dir, additive=True)
+    return log.load(log.done())

@@ -10,6 +10,9 @@ Pinned here:
   build matches an uninterrupted one;
 - a build resumed after a compaction crashed mid-swap appends to the
   surviving _old history instead of hiding it;
+- a compaction after a crash between a shard's state rows and its
+  lineage row folds only completed shards, so the resumed build does
+  not count the orphaned shard twice;
 - a checkpoint whose shards were written by Spark still resumes,
   loads and compacts, with driver-written parts in the same dirs;
 - an unreadable lineage part raises instead of rebuilding every shard;
@@ -144,6 +147,36 @@ def test_resume_after_a_crashed_compaction_swap(spark, corpus, tmp_path):
     compact_checkpoint(spark, ref, now=60)
     assert _bytes(resumed) == _bytes(build_resumable(spark, corpus, SPECS, ref, n_shards=3, **_kw()))
     assert sorted(os.listdir(ck)) == ["lineage", "sketch_state"]
+
+
+def test_compaction_after_an_orphaned_shard_does_not_double_count(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """A build that crashed after shard 1's state rows were committed
+    but before its lineage row leaves orphan rows. A compaction must not
+    fold them in: the resume rebuilds shard 1, and every additive sketch
+    would count it twice."""
+    ck, ref = str(tmp_path / "ck"), str(tmp_path / "ref")
+    real, lineage_commits = os.replace, []
+
+    def crash_on_lineage_1(src, dst):
+        if os.path.dirname(src).endswith("lineage"):
+            lineage_commits.append(src)
+            if len(lineage_commits) == 2:
+                raise OSError("crash before the lineage commit")
+        real(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash_on_lineage_1)
+        with pytest.raises(OSError, match="crash before the lineage commit"):
+            build_resumable(spark, corpus, SPECS, ck, n_shards=3, **_kw())
+    assert completed_shards(spark, ck) == {0}
+    compact_checkpoint(spark, ck, now=60)
+    resumed = build_resumable(spark, corpus, SPECS, ck, n_shards=3, **_kw())
+
+    build_resumable(spark, corpus, SPECS, ref, n_shards=3, **_kw())
+    want = compact_checkpoint(spark, ref, now=60)
+    assert _bytes(resumed) == _bytes(want)
 
 
 def _spark_write_shard(spark, corpus, ck, shard, n_shards):

@@ -18,6 +18,7 @@ Pinned here:
   to another.
 """
 
+import json
 import os
 import shutil
 import tempfile
@@ -42,16 +43,10 @@ from fuggetabouspark.dataops import (
     incremental_passages,
     load_dedup_state,
 )
-from fuggetabouspark.dataops.incremental import (
-    DEDUP_SPEC,
-    _append_state_row,
-    _commit_sketch_delta,
-    _commit_sketch_keys,
-    _load_sketch_state,
-    _write_lineage,
-)
+from fuggetabouspark.dataops.incremental import DEDUP_SPEC, _sketch_delta, _sketch_keys
 from fuggetabouspark.params import TimingParams
 from fuggetabouspark.sketches.tbf import TimingBloomFilter
+from fuggetabouspark.state import ShardLog, _commit_row
 
 P = TimingParams(capacity=20_000, error=0.001, window_ticks=2**31)
 STATE_DDL = "spec string, group string, payload binary, n_items long, shard int"
@@ -90,8 +85,10 @@ class TestCrashSafety:
         other = TimingBloomFilter.zero(P)
         other.add_batch(np.arange(100, dtype=np.int64), 1)
         scratch = os.path.join(ck, "scratch")
-        _write_lineage(os.path.join(scratch, "lineage"), {"shard": 1, "now": 2})
-        _append_state_row(os.path.join(scratch, "state"), DEDUP_SPEC, other, 0)
+        _commit_row(os.path.join(scratch, "lineage"), shard=1,
+                    meta=json.dumps({"now": 2, "shard": 1}))
+        _commit_row(os.path.join(scratch, "state"), spec=DEDUP_SPEC, group="",
+                    payload=other.to_bytes(), n_items=int(other.n_items), shard=0)
         for src, dst in (("lineage", lineage), ("state", state)):
             (done,) = os.listdir(os.path.join(scratch, src))
             shutil.move(os.path.join(scratch, src, done), os.path.join(dst, "_part-crash.parquet"))
@@ -102,7 +99,7 @@ class TestCrashSafety:
 
         assert [m["shard"] for m in dedup_completed_shards(spark, ck)] == [0]
         assert load_dedup_state(spark, ck).to_bytes() == before
-        assert _load_sketch_state(spark, state, [0], DEDUP_SPEC).to_bytes() == before
+        assert ShardLog(ck, additive=False).load([0])[DEDUP_SPEC, ""].to_bytes() == before
         assert spark.read.parquet(state).count() == 1
         assert spark.read.parquet(lineage).count() == 1
         # and the checkpoint keeps working: the next shard commits
@@ -179,8 +176,9 @@ class TestDriverCommitMechanism:
         merged = []
 
         def commit():
-            _write_lineage(os.path.join(scratch, "lineage"), {"shard": 0})
-            _append_state_row(os.path.join(scratch, "state"), DEDUP_SPEC, sk, 0)
+            ShardLog(scratch, additive=False).commit(0, [{
+                "spec": DEDUP_SPEC, "group": "", "payload": sk.to_bytes(), "n_items": int(sk.n_items),
+            }], {})
             merged.extend(c(spark, ck) for c in compactions)
 
         assert jobs_in_group(spark, "fgs-driver-commit", commit)[1] == 0
@@ -203,9 +201,9 @@ class TestDriverCommitMechanism:
             [(f"d{i}", int(k), int(t)) for i, (k, t) in enumerate(zip(keys, ticks))],
             "doc_id string, key long, tick long",
         ).repartition(nparts)
-        path = os.path.join(ck, f"state{nparts}")
-        _commit_sketch_delta(path, df, F.col("key"), F.col("tick"), DEDUP_SPEC, P, 0, None)
-        got = pq.read_table(path).to_pylist()
+        log = ShardLog(os.path.join(ck, f"log{nparts}"), additive=False)
+        log.commit(0, _sketch_delta(df, F.col("key"), F.col("tick"), DEDUP_SPEC, P, None), {})
+        got = pq.read_table(log.state).to_pylist()
         spec = SketchSpec(DEDUP_SPEC, "tbf", P, value="tokens")
         shaped = df.select("doc_id", F.array("key").alias("tokens"),
                            F.lit(1).alias("n_tok"), "tick")
@@ -216,42 +214,39 @@ class TestDriverCommitMechanism:
         assert got[0]["n_items"] == want[0]["n_items"] == keys.size
         assert (got[0]["spec"], got[0]["group"], got[0]["shard"]) == (DEDUP_SPEC, "", 0)
         # partitions caps the partials collected; the bytes do not move
-        capped = os.path.join(ck, f"capped{nparts}")
-        _commit_sketch_delta(capped, df, F.col("key"), F.col("tick"), DEDUP_SPEC, P, 0, 2)
-        assert pq.read_table(capped).column("payload").to_pylist() == [got[0]["payload"]]
+        capped = _sketch_delta(df, F.col("key"), F.col("tick"), DEDUP_SPEC, P, 2)
+        assert [r["payload"] for r in capped] == [got[0]["payload"]]
 
     def test_in_process_delta_matches_spark_delta(self, spark, ck):
         keys = np.random.default_rng(9).integers(-(2**62), 2**62, size=2000)
         keys[::5] = keys[1]
         df = spark.createDataFrame([(int(k),) for k in keys], "key long").repartition(3)
-        via_spark, in_process = os.path.join(ck, "spark"), os.path.join(ck, "driver")
-        _commit_sketch_delta(via_spark, df, F.col("key"), F.lit(7), DEDUP_SPEC, P, 0, None)
-        _commit_sketch_keys(in_process, pa.array(keys), 7, DEDUP_SPEC, P, 0)
-        assert pq.read_table(in_process).to_pylist() == pq.read_table(via_spark).to_pylist()
-        none = os.path.join(ck, "none")
-        _commit_sketch_keys(none, pa.array([], pa.int64()), 7, DEDUP_SPEC, P, 0)
-        assert not os.path.exists(none)
+        via_spark = _sketch_delta(df, F.col("key"), F.lit(7), DEDUP_SPEC, P, None)
+        in_process = _sketch_keys(pa.array(keys), 7, DEDUP_SPEC, P)
+        assert in_process == via_spark and len(in_process) == 1
+        assert _sketch_keys(pa.array([], pa.int64()), 7, DEDUP_SPEC, P) == []
 
     def test_empty_delta_commits_no_row(self, spark, ck):
         empty = spark.createDataFrame([], "key long, tick long")
-        path = os.path.join(ck, "state")
-        _commit_sketch_delta(path, empty, F.col("key"), F.col("tick"), DEDUP_SPEC, P, 0, None)
-        assert not os.path.exists(path)
+        log = ShardLog(ck, additive=False)
+        log.commit(0, _sketch_delta(empty, F.col("key"), F.col("tick"), DEDUP_SPEC, P, None), {})
+        assert not os.path.exists(log.state)
 
 
 class TestLoaderGroupFilter:
     def test_grouped_row_is_not_merged(self, spark, ck):
-        from fuggetabouspark.dataops.incremental import _commit_row
+        from fuggetabouspark.dataops.incremental import EXACT, _family_state
 
         mine = TimingBloomFilter.zero(P)
         mine.add_batch(np.arange(0, 50, dtype=np.int64), 1)
         grouped = TimingBloomFilter.zero(P)
         grouped.add_batch(np.arange(1000, 1050, dtype=np.int64), 1)
-        state = os.path.join(ck, "sketch_state")
-        _append_state_row(state, DEDUP_SPEC, mine, 0)
-        _commit_row(state, spec=DEDUP_SPEC, group="web", payload=grouped.to_bytes(),
-                    n_items=int(grouped.n_items), shard=0)
-        sk, raw = _load_sketch_state(spark, state, [0], DEDUP_SPEC, with_raw=True)
+        ShardLog(ck, additive=False).commit(0, [
+            {"spec": DEDUP_SPEC, "group": "", "payload": mine.to_bytes(), "n_items": int(mine.n_items)},
+            {"spec": DEDUP_SPEC, "group": "web", "payload": grouped.to_bytes(),
+             "n_items": int(grouped.n_items)},
+        ], {})
+        _, sk, raw = _family_state(ck, EXACT)
         assert sk.to_bytes() == mine.to_bytes()
         assert raw == mine.to_bytes()  # exactly one row contributed
 

@@ -26,7 +26,7 @@ from fuggetabouspark.dataops import (
     commit_emb_state,
     incremental_embedding_dedup,
 )
-from fuggetabouspark.dataops.incremental import EMB, EXACT, _metas
+from fuggetabouspark.dataops.incremental import EMB, EXACT
 from fuggetabouspark.params import TimingParams
 
 P = TimingParams(capacity=10_000, error=0.001, window_ticks=2**31)
@@ -93,13 +93,13 @@ class TestCommitGeometry:
             spark, spark.createDataFrame(_rows(5, 4), ddl), ck, now=1, dim=DIM,
             bits=6, params=P,
         )
-        assert len(_metas(ck, EMB)) == 1
+        assert len(EMB.log(ck).metas()) == 1
         with pytest.raises(ValueError, match="bits"):
             commit_emb_state(
                 spark, spark.createDataFrame(_rows(5, 5, start=10), ddl), ck,
                 now=2, dim=DIM, bits=8, params=P,
             )
-        assert len(_metas(ck, EMB)) == 1
+        assert len(EMB.log(ck).metas()) == 1
 
 
 class TestGuardEmbeddings:
@@ -115,7 +115,7 @@ class TestGuardEmbeddings:
         rows = [(i, f"text {i}", v) for i, v in _rows(3, 6)] + [(9, "text 9", None)]
         with pytest.raises((ValueError, PythonException), match="null vectors"):
             self._guard(spark, ck).process_batch(spark.createDataFrame(rows, self.DDL), 0)
-        assert _metas(ck, EMB) == [] and _metas(ck, EXACT) == []
+        assert EMB.log(ck).metas() == [] and EXACT.log(ck).metas() == []
 
     def test_double_reuploads_dropped_and_type_kept(self, spark, ck, guard_path):
         g = self._guard(spark, ck)

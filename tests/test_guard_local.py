@@ -22,6 +22,7 @@ Pinned here:
 """
 
 import json
+import os
 import shutil
 
 import numpy as np
@@ -97,10 +98,10 @@ def _artifacts(spark, g):
     the way Spark and the library read them."""
     ck, out = g.checkpoint_dir, {}
     for fam in I._FAMILIES:
-        sk = I._load_state(ck, fam)
+        sk = I._family_state(ck, fam)[1]
         out[fam.spec] = None if sk is None else (sk.to_bytes(), sk.n_items)
         out[f"{fam.spec} lineage"] = sorted(
-            json.dumps(m, sort_keys=True) for m in I._metas(ck, fam)
+            json.dumps(m, sort_keys=True) for m in fam.log(ck).metas()
         )
         for name, (_, ddl) in fam.ledgers.items():
             df = I._read_swap(spark, fam.path(ck, name), ddl)
@@ -198,11 +199,11 @@ class TestMixedPaths:
         # the fixture's plants were caught: exact and near clones, the
         # re-uploaded vector and the repeated paragraph
         mixed_ck = str(tmp_path / "mixed" / "ck")
-        meta = {m["epoch"]: m for m in I._metas(mixed_ck, I.EXACT)}
+        meta = {m["epoch"]: m for m in I.EXACT.log(mixed_ck).metas()}
         assert meta[1]["n_dup_history"] >= 2 and meta[0]["n_dup_intra"] == 1
-        near = {m["epoch"]: m for m in I._metas(mixed_ck, I.NEAR)}
+        near = {m["epoch"]: m for m in I.NEAR.log(mixed_ck).metas()}
         assert near[1]["n_near_dup_history"] >= 3
-        passages = {m["epoch"]: m for m in I._metas(mixed_ck, I.PASSAGES)}
+        passages = {m["epoch"]: m for m in I.PASSAGES.log(mixed_ck).metas()}
         assert passages[1]["n_hist_windows"] > 0
 
 
@@ -298,3 +299,58 @@ class TestDriverExpiry:
         for fam in I._FAMILIES:
             for name in fam.ledgers:
                 assert spark.read.parquet(fam.path(ck, name)).count() == 0
+
+    def test_driver_rewrite_is_byte_reproducible(self, spark, tmp_path):
+        """The kept rows are written in one order whatever the order the
+        ledger's part files list in (their names are random)."""
+        b0, b1, _ = _batches(spark)
+        g = _guard(spark, tmp_path / "g")
+        g.process_batch(b0, 0)
+        g.process_batch(b1, 1)
+        a, b = str(tmp_path / "a"), str(tmp_path / "b")
+        shutil.copytree(g.checkpoint_dir, a)
+        shutil.copytree(g.checkpoint_dir, b)
+        for fam in I._FAMILIES:
+            for name in fam.ledgers:
+                d = fam.path(b, name)
+                parts = sorted(f for f in os.listdir(d) if f.startswith("part-"))
+                assert len(parts) == 2
+                for i, f in enumerate(parts):
+                    os.rename(os.path.join(d, f), os.path.join(d, f"part-{len(parts) - i}-{f}"))
+        # now=2 keeps every row of both triggers
+        assert expire_ledgers(spark, a, now=2) == expire_ledgers(spark, b, now=2)
+
+        def ledger_bytes(ck, fam, name):
+            (part,) = [f for f in os.listdir(fam.path(ck, name)) if f.startswith("part-")]
+            with open(os.path.join(fam.path(ck, name), part), "rb") as f:
+                return f.read()
+
+        for fam in I._FAMILIES:
+            for name in fam.ledgers:
+                assert ledger_bytes(a, fam, name) == ledger_bytes(b, fam, name), name
+
+
+class TestUnreadableLineage:
+    @pytest.mark.parametrize("subdir", ["", "near", "emb"])
+    def test_trigger_raises_and_writes_nothing(self, spark, tmp_path, guard_path, subdir):
+        """An unreadable part in a family's lineage fails the next
+        trigger before any write, on either path, rather than treating
+        that family's shards as never committed."""
+        b0, b1, _ = _batches(spark)
+        g = _guard(spark, tmp_path)
+        g.process_batch(b0, 0)
+        with open(os.path.join(g.checkpoint_dir, subdir, "lineage", "part-corrupt.parquet"),
+                  "wb") as f:
+            f.write(b"not a parquet file")
+
+        def files():
+            return sorted(
+                (os.path.join(d, f), os.path.getsize(os.path.join(d, f)))
+                for root in (g.checkpoint_dir, g.clean_dir)
+                for d, _, fs in os.walk(root) for f in fs
+            )
+
+        before = files()
+        with pytest.raises(Exception, match="(?i)parquet"):
+            g.process_batch(b1, 1)
+        assert files() == before

@@ -383,19 +383,19 @@ class TestRound5StateBounding:
             compact_near_checkpoint,
             incremental_near_dup,
         )
-        from fuggetabouspark.dataops.incremental import NEAR, _load_state
+        from fuggetabouspark.dataops.incremental import NEAR, _family_state
 
         texts = [" ".join(f"t{j}v{i}" for j in range(40)) for i in range(3)]
         for i, t in enumerate(texts):
             incremental_near_dup(
                 spark, self._mk(spark, i, t), ck, now=i + 1, params=self.P
             ).unpersist()
-        before = _load_state(ck, NEAR)
+        before = _family_state(ck, NEAR)[1]
         sk = compact_near_checkpoint(spark, ck)
         assert sk is not None
         rows = spark.read.parquet(os.path.join(ck, "near", "sketch_state")).collect()
         assert [r.shard for r in rows] == [-1]
-        after = _load_state(ck, NEAR)
+        after = _family_state(ck, NEAR)[1]
         assert after.to_bytes() == before.to_bytes()
         # post-compaction ingest still near-dedups against ALL prior
         # shards: an exact clone of texts[1] matches with certainty
@@ -407,7 +407,7 @@ class TestRound5StateBounding:
         q.unpersist()
         # idempotent
         compact_near_checkpoint(spark, ck)
-        assert _load_state(ck, NEAR) is not None
+        assert _family_state(ck, NEAR)[1] is not None
 
     def test_expire_ledgers_bounds_state(self, spark, ck):
         from fuggetabouspark.dataops import (
@@ -489,7 +489,7 @@ class TestRound5StateBounding:
             StreamingIngestGuard,
             incremental_near_dup,
         )
-        from fuggetabouspark.dataops.incremental import NEAR, _metas
+        from fuggetabouspark.dataops.incremental import NEAR
 
         clean = os.path.join(ck, "clean")
         g = StreamingIngestGuard(
@@ -518,7 +518,7 @@ class TestRound5StateBounding:
         # both attempts' shards are in the near lineage for epoch 1 —
         # duplicate state rows are merge-all-safe and bounded by
         # compaction/expiry
-        epochs = [m.get("epoch") for m in _metas(ck, NEAR)]
+        epochs = [m.get("epoch") for m in NEAR.log(ck).metas()]
         assert epochs.count(1) == 2
 
     def test_many_shard_state_stays_bounded(self, spark, ck):
@@ -790,6 +790,32 @@ class TestIncrementalPassages:
         # committed-epoch replay: skipped, output unchanged
         g.process_batch(b1, 1)
         assert spark.read.parquet(clean).count() == 2
+
+    def test_spark_path_publishes_each_duplicate_id_row_once(self, spark, ck, guard_spark_path):
+        """A batch holding a doc id twice takes the guard's Spark path;
+        each surviving row is published once, masked in place — also
+        when its doc id repeats history passages."""
+        import os
+
+        from fuggetabouspark.dataops import StreamingIngestGuard
+
+        clean = os.path.join(ck, "clean")
+        g = StreamingIngestGuard(
+            spark, ck, clean_dir=clean, passages=True, passage_window=3,
+            params=self.P, passage_params=self.P, compact_every=None,
+        )
+        ddl = "doc_id long, text string"
+        g.process_batch(spark.createDataFrame(
+            [(1, "a b c d e"), (1, "a b c d e"), (2, "f g h i"), (3, "j k l m")], ddl
+        ), 0)
+        out0 = spark.read.parquet(clean).where("_epoch = 0")
+        assert sorted(r.doc_id for r in out0.collect()) == [1, 1, 2, 3]
+        g.process_batch(spark.createDataFrame(
+            [(7, "z a b c y"), (7, "z a b c y"), (8, "n o p")], ddl
+        ), 1)
+        out1 = sorted(tuple(r) for r in spark.read.parquet(clean).where("_epoch = 1")
+                      .select("doc_id", "text", "_passage_tokens_removed").collect())
+        assert out1 == [(7, "z y", 3), (7, "z y", 3), (8, "n o p", 0)]
 
     def test_passage_state_covers_published_survivors_only(self, spark, ck):
         """code-review r05 (third pass): a doc dropped by doc-level

@@ -18,10 +18,12 @@ Usage: python tools/check_contract.py [sf_dir] [only_query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _type_family(t) -> str:

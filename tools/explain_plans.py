@@ -8,10 +8,12 @@ no redundant exchanges. Usage: python tools/explain_plans.py
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def plan_of(df) -> str:
@@ -402,7 +404,7 @@ def main():
         lines.append(plan.strip()[:6000])
         lines.append("```")
         lines.append("")
-    open("/root/repo/PLANS.md", "w").write("\n".join(lines))
+    open(os.path.join(REPO, "PLANS.md"), "w").write("\n".join(lines))
     print("\n".join(f"{'OK ' if ok else 'FAIL'} {n}" for n, ok, _ in checks))
     spark.stop()
     sys.exit(0 if ok_all else 1)
