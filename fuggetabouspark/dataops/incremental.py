@@ -25,7 +25,7 @@ doc only suppresses a new clone while its fingerprint's latest
 RETAINED sighting is within ``window`` ticks, i.e. tick in
 [now - window + 1, now] — matching TimingBloomFilter.contains_batch
 exactly. Once history decays, the next clone survives and re-enters
-both the sketch and the ledger with its own tick.
+both the sketch and the ledger at its shard's tick.
 
 Scale shape per ingest: one shard-local shuffle (groupBy fp for the
 intra-shard first-occurrence), one broadcast probe map, one
@@ -156,6 +156,14 @@ _LOCAL_SCALARS = (
     ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType,
     BooleanType, StringType, BinaryType,
 )
+# The columns and geometry StreamingIngestGuard runs its families with:
+# the operators' own defaults, named once so the guard's Spark path (the
+# operators, called without them) and its driver path (the _local
+# helpers, which read them here) cannot drift.
+_TEXT_COL, _VEC_COL = "text", "embedding"
+_NEAR_THRESHOLD, _NEAR_NUM_HASHES, _NEAR_BANDS, _NEAR_ROWS_PER_BAND = 0.8, 64, 16, 4
+_PASSAGE_STRIDE = 1
+_EMB_THRESHOLD, _EMB_BITS, _EMB_TABLES = 0.9, 12, 8
 
 
 class _Family(NamedTuple):
@@ -292,16 +300,12 @@ def _family_state(checkpoint_dir: str, fam: _Family, exclude_epoch=None):
     return done, sk, raw
 
 
-def load_dedup_state(spark, checkpoint_dir: str, exclude_epoch=None,
-                     with_raw: bool = False):
+def load_dedup_state(spark, checkpoint_dir: str):
     """Merged membership sketch from all COMPLETED shards (those with
     a durable lineage row), or None if no shard ever completed — the
     exact family's union-rule ShardLog load (fuggetabouspark.state
-    states the recovery rules). ``exclude_epoch`` drops the shards of
-    an earlier attempt of that stream epoch; ``with_raw=True`` returns
-    ``(sketch, raw_payload_or_None)``."""
-    _, sk, raw = _family_state(checkpoint_dir, EXACT, exclude_epoch)
-    return (sk, raw) if with_raw else sk
+    states the recovery rules)."""
+    return _family_state(checkpoint_dir, EXACT)[1]
 
 
 def _compact(checkpoint_dir: str, fam: _Family):
@@ -338,22 +342,17 @@ def _ledger(spark, checkpoint_dir: str, fam: _Family, name: str, done: list[int]
     return df
 
 
-def ledger_df(
-    spark, checkpoint_dir: str, completed_only: bool = True, exclude_epoch=None
-) -> DataFrame | None:
-    """The fp ledger, restricted (by default) to completed shards so a
-    half-written ingest's rows are invisible — the same recovery rule
-    as load_dedup_state."""
+def ledger_df(spark, checkpoint_dir: str) -> DataFrame | None:
+    """The fp ledger, restricted to completed shards so a half-written
+    ingest's rows are invisible — the same recovery rule as
+    load_dedup_state."""
     df = _read_swap(spark, EXACT.path(checkpoint_dir, "fp_ledger"), LEDGER_DDL)
-    if df is None or not completed_only:
+    if df is None:
         return df
-    done = EXACT.log(checkpoint_dir).done(exclude_epoch)
-    return df.where(F.col("shard").isin(done))
+    return df.where(F.col("shard").isin(EXACT.log(checkpoint_dir).done()))
 
 
-def expire_ledgers(
-    spark, checkpoint_dir: str, now: int, window: int | None = None
-) -> dict:
+def expire_ledgers(spark, checkpoint_dir: str, now: int) -> dict:
     """Prune DECAYED rows from every ledger under ``checkpoint_dir`` —
     every family's ledgers that exist (exact fp; near band and sig;
     passage; emb bucket and vec). Without this, ledgers grow
@@ -362,15 +361,17 @@ def expire_ledgers(
     docs)" silently becomes O(all docs ever) on a month-long ingest
     (VERDICT r04 "What's missing" #1).
 
-    A row is retained iff ``tick >= now - window + 1`` — the oldest
-    tick any future query can see, because query windows may only ever
-    NARROW a sketch's configured window (queries._with_window) and
-    ``now`` is monotone. ``window`` defaults to each family's own
-    sketch window_ticks (a family without a sketch is skipped). Each
-    ledger is rewritten via the same aside-rename swap as compaction
-    (crash between renames → _read_swap falls back to the _old copy).
-    Safe and idempotent any time; the sketch itself needs no pruning —
-    it decays by construction. Returns {ledger_name: rows_kept}.
+    A family's row is retained iff ``tick >= now - w + 1``, with ``w``
+    that family's own sketch window_ticks (a family without a sketch is
+    skipped): the oldest tick any future query can see, because query
+    windows may only ever NARROW a sketch's window
+    (queries._query_window) and ``now`` is monotone. A narrower ``w``
+    would drop rows that a later in-window sketch hit must verify
+    against, so a real duplicate would survive. Each ledger is
+    rewritten via the same aside-rename swap as compaction (crash
+    between renames → _read_swap falls back to the _old copy). Safe
+    and idempotent any time; the sketch itself needs no pruning — it
+    decays by construction. Returns {ledger_name: rows_kept}.
 
     A ledger of at most _LOCAL_TRIGGER_ROWS rows (counted from the
     parquet footers) is filtered and rewritten on the driver: one
@@ -382,14 +383,11 @@ def expire_ledgers(
 
     kept: dict[str, int] = {}
     for fam in _FAMILIES:
-        w = window
-        if w is None:
-            # one state load per family, not per ledger
-            sk = _family_state(checkpoint_dir, fam)[1]
-            if sk is None:
-                continue
-            w = sk_window(sk)
-        lo = int(now) - int(w) + 1
+        # one state load per family, not per ledger
+        sk = _family_state(checkpoint_dir, fam)[1]
+        if sk is None:
+            continue
+        lo = int(now) - sk_window(sk) + 1
         for name, (_, ddl) in fam.ledgers.items():
             path = fam.path(checkpoint_dir, name)
             src = _live(path)
@@ -425,38 +423,20 @@ def completed_shards(spark, checkpoint_dir: str) -> list[dict]:
     return EXACT.log(checkpoint_dir).metas()
 
 
-def _query_window(sk, window: int | None):
-    """``(sketch, w)``: the query window ``w`` (None = the sketch's own
-    window_ticks) may only NARROW the sketch's window — older sightings
-    may already be decayed — and the sketch re-windowed to ``w`` when
-    it differs from its own."""
-    from ..queries import _with_window, sk_window
-
-    own = sk_window(sk)
-    w = window if window is not None else own
-    if w > own:
-        raise ValueError(
-            f"window {w} exceeds the sketch's window_ticks "
-            f"{own}: older sightings may already be decayed, "
-            "so widening at query time would produce false negatives"
-        )
-    return (sk if w == own else _with_window(sk, w)), w
-
-
 def _probe(spark, checkpoint_dir: str, fam: _Family, keys: DataFrame, now: int,
            window: int | None, exclude_epoch):
     """Probe ``fam``'s broadcast sketch with the one-column frame
     ``keys``: ``(hits, w, done)`` — the DISTINCT keys the sketch has
     seen within the query window ``w`` (same column name as ``keys``),
-    the window itself (_query_window), and the completed shards the
-    state was merged from (the shards the ledger verify must read).
+    the window itself (queries._query_window), and the completed shards
+    the state was merged from (the shards the ledger verify must read).
     None when the family has no history yet.
 
     The stored payload goes straight to the broadcast (content-cached)
     when one row makes up the state and no re-window is needed,
     skipping a zlib re-compress of the bucket array per probe (round
     6)."""
-    from ..queries import seen_within_payloads
+    from ..queries import _query_window, seen_within_payloads
 
     done, stored, raw = _family_state(checkpoint_dir, fam, exclude_epoch)
     if stored is None:
@@ -476,17 +456,18 @@ def _probe(spark, checkpoint_dir: str, fam: _Family, keys: DataFrame, now: int,
     return hits, w, done
 
 
-def _probe_local(checkpoint_dir: str, fam: _Family, keys, now: int,
-                 window: int | None, exclude_epoch):
-    """_probe on the driver, for the int64 key array ``keys``:
-    ``(hits, w, done)`` with ``hits`` the sorted distinct keys the
-    driver-held sketch has seen within ``w`` — no broadcast, no job."""
+def _probe_local(checkpoint_dir: str, fam: _Family, keys, now: int, exclude_epoch):
+    """_probe on the driver, for the int64 key array ``keys``, at the
+    sketch's own window (the guard never narrows it): ``(hits, w,
+    done)`` with ``hits`` the sorted distinct keys the driver-held
+    sketch has seen within ``w`` — no broadcast, no job."""
+    from ..queries import sk_window
+
     done, sk, _ = _family_state(checkpoint_dir, fam, exclude_epoch)
     if sk is None:
         return None
-    sk, w = _query_window(sk, window)
     keys = np.unique(np.asarray(keys, np.int64))
-    return keys[sk.contains_batch(keys, now)], w, done
+    return keys[sk.contains_batch(keys, now)], sk_window(sk), done
 
 
 def _ledger_local(checkpoint_dir: str, fam: _Family, name: str, done: list[int],
@@ -569,13 +550,15 @@ def _commit_shard(
     log.commit(shard, delta, {"now": int(now), **meta}, ledgers_then_hook)
 
 
-def _shard_fps(new_df: DataFrame, text_col: str, tick_col, now: int) -> DataFrame:
+def _shard_fps(new_df: DataFrame, text_col: str, now: int) -> DataFrame:
     """The shard's (doc_id, fp, tick) frame — the only shape the exact
-    incremental operator ever looks at (one row per doc, ~25 B)."""
+    incremental operator ever looks at (one row per doc, ~25 B). Every
+    doc's tick is the shard's ``now``, as in the other three
+    families."""
     return new_df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.xxhash64(F.col(text_col)).alias("fp"),
-        (tick_col if tick_col is not None else F.lit(now)).cast("long").alias("tick"),
+        F.lit(now).cast("long").alias("tick"),
     )
 
 
@@ -586,7 +569,6 @@ def annotate_against_history(
     now: int,
     window: int | None = None,
     text_col: str = "text",
-    tick_col=None,
     exclude_epoch=None,
     fps_df: DataFrame | None = None,
 ) -> DataFrame:
@@ -596,7 +578,8 @@ def annotate_against_history(
     the ledger verify a BroadcastHashJoin — instead of a hand-built
     replica (code-review r04). Callers who want the flags should use
     incremental_dedup(update_state=False): the raw plan re-reads the
-    checkpoint on every action.
+    checkpoint on every action. ``window`` narrows the query window
+    as in incremental_dedup.
 
     ``fps_df``: a pre-computed (ideally localCheckpoint()ed) frame of
     _shard_fps(new_df, ...) — the returned plan references the fp
@@ -604,7 +587,7 @@ def annotate_against_history(
     left side), so a caller that materializes it once saves two
     scan+hash passes over the shard text per action (round 6, guide
     §2.4; incremental_dedup does exactly this)."""
-    fps = fps_df if fps_df is not None else _shard_fps(new_df, text_col, tick_col, now)
+    fps = fps_df if fps_df is not None else _shard_fps(new_df, text_col, now)
 
     # ---- history probe: broadcast sketch, then exact ledger verify ----
     probe = _probe(
@@ -653,8 +636,7 @@ def incremental_dedup(
     now: int,
     window: int | None = None,
     params=None,
-    text_col: str = "text",
-    tick_col=None,
+    text_col: str = _TEXT_COL,
     partitions: int | None = None,
     update_state: bool = True,
     meta_extra: dict | None = None,
@@ -662,10 +644,11 @@ def incremental_dedup(
     exclude_epoch=None,
 ) -> DataFrame:
     """Dedup ``new_df`` against corpus history AND itself; optionally
-    append the survivors to the history state. Returns the annotated
-    frame (ANNOTATED_DDL), local-checkpointed so the flags are frozen
-    before the state writes (see inline note) and the caller's actions
-    never recompute the probe:
+    append the survivors to the history state at tick ``now`` (every
+    doc of a shard is one sighting at the shard's tick). Returns the
+    annotated frame (ANNOTATED_DDL), local-checkpointed so the flags
+    are frozen before the state writes (see inline note) and the
+    caller's actions never recompute the probe:
 
     - ``is_dup_history``: an EARLIER ingest retained a doc with the
       same text fingerprint whose tick is within the window —
@@ -687,7 +670,8 @@ def incremental_dedup(
     capacity for the expected corpus-wide distinct count or cap the
     expected shard count via params.max_fill_factor yourself.
     ``window`` narrows the query window below the sketch's configured
-    ``window_ticks`` (never above — queries._with_window semantics).
+    ``window_ticks``; a wider one raises ValueError, because older
+    sightings may already have decayed (queries._query_window).
     ``partitions`` caps the sketch-delta partials the state commit
     collects to the driver (``coalesce``, no shuffle): driver memory
     for the delta is at most ``partitions`` × payload; None keeps the
@@ -698,10 +682,9 @@ def incremental_dedup(
     # shard per reference inside the localCheckpoint job below (round
     # 6, guide §2.4 — measured 3 corpus scans in one job). Shard-sized
     # rows only (doc_id, fp, tick ≈ 25 B/doc).
-    fps = _shard_fps(new_df, text_col, tick_col, now).localCheckpoint(eager=True)
+    fps = _shard_fps(new_df, text_col, now).localCheckpoint(eager=True)
     ann = annotate_against_history(
-        spark, new_df, checkpoint_dir, now,
-        window=window, text_col=text_col, tick_col=tick_col,
+        spark, new_df, checkpoint_dir, now, window=window, text_col=text_col,
         exclude_epoch=exclude_epoch, fps_df=fps,
     )
     # localCheckpoint, not persist: the annotated plan READS the ledger
@@ -724,12 +707,8 @@ def incremental_dedup(
             F.sum(F.col("is_dup_intra").cast("long")).alias("i"),
             F.sum(kept.cast("long")).alias("r"),
         ).collect()[0]
-        # the survivors' fps enter the sketch and the ledger at their own
-        # tick (per-batch dedup keeps max tick, which for distinct fps
-        # is THE tick)
-        survivors = ann.where(kept)
         _commit_shard(
-            checkpoint_dir, EXACT, {"fp_ledger": survivors}, F.col("tick"), now,
+            checkpoint_dir, EXACT, {"fp_ledger": ann.where(kept)}, F.lit(now), now,
             params, partitions,
             {
                 "n_docs": int(counts["n"]),
@@ -770,9 +749,17 @@ class StreamingIngestGuard:
       epoch is replaced on re-run (epoch-partitioned dynamic
       overwrite).
 
-    ``now_for_epoch`` maps epoch_id → the dedup clock tick (default
-    epoch_id + 1, monotone per trigger); pass your own to tie decay to
-    event time.
+    Fixed inputs: a batch's ``doc_id`` keys its docs, ``text`` holds
+    their text and, with ``embeddings=True``, ``embedding`` their
+    vectors. The dedup clock tick of epoch e is now_for_epoch(e) = e + 1,
+    and every family is probed at its sketch's own window_ticks (set
+    through ``params`` / ``near_params`` / ``passage_params`` /
+    ``emb_params``). The near family runs MinHash-LSH at threshold 0.8
+    with 64 hashes in 16 bands of 4 rows, the passage family a stride
+    of 1, the embedding family cosine 0.9 over 8 tables of 12 bits:
+    the operators' own defaults, defined once at the top of this module
+    (_TEXT_COL, _VEC_COL, _NEAR_*, _PASSAGE_STRIDE, _EMB_*) for both of
+    the paths below. To vary them, call the operators directly.
 
     Commit path: every family's sketch delta, lineage row and
     compaction row is written from the driver (its ShardLog: a pyarrow
@@ -815,26 +802,25 @@ class StreamingIngestGuard:
     passages of a doc that doc-level dedup then drops would mask
     future copies with no published keeper anywhere): surviving docs
     are published with every span that repeats a RETAINED historical
-    passage masked out of ``text_col`` (drop-all-on-the-new-side;
+    passage masked out of ``text`` (drop-all-on-the-new-side;
     n_tokens_removed appended as ``_passage_tokens_removed``).
     Passage state commits under its own lineage strictly before the
     exact marker, with the same exclude_epoch replay protection;
-    window/stride via passage_window / passage_stride, sketch sizing
-    via passage_params (capacity ≈ retained distinct window fps).
-    Requires ``clean_dir`` (the survivor set is only defined there).
+    span length via passage_window, sketch sizing via passage_params
+    (capacity ≈ retained distinct window fps). Requires ``clean_dir``
+    (the survivor set is only defined there).
 
     ``embeddings=True`` (round 5) adds the SEMANTIC granularity: each
-    batch's ``emb_vec_col`` vectors (keyed by doc_id) are FLAGGED
+    batch's ``embedding`` vectors (keyed by doc_id) are FLAGGED
     against history by incremental_embedding_dedup, and the PUBLISHED
     survivors' vectors are committed to semantic history inside the
     clean-publish hook (commit_emb_state — flags on the full batch,
     state from survivors only, so no unpublished vector can suppress
     future docs), all strictly before the exact epoch marker.
-    ``emb_dim`` is required; geometry via emb_bits/emb_tables, sizing
-    via emb_params. Scope note: INTRA-batch semantic duplicates are
-    not filtered (same scoping as the operator itself — run
-    embedding_near_dup on the batch upstream if needed); both copies
-    publish and both vectors enter history.
+    ``emb_dim`` is required; sizing via emb_params. Scope note:
+    INTRA-batch semantic duplicates are not filtered (same scoping as
+    the operator itself — run embedding_near_dup on the batch upstream
+    if needed); both copies publish and both vectors enter history.
     """
 
     def __init__(
@@ -843,48 +829,29 @@ class StreamingIngestGuard:
         checkpoint_dir: str,
         clean_dir: str | None = None,
         params=None,
-        window: int | None = None,
-        text_col: str = "text",
         partitions: int | None = None,
-        now_for_epoch=None,
         compact_every: int | None = 64,
         near: bool = False,
-        near_threshold: float = 0.8,
-        near_num_hashes: int = 64,
-        near_bands: int = 16,
-        near_rows_per_band: int = 4,
         near_params=None,
         expire_every: int | None = None,
         passages: bool = False,
         passage_window: int = 50,
-        passage_stride: int = 1,
         passage_params=None,
         embeddings: bool = False,
         emb_dim: int | None = None,
-        emb_threshold: float = 0.9,
-        emb_bits: int = 12,
-        emb_tables: int = 8,
-        emb_vec_col: str = "embedding",
         emb_params=None,
     ):
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
         self.clean_dir = clean_dir
         self.params = params
-        self.window = window
-        self.text_col = text_col
         self.partitions = partitions
-        self.now_for_epoch = now_for_epoch or (lambda e: int(e) + 1)
         # every batch reloads-and-merges the sketch rows of all shards
         # (O(shards × payload)); periodic compaction folds them into
         # one shard=-1 row so per-trigger cost stays O(compact_every)
         # instead of growing forever (code-review r04)
         self.compact_every = compact_every
         self.near = near
-        self.near_threshold = near_threshold
-        self.near_num_hashes = near_num_hashes
-        self.near_bands = near_bands
-        self.near_rows_per_band = near_rows_per_band
         self.near_params = near_params
         self.expire_every = expire_every
         if passages and clean_dir is None:
@@ -894,7 +861,6 @@ class StreamingIngestGuard:
             )
         self.passages = passages
         self.passage_window = passage_window
-        self.passage_stride = passage_stride
         self.passage_params = passage_params
         if embeddings and emb_dim is None:
             raise ValueError("embeddings=True requires emb_dim")
@@ -910,12 +876,13 @@ class StreamingIngestGuard:
             )
         self.embeddings = embeddings
         self.emb_dim = emb_dim
-        self.emb_threshold = emb_threshold
-        self.emb_bits = emb_bits
-        self.emb_tables = emb_tables
-        self.emb_vec_col = emb_vec_col
         self.emb_params = emb_params
         self._batches_done = 0
+
+    def now_for_epoch(self, epoch_id: int) -> int:
+        """The dedup clock tick of stream epoch ``epoch_id``: epoch + 1,
+        monotone per trigger."""
+        return int(epoch_id) + 1
 
     def process_batch(self, batch_df, epoch_id: int) -> None:
         """foreachBatch body; callable directly for batch catch-up.
@@ -928,9 +895,7 @@ class StreamingIngestGuard:
         if any(m.get("epoch") == int(epoch_id) for m in done):
             return  # fully committed (incl. clean output — see class doc)
         ep, now = int(epoch_id), self.now_for_epoch(epoch_id)
-        tbl = _read_local(
-            batch_df, self.text_col, self.near or self.passages, self.passages
-        )
+        tbl = _read_local(batch_df, _TEXT_COL, self.near or self.passages, self.passages)
         if tbl is None or not self._process_local(tbl, ep, now):
             self._process_spark(batch_df, ep, now)
         self._batches_done += 1
@@ -954,20 +919,13 @@ class StreamingIngestGuard:
         ids, n = tbl.column("_fgs_id"), tbl.num_rows
         keep = np.ones(n, bool)  # survives every doc-level family
         if self.embeddings:
-            keep &= ~_emb_flags_local(
-                ck, ids, tbl.column(self.emb_vec_col), now, self.emb_dim,
-                self.emb_threshold, self.emb_bits, self.emb_tables, self.window, ep,
-            )
+            keep &= ~_emb_flags_local(ck, ids, tbl.column(_VEC_COL), now, self.emb_dim, ep)
         if self.near:
-            near = _near_local(
-                ck, ids, tbl.column("_fgs_wh"), now, self.near_threshold,
-                self.near_num_hashes, self.near_bands, self.near_rows_per_band,
-                self.window, ep,
-            )
+            near = _near_local(ck, ids, tbl.column("_fgs_wh"), now, ep)
             if near is None:
                 return False
         fps = tbl.column("_fgs_fp").to_numpy()
-        hist, intra = _exact_local(ck, ids, fps, now, self.window, ep)
+        hist, intra = _exact_local(ck, ids, fps, now, ep)
         if self.near:
             near_hist, near_intra, sig, bkeys = near
             near_keep = ~near_hist & ~near_intra
@@ -976,7 +934,7 @@ class StreamingIngestGuard:
                 {
                     "band_ledger": pa.table({
                         "bkey": bkeys[near_keep].ravel(),
-                        "doc_id": ids.take(np.repeat(np.flatnonzero(near_keep), self.near_bands)),
+                        "doc_id": ids.take(np.repeat(np.flatnonzero(near_keep), _NEAR_BANDS)),
                     }),
                     "sig_ledger": pa.table({
                         "doc_id": ids.filter(pa.array(near_keep)),
@@ -1022,19 +980,17 @@ class StreamingIngestGuard:
         ids = out.column("_fgs_id")
         if self.embeddings:
             _emb_commit_local(
-                self.checkpoint_dir, ids, out.column(self.emb_vec_col), now,
-                self.emb_dim, self.emb_bits, self.emb_tables, self.emb_params,
-                {"epoch": ep},
+                self.checkpoint_dir, ids, out.column(_VEC_COL), now, self.emb_dim,
+                self.emb_params, {"epoch": ep},
             )
         names = [c for c in out.schema.names if not c.startswith("_fgs_")]
         cols = [out.column(c) for c in names]
         if self.passages:
             text, removed = _passages_local(
                 self.checkpoint_dir, out, now, self.passage_window,
-                self.passage_stride, self.window, self.passage_params,
-                {"epoch": ep}, ep,
+                self.passage_params, {"epoch": ep}, ep,
             )
-            cols[names.index(self.text_col)] = text
+            cols[names.index(_TEXT_COL)] = text
             names.append("_passage_tokens_removed")
             cols.append(removed)
         os.makedirs(self.clean_dir, exist_ok=True)
@@ -1059,12 +1015,9 @@ class StreamingIngestGuard:
             # that suppresses future docs (code-review r05 fifth
             # pass — the passages survivor rule, applied here)
             emb_ann = incremental_embedding_dedup(
-                self.spark, batch_df,
-                self.checkpoint_dir, now=now, dim=self.emb_dim,
-                threshold=self.emb_threshold, bits=self.emb_bits,
-                tables=self.emb_tables, window=self.window,
-                params=self.emb_params, partitions=self.partitions,
-                vec_col=self.emb_vec_col, id_col="doc_id",
+                self.spark, batch_df, self.checkpoint_dir, now=now,
+                dim=self.emb_dim, params=self.emb_params,
+                partitions=self.partitions, id_col="doc_id",
                 update_state=False, exclude_epoch=ep,
             )
 
@@ -1077,12 +1030,7 @@ class StreamingIngestGuard:
             # probes (see class doc).
             near_ann = incremental_near_dup(
                 self.spark, batch_df, self.checkpoint_dir, now=now,
-                threshold=self.near_threshold,
-                num_hashes=self.near_num_hashes,
-                bands=self.near_bands,
-                rows_per_band=self.near_rows_per_band,
-                window=self.window, params=self.near_params,
-                text_col=self.text_col, partitions=self.partitions,
+                params=self.near_params, partitions=self.partitions,
                 meta_extra={"epoch": ep}, exclude_epoch=ep,
             )
 
@@ -1125,11 +1073,8 @@ class StreamingIngestGuard:
                 # but the shard is epoch-tagged for it anyway
                 commit_emb_state(
                     self.spark, out, self.checkpoint_dir, now=now,
-                    dim=self.emb_dim, bits=self.emb_bits,
-                    tables=self.emb_tables, params=self.emb_params,
-                    vec_col=self.emb_vec_col, id_col="doc_id",
-                    partitions=self.partitions,
-                    meta_extra={"epoch": ep},
+                    dim=self.emb_dim, params=self.emb_params, id_col="doc_id",
+                    partitions=self.partitions, meta_extra={"epoch": ep},
                 )
             if self.passages:
                 # passage state commits HERE — survivors only, so
@@ -1137,9 +1082,8 @@ class StreamingIngestGuard:
                 # lineage lands strictly before the exact marker
                 pann = incremental_passages(
                     self.spark, out, self.checkpoint_dir, now=now,
-                    window=self.passage_window, stride=self.passage_stride,
-                    query_window=self.window, params=self.passage_params,
-                    text_col=self.text_col, partitions=self.partitions,
+                    window=self.passage_window, params=self.passage_params,
+                    partitions=self.partitions,
                     meta_extra={"epoch": ep}, exclude_epoch=ep,
                 )
                 # the survivors are masked in place, each row its own
@@ -1153,9 +1097,9 @@ class StreamingIngestGuard:
                 out = (
                     out.withColumn("_k", F.col("doc_id").cast("string"))
                     .join(drops, "_k", "left")
-                    .withColumn("_words", F.split(F.col(self.text_col), " "))
+                    .withColumn("_words", F.split(F.col(_TEXT_COL), " "))
                     .withColumn("_kept", _kept_words(self.passage_window))
-                    .withColumn(self.text_col, F.array_join("_kept", " "))
+                    .withColumn(_TEXT_COL, F.array_join("_kept", " "))
                     .withColumn(
                         "_passage_tokens_removed",
                         (F.size("_words") - F.size("_kept")).cast("int"),
@@ -1169,16 +1113,9 @@ class StreamingIngestGuard:
             ).partitionBy("_epoch").parquet(self.clean_dir)
 
         incremental_dedup(
-            self.spark,
-            batch_df,
-            self.checkpoint_dir,
-            now=now,
-            window=self.window,
-            params=self.params,
-            text_col=self.text_col,
-            partitions=self.partitions,
-            meta_extra={"epoch": ep},
-            pre_lineage_hook=publish_clean,
+            self.spark, batch_df, self.checkpoint_dir, now=now,
+            params=self.params, partitions=self.partitions,
+            meta_extra={"epoch": ep}, pre_lineage_hook=publish_clean,
             exclude_epoch=ep,
         )
 
@@ -1298,13 +1235,13 @@ def incremental_near_dup(
     new_df: DataFrame,
     checkpoint_dir: str,
     now: int,
-    threshold: float = 0.8,
-    num_hashes: int = 64,
-    bands: int = 16,
-    rows_per_band: int = 4,
+    threshold: float = _NEAR_THRESHOLD,
+    num_hashes: int = _NEAR_NUM_HASHES,
+    bands: int = _NEAR_BANDS,
+    rows_per_band: int = _NEAR_ROWS_PER_BAND,
     window: int | None = None,
     params=None,
-    text_col: str = "text",
+    text_col: str = _TEXT_COL,
     partitions: int | None = None,
     update_state: bool = True,
     meta_extra: dict | None = None,
@@ -1479,10 +1416,10 @@ def incremental_passages(
     checkpoint_dir: str,
     now: int,
     window: int = 50,
-    stride: int = 1,
+    stride: int = _PASSAGE_STRIDE,
     query_window: int | None = None,
     params=None,
-    text_col: str = "text",
+    text_col: str = _TEXT_COL,
     partitions: int | None = None,
     update_state: bool = True,
     meta_extra: dict | None = None,
@@ -1934,16 +1871,9 @@ def _emb_candidates(led_hits, hvec_rows) -> tuple:
     ridx_np = ridx_np.astype(np.int32)
     order = np.argsort(bkeys, kind="stable")
     sb, partner_rows = bkeys[order], ridx_np[order]
-    if sb.size:
-        first = np.empty(sb.size, dtype=bool)
-        first[0] = True
-        first[1:] = sb[1:] != sb[:-1]
-        starts = np.flatnonzero(first)
-        uniq_bkeys = sb[starts]
-        csr_off = np.append(starts, sb.size).astype(np.int64)
-    else:
-        uniq_bkeys = sb
-        csr_off = np.zeros(1, np.int64)
+    starts = _run_starts(sb)
+    uniq_bkeys = sb[starts]
+    csr_off = np.append(starts, sb.size).astype(np.int64)
     # ids stay a pyarrow Array end to end: it pickles via Arrow IPC
     # (no 10^5-element Python string list), and the kernel can .take()
     # it directly instead of rebuilding a string array per task
@@ -2084,12 +2014,12 @@ def incremental_embedding_dedup(
     checkpoint_dir: str,
     now: int,
     dim: int,
-    threshold: float = 0.9,
-    bits: int = 12,
-    tables: int = 8,
+    threshold: float = _EMB_THRESHOLD,
+    bits: int = _EMB_BITS,
+    tables: int = _EMB_TABLES,
     window: int | None = None,
     params=None,
-    vec_col: str = "embedding",
+    vec_col: str = _VEC_COL,
     id_col: str = "vec_id",
     partitions: int | None = None,
     update_state: bool = True,
@@ -2162,10 +2092,10 @@ def commit_emb_state(
     checkpoint_dir: str,
     now: int,
     dim: int,
-    bits: int = 12,
-    tables: int = 8,
+    bits: int = _EMB_BITS,
+    tables: int = _EMB_TABLES,
     params=None,
-    vec_col: str = "embedding",
+    vec_col: str = _VEC_COL,
     id_col: str = "vec_id",
     partitions: int | None = None,
     meta_extra: dict | None = None,
@@ -2231,15 +2161,14 @@ def _read_local(batch_df: DataFrame, text_col: str, wh: bool, words: bool):
     return _read_bounded(batch_df, cols, "_fgs_id", text_col, _LOCAL_TRIGGER_ROWS, None, wh, words)
 
 
-def _exact_local(checkpoint_dir: str, ids, fps: np.ndarray, now: int, window,
-                 exclude_epoch):
+def _exact_local(checkpoint_dir: str, ids, fps: np.ndarray, now: int, exclude_epoch):
     """annotate_against_history's flags over a driver-held batch
     (unique string ids, int64 fingerprints): ``(is_dup_history,
     is_dup_intra)``. Same rules: a history dup's fp is in the sketch
     AND in an fp-ledger row of a completed shard inside the window; an
     intra dup is any other doc that is not its fp's min doc id."""
     hist = np.zeros(len(ids), bool)
-    probe = _probe_local(checkpoint_dir, EXACT, fps, now, window, exclude_epoch)
+    probe = _probe_local(checkpoint_dir, EXACT, fps, now, exclude_epoch)
     if probe is not None and probe[0].size:
         hits, w, done = probe
         led = _ledger_local(checkpoint_dir, EXACT, "fp_ledger", done, "fp",
@@ -2275,10 +2204,9 @@ def _lsh_pairs(buckets: np.ndarray, rank: np.ndarray):
     return code // n, code % n
 
 
-def _near_local(checkpoint_dir: str, ids, wh, now: int, threshold: float,
-                num_hashes: int, bands: int, rows_per_band: int, window,
-                exclude_epoch):
-    """incremental_near_dup's flags over a driver-held batch:
+def _near_local(checkpoint_dir: str, ids, wh, now: int, exclude_epoch):
+    """incremental_near_dup's flags over a driver-held batch, at the
+    guard's geometry (_NEAR_*):
     ``(is_dup_history, is_dup_intra, sig, bkeys)`` with the signature
     column and the (docs, bands) band keys the commit appends — or None
     when the batch has more than _LOCAL_NEAR_PAIRS intra-batch
@@ -2286,15 +2214,16 @@ def _near_local(checkpoint_dir: str, ids, wh, now: int, threshold: float,
     xxhash64(band, xxhash64(slice(sig))) bit for bit
     (dedup._band_buckets); a history dup shares a sketch-hit band key
     with a retained in-window doc whose signature match fraction
-    reaches ``threshold``; an intra dup is any other doc that is not
+    reaches the threshold; an intra dup is any other doc that is not
     the min id of its cluster — connected components over the doc pairs
-    sharing a (band, bucket) whose match fraction reaches
-    ``threshold``."""
+    sharing a (band, bucket) whose match fraction reaches the
+    threshold."""
     from .dedup import _band_buckets, _cc_rounds, _minhash_sigs, _sig_list
 
+    threshold, num_hashes, bands = _NEAR_THRESHOLD, _NEAR_NUM_HASHES, _NEAR_BANDS
     n = len(ids)
     sigs = _minhash_sigs(wh, num_hashes, 3)
-    buckets = _band_buckets(sigs, bands, rows_per_band)
+    buckets = _band_buckets(sigs, bands, _NEAR_ROWS_PER_BAND)
     bkeys = spark_xxhash64(
         np.tile(np.arange(bands, dtype=np.int32), n), buckets.ravel()
     ).reshape(n, bands)
@@ -2311,7 +2240,7 @@ def _near_local(checkpoint_dir: str, ids, wh, now: int, threshold: float,
         )
 
     hist = np.zeros(n, bool)
-    probe = _probe_local(checkpoint_dir, NEAR, bkeys.ravel(), now, window, exclude_epoch)
+    probe = _probe_local(checkpoint_dir, NEAR, bkeys.ravel(), now, exclude_epoch)
     if probe is not None and probe[0].size:
         hits, w, done = probe
         hit = np.isin(bkeys.ravel(), hits)
@@ -2337,17 +2266,17 @@ def _near_local(checkpoint_dir: str, ids, wh, now: int, threshold: float,
 
 
 def _emb_flags_local(checkpoint_dir: str, ids, vecs, now: int, dim: int,
-                     threshold: float, bits: int, tables: int, window,
                      exclude_epoch) -> np.ndarray:
     """incremental_embedding_dedup's is_emb_dup_history over a
-    driver-held batch: the sketch-hit bucket-ledger rows and the
-    candidates' vectors feed the verify kernel (_emb_verify) directly —
-    the same candidate state the Spark path broadcasts."""
-    _emb_check_geometry(checkpoint_dir, bits, tables, dim)
-    keys = _emb_bucket_keys(dim, bits, tables)
+    driver-held batch, at the guard's geometry (_EMB_*): the sketch-hit
+    bucket-ledger rows and the candidates' vectors feed the verify
+    kernel (_emb_verify) directly — the same candidate state the Spark
+    path broadcasts."""
+    _emb_check_geometry(checkpoint_dir, _EMB_BITS, _EMB_TABLES, dim)
+    keys = _emb_bucket_keys(dim, _EMB_BITS, _EMB_TABLES)
     _, bkey = keys(vecs)  # the key kernel's null / ragged guards
     dup = np.zeros(len(ids), bool)
-    probe = _probe_local(checkpoint_dir, EMB, bkey, now, window, exclude_epoch)
+    probe = _probe_local(checkpoint_dir, EMB, bkey, now, exclude_epoch)
     if probe is None or not probe[0].size:
         return dup
     hits, w, done = probe
@@ -2359,15 +2288,19 @@ def _emb_flags_local(checkpoint_dir: str, ids, vecs, now: int, dim: int,
                               pc.unique(led_hits.column("hist_vec_id")),
                               ["vec_id", "embedding"])
     src = pa.RecordBatch.from_arrays([ids, vecs], ["vec_id", "embedding"])
-    scored = _emb_verify(src, _emb_candidates(led_hits, hvec_rows), keys, threshold, tables)
+    scored = _emb_verify(
+        src, _emb_candidates(led_hits, hvec_rows), keys, _EMB_THRESHOLD, _EMB_TABLES
+    )
     if scored is not None:
         dup = pc.is_in(ids, value_set=scored["vec_id"]).to_numpy(zero_copy_only=False)
     return dup
 
 
-def _emb_commit_local(checkpoint_dir: str, ids, vecs, now: int, dim: int,
-                      bits: int, tables: int, params, meta_extra: dict) -> None:
-    """commit_emb_state over driver-held survivors."""
+def _emb_commit_local(checkpoint_dir: str, ids, vecs, now: int, dim: int, params,
+                      meta_extra: dict) -> None:
+    """commit_emb_state over driver-held survivors, at the guard's
+    geometry (_EMB_*)."""
+    bits, tables = _EMB_BITS, _EMB_TABLES
     _emb_check_geometry(checkpoint_dir, bits, tables, dim)
     src = pa.RecordBatch.from_arrays([ids, vecs], ["vec_id", "embedding"])
     n = len(ids)
@@ -2385,23 +2318,24 @@ def _emb_commit_local(checkpoint_dir: str, ids, vecs, now: int, dim: int,
     )
 
 
-def _passages_local(checkpoint_dir: str, out, now: int, window: int, stride: int,
-                    query_window, params, meta_extra: dict, exclude_epoch):
-    """incremental_passages then mask_against_history over the
-    driver-held survivors ``out`` (a _read_local batch): commits the
-    passage shard and returns the masked text and
-    n_tokens_removed columns. Same rules: a history window's fp is in
-    the sketch AND in a passage-ledger row of a completed shard inside
-    the window; a new fp enters history through its first occurrence
-    that overlaps no history window of its doc, keeper = min (doc_id,
-    pos); the mask drops every word of every history window."""
+def _passages_local(checkpoint_dir: str, out, now: int, window: int, params,
+                    meta_extra: dict, exclude_epoch):
+    """incremental_passages (at stride _PASSAGE_STRIDE) then
+    mask_against_history over the driver-held survivors ``out`` (a
+    _read_local batch): commits the passage shard and returns the
+    masked text and n_tokens_removed columns. Same rules: a history
+    window's fp is in the sketch AND in a passage-ledger row of a
+    completed shard inside the window; a new fp enters history through
+    its first occurrence that overlaps no history window of its doc,
+    keeper = min (doc_id, pos); the mask drops every word of every
+    history window."""
     from .dedup import _passage_rollup
 
     ids, n = out.column("_fgs_id"), out.num_rows
     rows = _passage_rollup(
         pa.RecordBatch.from_arrays([pa.array(np.arange(n)), out.column("_fgs_wh")],
                                    ["doc_id", "wh"]),
-        window, stride, with_positions=True,
+        window, _PASSAGE_STRIDE, with_positions=True,
     )
     if rows is None:
         row = fp = pos = np.zeros(0, np.int64)
@@ -2411,7 +2345,7 @@ def _passages_local(checkpoint_dir: str, out, now: int, window: int, stride: int
         pos = rows["pos_list"].values.to_numpy().astype(np.int64)
         sizes = np.diff(rows["pos_list"].offsets.to_numpy())
     verified = np.zeros(0, np.int64)
-    probe = _probe_local(checkpoint_dir, PASSAGES, fp, now, query_window, exclude_epoch)
+    probe = _probe_local(checkpoint_dir, PASSAGES, fp, now, exclude_epoch)
     if probe is not None and probe[0].size:
         hits, w, done = probe
         verified = _ledger_local(checkpoint_dir, PASSAGES, "passage_ledger", done, "fp",

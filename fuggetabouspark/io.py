@@ -77,9 +77,3 @@ def validate_corpus(df: DataFrame) -> dict:
     ).count()
     total = df.count()
     return {"rows": total, "invalid_rows": bad, "ok": bad == 0}
-
-
-def write_sketch_state(state_df: DataFrame, path: str, mode: str = "append") -> None:
-    """Persist final sketch rows; parquet keeps binary payloads
-    columnar and splittable."""
-    state_df.write.mode(mode).parquet(path)

@@ -94,21 +94,29 @@ def seen_within(
     for (sname, group), sk in sorted(sketches.items()):
         if sname != spec_name or (groups is not None and group not in groups):
             continue
-        if window is not None and window != sk_window(sk):
-            if window > sk_window(sk):
-                raise ValueError(
-                    f"window {window} exceeds the sketch's window_ticks "
-                    f"{sk_window(sk)}: older sightings may already be decayed, "
-                    "so widening at query time would produce false negatives"
-                )
-            sk = _with_window(sk, window)
-        seen = sk.contains_batch(probes, now)
+        seen = _query_window(sk, window)[0].contains_batch(probes, now)
         out.extend((group, int(k), bool(s)) for k, s in zip(probes, seen))
     return out
 
 
 def sk_window(sk: Sketch) -> int:
     return int(sk.params.window_ticks)
+
+
+def _query_window(sk: Sketch, window: int | None) -> tuple[Sketch, int]:
+    """``(sketch, w)``: the query window ``w`` (None = the sketch's own
+    window_ticks) may only NARROW the sketch's window — older sightings
+    may already be decayed, so a wider one raises ValueError — and the
+    sketch re-windowed to ``w`` when it differs from its own."""
+    own = sk_window(sk)
+    w = window if window is not None else own
+    if w > own:
+        raise ValueError(
+            f"window {w} exceeds the sketch's window_ticks "
+            f"{own}: older sightings may already be decayed, "
+            "so widening at query time would produce false negatives"
+        )
+    return (sk if w == own else _with_window(sk, w)), w
 
 
 def _with_window(sk: Sketch, window: int) -> Sketch:

@@ -33,10 +33,6 @@ def _k1(q: np.ndarray | float, delta: float):
     return (delta / (2.0 * math.pi)) * np.arcsin(2.0 * np.asarray(q) - 1.0)
 
 
-def _k1_inv(k: np.ndarray | float, delta: float):
-    return (np.sin(np.asarray(k) * (2.0 * math.pi) / delta) + 1.0) / 2.0
-
-
 def _compress(means: np.ndarray, weights: np.ndarray, delta: float) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic, fully-vectorized compression over mean-sorted input.
 

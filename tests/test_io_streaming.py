@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fuggetabouspark.fixtures import CORPUS_DDL, local_corpus, make_rows, spark_corpus
-from fuggetabouspark.io import CORPUS_SCHEMA, read_corpus, validate_corpus, write_sketch_state
+from fuggetabouspark.io import CORPUS_SCHEMA, read_corpus, validate_corpus
 from fuggetabouspark.params import HLLParams, TimingParams
 from fuggetabouspark.pipeline import SketchSpec, build_sketches, merge_rows_to_sketches
 from fuggetabouspark.streaming import StreamingSketchBuilder
