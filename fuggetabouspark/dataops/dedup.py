@@ -738,35 +738,6 @@ def repeated_passages(
     )
 
 
-def passage_positions(
-    df: DataFrame, text_col: str = "text", window: int = 50, stride: int = 1
-) -> DataFrame:
-    """(doc_id, fp, pos): one row per window OCCURRENCE — the
-    position-level companion of passage_fingerprints, for consumers
-    that need every span (masking), not just the per-doc distinct
-    rollup. Output rows = sum of per-doc strided span counts
-    (≈ tokens/stride); same pure-map plan shape."""
-    import pyarrow as pa
-
-    def fps(iterator):
-        for tbl in iterator:
-            got = _batch_window_table(tbl, window, stride)
-            if got is None:
-                continue
-            h, pos, doc_idx = got
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "doc_id": tbl.column("doc_id").take(pa.array(doc_idx)),
-                    "fp": pa.array(h, pa.int64()),
-                    "pos": pa.array(pos.astype(np.int32), pa.int32()),
-                }
-            )
-
-    word_hash = F.transform(F.split(F.col(text_col), " "), lambda w: F.xxhash64(w))
-    src = df.select("doc_id", word_hash.alias("wh"))
-    return src.mapInArrow(fps, schema=f"doc_id {_id_type(df)}, fp long, pos int")
-
-
 # mask_repeated_passages masks a corpus on the driver when it has at
 # most _LOCAL_ROWS rows (the read fetches one row more to tell) and at
 # most _LOCAL_BYTES bytes of UTF-8 text (_read_bounded).

@@ -156,12 +156,17 @@ _LOCAL_SCALARS = (
     ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType,
     BooleanType, StringType, BinaryType,
 )
-# The columns and geometry StreamingIngestGuard runs its families with:
-# the operators' own defaults, named once so the guard's Spark path (the
-# operators, called without them) and its driver path (the _local
-# helpers, which read them here) cannot drift.
+# The columns and key geometry of the near, passage and embedding
+# families, named once: their operators, the guard's Spark path (those
+# operators) and its driver path (the _local helpers) all read them
+# here. A shard's keys must be derived exactly as history's were, or an
+# in-window duplicate's keys miss the checkpoint without any error. The
+# near and emb thresholds and the emb bits are the defaults of the
+# operators' own ``threshold``/``bits`` (the emb bits are checked
+# against the checkpoint's, _emb_check_geometry).
 _TEXT_COL, _VEC_COL = "text", "embedding"
 _NEAR_THRESHOLD, _NEAR_NUM_HASHES, _NEAR_BANDS, _NEAR_ROWS_PER_BAND = 0.8, 64, 16, 4
+_NEAR_SHINGLE = 3
 _PASSAGE_STRIDE = 1
 _EMB_THRESHOLD, _EMB_BITS, _EMB_TABLES = 0.9, 12, 8
 
@@ -424,13 +429,14 @@ def completed_shards(spark, checkpoint_dir: str) -> list[dict]:
 
 
 def _probe(spark, checkpoint_dir: str, fam: _Family, keys: DataFrame, now: int,
-           window: int | None, exclude_epoch):
+           exclude_epoch, window: int | None = None):
     """Probe ``fam``'s broadcast sketch with the one-column frame
     ``keys``: ``(hits, w, done)`` — the DISTINCT keys the sketch has
     seen within the query window ``w`` (same column name as ``keys``),
-    the window itself (queries._query_window), and the completed shards
-    the state was merged from (the shards the ledger verify must read).
-    None when the family has no history yet.
+    the window itself (queries._query_window: the sketch's own
+    window_ticks unless the exact family narrows it with ``window``),
+    and the completed shards the state was merged from (the shards the
+    ledger verify must read). None when the family has no history yet.
 
     The stored payload goes straight to the broadcast (content-cached)
     when one row makes up the state and no re-window is needed,
@@ -492,8 +498,7 @@ def _ledger_local(checkpoint_dir: str, fam: _Family, name: str, done: list[int],
 
 def _commit_shard(
     checkpoint_dir: str, fam: _Family, rows: dict, tick, now: int, params,
-    partitions: int | None, meta: dict, ann: DataFrame | None = None,
-    pre_lineage_hook=None,
+    partitions: int | None, meta: dict, hook=None,
 ) -> None:
     """Append one shard to ``fam``'s history: the sketch delta over the
     FIRST ledger's key column is the shard's state row of
@@ -510,8 +515,9 @@ def _commit_shard(
        write fine once and then fail every later probe with a parquet
        schema-conversion error when _read_swap applies the DDL
        (ADVICE r05 #2);
-    3. ``pre_lineage_hook(ann)``: caller-durable output (e.g. the
-       guard's clean stream), which must land before the lineage row.
+    3. ``hook()``: caller-durable output (the exact family's
+       ``pre_lineage_hook``, e.g. the guard's clean stream), which must
+       land before the lineage row.
 
     ``rows`` may instead hold driver-side pyarrow tables (the guard's
     driver path), with ``tick`` an int: the delta then runs the update
@@ -544,8 +550,8 @@ def _commit_shard(
             rows[name].select(*(
                 derived.get(c, F.col(c)).cast(t).alias(c) for c, t in cols
             )).write.mode("append").parquet(path)
-        if pre_lineage_hook is not None:
-            pre_lineage_hook(ann)
+        if hook is not None:
+            hook()
 
     log.commit(shard, delta, {"now": int(now), **meta}, ledgers_then_hook)
 
@@ -591,7 +597,7 @@ def annotate_against_history(
 
     # ---- history probe: broadcast sketch, then exact ledger verify ----
     probe = _probe(
-        spark, checkpoint_dir, EXACT, fps.select("fp"), now, window, exclude_epoch
+        spark, checkpoint_dir, EXACT, fps.select("fp"), now, exclude_epoch, window
     )
     if probe is not None:
         hits, w, done = probe
@@ -717,7 +723,7 @@ def incremental_dedup(
                 "n_retained": int(counts["r"] or 0),
                 **(meta_extra or {}),
             },
-            ann, pre_lineage_hook,
+            pre_lineage_hook and (lambda: pre_lineage_hook(ann)),
         )
     return ann
 
@@ -755,11 +761,13 @@ class StreamingIngestGuard:
     and every family is probed at its sketch's own window_ticks (set
     through ``params`` / ``near_params`` / ``passage_params`` /
     ``emb_params``). The near family runs MinHash-LSH at threshold 0.8
-    with 64 hashes in 16 bands of 4 rows, the passage family a stride
-    of 1, the embedding family cosine 0.9 over 8 tables of 12 bits:
-    the operators' own defaults, defined once at the top of this module
+    with 64 hashes of 3-word shingles in 16 bands of 4 rows, the
+    passage family a stride of 1, the embedding family cosine 0.9 over
+    8 tables of 12 bits: defined once at the top of this module
     (_TEXT_COL, _VEC_COL, _NEAR_*, _PASSAGE_STRIDE, _EMB_*) for both of
-    the paths below. To vary them, call the operators directly.
+    the paths below. The key geometry is fixed for every caller; only
+    the near and emb thresholds and the emb bits still vary, through
+    the operators' own ``threshold`` and ``bits``.
 
     Commit path: every family's sketch delta, lineage row and
     compaction row is written from the driver (its ShardLog: a pyarrow
@@ -962,8 +970,7 @@ class StreamingIngestGuard:
                 "n_dup_intra": int(intra.sum()), "n_retained": int(exact_keep.sum()),
                 "epoch": ep,
             },
-            None,
-            lambda _: self._publish_local(tbl.filter(pa.array(keep & exact_keep)), ep, now),
+            lambda: self._publish_local(tbl.filter(pa.array(keep & exact_keep)), ep, now),
         )
         return True
 
@@ -1143,34 +1150,60 @@ class StreamingIngestGuard:
 # state (round 4 — rounds out the exact-fp guard above)
 # --------------------------------------------------------------------
 
-def _match_frac(a: str, b: str, num_hashes: int):
+def _match_frac(a: str, b: str):
     """The MinHash Jaccard estimate of two signature columns: the
-    fraction of the ``num_hashes`` positions where they agree."""
+    fraction of the _NEAR_NUM_HASHES positions where they agree."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
         F.lit(0),
         lambda acc, x: acc + x,
-    ) / F.lit(num_hashes)
+    ) / F.lit(_NEAR_NUM_HASHES)
+
+
+def _near_sigs(new_df: DataFrame) -> DataFrame:
+    """A shard's (doc_id string, sig) MinHash signatures at the near
+    geometry: _NEAR_NUM_HASHES minhashes of the _NEAR_SHINGLE-word
+    shingles of its text."""
+    from .dedup import minhash_signatures
+
+    src = new_df.select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.col(_TEXT_COL).alias("text"),
+        F.lit("").alias("source"),
+    )
+    return minhash_signatures(
+        src, num_hashes=_NEAR_NUM_HASHES, shingle=_NEAR_SHINGLE
+    ).select("doc_id", "sig")
+
+
+def _near_band_keys(sig: DataFrame) -> DataFrame:
+    """The (doc_id, bkey) band keys of _near_sigs' signatures:
+    _NEAR_BANDS keys per doc, xxhash64(band, bucket) of each band of
+    _NEAR_ROWS_PER_BAND rows — what the near sketch and band ledger
+    hold (_near_local derives the same bits on the driver)."""
+    from .dedup import banded_signatures
+
+    return banded_signatures(sig, _NEAR_BANDS, _NEAR_ROWS_PER_BAND).select(
+        "doc_id", F.xxhash64("band", "bucket").alias("bkey")
+    )
 
 
 def near_history_matches(
     spark,
-    banded: DataFrame,
     sig: DataFrame,
     checkpoint_dir: str,
     now: int,
-    threshold: float,
-    num_hashes: int,
-    window: int | None = None,
+    threshold: float = _NEAR_THRESHOLD,
     exclude_epoch=None,
 ) -> DataFrame:
     """The LAZY history-match plan of incremental_near_dup — exposed,
     like annotate_against_history, so tools/explain_plans.py can gate
     the REAL operator's physical plan (VERDICT r04 "What's wrong" #1).
 
-    Inputs: ``banded`` = the new shard's (doc_id, bkey) band keys,
-    ``sig`` = its (doc_id, sig) minhash signatures. Output: one row per
-    new doc with a retained in-window partner whose signature-match
+    Input: ``sig`` = the new shard's (doc_id, sig) signatures
+    (_near_sigs); the band keys are derived from it here, by the
+    operator's own _near_band_keys. Output: one row per new doc with a
+    retained partner, in the sketch's window, whose signature-match
     fraction >= threshold — (doc_id, hist_doc_id, est_jaccard), best
     partner per doc.
 
@@ -1184,9 +1217,8 @@ def near_history_matches(
       the shard's own signature frame.
     The only exchanges left are distinct/groupBy over SHARD-sized
     candidate rows."""
-    probe = _probe(
-        spark, checkpoint_dir, NEAR, banded.select("bkey"), now, window, exclude_epoch
-    )
+    banded = _near_band_keys(sig)
+    probe = _probe(spark, checkpoint_dir, NEAR, banded.select("bkey"), now, exclude_epoch)
     if probe is None:
         return spark.createDataFrame(
             [], "doc_id string, hist_doc_id string, est_jaccard double"
@@ -1218,7 +1250,7 @@ def near_history_matches(
         sig.join(F.broadcast(cand), "doc_id")
         .join(F.broadcast(sig_led), "hist_doc_id")
         .select("doc_id", "hist_doc_id",
-                _match_frac("sig", "hsig", num_hashes).alias("est_jaccard"))
+                _match_frac("sig", "hsig").alias("est_jaccard"))
         .where(F.col("est_jaccard") >= threshold)
         .groupBy("doc_id")
         .agg(F.max(F.struct("est_jaccard", "hist_doc_id")).alias("_best"))
@@ -1236,27 +1268,24 @@ def incremental_near_dup(
     checkpoint_dir: str,
     now: int,
     threshold: float = _NEAR_THRESHOLD,
-    num_hashes: int = _NEAR_NUM_HASHES,
-    bands: int = _NEAR_BANDS,
-    rows_per_band: int = _NEAR_ROWS_PER_BAND,
-    window: int | None = None,
     params=None,
-    text_col: str = _TEXT_COL,
     partitions: int | None = None,
     update_state: bool = True,
     meta_extra: dict | None = None,
-    pre_lineage_hook=None,
     exclude_epoch=None,
 ) -> DataFrame:
-    """NEAR-duplicate dedup of a new ingest shard against checkpointed
-    history — the MinHash-LSH analogue of incremental_dedup, and the
-    same never-re-join-history shape at 100 TB:
+    """NEAR-duplicate dedup of a new ingest shard (``doc_id``,
+    ``text``) against checkpointed history — the MinHash-LSH analogue
+    of incremental_dedup, and the same never-re-join-history shape at
+    100 TB:
 
     - history state = a decaying TBF over LSH BAND KEYS (a doc
-      contributes ``bands`` keys) + a band ledger (bkey → retained
-      doc, 30 B/key) + a sig ledger (doc → its num_hashes minhashes,
-      ~0.5 KB/doc). All three are O(retained docs), independent of
-      corpus text size.
+      contributes 16 keys) + a band ledger (bkey → retained doc,
+      30 B/key) + a sig ledger (doc → its 64 minhashes, ~0.5 KB/doc).
+      All three are O(retained docs), independent of corpus text size.
+      The geometry — 64 minhashes of 3-word shingles, 16 bands of 4
+      rows (_NEAR_*) — is fixed: a shard's band keys must be derived
+      as history's were, or a shared band misses the sketch.
     - a new shard's band keys probe the broadcast sketch: zero
       in-window false negatives ⇒ a doc NONE of whose band keys hit
       provably shares no band with retained history (exactly the docs
@@ -1282,40 +1311,27 @@ def incremental_near_dup(
     so neither operator's compaction, shard numbering, or recovery can
     touch the other's (code-review r04).
 
-    ``meta_extra`` / ``pre_lineage_hook`` / ``exclude_epoch`` mirror
-    incremental_dedup exactly (epoch tagging, caller-durable output
-    strictly before the lineage marker, and same-epoch shard exclusion
-    on multi-operator replay — see StreamingIngestGuard).
+    ``meta_extra`` / ``exclude_epoch`` mirror incremental_dedup
+    exactly (epoch tagging and same-epoch shard exclusion on
+    multi-operator replay — see StreamingIngestGuard). History is
+    probed at the sketch's own window_ticks.
     ``partitions`` caps the sketch-delta partials the state commit
     collects to the driver, as in incremental_dedup."""
-    from .dedup import banded_signatures, minhash_signatures
-
-    src = new_df.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.col(text_col).alias("text"),
-        F.lit("").alias("source"),
-    )
-    sig = minhash_signatures(src, num_hashes=num_hashes).select("doc_id", "sig")
-    sig = sig.localCheckpoint(eager=True)  # one signature pass, reused below
-    banded = banded_signatures(sig, bands, rows_per_band).select(
-        "doc_id", F.xxhash64("band", "bucket").alias("bkey")
-    )
+    # one signature pass, reused below
+    sig = _near_sigs(new_df).localCheckpoint(eager=True)
 
     # ---- history probe over band keys (lazy plan: see
     # near_history_matches — explicitly broadcast shard-side, gated by
     # tools/explain_plans.py check 13) ----
     hist_matches = near_history_matches(
-        spark, banded, sig, checkpoint_dir, now,
-        threshold=threshold, num_hashes=num_hashes, window=window,
+        spark, sig, checkpoint_dir, now, threshold=threshold,
         exclude_epoch=exclude_epoch,
     )
 
     # ---- intra-shard near-dups (batch LSH within the new shard) ----
     from .dedup import minhash_lsh_candidates
 
-    intra_cand = minhash_lsh_candidates(
-        sig.select("doc_id", "sig"), bands, rows_per_band
-    )
+    intra_cand = minhash_lsh_candidates(sig, _NEAR_BANDS, _NEAR_ROWS_PER_BAND)
     # chain-safe keep-one (code-review r04: pairwise "larger id
     # loses" could delete BOTH ends of a chain): verified pairs form
     # transitive clusters via connected components — the same
@@ -1329,7 +1345,7 @@ def incremental_near_dup(
         intra_cand
         .join(sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa")), "doc_a")
         .join(sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb")), "doc_b")
-        .where(_match_frac("sa", "sb", num_hashes) >= threshold)
+        .where(_match_frac("sa", "sb") >= threshold)
         .select("doc_a", "doc_b")
     ).localCheckpoint(eager=True)
     # intra_pairs is materialized, so connected_components' bounded
@@ -1370,7 +1386,7 @@ def incremental_near_dup(
         _commit_shard(
             checkpoint_dir, NEAR,
             {
-                "band_ledger": banded.join(F.broadcast(keep), "doc_id"),
+                "band_ledger": _near_band_keys(sig).join(F.broadcast(keep), "doc_id"),
                 "sig_ledger": sig.join(F.broadcast(keep), "doc_id"),
             },
             F.lit(now), now, params, partitions,
@@ -1380,7 +1396,6 @@ def incremental_near_dup(
                 "n_retained": n - h - i,
                 **(meta_extra or {}),
             },
-            ann, pre_lineage_hook,
         )
     return ann
 
@@ -1416,17 +1431,14 @@ def incremental_passages(
     checkpoint_dir: str,
     now: int,
     window: int = 50,
-    stride: int = _PASSAGE_STRIDE,
-    query_window: int | None = None,
     params=None,
-    text_col: str = _TEXT_COL,
     partitions: int | None = None,
     update_state: bool = True,
     meta_extra: dict | None = None,
-    pre_lineage_hook=None,
     exclude_epoch=None,
 ) -> DataFrame:
-    """Flag every ``window``-token span of a new ingest shard whose
+    """Flag every ``window``-token span (stride 1, _PASSAGE_STRIDE) of
+    a new ingest shard's ``text`` (docs keyed by ``doc_id``) whose
     fingerprint matches a passage RETAINED in checkpointed history —
     without re-joining history text. Returns one row per doc
     (PASSAGE_ANNOTATED_DDL): total window count, historical-window
@@ -1448,30 +1460,30 @@ def incremental_passages(
     passes.
 
     State sizing: the ledger holds one ~30 B row per retained DISTINCT
-    window fingerprint — O(tokens/stride) for novel text, the honest
-    price of passage-granular history (raise ``stride`` to trade
-    granularity for state; expiry prunes decayed rows). Size
+    window fingerprint — O(tokens) for novel text, the honest price of
+    passage-granular history (expiry prunes decayed rows). Size
     ``params.capacity`` for the expected retained distinct-fp count,
     not the doc count. Intra-shard repetition is deliberately out of
     scope — run the batch operator (mask_repeated_passages) on the
     shard first, then this against history.
-    ``partitions`` caps the sketch-delta partials the state commit
-    collects to the driver, as in incremental_dedup."""
+    History is probed at the sketch's own window_ticks.
+    ``meta_extra`` / ``exclude_epoch`` mirror incremental_dedup (see
+    StreamingIngestGuard), and ``partitions`` caps the sketch-delta
+    partials the state commit collects to the driver, as there."""
     from .dedup import passage_fingerprints
 
     src = new_df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        F.col(text_col).alias("text"),
+        F.col(_TEXT_COL).alias("text"),
     )
     # ONE kernel pass (rollup + positions), frozen so the probe,
     # verify, annotate, and state-update consumers never recompute it
     wf = passage_fingerprints(
-        src, window=window, stride=stride, with_positions=True
+        src, window=window, stride=_PASSAGE_STRIDE, with_positions=True
     ).localCheckpoint(eager=True)
 
     probe = _probe(
-        spark, checkpoint_dir, PASSAGES, wf.select("fp").distinct(), now,
-        query_window, exclude_epoch,
+        spark, checkpoint_dir, PASSAGES, wf.select("fp").distinct(), now, exclude_epoch
     )
     if probe is not None:
         hits, w, done = probe
@@ -1571,10 +1583,11 @@ def incremental_passages(
             )
             .localCheckpoint(eager=True)
         )
-        # pre_lineage_hook: without it a crash after lineage but before
-        # the caller persisted the masked text would re-run against
-        # history that now contains this very shard and mask the
-        # entire shard away (code-review r05 #2)
+        # a crash after lineage but before the caller persisted the
+        # masked text re-runs against history that now contains this
+        # very shard and would mask the entire shard away (code-review
+        # r05 #2): the caller tags the shard (meta_extra epoch) and
+        # the re-run excludes it (exclude_epoch), as the guard does
         _commit_shard(
             checkpoint_dir, PASSAGES, {"passage_ledger": newfp}, F.lit(now), now,
             params, partitions,
@@ -1585,7 +1598,6 @@ def incremental_passages(
                 "n_hist_windows": int(counts["h"] or 0),
                 **(meta_extra or {}),
             },
-            ann, pre_lineage_hook,
         )
     return ann
 
@@ -1596,8 +1608,6 @@ def mask_against_history(
     checkpoint_dir: str | None = None,
     now: int | None = None,
     window: int = 50,
-    stride: int = 1,
-    text_col: str = "text",
     ann: DataFrame | None = None,
     **kwargs,
 ) -> DataFrame:
@@ -1614,17 +1624,16 @@ def mask_against_history(
     DEFAULT — masking that also commits state in one call is the
     exactly-once trap (a crash before the caller persists the masked
     text makes the re-run see the shard's own fps as history and mask
-    everything away; code-review r05 #2). To commit state atomically
-    with a durable masked output, call incremental_passages with a
-    ``pre_lineage_hook`` that persists
-    ``mask_against_history(..., ann=hook_arg)``."""
+    everything away; code-review r05 #2). To commit state with a
+    durable masked output, tag the shard through ``meta_extra`` and
+    re-run a crashed shard with ``exclude_epoch``, as
+    StreamingIngestGuard does."""
     from .dedup import _mask_spans
 
     if ann is None:
         kwargs.setdefault("update_state", False)
         ann = incremental_passages(
-            spark, new_df, checkpoint_dir, now,
-            window=window, stride=stride, text_col=text_col, **kwargs,
+            spark, new_df, checkpoint_dir, now, window=window, **kwargs
         )
     drops = ann.where(F.size("hist_positions") > 0).select(
         F.col("doc_id").alias("_k"), F.col("hist_positions").alias("_drops")
@@ -1633,7 +1642,7 @@ def mask_against_history(
     # shard's drop table can be wide
     return _mask_spans(
         new_df.withColumn("_k", F.col("doc_id").cast("string")).join(drops, "_k", "left"),
-        text_col, window,
+        _TEXT_COL, window,
     )
 
 
@@ -1651,51 +1660,32 @@ def compact_emb_checkpoint(spark, checkpoint_dir: str):
     return _compact(checkpoint_dir, EMB)
 
 
-def _emb_bucket_keys(dim: int, bits: int, tables: int, seed_base: int = 101):
+def _emb_bucket_keys(dim: int, bits: int, seed_base: int = 101):
     """The emb family's one bucket-key function: ``keys(col)`` maps an
     Arrow list column of n vectors to ``(vecs, bkey)`` — the (n, dim)
-    float32 matrix and the n·tables int64 bucket keys, vector i's at
-    [i·tables, (i+1)·tables). The key kernel (_emb_keyed) and the
+    float32 matrix and the n·_EMB_TABLES int64 bucket keys, vector i's
+    at [i·tables, (i+1)·tables). The key kernel (_emb_keyed) and the
     verify kernel (_emb_verify) both call it, so bucket keys can never
     drift between them.
 
-    Planes: ``tables`` sets of ``bits`` seeded ±1 hyperplanes
-    (identical construction to similarity.hyperplane_buckets,
+    Planes: _EMB_TABLES sets of ``bits`` seeded ±1 hyperplanes
+    (similarity._planes, the hyperplane_buckets construction, at seed
     seed_base + 13·t) stacked into one (tables·bits, dim) matrix, so
     ONE matmul per batch yields every table's projections. A pure
     function of the seed: keys are splitmix64(bucket ⊕ mix(t)),
-    deterministic across shards and partitionings.
-
-    Null and wrong-length vectors fail loudly: a null list contributes
-    0 elements, so an unguarded reshape either aborts cryptically or —
-    if length errors cancel — shifts every later row onto WRONG bucket
-    keys (silent false negatives; code-review r05 fifth pass #3)."""
+    deterministic across shards and partitionings. Null and
+    wrong-length vectors fail loudly (similarity._vec_matrix)."""
     from ..hashing import splitmix64
+    from .similarity import _planes, _vec_matrix
 
-    planes = np.concatenate([
-        np.where(
-            (splitmix64(
-                np.arange(bits * dim, dtype=np.uint64)
-                + np.uint64((seed_base + 13 * t) * 0x9E37)
-            ) & np.uint64(1)).astype(bool),
-            1.0, -1.0,
-        ).reshape(bits, dim)
-        for t in range(tables)
-    ]).astype(np.float32)
+    tables = _EMB_TABLES
+    planes = np.concatenate([_planes(seed_base + 13 * t, bits, dim) for t in range(tables)])
     weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
     tsalt = splitmix64(np.arange(tables, dtype=np.uint64) + np.uint64(0xE3B))
 
     def keys(col):
-        n = len(col)
-        if col.null_count:
-            raise ValueError(f"embedding contains {col.null_count} null vectors")
-        flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float32)
-        if flat.size != n * dim:
-            raise ValueError(
-                f"embedding is ragged: {n} vectors yield {flat.size} "
-                f"floats, expected {n * dim} (dim={dim})"
-            )
-        vecs = flat.reshape(n, dim)
+        vecs = _vec_matrix(col, dim)
+        n = len(vecs)
         signs = (vecs @ planes.T > 0).astype(np.int64).reshape(n, tables, bits)
         buckets = (signs * weights).sum(axis=2)           # (n, T)
         with np.errstate(over="ignore"):
@@ -1706,43 +1696,53 @@ def _emb_bucket_keys(dim: int, bits: int, tables: int, seed_base: int = 101):
 
 
 def _emb_src_keyed(
-    new_df: DataFrame, dim: int, bits: int, tables: int, vec_col: str, id_col: str,
+    new_df: DataFrame, dim: int, bits: int, id_col: str,
 ) -> tuple[DataFrame, DataFrame]:
     """The emb operators' two shard frames: ``src`` = (vec_id string,
-    embedding) and ``keyed`` = (vec_id, bkey), ``tables`` bucket keys
+    embedding) and ``keyed`` = (vec_id, bkey), _EMB_TABLES bucket keys
     per vector from ONE mapInArrow pass (all tables in one matmul, and
     the key frame never carries the vectors — code-review r05 third
     pass #3/#4), frozen so probe and state commit never recompute it."""
     src = new_df.select(
         F.col(id_col).cast("string").alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
+        F.col(_VEC_COL).alias("embedding"),
     )
-    keys = _emb_bucket_keys(dim, bits, tables)
+    keys = _emb_bucket_keys(dim, bits)
 
     def assign(iterator):
         for tbl in iterator:
-            yield pa.RecordBatch.from_pydict(_emb_keyed(tbl, keys, tables))
+            yield pa.RecordBatch.from_pydict(_emb_keyed(tbl, keys))
 
     keyed = src.mapInArrow(assign, schema="vec_id string, bkey long")
     return src, keyed.localCheckpoint(eager=True)
 
 
-def _emb_keyed(tbl, keys, tables: int) -> dict:
+def _emb_keyed(tbl, keys) -> dict:
     """The key kernel's body over one (vec_id, embedding) batch: the
-    ``(vec_id, bkey)`` columns, ``tables`` rows per vector."""
+    ``(vec_id, bkey)`` columns, _EMB_TABLES rows per vector."""
     _, bkey = keys(tbl.column("embedding"))
-    rows = np.repeat(np.arange(len(tbl), dtype=np.int64), tables)
+    rows = np.repeat(np.arange(len(tbl), dtype=np.int64), _EMB_TABLES)
     return {
         "vec_id": tbl.column("vec_id").take(pa.array(rows)),
         "bkey": pa.array(bkey, pa.int64()),
     }
 
 
-def _emb_check_geometry(checkpoint_dir: str, bits: int, tables: int, dim: int):
+def _emb_meta(bits: int, dim: int, n: int, n_dup: int) -> dict:
+    """An emb shard's lineage meta: its key geometry (what
+    _emb_check_geometry reads back) and its vector counts."""
+    return {
+        "kind": "emb_dup", "bits": bits, "tables": _EMB_TABLES, "dim": dim,
+        "n_vecs": n, "n_emb_dup_history": n_dup, "n_retained": n - n_dup,
+    }
+
+
+def _emb_check_geometry(checkpoint_dir: str, bits: int, dim: int):
     """Bucket-key geometry must match the checkpoint's: keys computed
     with different bits/tables/dim never collide with retained keys,
     so every probe would silently miss (code-review r05 third pass
     #2). The geometry is recorded in each shard's lineage meta."""
+    tables = _EMB_TABLES
     prior = [m for m in EMB.log(checkpoint_dir).metas() if "bits" in m]
     if prior:
         g = prior[-1]
@@ -1757,15 +1757,13 @@ def _emb_check_geometry(checkpoint_dir: str, bits: int, tables: int, dim: int):
 
 def _emb_hist_matches(
     spark, src: DataFrame, keyed: DataFrame, checkpoint_dir: str, now: int,
-    threshold: float, dim: int, bits: int, tables: int, window, exclude_epoch,
+    threshold: float, dim: int, bits: int, exclude_epoch,
 ) -> DataFrame:
     """The LAZY history-match plan of incremental_embedding_dedup —
     sketch probe over bucket keys, bucket-ledger candidate fetch, exact
     cosine verify against the vec ledger. Exposed (via
     emb_annotate_plan) so plan tools can explain the REAL operator."""
-    probe = _probe(
-        spark, checkpoint_dir, EMB, keyed.select("bkey"), now, window, exclude_epoch
-    )
+    probe = _probe(spark, checkpoint_dir, EMB, keyed.select("bkey"), now, exclude_epoch)
     if probe is None:
         return spark.createDataFrame(
             [], "vec_id string, hist_vec_id string, cosine double"
@@ -1821,7 +1819,7 @@ def _emb_hist_matches(
     )
     bc_cand = spark.sparkContext.broadcast(_emb_candidates(led_hits, hvec_rows))
     scored = src.mapInArrow(
-        _make_emb_verify_udf(bc_cand, threshold, dim, bits, tables),
+        _make_emb_verify_udf(bc_cand, threshold, dim, bits),
         schema="vec_id string, hist_vec_id string, cosine double",
     )
     return (
@@ -1880,25 +1878,25 @@ def _emb_candidates(led_hits, hvec_rows) -> tuple:
     return uniq_bkeys, csr_off, partner_rows, ids, mat, norms
 
 
-def _make_emb_verify_udf(bc_cand, threshold: float, dim: int, bits: int, tables: int):
+def _make_emb_verify_udf(bc_cand, threshold: float, dim: int, bits: int):
     """mapInArrow wrapper of the verify kernel (_emb_verify) over the
     bare shard (vec_id, embedding) rows, reading the candidate tuple
     from the broadcast ``bc_cand``."""
-    keys = _emb_bucket_keys(dim, bits, tables)
+    keys = _emb_bucket_keys(dim, bits)
 
     def verify(iterator):
         cand = bc_cand.value
         for tbl in iterator:
-            cols = _emb_verify(tbl, cand, keys, threshold, tables)
+            cols = _emb_verify(tbl, cand, keys, threshold)
             if cols is not None:
                 yield pa.RecordBatch.from_pydict(cols)
 
     return verify
 
 
-def _emb_verify(tbl, cand: tuple, keys, threshold: float, tables: int):
+def _emb_verify(tbl, cand: tuple, keys, threshold: float):
     """The verify kernel over one (vec_id, embedding) batch: re-derive
-    each vector's ``tables`` bucket keys with the key kernel's own
+    each vector's _EMB_TABLES bucket keys with the key kernel's own
     function (``keys`` = _emb_bucket_keys — same seeded planes, same
     input guards), look the keys up in the candidate CSR
     (_emb_candidates), gather partner vectors from its matrix, and
@@ -1939,7 +1937,7 @@ def _emb_verify(tbl, cand: tuple, keys, threshold: float, tables: int):
         + np.repeat(np.where(found, csr_off[pos], 0), cnt)
     )
     pidx = partner_rows[idxs].astype(np.int64)
-    rows = np.repeat(np.arange(n * tables, dtype=np.int64) // tables, cnt)
+    rows = np.repeat(np.arange(n * _EMB_TABLES, dtype=np.int64) // _EMB_TABLES, cnt)
     e64 = evec.astype(np.float64)
     enorm = np.sqrt((e64 * e64).sum(axis=1))
     dots = (e64[rows] * mat[pidx].astype(np.float64)).sum(axis=1)
@@ -1958,16 +1956,14 @@ def _emb_verify(tbl, cand: tuple, keys, threshold: float, tables: int):
 
 
 def _emb_annotate(
-    spark, new_df, checkpoint_dir, now, dim, threshold, bits, tables, window,
-    vec_col, id_col, exclude_epoch,
+    spark, new_df, checkpoint_dir, now, dim, threshold, bits, id_col, exclude_epoch,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(src, keyed, lazy annotated plan) — the probe half shared by
     emb_annotate_plan and incremental_embedding_dedup."""
-    _emb_check_geometry(checkpoint_dir, bits, tables, dim)
-    src, keyed = _emb_src_keyed(new_df, dim, bits, tables, vec_col, id_col)
+    _emb_check_geometry(checkpoint_dir, bits, dim)
+    src, keyed = _emb_src_keyed(new_df, dim, bits, id_col)
     hist_matches = _emb_hist_matches(
-        spark, src, keyed, checkpoint_dir, now, threshold, dim, bits, tables,
-        window, exclude_epoch,
+        spark, src, keyed, checkpoint_dir, now, threshold, dim, bits, exclude_epoch,
     )
     ann = (
         src.select("vec_id")
@@ -1983,28 +1979,16 @@ def _emb_annotate(
 
 
 def emb_annotate_plan(
-    spark,
-    new_df: DataFrame,
-    checkpoint_dir: str,
-    now: int,
-    dim: int,
-    threshold: float = 0.9,
-    bits: int = 12,
-    tables: int = 8,
-    window: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    exclude_epoch=None,
+    spark, new_df: DataFrame, checkpoint_dir: str, now: int, dim: int,
 ) -> DataFrame:
     """The LAZY annotated-flags plan incremental_embedding_dedup
-    materializes (EMB_ANNOTATED_DDL) — exposed, like
+    materializes (EMB_ANNOTATED_DDL) at its defaults — exposed, like
     annotate_against_history / near_history_matches, so plan tools can
     .explain() the real operator. Callers who want the flags should
     use incremental_embedding_dedup(update_state=False): this raw plan
     re-reads the checkpoint on every action."""
     return _emb_annotate(
-        spark, new_df, checkpoint_dir, now, dim, threshold, bits, tables,
-        window, vec_col, id_col, exclude_epoch,
+        spark, new_df, checkpoint_dir, now, dim, _EMB_THRESHOLD, _EMB_BITS, "vec_id", None
     )[2]
 
 
@@ -2016,25 +2000,21 @@ def incremental_embedding_dedup(
     dim: int,
     threshold: float = _EMB_THRESHOLD,
     bits: int = _EMB_BITS,
-    tables: int = _EMB_TABLES,
-    window: int | None = None,
     params=None,
-    vec_col: str = _VEC_COL,
     id_col: str = "vec_id",
     partitions: int | None = None,
     update_state: bool = True,
-    meta_extra: dict | None = None,
-    pre_lineage_hook=None,
     exclude_epoch=None,
 ) -> DataFrame:
-    """Flag every vector of a new ingest shard whose cosine similarity
-    to a RETAINED in-window historical vector is >= ``threshold`` —
+    """Flag every vector of a new ingest shard (its ``embedding``
+    column, keyed by ``id_col``) whose cosine similarity to a RETAINED
+    historical vector in the sketch's window is >= ``threshold`` —
     without re-joining history. Returns EMB_ANNOTATED_DDL, one row per
     input vector (hist_vec_id / cosine = the best historical match).
 
     History state: a decaying membership sketch over hyperplane-LSH
-    BUCKET KEYS (``tables`` independent seeded plane sets × ``bits``
-    sign bits; a vector contributes ``tables`` keys, deterministic
+    BUCKET KEYS (8 independent seeded plane sets, _EMB_TABLES, of
+    ``bits`` sign bits each; a vector contributes 8 keys, deterministic
     across shards because the planes derive from the seed alone) + a
     bucket ledger (bkey → retained vec, 30 B/key) + a vec ledger
     carrying the retained embeddings (~4·dim B/vec — the honest price
@@ -2053,12 +2033,12 @@ def incremental_embedding_dedup(
     cos 0.99 with the defaults), reproducible because planes and
     vectors are fixed. Intra-shard duplicates are out of scope — run
     embedding_near_dup on the shard first (same composition rule as
-    incremental_passages).
-    ``partitions`` caps the sketch-delta partials the state commit
-    collects to the driver, as in incremental_dedup."""
+    incremental_passages). ``bits`` must match the checkpoint's
+    (_emb_check_geometry). ``exclude_epoch`` mirrors incremental_dedup,
+    and ``partitions`` caps the sketch-delta partials the state commit
+    collects to the driver, as there."""
     src, keyed, ann = _emb_annotate(
-        spark, new_df, checkpoint_dir, now, dim, threshold, bits, tables,
-        window, vec_col, id_col, exclude_epoch,
+        spark, new_df, checkpoint_dir, now, dim, threshold, bits, id_col, exclude_epoch,
     )
     ann = ann.localCheckpoint(eager=True)
 
@@ -2075,13 +2055,7 @@ def incremental_embedding_dedup(
                 "bucket_ledger": keyed.join(F.broadcast(keep), "vec_id"),
                 "vec_ledger": src.join(F.broadcast(keep), "vec_id"),
             },
-            F.lit(now), now, params, partitions,
-            {
-                "kind": "emb_dup", "bits": bits, "tables": tables, "dim": dim,
-                "n_vecs": n, "n_emb_dup_history": h, "n_retained": n - h,
-                **(meta_extra or {}),
-            },
-            ann, pre_lineage_hook,
+            F.lit(now), now, params, partitions, _emb_meta(bits, dim, n, h),
         )
     return ann
 
@@ -2093,9 +2067,7 @@ def commit_emb_state(
     now: int,
     dim: int,
     bits: int = _EMB_BITS,
-    tables: int = _EMB_TABLES,
     params=None,
-    vec_col: str = _VEC_COL,
     id_col: str = "vec_id",
     partitions: int | None = None,
     meta_extra: dict | None = None,
@@ -2111,17 +2083,13 @@ def commit_emb_state(
     checkpoint's (validated, like the probe path).
     ``partitions`` caps the sketch-delta partials the commit collects
     to the driver, as in incremental_dedup."""
-    _emb_check_geometry(checkpoint_dir, bits, tables, dim)
-    src, keyed = _emb_src_keyed(new_df, dim, bits, tables, vec_col, id_col)
+    _emb_check_geometry(checkpoint_dir, bits, dim)
+    src, keyed = _emb_src_keyed(new_df, dim, bits, id_col)
     n = int(src.count())
     _commit_shard(
         checkpoint_dir, EMB, {"bucket_ledger": keyed, "vec_ledger": src},
         F.lit(now), now, params, partitions,
-        {
-            "kind": "emb_dup", "bits": bits, "tables": tables, "dim": dim,
-            "n_vecs": n, "n_emb_dup_history": 0, "n_retained": n,
-            **(meta_extra or {}),
-        },
+        {**_emb_meta(bits, dim, n, 0), **(meta_extra or {})},
     )
 
 
@@ -2210,7 +2178,7 @@ def _near_local(checkpoint_dir: str, ids, wh, now: int, exclude_epoch):
     ``(is_dup_history, is_dup_intra, sig, bkeys)`` with the signature
     column and the (docs, bands) band keys the commit appends — or None
     when the batch has more than _LOCAL_NEAR_PAIRS intra-batch
-    candidate pairs. Same rules: band keys are Spark's
+    candidate pairs. Same rules: band keys are _near_band_keys'
     xxhash64(band, xxhash64(slice(sig))) bit for bit
     (dedup._band_buckets); a history dup shares a sketch-hit band key
     with a retained in-window doc whose signature match fraction
@@ -2222,7 +2190,7 @@ def _near_local(checkpoint_dir: str, ids, wh, now: int, exclude_epoch):
 
     threshold, num_hashes, bands = _NEAR_THRESHOLD, _NEAR_NUM_HASHES, _NEAR_BANDS
     n = len(ids)
-    sigs = _minhash_sigs(wh, num_hashes, 3)
+    sigs = _minhash_sigs(wh, num_hashes, _NEAR_SHINGLE)
     buckets = _band_buckets(sigs, bands, _NEAR_ROWS_PER_BAND)
     bkeys = spark_xxhash64(
         np.tile(np.arange(bands, dtype=np.int32), n), buckets.ravel()
@@ -2272,8 +2240,8 @@ def _emb_flags_local(checkpoint_dir: str, ids, vecs, now: int, dim: int,
     bucket-ledger rows and the candidates' vectors feed the verify
     kernel (_emb_verify) directly — the same candidate state the Spark
     path broadcasts."""
-    _emb_check_geometry(checkpoint_dir, _EMB_BITS, _EMB_TABLES, dim)
-    keys = _emb_bucket_keys(dim, _EMB_BITS, _EMB_TABLES)
+    _emb_check_geometry(checkpoint_dir, _EMB_BITS, dim)
+    keys = _emb_bucket_keys(dim, _EMB_BITS)
     _, bkey = keys(vecs)  # the key kernel's null / ragged guards
     dup = np.zeros(len(ids), bool)
     probe = _probe_local(checkpoint_dir, EMB, bkey, now, exclude_epoch)
@@ -2288,9 +2256,7 @@ def _emb_flags_local(checkpoint_dir: str, ids, vecs, now: int, dim: int,
                               pc.unique(led_hits.column("hist_vec_id")),
                               ["vec_id", "embedding"])
     src = pa.RecordBatch.from_arrays([ids, vecs], ["vec_id", "embedding"])
-    scored = _emb_verify(
-        src, _emb_candidates(led_hits, hvec_rows), keys, _EMB_THRESHOLD, _EMB_TABLES
-    )
+    scored = _emb_verify(src, _emb_candidates(led_hits, hvec_rows), keys, _EMB_THRESHOLD)
     if scored is not None:
         dup = pc.is_in(ids, value_set=scored["vec_id"]).to_numpy(zero_copy_only=False)
     return dup
@@ -2300,21 +2266,15 @@ def _emb_commit_local(checkpoint_dir: str, ids, vecs, now: int, dim: int, params
                       meta_extra: dict) -> None:
     """commit_emb_state over driver-held survivors, at the guard's
     geometry (_EMB_*)."""
-    bits, tables = _EMB_BITS, _EMB_TABLES
-    _emb_check_geometry(checkpoint_dir, bits, tables, dim)
+    _emb_check_geometry(checkpoint_dir, _EMB_BITS, dim)
     src = pa.RecordBatch.from_arrays([ids, vecs], ["vec_id", "embedding"])
-    n = len(ids)
     _commit_shard(
         checkpoint_dir, EMB,
         {
-            "bucket_ledger": pa.table(_emb_keyed(src, _emb_bucket_keys(dim, bits, tables), tables)),
+            "bucket_ledger": pa.table(_emb_keyed(src, _emb_bucket_keys(dim, _EMB_BITS))),
             "vec_ledger": pa.Table.from_batches([src]),
         },
-        now, now, params, None,
-        {
-            "kind": "emb_dup", "bits": bits, "tables": tables, "dim": dim,
-            "n_vecs": n, "n_emb_dup_history": 0, "n_retained": n, **meta_extra,
-        },
+        now, now, params, None, {**_emb_meta(_EMB_BITS, dim, len(ids), 0), **meta_extra},
     )
 
 

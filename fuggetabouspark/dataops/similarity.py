@@ -20,6 +20,38 @@ from pyspark.sql import functions as F
 from ..hashing import splitmix64
 
 
+def _planes(seed: int, bits: int, dim: int) -> np.ndarray:
+    """``bits`` random hyperplanes in ``dim`` dimensions as a (bits,
+    dim) float32 matrix of ±1 entries: bit j·dim + i of the set is the
+    low bit of splitmix64(j·dim + i + seed·0x9E37). A pure function of
+    the seed, so every worker and every shard derives the same planes
+    (hyperplane_buckets; the incremental emb family stacks one set per
+    table)."""
+    u = splitmix64(np.arange(bits * dim, dtype=np.uint64) + np.uint64(seed * 0x9E37))
+    return np.where((u & np.uint64(1)).astype(bool), 1.0, -1.0).reshape(bits, dim).astype(np.float32)
+
+
+def _vec_matrix(col, dim: int) -> np.ndarray:
+    """The (n, dim) float32 matrix of an Arrow list column of n
+    vectors. Null and wrong-length vectors fail loudly: a null list
+    contributes 0 floats, so a bare reshape of the flattened values
+    either aborts cryptically or — when the length errors cancel, say
+    a 3-float vector next to a 5-float one at dim 4 — shifts every
+    later row onto the wrong vector (silent false negatives for a
+    dedup probe; code-review r05 fifth pass #3)."""
+    import pyarrow.compute as pc
+
+    n = len(col)
+    if col.null_count:
+        raise ValueError(f"embedding contains {col.null_count} null vectors")
+    bad = n - int(pc.sum(pc.equal(pc.list_value_length(col), dim)).as_py() or 0)
+    if bad:
+        raise ValueError(
+            f"embedding is ragged: {bad} of {n} vectors are not {dim} floats long"
+        )
+    return col.flatten().to_numpy(zero_copy_only=False).astype(np.float32).reshape(n, dim)
+
+
 def _ddl_of(df: DataFrame) -> str:
     """DDL string of a frame's schema — shared by the pass-through
     mapInArrow maps so their declared output types always mirror the
@@ -79,17 +111,13 @@ def hyperplane_buckets(
     exchanges, no join (PLANS.md check)."""
     import pyarrow as pa
 
-    u = splitmix64(np.arange(bits * dim, dtype=np.uint64) + np.uint64(seed * 0x9E37))
-    planes = np.where((u & np.uint64(1)).astype(bool), 1.0, -1.0).reshape(bits, dim).astype(np.float32)
+    planes = _planes(seed, bits, dim)
     weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
 
     def assign(iterator):
         for tbl in iterator:
             col = tbl.column(vec_col)
-            flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float32)
-            n = len(tbl)
-            mat = flat.reshape(n, dim)
-            proj = mat @ planes.T  # (n, bits) — one BLAS call per batch
+            proj = _vec_matrix(col, dim) @ planes.T  # (n, bits) — one BLAS call per batch
             bucket = ((proj > 0).astype(np.int64) * weights).sum(axis=1)
             yield pa.RecordBatch.from_pydict(
                 {
@@ -273,8 +301,7 @@ def _list_sums(joined: DataFrame, shape, vec_col: str):
             if len(tbl) == 0:
                 continue
             lists = tbl.column("list_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = tbl.column(vec_col).flatten().to_numpy(zero_copy_only=False).astype(np.float32)
-            mat = flat.reshape(len(tbl), dim)
+            mat = _vec_matrix(tbl.column(vec_col), dim)
             order = np.argsort(lists, kind="stable")
             ls = lists[order]
             starts = np.unique(ls, return_index=True)
@@ -317,8 +344,7 @@ def _assign_lists(df: DataFrame, cents: np.ndarray, vec_col: str, id_col: str) -
     def assign(iterator):
         for tbl in iterator:
             col = tbl.column(vec_col)
-            flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float32)
-            mat = flat.reshape(len(tbl), dim)
+            mat = _vec_matrix(col, dim)
             mn = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-9)
             lists = (mn @ c_norm.T).argmax(axis=1).astype(np.int32)
             yield pa.RecordBatch.from_pydict(
@@ -437,10 +463,8 @@ def pq_encode(
 
     def enc(iterator):
         for tbl in iterator:
-            col = tbl.column(vec_col)
-            flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float32)
             n = len(tbl)
-            mat = flat.reshape(n, m * dsub)
+            mat = _vec_matrix(tbl.column(vec_col), m * dsub)
             mn = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-9)
             codes = np.empty((n, m), dtype=np.int32)
             for j in range(m):

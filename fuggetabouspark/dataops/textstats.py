@@ -212,16 +212,3 @@ def stable_sample(
     if threshold > (1 << 63) - 1:
         return keyed
     return keyed.where(h < F.lit(threshold))
-
-
-def doc_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """64-bit content fingerprint per document (xxhash64 of the exact
-    text) plus a shingle fingerprint (hash of the sorted distinct
-    word set — order-insensitive). Used by exact/near dedup."""
-    words = tokenize_words(text_col)
-    return df.select(
-        "doc_id",
-        "source",
-        F.xxhash64(F.col(text_col)).alias("fp_exact"),
-        F.xxhash64(F.array_join(F.array_sort(F.array_distinct(words)), " ")).alias("fp_bag"),
-    )

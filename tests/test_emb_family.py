@@ -9,7 +9,10 @@
 - the same through StreamingIngestGuard, on both of its paths: a batch
   with a null vector fails loudly before anything is committed, and
   ``array<double>`` re-uploads are dropped while the clean output keeps
-  the batch's ``array<double>`` type.
+  the batch's ``array<double>`` type;
+- similarity.hyperplane_buckets decodes its vectors through the same
+  guard: a batch whose wrong lengths cancel out and a null vector fail
+  loudly instead of bucketing shifted rows.
 """
 
 import os
@@ -27,6 +30,7 @@ from fuggetabouspark.dataops import (
     incremental_embedding_dedup,
 )
 from fuggetabouspark.dataops.incremental import EMB, EXACT
+from fuggetabouspark.dataops.similarity import hyperplane_buckets
 from fuggetabouspark.params import TimingParams
 
 P = TimingParams(capacity=10_000, error=0.001, window_ticks=2**31)
@@ -131,3 +135,21 @@ class TestGuardEmbeddings:
         assert clean.schema["embedding"].dataType.simpleString() == "array<double>"
         assert {r.doc_id for r in clean.collect()} == {i for i, _ in first}
 
+
+class TestHyperplaneBucketGuards:
+    def _buckets(self, spark, rows):
+        # one partition: both vectors reach the kernel in one batch
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(1)
+        return hyperplane_buckets(df, dim=4, bits=6)[0].collect()
+
+    def test_cancelling_ragged_batch_fails_loudly(self, spark):
+        # 3 + 5 floats is 2 vectors' worth at dim 4: a bare reshape
+        # would bucket two shifted rows without an error
+        rows = [(0, [1.0, 2.0, 3.0]), (1, [4.0, 5.0, 6.0, 7.0, 8.0])]
+        with pytest.raises((ValueError, PythonException), match="ragged"):
+            self._buckets(spark, rows)
+
+    def test_null_vector_fails_loudly(self, spark):
+        rows = [(0, [1.0, 2.0, 3.0, 4.0]), (1, None)]
+        with pytest.raises((ValueError, PythonException), match="null vectors"):
+            self._buckets(spark, rows)

@@ -302,8 +302,7 @@ def main():
     # sig ledger (O(retained docs) at 100 TB) are streamed/filtered in
     # place and never shuffled — mirroring check 12's exact-dedup gate.
     from fuggetabouspark.dataops import incremental_near_dup
-    from fuggetabouspark.dataops.dedup import banded_signatures, minhash_signatures
-    from fuggetabouspark.dataops.incremental import near_history_matches
+    from fuggetabouspark.dataops.incremental import _near_sigs, near_history_matches
     from fuggetabouspark.params import TimingParams as _TP
 
     ck = tempfile.mkdtemp(prefix="fgs_plans_near_")
@@ -313,17 +312,8 @@ def main():
             spark, docs.select("doc_id", "text").limit(64), ck, now=1,
             partitions=4, params=small,
         ).unpersist()
-        src = docs.select(
-            F.col("doc_id").cast("string").alias("doc_id"), "text",
-            F.lit("").alias("source"),
-        )
-        sig = minhash_signatures(src, num_hashes=64).select("doc_id", "sig")
-        banded = banded_signatures(sig, 16, 4).select(
-            "doc_id", F.xxhash64("band", "bucket").alias("bkey")
-        )
-        p11 = plan_of(near_history_matches(
-            spark, banded, sig, ck, now=2, threshold=0.8, num_hashes=64
-        ))
+        # the operator's own signature and band-key derivation
+        p11 = plan_of(near_history_matches(spark, _near_sigs(docs), ck, now=2))
     finally:
         shutil.rmtree(ck, ignore_errors=True)
     sections.append((
@@ -387,6 +377,18 @@ def main():
         "incremental-emb",
     ))
 
+    # Spark's plan ids, its expression ids (they count up over the
+    # session, so they shift when e.g. the corpus is generated first)
+    # and the random checkpoint dirs differ from run to run: normalized
+    # after the checks (the emb gate needs the real path), so an
+    # unchanged plan set rewrites PLANS.md byte for byte. Expression
+    # ids are numbered in order of first use within each plan.
+    def stable(plan: str) -> str:
+        plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+        plan = re.sub(r"[^\s\[\]]*/(fgs_plans_[a-z]+_)\w+", r"<tmp>/\1*", plan)
+        ids: dict[str, int] = {}
+        return re.sub(r"#(\d+)", lambda m: f"#{ids.setdefault(m[1], len(ids))}", plan)
+
     lines = ["# PLANS — physical-plan evidence (auto-generated by tools/explain_plans.py)", ""]
     lines.append("## Checks")
     lines.append("")
@@ -401,7 +403,7 @@ def main():
         lines.append(why)
         lines.append("")
         lines.append("```")
-        lines.append(plan.strip()[:6000])
+        lines.append(stable(plan).strip()[:6000])
         lines.append("```")
         lines.append("")
     open(os.path.join(REPO, "PLANS.md"), "w").write("\n".join(lines))
