@@ -34,11 +34,17 @@ from pyspark.sql.types import (
 )
 
 from ..hashing import spark_xxhash64, splitmix64
+from ..io import TEXT
 
 _U64 = np.uint64
+# the token n-gram length of minhash_signatures_tokens' shingles and the
+# word n-gram length of ngram_jaccard_pairs
+_NGRAM = 3
+# simhash_buckets' band width: 64 // 16 = 4 bands of the 64-bit simhash
+_SIMHASH_BAND_BITS = 16
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", max_ids: int = 16) -> DataFrame:
+def exact_dedup(df: DataFrame, max_ids: int = 16) -> DataFrame:
     """Groups of byte-identical documents: (fp_exact, n_copies,
     doc_ids = the max_ids smallest ids, sorted). n_copies is always
     exact; a group with more copies signals itself via
@@ -56,7 +62,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text", max_ids: int = 16) -> Dat
     rank, with no Window, no per-group sort, and per-task state
     bounded by O(partitions × max_ids).
     max_ids=None keeps the full list (small-scale debugging only)."""
-    keyed = df.select(F.xxhash64(F.col(text_col)).alias("fp_exact"), "doc_id")
+    keyed = df.select(F.xxhash64(F.col(TEXT)).alias("fp_exact"), "doc_id")
     if max_ids is None:
         return (
             keyed.groupBy("fp_exact")
@@ -120,9 +126,7 @@ def _batch_shingles(flat: np.ndarray, counts: np.ndarray, n: int):
     return sh_flat, out_offsets
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", num_hashes: int = 64, shingle: int = 3
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, num_hashes: int = 64, shingle: int = 3) -> DataFrame:
     """(doc_id, source, sig: array<long>) — k minhashes over word
     3-gram shingles. mapInArrow: the whole batch's shingle hashes are
     computed in one flattened pass (_batch_shingles — no per-doc
@@ -133,7 +137,7 @@ def minhash_signatures(
     whole-batch one (which pays DRAM twice for a 47 MB transient);
     value-identical to both (test_minhash_batch_matches_per_doc_
     reference). k seeded permutations via splitmix64(h ^ seed_i)."""
-    word_hash = F.transform(F.split(F.col(text_col), " "), lambda w: F.xxhash64(w))
+    word_hash = F.transform(F.split(F.col(TEXT), " "), lambda w: F.xxhash64(w))
     src = df.select("doc_id", "source", word_hash.alias("wh"))
     return src.mapInArrow(
         _make_sig_udf(num_hashes, shingle),
@@ -149,12 +153,10 @@ def _id_type(df: DataFrame) -> str:
     return df.schema["doc_id"].dataType.simpleString()
 
 
-def minhash_signatures_tokens(
-    df: DataFrame, token_col: str = "tokens", num_hashes: int = 64, shingle: int = 3
-) -> DataFrame:
+def minhash_signatures_tokens(df: DataFrame, num_hashes: int = 64) -> DataFrame:
     """minhash_signatures for the input_hint corpus shape (BASELINE.
     json:15): documents arrive pre-tokenized as tokens:array<int32>,
-    so the signature shingles token n-grams directly — no text split,
+    so the signature shingles token _NGRAM-grams directly — no text split,
     no per-word xxhash64, the scan reads only (doc_id, source, tokens).
     Same kernel as the text path (shared _make_sig_udf)."""
     src = df.select(
@@ -163,11 +165,11 @@ def minhash_signatures_tokens(
         # NULL token arrays -> empty (sentinel signature), keeping the
         # Arrow offsets buffer aligned with the flattened values
         F.coalesce(
-            F.col(token_col).cast("array<long>"), F.array().cast("array<long>")
+            F.col("tokens").cast("array<long>"), F.array().cast("array<long>")
         ).alias("wh"),
     )
     return src.mapInArrow(
-        _make_sig_udf(num_hashes, shingle),
+        _make_sig_udf(num_hashes, _NGRAM),
         schema=f"doc_id {_id_type(df)}, source string, sig array<long>",
     )
 
@@ -313,15 +315,15 @@ def minhash_lsh_candidates(
     )
 
 
-def simhash_buckets(df: DataFrame, text_col: str = "text", band_bits: int = 16) -> DataFrame:
+def simhash_buckets(df: DataFrame) -> DataFrame:
     """64-bit SimHash per doc: per hash bit j, sum(+1/-1) over the
     doc's word hashes; sign → bit. Word hashes come from JVM-side
     xxhash64; the bit accumulation is a vectorized Arrow UDF (one
     unpackbits + reduceat per batch — no per-word Python). Docs
-    sharing any band_bits-wide band are near-dup candidates."""
+    sharing any _SIMHASH_BAND_BITS-wide band are near-dup candidates."""
     import pyarrow as pa
 
-    wh = F.transform(F.split(F.col(text_col), " "), lambda w: F.xxhash64(w))
+    wh = F.transform(F.split(F.col(TEXT), " "), lambda w: F.xxhash64(w))
     src = df.select("doc_id", "source", wh.alias("wh"))
 
     def sim(iterator):
@@ -350,9 +352,10 @@ def simhash_buckets(df: DataFrame, text_col: str = "text", band_bits: int = 16) 
             )
 
     out = src.mapInArrow(sim, schema=f"doc_id {_id_type(df)}, source string, simhash long")
+    bits = _SIMHASH_BAND_BITS
     bandcols = [
-        F.shiftright("simhash", i * band_bits).bitwiseAND(F.lit((1 << band_bits) - 1)).alias(f"band{i}")
-        for i in range(64 // band_bits)
+        F.shiftright("simhash", i * bits).bitwiseAND(F.lit((1 << bits) - 1)).alias(f"band{i}")
+        for i in range(64 // bits)
     ]
     return out.select("doc_id", "source", "simhash", *bandcols)
 
@@ -364,15 +367,10 @@ _LOCAL_CC_EDGES = 1 << 20
 _LOCAL_CC_TYPES = (ByteType(), ShortType(), IntegerType(), LongType(), StringType())
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 25,
-    return_rounds: bool = False,
-):
-    """(node, component) for every node appearing in ``edges``, where
-    component = the minimum node id reachable through the pair graph —
+def connected_components(edges: DataFrame, max_iter: int = 25, return_rounds: bool = False):
+    """(node, component) for every node appearing in the ``doc_a`` and
+    ``doc_b`` columns of ``edges``, where component = the minimum node
+    id reachable through the pair graph —
     the duplicate-CLUSTERING step after candidate generation (LSH) and
     verification (jaccard): near-dup pairs chain transitively, and
     keep-one-per-cluster needs the transitive closure, not the pairs.
@@ -414,7 +412,7 @@ def connected_components(
     Above the budget, the probe's partial read of ``edges`` comes on
     top of the loop's own evaluation, so a caller with a large graph
     should pass materialized (checkpointed or cached) edges."""
-    pair = edges.select(src, dst)
+    pair = edges.select("doc_a", "doc_b")
     fields = pair.schema.fields
     if fields[0].dataType == fields[1].dataType and fields[0].dataType in _LOCAL_CC_TYPES:
         tbl = pair.limit(_LOCAL_CC_EDGES + 1).toArrow()
@@ -422,7 +420,7 @@ def connected_components(
             out, rounds = _cc_local(edges.sparkSession, tbl, fields, max_iter)
             return (out, rounds) if return_rounds else out
     ab = edges.select(
-        F.coalesce(src, dst).alias("a"), F.coalesce(dst, src).alias("b")
+        F.coalesce("doc_a", "doc_b").alias("a"), F.coalesce("doc_b", "doc_a").alias("b")
     ).where(F.col("a").isNotNull())
     e = ab.union(ab.select("b", "a")).distinct().localCheckpoint()
     lab = None  # round 1 runs off identity labels synthesized from e
@@ -526,14 +524,13 @@ def _cc_local(spark, tbl: pa.Table, fields, max_iter: int):
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.8,
-    n: int = 3,
-    text_col: str = "text",
     candidates: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact word-n-gram Jaccard for pairs: standalone (self-join within
-    source — small scales / verification) or restricted to an LSH
-    candidate pair set (the 10^12-doc path). JVM set algebra only."""
-    words = F.split(F.col(text_col), " ")
+    """Exact word-_NGRAM-gram Jaccard for pairs: standalone (self-join
+    within source — small scales / verification) or restricted to an
+    LSH candidate pair set (the 10^12-doc path). JVM set algebra only."""
+    n = _NGRAM
+    words = F.split(F.col(TEXT), " ")
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
@@ -681,7 +678,6 @@ def _make_passage_udf(window: int, stride: int, with_positions: bool = False):
 
 def passage_fingerprints(
     df: DataFrame,
-    text_col: str = "text",
     window: int = 50,
     stride: int = 1,
     with_positions: bool = False,
@@ -694,7 +690,7 @@ def passage_fingerprints(
     whole-doc dedup (exact_dedup/minhash) owns that regime. Scale
     shape: a projection-only scan into one mapInArrow; output rows <=
     tokens/stride, shuffled only by downstream groupBys."""
-    word_hash = F.transform(F.split(F.col(text_col), " "), lambda w: F.xxhash64(w))
+    word_hash = F.transform(F.split(F.col(TEXT), " "), lambda w: F.xxhash64(w))
     src = df.select("doc_id", word_hash.alias("wh"))
     extra = ", pos_list array<int>" if with_positions else ""
     return src.mapInArrow(
@@ -705,7 +701,6 @@ def passage_fingerprints(
 
 def repeated_passages(
     df: DataFrame,
-    text_col: str = "text",
     window: int = 50,
     stride: int = 1,
     min_docs: int = 2,
@@ -717,7 +712,7 @@ def repeated_passages(
     n_occ sums within-doc repeats, doc_ids is the max_ids smallest ids
     via the same skew-proof two-level (fp, partition) aggregation as
     exact_dedup — no Window, per-task state O(partitions x max_ids)."""
-    wf = passage_fingerprints(df, text_col, window, stride)
+    wf = passage_fingerprints(df, window, stride)
     pre = wf.groupBy("fp", F.spark_partition_id().alias("_pid")).agg(
         F.count("*").alias("_n"),
         F.sum("n_occ").alias("_occ"),
@@ -747,7 +742,6 @@ _LOCAL_BYTES = 1 << 25
 
 def mask_repeated_passages(
     df: DataFrame,
-    text_col: str = "text",
     window: int = 50,
     stride: int = 1,
     min_docs: int = 2,
@@ -808,7 +802,7 @@ def mask_repeated_passages(
         # coalesce(1): one task reads the input in order and stops
         # after the limit, so the read shuffles nothing
         tbl = _read_bounded(
-            df.coalesce(1), ["doc_id"], "doc_id", text_col, _LOCAL_ROWS, _LOCAL_BYTES
+            df.coalesce(1), ["doc_id"], "doc_id", TEXT, _LOCAL_ROWS, _LOCAL_BYTES
         )
         if tbl is not None:
             text, removed = _mask_local(tbl, window, stride, min_docs)
@@ -824,7 +818,7 @@ def mask_repeated_passages(
             # one partition, as in _cc_local: an aggregation over it
             # needs no exchange
             return df.sparkSession.createDataFrame(out, schema).coalesce(1)
-    wf = passage_fingerprints(df, text_col, window, stride, with_positions=True)
+    wf = passage_fingerprints(df, window, stride, with_positions=True)
     # persisted, not localCheckpointed: both consumers run in the same
     # caller action tree and the lineage must stay re-computable on
     # executor loss at scale. Lifetime note (ADVICE r05 #3; Spark path
@@ -888,7 +882,7 @@ def mask_repeated_passages(
         .groupBy("doc_id")
         .agg(F.flatten(F.collect_list("_d")).alias("_drops"))
     )
-    return _mask_spans(df.join(drops, "doc_id", "left"), text_col, window)
+    return _mask_spans(df.join(drops, "doc_id", "left"), window)
 
 
 def _kept_words(window: int):
@@ -910,12 +904,12 @@ def _kept_words(window: int):
     )
 
 
-def _mask_spans(df, text_col: str, window: int):
+def _mask_spans(df, window: int):
     """(doc_id, text_clean, n_tokens_removed) of ``df``, whose
     ``_drops`` column lists the word positions at which a
-    ``window``-word span is removed (_kept_words)."""
+    ``window``-word span of the text is removed (_kept_words)."""
     return (
-        df.withColumn("_words", F.split(F.col(text_col), " "))
+        df.withColumn("_words", F.split(F.col(TEXT), " "))
         .withColumn("_kept", _kept_words(window))
         .select(
             "doc_id",

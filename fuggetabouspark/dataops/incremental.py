@@ -103,6 +103,7 @@ from pyspark.sql.types import (
 )
 
 from ..hashing import spark_xxhash64
+from ..io import EMBEDDING, TEXT
 from ..state import (
     ShardLog,
     _commit_table,
@@ -156,15 +157,14 @@ _LOCAL_SCALARS = (
     ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType,
     BooleanType, StringType, BinaryType,
 )
-# The columns and key geometry of the near, passage and embedding
-# families, named once: their operators, the guard's Spark path (those
-# operators) and its driver path (the _local helpers) all read them
-# here. A shard's keys must be derived exactly as history's were, or an
+# The key geometry of the near, passage and embedding families (their
+# columns are io.TEXT and io.EMBEDDING), named once: their operators,
+# the guard's Spark path (those operators) and its driver path (the
+# _local helpers) all read them here. A shard's keys must be derived exactly as history's were, or an
 # in-window duplicate's keys miss the checkpoint without any error. The
 # near and emb thresholds and the emb bits are the defaults of the
 # operators' own ``threshold``/``bits`` (the emb bits are checked
 # against the checkpoint's, _emb_check_geometry).
-_TEXT_COL, _VEC_COL = "text", "embedding"
 _NEAR_THRESHOLD, _NEAR_NUM_HASHES, _NEAR_BANDS, _NEAR_ROWS_PER_BAND = 0.8, 64, 16, 4
 _NEAR_SHINGLE = 3
 _PASSAGE_STRIDE = 1
@@ -642,7 +642,7 @@ def incremental_dedup(
     now: int,
     window: int | None = None,
     params=None,
-    text_col: str = _TEXT_COL,
+    text_col: str = TEXT,
     partitions: int | None = None,
     update_state: bool = True,
     meta_extra: dict | None = None,
@@ -764,7 +764,7 @@ class StreamingIngestGuard:
     with 64 hashes of 3-word shingles in 16 bands of 4 rows, the
     passage family a stride of 1, the embedding family cosine 0.9 over
     8 tables of 12 bits: defined once at the top of this module
-    (_TEXT_COL, _VEC_COL, _NEAR_*, _PASSAGE_STRIDE, _EMB_*) for both of
+    (io.TEXT, io.EMBEDDING, _NEAR_*, _PASSAGE_STRIDE, _EMB_*) for both of
     the paths below. The key geometry is fixed for every caller; only
     the near and emb thresholds and the emb bits still vary, through
     the operators' own ``threshold`` and ``bits``.
@@ -903,7 +903,7 @@ class StreamingIngestGuard:
         if any(m.get("epoch") == int(epoch_id) for m in done):
             return  # fully committed (incl. clean output — see class doc)
         ep, now = int(epoch_id), self.now_for_epoch(epoch_id)
-        tbl = _read_local(batch_df, _TEXT_COL, self.near or self.passages, self.passages)
+        tbl = _read_local(batch_df, TEXT, self.near or self.passages, self.passages)
         if tbl is None or not self._process_local(tbl, ep, now):
             self._process_spark(batch_df, ep, now)
         self._batches_done += 1
@@ -927,7 +927,7 @@ class StreamingIngestGuard:
         ids, n = tbl.column("_fgs_id"), tbl.num_rows
         keep = np.ones(n, bool)  # survives every doc-level family
         if self.embeddings:
-            keep &= ~_emb_flags_local(ck, ids, tbl.column(_VEC_COL), now, self.emb_dim, ep)
+            keep &= ~_emb_flags_local(ck, ids, tbl.column(EMBEDDING), now, self.emb_dim, ep)
         if self.near:
             near = _near_local(ck, ids, tbl.column("_fgs_wh"), now, ep)
             if near is None:
@@ -987,7 +987,7 @@ class StreamingIngestGuard:
         ids = out.column("_fgs_id")
         if self.embeddings:
             _emb_commit_local(
-                self.checkpoint_dir, ids, out.column(_VEC_COL), now, self.emb_dim,
+                self.checkpoint_dir, ids, out.column(EMBEDDING), now, self.emb_dim,
                 self.emb_params, {"epoch": ep},
             )
         names = [c for c in out.schema.names if not c.startswith("_fgs_")]
@@ -997,7 +997,7 @@ class StreamingIngestGuard:
                 self.checkpoint_dir, out, now, self.passage_window,
                 self.passage_params, {"epoch": ep}, ep,
             )
-            cols[names.index(_TEXT_COL)] = text
+            cols[names.index(TEXT)] = text
             names.append("_passage_tokens_removed")
             cols.append(removed)
         os.makedirs(self.clean_dir, exist_ok=True)
@@ -1104,9 +1104,9 @@ class StreamingIngestGuard:
                 out = (
                     out.withColumn("_k", F.col("doc_id").cast("string"))
                     .join(drops, "_k", "left")
-                    .withColumn("_words", F.split(F.col(_TEXT_COL), " "))
+                    .withColumn("_words", F.split(F.col(TEXT), " "))
                     .withColumn("_kept", _kept_words(self.passage_window))
-                    .withColumn(_TEXT_COL, F.array_join("_kept", " "))
+                    .withColumn(TEXT, F.array_join("_kept", " "))
                     .withColumn(
                         "_passage_tokens_removed",
                         (F.size("_words") - F.size("_kept")).cast("int"),
@@ -1168,7 +1168,7 @@ def _near_sigs(new_df: DataFrame) -> DataFrame:
 
     src = new_df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        F.col(_TEXT_COL).alias("text"),
+        F.col(TEXT).alias("text"),
         F.lit("").alias("source"),
     )
     return minhash_signatures(
@@ -1474,7 +1474,7 @@ def incremental_passages(
 
     src = new_df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        F.col(_TEXT_COL).alias("text"),
+        F.col(TEXT).alias("text"),
     )
     # ONE kernel pass (rollup + positions), frozen so the probe,
     # verify, annotate, and state-update consumers never recompute it
@@ -1642,7 +1642,7 @@ def mask_against_history(
     # shard's drop table can be wide
     return _mask_spans(
         new_df.withColumn("_k", F.col("doc_id").cast("string")).join(drops, "_k", "left"),
-        _TEXT_COL, window,
+        window,
     )
 
 
@@ -1705,7 +1705,7 @@ def _emb_src_keyed(
     pass #3/#4), frozen so probe and state commit never recompute it."""
     src = new_df.select(
         F.col(id_col).cast("string").alias("vec_id"),
-        F.col(_VEC_COL).alias("embedding"),
+        F.col(EMBEDDING).alias("embedding"),
     )
     keys = _emb_bucket_keys(dim, bits)
 

@@ -197,12 +197,11 @@ def encode_png(img: np.ndarray, cycle_filters: bool = True) -> bytes:
     )
 
 
-def encode_png_indexed(
-    indices: np.ndarray, palette: np.ndarray, cycle_filters: bool = True
-) -> bytes:
+def encode_png_indexed(indices: np.ndarray, palette: np.ndarray) -> bytes:
     """8-bit palette (color type 3) PNG writer: ``indices`` is (H, W)
     uint8 into ``palette`` (N ≤ 256, 3) RGB rows, written as a PLTE
-    chunk; scanlines filter over the 1-byte index lanes."""
+    chunk; scanlines filter over the 1-byte index lanes, cycling the
+    filter type row % 5 as encode_png does."""
     import zlib
 
     indices = np.asarray(indices, dtype=np.uint8)
@@ -212,7 +211,7 @@ def encode_png_indexed(
     if palette.shape[0] > 256 or int(indices.max(initial=0)) >= palette.shape[0]:
         raise ValueError("palette must have ≤ 256 entries covering every index")
     h, w = indices.shape
-    body = _filter_rows(indices.reshape(h, w), 1, cycle_filters)
+    body = _filter_rows(indices.reshape(h, w), 1, True)
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0)
     return (
         _PNG_SIG

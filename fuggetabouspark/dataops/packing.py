@@ -30,15 +30,14 @@ from pyspark.sql import functions as F
 def pack_sequences(
     df: DataFrame,
     seq_len: int,
-    token_col: str = "tokens",
-    id_col: str = "doc_id",
     bucket_expr: Column | None = None,
     n_buckets: int = 32,
 ) -> DataFrame:
-    """(bucket, seq_idx, tokens array<long> of EXACTLY seq_len) —
-    deterministic greedy packing, doc_id order within bucket.
+    """(bucket, seq_idx, tokens array<long> of EXACTLY seq_len) from the
+    ``doc_id`` and ``tokens`` columns — deterministic greedy packing,
+    doc_id order within bucket.
 
-    ``bucket_expr`` defaults to pmod(xxhash64(id), n_buckets) (uniform);
+    ``bucket_expr`` defaults to pmod(xxhash64(doc_id), n_buckets) (uniform);
     pass e.g. ``F.col("doc_id") % 8`` when a SQL oracle must recompute
     bucket membership."""
     import pyarrow as pa
@@ -48,13 +47,13 @@ def pack_sequences(
     b = (
         bucket_expr
         if bucket_expr is not None
-        else F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_buckets))
+        else F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_buckets))
     )
     src = df.select(
         b.cast("long").alias("bucket"),
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.coalesce(
-            F.col(token_col).cast("array<long>"), F.array().cast("array<long>")
+            F.col("tokens").cast("array<long>"), F.array().cast("array<long>")
         ).alias("_tok"),
     )
 

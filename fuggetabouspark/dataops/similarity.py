@@ -18,6 +18,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..hashing import splitmix64
+from ..io import EMBEDDING, VEC_ID
+
+# Seeds of the random hyperplanes (hyperplane_buckets, embedding_near_dup,
+# lsh_bucket_topk), of the IVF centroid sample and of the PQ training
+# sample and init; the PQ codebooks take _PQ_ITERS Lloyd rounds.
+_LSH_SEED, _IVF_SEED, _PQ_SEED = 7, 11, 13
+_PQ_ITERS = 4
 
 
 def _planes(seed: int, bits: int, dim: int) -> np.ndarray:
@@ -67,74 +74,79 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
 
 
-def brute_force_topk(
-    df: DataFrame, queries_df: DataFrame, k: int = 10,
-    vec_col: str = "embedding", id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact cosine top-k per query vector.
-
-    queries_df: (query_id long, qvec array<float>) — small, broadcast.
-    Returns (query_id, vec_id, rank) with rank 1..k by descending
-    cosine, ties broken by vec_id (deterministic)."""
+def _cosine_topk(joined: DataFrame, k: int) -> DataFrame:
+    """(query_id, vec_id, rank) of ``joined``'s (query, vector) rows
+    (columns query_id, qvec, vec_id, embedding): each query's k rows of
+    highest cosine, rank 1..k, ties broken by vec_id (deterministic)."""
     from pyspark.sql.window import Window
 
-    joined = df.crossJoin(F.broadcast(queries_df))
-    cos = _dot(F.col(vec_col), F.col("qvec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("qvec"))
-    )
-    scored = joined.select(
-        "query_id", F.col(id_col).alias("vec_id"), cos.alias("cos")
-    )
+    vec, q = F.col(EMBEDDING), F.col("qvec")
+    cos = _dot(vec, q) / (_norm(vec) * _norm(q))
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        joined.select("query_id", F.col(VEC_ID).alias("vec_id"), cos.alias("cos"))
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "vec_id", "rank")
     )
 
 
-def hyperplane_buckets(
-    df: DataFrame, dim: int, bits: int = 12, seed: int = 7,
-    vec_col: str = "embedding", id_col: str = "vec_id",
-):
+def _query_matrix(queries_df: DataFrame, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(query ids, (nq, dim) float32 query vectors) of the small
+    (query_id, qvec) frame, collected to the driver in one Arrow read."""
+    tbl = queries_df.toArrow()
+    ids = tbl.column("query_id").to_numpy().astype(np.int64)
+    return ids, _vec_matrix(tbl.column("qvec").combine_chunks(), dim)
+
+
+def brute_force_topk(df: DataFrame, queries_df: DataFrame, k: int = 10) -> DataFrame:
+    """Exact cosine top-k per query vector.
+
+    queries_df: (query_id long, qvec array<float>) — small, broadcast.
+    Returns (query_id, vec_id, rank) with rank 1..k by descending
+    cosine, ties broken by vec_id (deterministic)."""
+    return _cosine_topk(df.crossJoin(F.broadcast(queries_df)), k)
+
+
+def hyperplane_buckets(df: DataFrame, dim: int, bits: int = 12):
     """(df with bucket column, planes) — random-hyperplane LSH.
 
-    Planes are deterministic (splitmix64-seeded, Box–Muller-free: we
-    use a uniform ±1 Rademacher matrix, which preserves angles well
-    and is exactly reproducible everywhere). Sign pattern of the
-    projections → integer bucket. Computed by a vectorized Arrow UDF
-    (one matmul per batch) that PASSES THE VECTORS THROUGH the same
-    batch (round-3 fix, VERDICT r02 "what's wrong" #2): the old
+    Planes are deterministic (splitmix64-seeded with _LSH_SEED,
+    Box–Muller-free: we use a uniform ±1 Rademacher matrix, which
+    preserves angles well and is exactly reproducible everywhere).
+    Sign pattern of the projections → integer bucket. Computed by a
+    vectorized Arrow UDF (one matmul per batch) that PASSES THE
+    VECTORS THROUGH the same batch (round-3 fix, VERDICT r02 "what's
+    wrong" #2): the old
     formulation emitted only (id, bucket) and joined back to the
     vector table — a full shuffle of O(N) vector bytes per index
     build. Now the index build is a pure map over the scan: zero
     exchanges, no join (PLANS.md check)."""
     import pyarrow as pa
 
-    planes = _planes(seed, bits, dim)
+    planes = _planes(_LSH_SEED, bits, dim)
     weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
 
     def assign(iterator):
         for tbl in iterator:
-            col = tbl.column(vec_col)
+            col = tbl.column(EMBEDDING)
             proj = _vec_matrix(col, dim) @ planes.T  # (n, bits) — one BLAS call per batch
             bucket = ((proj > 0).astype(np.int64) * weights).sum(axis=1)
             yield pa.RecordBatch.from_pydict(
                 {
-                    id_col: tbl.column(id_col),
-                    vec_col: col,  # pass-through, zero-copy within the batch
+                    VEC_ID: tbl.column(VEC_ID),
+                    EMBEDDING: col,  # pass-through, zero-copy within the batch
                     "bucket": pa.array(bucket, pa.int64()),
                 }
             )
 
-    src = df.select(id_col, vec_col)
+    src = df.select(VEC_ID, EMBEDDING)
     bucketed = src.mapInArrow(assign, schema=f"{_ddl_of(src)}, bucket long")
     return bucketed, planes
 
 
 def embedding_near_dup(
     df: DataFrame, dim: int, threshold: float = 0.95, bits: int = 6,
-    vec_col: str = "embedding", id_col: str = "vec_id", seed: int = 7,
     exact: bool = False, max_bucket: int | None = None, fine_bits: int = 12,
 ) -> DataFrame:
     """Near-duplicate vector pairs by cosine >= threshold.
@@ -172,7 +184,7 @@ def embedding_near_dup(
       consumers lose them. If that matters, raise max_bucket instead.
     """
     if exact:
-        side = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        side = df.select(F.col(VEC_ID).alias("_id"), F.col(EMBEDDING).alias("_v"))
         a = side.select(F.col("_id").alias("_ida"), F.col("_v").alias("_va"))
         b = side.select(F.col("_id").alias("_idb"), F.col("_v").alias("_vb"))
         pairs = a.crossJoin(b).where(F.col("_ida") < F.col("_idb"))
@@ -180,15 +192,13 @@ def embedding_near_dup(
         total_bits = bits + (fine_bits if max_bucket is not None else 0)
         if total_bits > 62:
             raise ValueError(f"bits + fine_bits must be <= 62, got {total_bits}")
-        bucketed, _ = hyperplane_buckets(df, dim, total_bits, seed, vec_col, id_col)
+        bucketed, _ = hyperplane_buckets(df, dim, total_bits)
         if max_bucket is None:
-            a = bucketed.select(F.col(id_col).alias("_ida"), F.col(vec_col).alias("_va"), "bucket")
-            b = bucketed.select(F.col(id_col).alias("_idb"), F.col(vec_col).alias("_vb"), "bucket")
+            a = bucketed.select(F.col(VEC_ID).alias("_ida"), F.col(EMBEDDING).alias("_va"), "bucket")
+            b = bucketed.select(F.col(VEC_ID).alias("_idb"), F.col(EMBEDDING).alias("_vb"), "bucket")
             pairs = a.join(b, "bucket").where(F.col("_ida") < F.col("_idb"))
         else:
-            pairs = _capped_bucket_pairs(
-                bucketed, bits, fine_bits, max_bucket, vec_col, id_col
-            )
+            pairs = _capped_bucket_pairs(bucketed, bits, fine_bits, max_bucket)
     cos = _dot(F.col("_va"), F.col("_vb")) / (_norm(F.col("_va")) * _norm(F.col("_vb")))
     return (
         pairs.select(F.col("_ida").alias("vec_a"), F.col("_idb").alias("vec_b"), cos.alias("cos"))
@@ -199,8 +209,7 @@ def embedding_near_dup(
 
 
 def _capped_bucket_pairs(
-    bucketed: DataFrame, bits: int, fine_bits: int, max_bucket: int,
-    vec_col: str, id_col: str,
+    bucketed: DataFrame, bits: int, fine_bits: int, max_bucket: int
 ) -> DataFrame:
     """Candidate pairs with the dense-bucket cap applied (see
     embedding_near_dup). The two size censuses are O(distinct buckets)
@@ -208,7 +217,7 @@ def _capped_bucket_pairs(
     2^fine_bits) respectively, both trivial next to the vector data."""
     mask = (1 << bits) - 1
     b = bucketed.select(
-        id_col, vec_col,
+        VEC_ID, EMBEDDING,
         F.col("bucket").bitwiseAND(F.lit(mask)).alias("_coarse"),
         F.shiftright("bucket", bits).alias("_fine"),
     )
@@ -230,51 +239,48 @@ def _capped_bucket_pairs(
     marked = refined.join(F.broadcast(star_keys), ["_coarse", "_rb"], "left")
     normal = marked.where(F.col("_star").isNull())
     pa_ = normal.select(
-        F.col(id_col).alias("_ida"), F.col(vec_col).alias("_va"), "_coarse", "_rb"
+        F.col(VEC_ID).alias("_ida"), F.col(EMBEDDING).alias("_va"), "_coarse", "_rb"
     )
     pb_ = normal.select(
-        F.col(id_col).alias("_idb"), F.col(vec_col).alias("_vb"), "_coarse", "_rb"
+        F.col(VEC_ID).alias("_idb"), F.col(EMBEDDING).alias("_vb"), "_coarse", "_rb"
     )
     all_pairs = pa_.join(pb_, ["_coarse", "_rb"]).where(F.col("_ida") < F.col("_idb"))
     dense_rows = marked.where(F.col("_star"))
     reps = dense_rows.groupBy("_coarse", "_rb").agg(
-        F.min(id_col).alias("_rid"), F.min_by(vec_col, id_col).alias("_rv")
+        F.min(VEC_ID).alias("_rid"), F.min_by(EMBEDDING, VEC_ID).alias("_rv")
     )
     star_pairs = (
         dense_rows.join(F.broadcast(reps), ["_coarse", "_rb"])
-        .where(F.col(id_col) != F.col("_rid"))
+        .where(F.col(VEC_ID) != F.col("_rid"))
         .select(
-            F.least(id_col, "_rid").alias("_ida"),
+            F.least(VEC_ID, "_rid").alias("_ida"),
             # rep id is the group MIN, so rep vec is always _va's side
             F.col("_rv").alias("_va"),
-            F.greatest(id_col, "_rid").alias("_idb"),
-            F.col(vec_col).alias("_vb"),
+            F.greatest(VEC_ID, "_rid").alias("_idb"),
+            F.col(EMBEDDING).alias("_vb"),
         )
     )
     return all_pairs.select("_ida", "_va", "_idb", "_vb").unionByName(star_pairs)
 
 
-def ivf_centroids(df: DataFrame, dim: int, n_lists: int = 16, iters: int = 2,
-                  vec_col: str = "embedding", id_col: str = "vec_id", seed: int = 11) -> np.ndarray:
+def ivf_centroids(df: DataFrame, dim: int, n_lists: int = 16, iters: int = 2) -> np.ndarray:
     """Deterministic IVF coarse quantizer: seed centroids are the
-    n_lists vectors with the smallest splitmix64(vec_id ^ seed) (a
+    n_lists vectors with the smallest xxhash64(vec_id, _IVF_SEED) (a
     reproducible uniform sample), refined by ``iters`` Lloyd rounds
     where the assign step is a distributed matmul (mapInArrow) and the
     mean step a groupBy — the standard k-means-on-Spark shape."""
-    from pyspark.sql import functions as F
-
     hashed = df.select(
-        id_col, vec_col,
+        VEC_ID, EMBEDDING,
         # hash (id AS STRING, seed) — NOT id + seed: arithmetic on a
         # string id casts to NULL, making every sort key tie and the
         # sample order nondeterministic (ADVICE r03)
-        F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)).alias("_h"),
+        F.xxhash64(F.col(VEC_ID).cast("string"), F.lit(_IVF_SEED)).alias("_h"),
     )
-    rows = hashed.orderBy("_h", F.col(id_col)).limit(n_lists).collect()
-    cents = np.array([np.asarray(r[vec_col], dtype=np.float32) for r in rows])
+    rows = hashed.orderBy("_h", F.col(VEC_ID)).limit(n_lists).collect()
+    cents = np.array([np.asarray(r[EMBEDDING], dtype=np.float32) for r in rows])
     for _ in range(iters):
-        assigned = _assign_lists(df, cents, vec_col, id_col)
-        sums, cnts = _list_sums(assigned, cents.shape, vec_col)
+        assigned = _assign_lists(df, cents)
+        sums, cnts = _list_sums(assigned, cents.shape)
         nz = cnts > 0
         new = cents.copy()
         new[nz] = (sums[nz] / cnts[nz, None]).astype(np.float32)
@@ -282,7 +288,7 @@ def ivf_centroids(df: DataFrame, dim: int, n_lists: int = 16, iters: int = 2,
     return cents
 
 
-def _list_sums(joined: DataFrame, shape, vec_col: str):
+def _list_sums(joined: DataFrame, shape):
     """Per-list vector sums + counts for the k-means mean step, as a
     mapInArrow partial-sum: each partition emits ONE (n_lists, dim)
     matrix (as ≤ n_lists rows) and the driver adds them up — so the
@@ -301,7 +307,7 @@ def _list_sums(joined: DataFrame, shape, vec_col: str):
             if len(tbl) == 0:
                 continue
             lists = tbl.column("list_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            mat = _vec_matrix(tbl.column(vec_col), dim)
+            mat = _vec_matrix(tbl.column(EMBEDDING), dim)
             order = np.argsort(lists, kind="stable")
             ls = lists[order]
             starts = np.unique(ls, return_index=True)
@@ -319,7 +325,7 @@ def _list_sums(joined: DataFrame, shape, vec_col: str):
             }
         )
 
-    partials = joined.select("list_id", vec_col).mapInArrow(
+    partials = joined.select("list_id", EMBEDDING).mapInArrow(
         partial, schema="list_id int, vsum array<double>, n long"
     ).collect()
     sums = np.zeros((n_lists, dim), dtype=np.float64)
@@ -330,7 +336,7 @@ def _list_sums(joined: DataFrame, shape, vec_col: str):
     return sums, cnts
 
 
-def _assign_lists(df: DataFrame, cents: np.ndarray, vec_col: str, id_col: str) -> DataFrame:
+def _assign_lists(df: DataFrame, cents: np.ndarray) -> DataFrame:
     """Coarse-list assignment as a pure map: like hyperplane_buckets
     (round-3 fix), the vectors PASS THROUGH the one mapInArrow batch so
     downstream scoring never joins the assignment back to the vector
@@ -343,65 +349,49 @@ def _assign_lists(df: DataFrame, cents: np.ndarray, vec_col: str, id_col: str) -
 
     def assign(iterator):
         for tbl in iterator:
-            col = tbl.column(vec_col)
+            col = tbl.column(EMBEDDING)
             mat = _vec_matrix(col, dim)
             mn = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-9)
             lists = (mn @ c_norm.T).argmax(axis=1).astype(np.int32)
             yield pa.RecordBatch.from_pydict(
                 {
-                    id_col: tbl.column(id_col),
-                    vec_col: col,  # pass-through, zero-copy within the batch
+                    VEC_ID: tbl.column(VEC_ID),
+                    EMBEDDING: col,  # pass-through, zero-copy within the batch
                     "list_id": pa.array(lists, pa.int32()),
                 }
             )
 
-    src = df.select(id_col, vec_col)
+    src = df.select(VEC_ID, EMBEDDING)
     return src.mapInArrow(assign, schema=f"{_ddl_of(src)}, list_id int")
 
 
 def ivf_topk(
     df: DataFrame, queries_df, dim: int, k: int = 10, n_lists: int = 16, nprobe: int = 4,
-    vec_col: str = "embedding", id_col: str = "vec_id", seed: int = 11,
 ) -> DataFrame:
     """IVF-flat approximate cosine top-k: score only vectors whose
     coarse list is among each query's nprobe nearest centroids. At
     10^12 vectors this prunes the scan by ~n_lists/nprobe; recall is
     tunable via nprobe (nprobe = n_lists degrades gracefully to exact).
     Returns (query_id, vec_id, rank) like brute_force_topk."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    cents = ivf_centroids(df, dim, n_lists, vec_col=vec_col, id_col=id_col, seed=seed)
-    indexed = _assign_lists(df, cents, vec_col, id_col)  # vectors pass through
-    q = queries_df.toPandas()
-    qmat = np.array([np.asarray(v, dtype=np.float32) for v in q["qvec"]])
+    cents = ivf_centroids(df, dim, n_lists)
+    indexed = _assign_lists(df, cents)  # vectors pass through
+    qids, qmat = _query_matrix(queries_df, dim)
     qn = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-9)
     cn = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-9)
     probe_lists = np.argsort(-(qn @ cn.T), axis=1)[:, :nprobe]
-    spark = df.sparkSession
-    probes = spark.createDataFrame(
+    probes = df.sparkSession.createDataFrame(
         [
-            (int(q["query_id"][i]), [float(x) for x in q["qvec"][i]], int(l))
-            for i in range(len(q))
+            (int(qids[i]), qmat[i].tolist(), int(l))
+            for i in range(len(qids))
             for l in probe_lists[i]
         ],
         "query_id long, qvec array<float>, list_id int",
     )
-    joined = indexed.join(F.broadcast(probes), "list_id")
-    cos = _dot(F.col(vec_col), F.col("qvec")) / (_norm(F.col(vec_col)) * _norm(F.col("qvec")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col))
-    return (
-        joined.select("query_id", F.col(id_col).alias("vec_id"), cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank")
-    )
+    return _cosine_topk(indexed.join(F.broadcast(probes), "list_id"), k)
 
 
 def pq_train(
-    df: DataFrame, dim: int, m: int = 16, ksub: int = 64, iters: int = 4,
-    vec_col: str = "embedding", id_col: str = "vec_id", seed: int = 13,
-    sample: int = 4096,
+    df: DataFrame, dim: int, m: int = 16, ksub: int = 64, sample: int = 4096,
 ) -> np.ndarray:
     """Product-quantization codebooks [P:Jégou et al., PAMI 2011]:
     split the (L2-normalized) vector into ``m`` subspaces, k-means each
@@ -409,33 +399,34 @@ def pq_train(
     deterministic hash sample — sampling is how PQ is trained at any
     scale (the codebook is a tiny model; 10^12 vectors train on the
     same few thousand rows). Deterministic: hash-ordered sample, seeded
-    init, vectorized Lloyd rounds. Returns (m, ksub, dim//m) float32."""
-    from ..hashing import splitmix64 as _sm
-
+    init, _PQ_ITERS vectorized Lloyd rounds. Returns (m, ksub, dim//m)
+    float32."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m} subspaces")
     if ksub > 256:
         raise ValueError("ksub > 256 would not fit uint8 codes")
     dsub = dim // m
     rows = (
-        df.select(id_col, vec_col)
+        df.select(VEC_ID, EMBEDDING)
         # (id AS STRING, seed) hash — arithmetic on a string id would
         # yield NULL for every row and a nondeterministic tie-broken
         # sample, contradicting the determinism contract (ADVICE r03)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)), F.col(id_col))
+        .orderBy(F.xxhash64(F.col(VEC_ID).cast("string"), F.lit(_PQ_SEED)), F.col(VEC_ID))
         .limit(sample)
         .collect()
     )
-    X = np.array([np.asarray(r[vec_col], dtype=np.float32) for r in rows])
+    X = np.array([np.asarray(r[EMBEDDING], dtype=np.float32) for r in rows])
     Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-9)
     cbs = np.zeros((m, ksub, dsub), dtype=np.float32)
     for j in range(m):
         sub = Xn[:, j * dsub : (j + 1) * dsub].astype(np.float64)
-        order = np.argsort(_sm(np.arange(len(sub), dtype=np.uint64) + np.uint64(seed * 31 + j)))
+        order = np.argsort(
+            splitmix64(np.arange(len(sub), dtype=np.uint64) + np.uint64(_PQ_SEED * 31 + j))
+        )
         C = sub[order[: min(ksub, len(sub))]].copy()
         if len(C) < ksub:  # tiny tables: pad with repeats (harmless dup centroids)
             C = np.vstack([C, np.tile(C[:1], (ksub - len(C), 1))])
-        for _ in range(iters):
+        for _ in range(_PQ_ITERS):
             d = sub @ (-2.0 * C.T) + (C**2).sum(1)[None, :]
             a = d.argmin(1)
             sums = np.zeros((ksub, dsub))
@@ -447,11 +438,8 @@ def pq_train(
     return cbs
 
 
-def pq_encode(
-    df: DataFrame, codebooks: np.ndarray,
-    vec_col: str = "embedding", id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, code array<int>) — each vector compressed to m uint8 codes
+def pq_encode(df: DataFrame, codebooks: np.ndarray) -> DataFrame:
+    """(vec_id, code array<int>) — each vector compressed to m uint8 codes
     (dim×4 bytes → m bytes: 768-dim float32 → 16 bytes at m=16). Pure
     map over the scan (one BLAS call per subspace per batch); downstream
     ADC scoring reads ONLY this table, never the vectors."""
@@ -464,7 +452,7 @@ def pq_encode(
     def enc(iterator):
         for tbl in iterator:
             n = len(tbl)
-            mat = _vec_matrix(tbl.column(vec_col), m * dsub)
+            mat = _vec_matrix(tbl.column(EMBEDDING), m * dsub)
             mn = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-9)
             codes = np.empty((n, m), dtype=np.int32)
             for j in range(m):
@@ -473,7 +461,7 @@ def pq_encode(
                 codes[:, j] = d.argmin(1)
             yield pa.RecordBatch.from_pydict(
                 {
-                    id_col: tbl.column(id_col),
+                    VEC_ID: tbl.column(VEC_ID),
                     "code": pa.ListArray.from_arrays(
                         pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32)),
                         pa.array(codes.ravel(), pa.int32()),
@@ -481,15 +469,14 @@ def pq_encode(
                 }
             )
 
-    src = df.select(id_col, vec_col)
-    id_ddl = src.schema[id_col].dataType.simpleString()
-    return src.mapInArrow(enc, schema=f"{id_col} {id_ddl}, code array<int>")
+    src = df.select(VEC_ID, EMBEDDING)
+    id_ddl = src.schema[VEC_ID].dataType.simpleString()
+    return src.mapInArrow(enc, schema=f"{VEC_ID} {id_ddl}, code array<int>")
 
 
 def pq_topk(
     df: DataFrame, queries_df, dim: int, k: int = 10, m: int = 16, ksub: int = 64,
-    shortlist: int = 64, vec_col: str = "embedding", id_col: str = "vec_id",
-    seed: int = 13, query_chunk: int | None = None,
+    shortlist: int = 64, query_chunk: int | None = None,
 ) -> DataFrame:
     """PQ + exact re-rank cosine top-k — the memory-compression ANN
     path: the full scan reads only the m-byte PQ codes (asymmetric
@@ -505,13 +492,11 @@ def pq_topk(
     import pyarrow as pa
     from pyspark.sql.window import Window
 
-    cbs = pq_train(df, dim, m=m, ksub=ksub, vec_col=vec_col, id_col=id_col, seed=seed)
+    cbs = pq_train(df, dim, m=m, ksub=ksub)
     dsub = dim // m
-    codes_df = pq_encode(df, cbs, vec_col=vec_col, id_col=id_col)
-    q = queries_df.toPandas()
-    qmat = np.array([np.asarray(v, dtype=np.float32) for v in q["qvec"]])
+    codes_df = pq_encode(df, cbs)
+    qids, qmat = _query_matrix(queries_df, dim)
     qn = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-9)
-    qids = q["query_id"].to_numpy().astype(np.int64)
     nq = len(qids)
     # (m, nq, ksub) inner-product tables + (m, ksub) centroid norms —
     # tiny; broadcast to every scoring task
@@ -561,7 +546,7 @@ def pq_topk(
                         "query_id": pa.array(
                             np.repeat(qids[q0:q1], part.shape[1]), pa.int64()
                         ),
-                        "vec_id": tbl.column(id_col).take(pa.array(flat_idx, pa.int32())),
+                        "vec_id": tbl.column(VEC_ID).take(pa.array(flat_idx, pa.int32())),
                         "cos_hat": pa.array(
                             cos[np.repeat(np.arange(q1 - q0), part.shape[1]), flat_idx],
                             pa.float64(),
@@ -569,7 +554,7 @@ def pq_topk(
                     }
                 )
 
-    id_ddl = df.schema[id_col].dataType.simpleString()
+    id_ddl = df.schema[VEC_ID].dataType.simpleString()
     scored = codes_df.mapInArrow(
         score, schema=f"query_id long, vec_id {id_ddl}, cos_hat double"
     )
@@ -583,23 +568,15 @@ def pq_topk(
     # id set into the vector table — a broadcast hash join, no shuffle
     # of vectors, scan reads only matching rows
     cand = (
-        df.select(F.col(id_col).alias("_vid"), vec_col)
+        df.select(F.col(VEC_ID).alias("_vid"), EMBEDDING)
         .join(F.broadcast(short), F.col("_vid") == F.col("vec_id"))
-        .select("query_id", "vec_id", vec_col)
+        .select("query_id", "vec_id", EMBEDDING)
     )
     qdf = spark.createDataFrame(
-        [(int(q["query_id"][i]), [float(x) for x in q["qvec"][i]]) for i in range(nq)],
+        [(int(qids[i]), qmat[i].tolist()) for i in range(nq)],
         "query_id long, qvec array<float>",
     )
-    exact = cand.join(F.broadcast(qdf), "query_id")
-    cos = _dot(F.col(vec_col), F.col("qvec")) / (_norm(F.col(vec_col)) * _norm(F.col("qvec")))
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
-        exact.select("query_id", "vec_id", cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank")
-    )
+    return _cosine_topk(cand.join(F.broadcast(qdf), "query_id"), k)
 
 
 def _multiprobe_buckets(qproj: np.ndarray, bits: int, n_probes: int) -> np.ndarray:
@@ -646,9 +623,7 @@ def _multiprobe_buckets(qproj: np.ndarray, bits: int, n_probes: int) -> np.ndarr
 
 
 def lsh_bucket_topk(
-    df: DataFrame, queries_df, dim: int, k: int = 10, bits: int = 8,
-    vec_col: str = "embedding", id_col: str = "vec_id", seed: int = 7,
-    n_probes: int = 8,
+    df: DataFrame, queries_df, dim: int, k: int = 10, bits: int = 8, n_probes: int = 8,
 ) -> DataFrame:
     """Approximate cosine top-k: score only vectors in the query's LSH
     bucket plus its n_probes-1 lowest-margin-bit-flip neighbor buckets
@@ -659,28 +634,15 @@ def lsh_bucket_topk(
     0.98 at bits=6/n_probes=8 (8 of 64 buckets scored) vs 0.48
     single-probe; n_probes = 2^bits degrades gracefully to exact
     (tests/test_dataops.py::TestMultiProbeLSH)."""
-    from pyspark.sql.window import Window
-
-    bucketed, planes = hyperplane_buckets(df, dim, bits, seed, vec_col, id_col)
-    q = queries_df.toPandas()
-    qmat = np.array([np.asarray(v, dtype=np.float32) for v in q["qvec"]])
-    qproj = qmat @ planes.T
-    probe = _multiprobe_buckets(qproj, bits, n_probes)
-    spark = df.sparkSession
-    qdf = spark.createDataFrame(
+    bucketed, planes = hyperplane_buckets(df, dim, bits)
+    qids, qmat = _query_matrix(queries_df, dim)
+    probe = _multiprobe_buckets(qmat @ planes.T, bits, n_probes)
+    qdf = df.sparkSession.createDataFrame(
         [
-            (int(q["query_id"][i]), [float(x) for x in q["qvec"][i]], int(b))
-            for i in range(len(q))
+            (int(qids[i]), qmat[i].tolist(), int(b))
+            for i in range(len(qids))
             for b in probe[i]
         ],
         "query_id long, qvec array<float>, bucket long",
     )
-    joined = bucketed.join(F.broadcast(qdf), "bucket")
-    cos = _dot(F.col(vec_col), F.col("qvec")) / (_norm(F.col(vec_col)) * _norm(F.col("qvec")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col))
-    return (
-        joined.select("query_id", F.col(id_col).alias("vec_id"), cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank")
-    )
+    return _cosine_topk(bucketed.join(F.broadcast(qdf), "bucket"), k)

@@ -10,36 +10,37 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..fixtures import VOCAB
+from ..io import TEXT
 
 # deterministic word→token mapping shared with the sketch pipeline when
 # a tokens column must be derived from raw text (FIXTURES.md §4):
 # token = xxhash64(word) mod VOCAB — computed fully JVM-side.
 
 
-def tokenize_words(text_col: str = "text") -> Column:
+def tokenize_words() -> Column:
     """split on single spaces; keeps parity with DuckDB string_split."""
-    return F.split(F.col(text_col), " ")
+    return F.split(F.col(TEXT), " ")
 
 
-def tokens_from_text(text_col: str = "text") -> Column:
+def tokens_from_text() -> Column:
     """array<int> token ids via xxhash64(word) mod VOCAB, explode-free
     (transform is a JVM higher-order function)."""
     return F.transform(
-        tokenize_words(text_col),
+        tokenize_words(),
         lambda w: F.pmod(F.xxhash64(w), F.lit(VOCAB)).cast("int"),
     )
 
 
-def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """Whitespace token count + a BPE-ish subword estimate (≈ chars/4,
     the standard heuristic) per document."""
-    words = tokenize_words(text_col)
+    words = tokenize_words()
     return df.select(
         "doc_id",
         "source",
         F.size(words).alias("n_words"),
-        F.length(text_col).alias("n_chars_obs"),
-        F.ceil(F.length(text_col) / F.lit(4)).cast("long").alias("n_subwords_est"),
+        F.length(TEXT).alias("n_chars_obs"),
+        F.ceil(F.length(TEXT) / F.lit(4)).cast("long").alias("n_subwords_est"),
     )
 
 
@@ -51,17 +52,13 @@ def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
 BPE_ISH_PATTERN = "[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]"
 
 
-def regex_token_counts(
-    df: DataFrame, text_col: str = "text", pattern: str = BPE_ISH_PATTERN
-) -> DataFrame:
+def regex_token_counts(df: DataFrame) -> DataFrame:
     """Pre-tokenizer token counts via regexp_extract_all — the 'token
     counting (whitespace + BPE-ish regex)' pair from the task brief:
     token_counts gives the whitespace count, this the regex-split
-    count. Stays JVM-side (regexp_extract_all is a codegen'd Spark SQL
-    function), so it scales like any projection. The pattern is passed
-    as a literal Column (never f-string-interpolated into SQL), so
-    quotes/backslashes in custom patterns are used verbatim."""
-    toks = F.regexp_extract_all(text_col, F.lit(pattern), F.lit(0))
+    count over BPE_ISH_PATTERN. Stays JVM-side (regexp_extract_all is a
+    codegen'd Spark SQL function), so it scales like any projection."""
+    toks = F.regexp_extract_all(TEXT, F.lit(BPE_ISH_PATTERN), F.lit(0))
     return df.select(
         "doc_id",
         "source",
@@ -69,14 +66,14 @@ def regex_token_counts(
     )
 
 
-def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document: exact word count,
     distinct-word count, and the most-frequent word's count. One
     explode + two hash aggregations — both shuffles are on (doc_id,
     word) / doc_id keys, so the plan partitions by document and scales
     linearly (no doc's words ever meet another doc's)."""
     w = df.select(
-        "doc_id", "source", F.explode(F.split(F.col(text_col), " ")).alias("word")
+        "doc_id", "source", F.explode(tokenize_words()).alias("word")
     )
     wc = w.groupBy("doc_id", "source", "word").agg(F.count("*").alias("cnt"))
     return wc.groupBy("doc_id", "source").agg(
@@ -86,19 +83,17 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_filter(
-    df: DataFrame, text_col: str = "text",
-    min_words: int = 10, max_words: int = 100_000,
-) -> DataFrame:
+def quality_filter(df: DataFrame) -> DataFrame:
     """Gopher/C4-style keep/drop verdict per document from integer
-    rules only (exactly reproducible by any SQL engine): length window,
-    top-word frequency < 10% (max_word_freq·10 ≤ n_words), distinct
-    ratio ≥ 50% (n_distinct·2 ≥ n_words). Returns the signals plus the
-    composite ``keep`` boolean — callers filter with .where("keep")."""
-    st = repetition_stats(df, text_col)
+    rules only (exactly reproducible by any SQL engine): length window
+    10 ≤ n_words ≤ 100 000, top-word frequency < 10% (max_word_freq·10
+    ≤ n_words), distinct ratio ≥ 50% (n_distinct·2 ≥ n_words). Returns
+    the signals plus the composite ``keep`` boolean — callers filter
+    with .where("keep")."""
+    st = repetition_stats(df)
     keep = (
-        (F.col("n_words") >= min_words)
-        & (F.col("n_words") <= max_words)
+        (F.col("n_words") >= 10)
+        & (F.col("n_words") <= 100_000)
         & (F.col("max_word_freq") * 10 <= F.col("n_words"))
         & (F.col("n_distinct") * 2 >= F.col("n_words"))
     )
@@ -116,17 +111,17 @@ PII_PATTERNS = {
 }
 
 
-def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """<EMAIL>/<PHONE> redaction + per-kind match counts — the scrub
     stage of a training-data pipeline. Pure JVM regexp functions
     (regexp_extract_all / regexp_replace), one projection, no UDFs;
     adds n_<kind> long columns and text_redacted."""
     out = df
-    red = F.col(text_col)
+    red = F.col(TEXT)
     for name, pat in PII_PATTERNS.items():
         out = out.withColumn(
             f"n_{name}",
-            F.size(F.regexp_extract_all(text_col, F.lit(pat), F.lit(0))).cast("long"),
+            F.size(F.regexp_extract_all(TEXT, F.lit(pat), F.lit(0))).cast("long"),
         )
         red = F.regexp_replace(red, pat, f"<{name.upper()}>")
     return out.withColumn("text_redacted", red)
@@ -143,10 +138,10 @@ _LANG_MARKERS = {
 }
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Heuristic language ID: argmax over per-language marker-word hit
     counts; 'und' when nothing matches. Pure JVM column algebra."""
-    words = F.split(F.col(text_col), " ")
+    words = tokenize_words()
     hits = [
         F.size(F.array_intersect(words, F.array(*[F.lit(m) for m in ms]))).alias(f"h_{lang}")
         for lang, ms in _LANG_MARKERS.items()
@@ -160,15 +155,15 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return scored.select("doc_id", "source", pick.alias("lang_pred"))
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Deterministic quality heuristics: length, mean word length,
     alpha ratio, stopword ratio — combined into a 0..1 score.
 
     The score is a pure arithmetic function of exact counts, so an SQL
     oracle can reproduce it bit-for-bit (driver correctness gate)."""
-    words = tokenize_words(text_col)
+    words = tokenize_words()
     n_words = F.size(words)
-    n_chars = F.length(text_col)
+    n_chars = F.length(TEXT)
     stop = F.array(*[F.lit(w) for w in ("the", "and", "of", "a", "to", "in")])
     n_stop = F.size(F.array_intersect(words, stop))
     mean_wlen = (n_chars - (n_words - 1)) / n_words  # chars excl. separators
@@ -188,10 +183,9 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
 def stable_sample(
     df: DataFrame,
     rate: float,
-    key_col: str = "doc_id",
     salt: str = "",
 ) -> DataFrame:
-    """Deterministic hash sampling: keep rows whose xxhash64(key, salt)
+    """Deterministic hash sampling: keep rows whose xxhash64(doc_id, salt)
     lands in the bottom ``rate`` fraction of the hash space. Unlike
     df.sample(), the kept set is a pure function of the key — stable
     across runs, partition counts, and cluster sizes (so a 1% corpus
@@ -206,8 +200,8 @@ def stable_sample(
     if not 0.0 <= rate <= 1.0:
         raise ValueError(f"rate must be in [0, 1], got {rate}")
     threshold = -(1 << 63) + int(rate * float(1 << 64))
-    h = F.xxhash64(F.col(key_col).cast("string"), F.lit(salt))
-    keyed = df.where(F.col(key_col).isNotNull())
+    h = F.xxhash64(F.col("doc_id").cast("string"), F.lit(salt))
+    keyed = df.where(F.col("doc_id").isNotNull())
     # threshold may exceed int64 max at rate=1.0: keep everything
     if threshold > (1 << 63) - 1:
         return keyed

@@ -138,12 +138,12 @@ def hash64_strings(keys, seed: int = 0) -> np.ndarray:
     return splitmix64(out)
 
 
-def hash_pair(keys: np.ndarray, seed: int = 0) -> tuple[np.ndarray, np.ndarray]:
+def hash_pair(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Two independent 64-bit hashes per key (h2 forced odd), shared by
     every Bloom-family sketch in a batch so each key is hashed once
     regardless of how many sketches consume it."""
-    h1 = hash64(keys, seed=seed)
-    h2 = hash64(keys, seed=seed + 0x51ED)
+    h1 = hash64(keys)
+    h2 = hash64(keys, seed=0x51ED)
     h2 |= _U64(1)
     return h1, h2
 
@@ -169,9 +169,9 @@ def indexes_from_pair(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> np.ndar
         return (x % _U64(m)).astype(np.int64)
 
 
-def bloom_indexes(keys: np.ndarray, k: int, m: int, seed: int = 0) -> np.ndarray:
+def bloom_indexes(keys: np.ndarray, k: int, m: int) -> np.ndarray:
     """(n,) integer keys → (n, k) bucket indexes in [0, m)."""
-    h1, h2 = hash_pair(keys, seed=seed)
+    h1, h2 = hash_pair(keys)
     return indexes_from_pair(h1, h2, k, m)
 
 
@@ -180,13 +180,14 @@ _XXH_P2 = _U64(0xC2B2AE3D27D4EB4F)
 _XXH_P3 = _U64(0x165667B19E3779F9)
 _XXH_P4 = _U64(0x85EBCA77C2B2AE63)
 _XXH_P5 = _U64(0x27D4EB2F165667C5)
+_XXH_SEED = 42  # the seed of Spark's F.xxhash64
 
 
 def _rotl64(x: np.ndarray, r: int) -> np.ndarray:
     return (x << _U64(r)) | (x >> _U64(64 - r))
 
 
-def spark_xxhash64(*cols, seed: int = 42) -> np.ndarray:
+def spark_xxhash64(*cols) -> np.ndarray:
     """Spark's ``xxhash64(c1, ..., cn)`` over equal-length integer
     arrays → int64: the XXH64 ``hashInt``/``hashLong`` chain of
     org.apache.spark.sql.catalyst.expressions.XXH64, each column's hash
@@ -200,7 +201,7 @@ def spark_xxhash64(*cols, seed: int = 42) -> np.ndarray:
     with np.errstate(over="ignore"):
         for c in cols:
             c = np.asarray(c)
-            s = np.full(c.shape, seed, np.int64).view(_U64) if h is None else h
+            s = np.full(c.shape, _XXH_SEED, np.int64).view(_U64) if h is None else h
             if c.dtype.itemsize == 4:
                 x = s + _XXH_P5 + _U64(4)
                 x ^= c.astype(np.int32).view(np.uint32).astype(_U64) * _XXH_P1

@@ -23,21 +23,22 @@ CORPUS_SCHEMA = T.StructType(
         T.StructField("source", T.StringType()),
     ]
 )
+# The fixed column names of the documents table (TEXT) and the
+# embeddings table (VEC_ID, EMBEDDING); every operator reads them here.
+TEXT = "text"
+VEC_ID = "vec_id"
+EMBEDDING = "embedding"
 
 
-def read_corpus(
-    spark: SparkSession, source: str, strict: bool = True,
-    extra_cols: tuple[str, ...] = (), fmt: str = "parquet",
-) -> DataFrame:
+def read_corpus(spark: SparkSession, source: str, fmt: str = "parquet") -> DataFrame:
     """Read the tokenized corpus.
 
     ``source`` is an Iceberg table name (contains no '/') read through
     the session catalog, or a parquet directory path. Column pruning
     and partition pruning stay with Catalyst — callers filter/select
-    on the returned DataFrame and the scan narrows accordingly.
-    ``extra_cols`` keeps additional columns (e.g. an event-time column
-    that build_sketches' tick_col will reference) alongside the four
-    input_hint columns. ``fmt`` selects parquet (default) or json
+    on the returned DataFrame and the scan narrows accordingly. The
+    result holds the four input_hint columns, each of its expected type
+    (else ValueError). ``fmt`` selects parquet (default) or json
     (JSON-lines with tokens as int arrays) for path sources; json
     reads apply the expected schema up front (never inferred — an
     inferred array<long> would silently change downstream hashing).
@@ -45,26 +46,20 @@ def read_corpus(
     if "/" not in source:
         df = spark.read.table(source)
     elif fmt == "json":
-        schema = T.StructType(
-            list(CORPUS_SCHEMA.fields)
-            + [T.StructField(c, T.StringType()) for c in extra_cols]
-        )
-        df = spark.read.schema(schema).json(source)
+        df = spark.read.schema(CORPUS_SCHEMA).json(source)
     else:
         df = spark.read.parquet(source)
     missing = [f.name for f in CORPUS_SCHEMA.fields if f.name not in df.columns]
-    missing += [c for c in extra_cols if c not in df.columns]
     if missing:
         raise ValueError(f"corpus at {source!r} is missing columns {missing}")
-    if strict:
-        got = {f.name: f.dataType for f in df.schema.fields}
-        for f in CORPUS_SCHEMA.fields:
-            if got[f.name] != f.dataType:
-                raise ValueError(
-                    f"corpus column {f.name!r} has type {got[f.name].simpleString()}, "
-                    f"expected {f.dataType.simpleString()} (input_hint, BASELINE.json:15)"
-                )
-    return df.select("doc_id", "tokens", "n_tok", "source", *extra_cols)
+    got = {f.name: f.dataType for f in df.schema.fields}
+    for f in CORPUS_SCHEMA.fields:
+        if got[f.name] != f.dataType:
+            raise ValueError(
+                f"corpus column {f.name!r} has type {got[f.name].simpleString()}, "
+                f"expected {f.dataType.simpleString()} (input_hint, BASELINE.json:15)"
+            )
+    return df.select(CORPUS_SCHEMA.fieldNames())
 
 
 def validate_corpus(df: DataFrame) -> dict:

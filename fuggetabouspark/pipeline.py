@@ -454,7 +454,7 @@ def corpus_digest(rows) -> int:
     return d
 
 
-def tree_merge_global(partials_df, spec_name: str, depth: int | None = None) -> Sketch:
+def tree_merge_global(partials_df, spec_name: str) -> Sketch:
     """Single global sketch via RDD.treeAggregate (log-depth fan-in,
     no driver bottleneck single-reduce; SURVEY.md §4.2)."""
     rdd = (
@@ -463,8 +463,7 @@ def tree_merge_global(partials_df, spec_name: str, depth: int | None = None) -> 
         .rdd.map(lambda r: bytes(r[0]))
     )
     nparts = max(1, rdd.getNumPartitions())
-    if depth is None:
-        depth = max(2, int(np.ceil(np.log(max(nparts, 4)) / np.log(4))))
+    depth = max(2, int(np.ceil(np.log(max(nparts, 4)) / np.log(4))))
 
     def seq(acc, b):
         sk = sketch_from_bytes(b)

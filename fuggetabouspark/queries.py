@@ -79,7 +79,6 @@ def seen_within(
     probes: np.ndarray,
     now: int,
     window: int | None = None,
-    groups: list[str] | None = None,
 ):
     """'has token X been seen in the last W ticks, per source
     partition' (BASELINE.json:6). Zero false negatives in-window; FPR
@@ -92,7 +91,7 @@ def seen_within(
     probes = np.asarray(probes, dtype=np.int64)
     out = []
     for (sname, group), sk in sorted(sketches.items()):
-        if sname != spec_name or (groups is not None and group not in groups):
+        if sname != spec_name:
             continue
         seen = _query_window(sk, window)[0].contains_batch(probes, now)
         out.extend((group, int(k), bool(s)) for k, s in zip(probes, seen))
@@ -133,11 +132,10 @@ def _with_window(sk: Sketch, window: int) -> Sketch:
     return out
 
 
-def seen_within_distributed(
-    spark, state_df, spec_name, probes_df, now, key_col="key", only_seen=False
-):
-    """Probe a built sketch with a DataFrame of keys: broadcast the
-    (small) sketch payloads, mapInArrow over the (large) probe set.
+def seen_within_distributed(spark, state_df, spec_name, probes_df, now, only_seen=False):
+    """Probe a built sketch with a DataFrame of keys (a long column
+    ``key``): broadcast the (small) sketch payloads, mapInArrow over
+    the (large) probe set.
     This is the scale path — probes never leave the executors.
 
     The full answer is |groups| × |probes| rows (mostly seen=false for
@@ -159,12 +157,10 @@ def seen_within_distributed(
     four-family ingest guard probes per batch."""
     rows = state_df.where(f"spec = '{spec_name}'").select("group", "payload").collect()
     payloads = [(r["group"], bytes(r["payload"])) for r in rows]
-    return seen_within_payloads(spark, payloads, probes_df, now, key_col, only_seen)
+    return seen_within_payloads(spark, payloads, probes_df, now, only_seen)
 
 
-def seen_within_payloads(
-    spark, payloads, probes_df, now, key_col="key", only_seen=False
-):
+def seen_within_payloads(spark, payloads, probes_df, now, only_seen=False):
     """seen_within_distributed for callers that already hold the state
     payloads in memory (the incremental operators: they load + merge
     the checkpointed sketch on the driver anyway). Skips the
@@ -208,7 +204,7 @@ def seen_within_payloads(
 
         true_arr = None
         for tbl in iterator:
-            keys = tbl.column(key_col).to_numpy(zero_copy_only=False).astype(np.int64)
+            keys = tbl.column("key").to_numpy(zero_copy_only=False).astype(np.int64)
             # hash the batch ONCE; every group's filter reuses the pair
             # (the dominant probe cost is |groups| x hashing otherwise)
             pair = hash_pair(keys)
@@ -301,7 +297,6 @@ def last_seen(
     sketches: dict[tuple[str, str], Sketch],
     spec_name: str,
     probes: np.ndarray,
-    groups: list[str] | None = None,
 ) -> dict[str, np.ndarray]:
     """Estimated last-sighting tick per probe key, per group (0 =
     never seen; upper-bound estimator, see TBF.last_seen_batch)."""
@@ -309,7 +304,7 @@ def last_seen(
     return {
         group: sk.last_seen_batch(probes)
         for (sname, group), sk in sorted(sketches.items())
-        if sname == spec_name and (groups is None or group in groups)
+        if sname == spec_name
     }
 
 

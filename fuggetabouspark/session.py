@@ -8,7 +8,11 @@ SURVEY.md §4.2 for what we deliberately let Catalyst/AQE own.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import pathlib
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -55,14 +59,36 @@ def ship_package(spark: SparkSession) -> str:
     ModuleNotFoundError — observed live, so it is done unconditionally;
     addPyFile is idempotent per file name within a SparkContext.
     """
-    import pathlib
-    import tempfile
-    import zipfile
+    zpath = _package_zip(pathlib.Path(__file__).resolve().parent, tempfile.gettempdir())
+    spark.sparkContext.addPyFile(zpath)
+    return zpath
 
-    pkg_dir = pathlib.Path(__file__).resolve().parent
-    zpath = pathlib.Path(tempfile.gettempdir()) / "fuggetabouspark_pyfiles.zip"
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for p in sorted(pkg_dir.rglob("*.py")):
-            zf.write(p, arcname=str(pathlib.Path("fuggetabouspark") / p.relative_to(pkg_dir)))
-    spark.sparkContext.addPyFile(str(zpath))
-    return str(zpath)
+
+def _package_zip(pkg_dir: pathlib.Path, out_dir: str) -> str:
+    """The path of a zip of the ``*.py`` files under ``pkg_dir`` (as
+    package ``fuggetabouspark``) in ``out_dir``, named by a hash of the
+    files' names and contents: sessions shipping different trees (say,
+    two checkouts) get different zips, while Spark refuses a second
+    file of the same name with other contents. The bytes are a pure
+    function of the tree (fixed timestamps), and the zip is written
+    under a ``_`` temporary name and moved into place by os.replace,
+    so a concurrent reader never sees a partial file."""
+    files = [
+        (str(pathlib.PurePosixPath("fuggetabouspark", *p.relative_to(pkg_dir).parts)), p.read_bytes())
+        for p in sorted(pkg_dir.rglob("*.py"))
+    ]
+    digest = hashlib.blake2b(digest_size=8)
+    for name, data in files:  # length-framed, so no two trees collide
+        for part in (name.encode(), data):
+            digest.update(len(part).to_bytes(8, "little"))
+            digest.update(part)
+    zpath = os.path.join(out_dir, f"fuggetabouspark_pyfiles_{digest.hexdigest()}.zip")
+    if not os.path.exists(zpath):
+        fd, tmp = tempfile.mkstemp(prefix="_fuggetabouspark_pyfiles_", suffix=".zip", dir=out_dir)
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+            for name, data in files:
+                info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+                info.external_attr = 0o644 << 16
+                zf.writestr(info, data)
+        os.replace(tmp, zpath)
+    return zpath

@@ -363,15 +363,13 @@ def build_resumable(
     specs: list[SketchSpec],
     checkpoint_dir: str,
     n_shards: int = 8,
-    group_cols: tuple[str, ...] = ("source",),
     tick_col=None,
     partitions: int | None = None,
-    salt_mod: int = 16,
-    stbf_fanin: int | None = None,
     fail_after_shard: int | None = None,
 ):
     """Build shard-by-shard with checkpointing; safe to re-invoke after
     a crash — completed shards (those with a lineage row) are skipped.
+    Each shard is one build_sketches run, grouped by ``source``.
 
     ``fail_after_shard`` deliberately raises after N shards (test hook
     for the kill-and-resume gate in BASELINE.md).
@@ -390,14 +388,7 @@ def build_resumable(
         if shard in done:
             continue
         sub = df.where(shard_col == shard)
-        rows = build_sketches(
-            sub, specs, group_cols=group_cols, tick_col=tick_col,
-            partitions=partitions, salt_mod=salt_mod,
-            # an STBF tier's union spans every shard's partials, so a
-            # caller-requested split is multiplied by the shard count;
-            # fanin<=1 means "no split" and must stay that way
-            stbf_fanin=(stbf_fanin * n_shards) if stbf_fanin and stbf_fanin > 1 else None,
-        ).collect()
+        rows = build_sketches(sub, specs, tick_col=tick_col, partitions=partitions).collect()
         lin_rows = [r for r in rows if r["spec"] == LINEAGE_SPEC]
         # shard-level audit lineage (SURVEY §3.3, round 3): exact
         # per-shard row/token totals + ingest digest from the build's
@@ -426,12 +417,10 @@ def build_resumable(
     return load_state(spark, checkpoint_dir)
 
 
-def compact_checkpoint(spark, checkpoint_dir: str, now: int, drop_groups_before: int | None = None):
+def compact_checkpoint(spark, checkpoint_dir: str, now: int):
     """Decay-aware checkpoint GC: fold all completed shards' rows per
-    (spec, group), apply decay(now) to every time-decaying sketch, drop
-    expired HLL ring buckets (group suffix '\\x1f<bucket>' older than
-    ``drop_groups_before``), and rewrite the state as one compacted
-    shard (-1) — ShardLog.compact. Safe to run any time: the fold reads
+    (spec, group), apply decay(now) to every time-decaying sketch, and
+    rewrite the state as one compacted shard (-1) — ShardLog.compact. Safe to run any time: the fold reads
     only completed shards and the rewrite replaces the directory by
     _swap_dir at the end.
 
@@ -439,21 +428,11 @@ def compact_checkpoint(spark, checkpoint_dir: str, now: int, drop_groups_before:
     at 10^12 scale it also bounds checkpoint growth: state stays
     O(groups × m) forever instead of O(shards × groups × m).
     """
-    from .pipeline import GROUP_SEP
-
     def fold(sketches):
-        kept = {}
-        for (spec, group), sk in sketches.items():
-            if drop_groups_before is not None and GROUP_SEP in group:
-                try:
-                    if int(group.rsplit(GROUP_SEP, 1)[1]) < drop_groups_before:
-                        continue
-                except ValueError:
-                    pass
+        for sk in sketches.values():
             if hasattr(sk, "decay"):
                 sk.decay(now)
-            kept[(spec, group)] = sk
-        return kept
+        return sketches
 
     ShardLog(checkpoint_dir, additive=True).compact(fold)
     return load_state(spark, checkpoint_dir)

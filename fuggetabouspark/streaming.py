@@ -33,21 +33,27 @@ from __future__ import annotations
 import os
 import shutil
 
-from .pipeline import SketchSpec, build_sketches, merge_rows_to_sketches
+from .pipeline import (
+    LINEAGE_SPEC,
+    SketchSpec,
+    build_sketches,
+    make_update_fn,
+    merge_rows_to_sketches,
+)
 from .sketches import Sketch, sketch_from_bytes
 from .state import _commit_row, _pa_read_table, _swap_dir
 
 
 class StreamingSketchBuilder:
     """foreachBatch sink that folds micro-batches into checkpointed
-    sketch state (one parquet version per epoch, last version wins)."""
+    per-source sketch state (one parquet version per epoch, last
+    version wins)."""
 
-    def __init__(self, spark, specs, state_dir, group_cols=("source",), tick_col=None,
-                 partitions=8, decay: bool = True):
+    def __init__(self, spark, specs, state_dir, tick_col=None, partitions=8,
+                 decay: bool = True):
         self.spark = spark
         self.specs = specs
         self.state_dir = state_dir
-        self.group_cols = group_cols
         self.tick_col = tick_col
         self.partitions = partitions
         self.decay = decay
@@ -93,8 +99,7 @@ class StreamingSketchBuilder:
         if batch_df.isEmpty():  # LIMIT-1 on the optimized plan, no RDD conversion
             return
         new_rows = build_sketches(
-            batch_df, self.specs, group_cols=self.group_cols,
-            tick_col=self.tick_col, partitions=self.partitions,
+            batch_df, self.specs, tick_col=self.tick_col, partitions=self.partitions,
         ).collect()
         prior = [e for e in self._epochs_on_disk() if e < epoch_id]
         state = self._load_version(prior[-1]) if prior else {}
@@ -156,7 +161,10 @@ def stateful_stream_build(
     operator: ``groupBy(source).applyInPandasWithState`` keeps each
     group's serialized sketches in Spark-managed state (checkpointed,
     fault-tolerant, co-located with the group), and every trigger emits
-    an updated snapshot row per touched (source, spec).
+    an updated snapshot row per touched (source, spec). The stream's
+    rows carry the corpus columns (``tokens`` included) and an optional
+    long ``tick``; each group's rows run through the batch pipeline's
+    update kernel (make_update_fn).
 
     This is the applyInPandasWithState pattern the survey deferred
     (SURVEY.md §2.1): unlike the foreachBatch fold (which re-reads and
@@ -172,74 +180,32 @@ def stateful_stream_build(
     import pandas as pd
 
     spec_list = list(specs)
-    need_tok = any(s.value == "tokens" for s in spec_list)
-    need_pair = any(
-        s.value == "tokens" and s.kind in ("cbf", "tbf", "stbf", "hll")
-        for s in spec_list
-    )
+    update_batch = make_update_fn(spec_list, (), 1)
 
     def update(key, pdf_iter, state):
+        import pyarrow as pa
+
         source = key[0]
+        acc = {}
+        n_items = 0
         if state.exists:
             blobs, n_items = state.get
-            sketches = [sketch_from_bytes(bytes(b)) for b in blobs]
-        else:
-            sketches = [s.zero() for s in spec_list]
-            n_items = 0
-        import numpy as np
-
-        from .hashing import hash_pair
-        from .pipeline import _apply_update, _dedup_tokens
-
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            # applyInPandasWithState delivers pandas (object column of
-            # arrays); convert ONCE to an Arrow ListArray and read
-            # lengths/values from its offsets buffer — the same
-            # explode-free idiom as the batch path, no per-row Python
-            # (ADVICE/VERDICT r01 #8)
-            ticks = (
-                pdf["tick"].to_numpy().astype("int64")
-                if "tick" in pdf.columns
-                else np.ones(len(pdf), dtype=np.int64)
-            )
-            n_items += len(pdf)
-            if need_tok:
-                import pyarrow as pa
-
-                la = pa.array(pdf["tokens"])
-                flat = la.flatten().to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-                counts = np.diff(la.offsets.to_numpy(zero_copy_only=False).astype(np.int64))
-                tok_ticks = np.repeat(ticks, counts)
-                # same hot-path kernels as the batch pipeline (round
-                # 3): dedup the token batch to (uniq, max-tick, count)
-                # — bit-identical results, ~10× fewer keys through the
-                # scatter kernels on Zipf streams — and hash each key
-                # once for all Bloom-family sketches. _apply_update
-                # keeps n_items at the RAW count, preserving
-                # batch-build byte-equality. The whole token block is
-                # skipped when no spec consumes tokens (n_tok-only
-                # streams must not pay the argsort — the profile's
-                # hottest kernel).
-                uniq, max_tick, tok_counts, raw_n = _dedup_tokens(flat, tok_ticks)
-                pair = hash_pair(uniq) if need_pair else None
-            for spec, sk in zip(spec_list, sketches):
-                if spec.value == "tokens":
-                    _apply_update(
-                        sk, spec, uniq, max_tick,
-                        pair=pair, weights=tok_counts, raw_n=raw_n,
-                    )
-                elif spec.value == "n_tok":
-                    _apply_update(
-                        sk, spec, pdf["n_tok"].to_numpy().astype("float64"), ticks
-                    )
-                else:
-                    raise ValueError(
-                        f"stateful_stream_build supports value streams 'tokens'/'n_tok', got {spec.value!r}"
-                    )
+            acc = {s.name: sketch_from_bytes(bytes(b)) for s, b in zip(spec_list, blobs)}
+        # each pandas batch becomes one Arrow batch through the batch
+        # pipeline's own kernel (one group, salt 0); its partial rows
+        # merge into the group's state like any other partial, so the
+        # state stays byte-equal to a batch build over the same rows
+        batches = (pa.RecordBatch.from_pandas(pdf, preserve_index=False) for pdf in pdf_iter)
+        for part in update_batch(batches):
+            for row in part.to_pylist():
+                if row["spec"] == LINEAGE_SPEC:
+                    n_items += row["n_items"]
+                    continue
+                sk = sketch_from_bytes(row["payload"])
+                acc[row["spec"]] = acc[row["spec"]].merge(sk) if row["spec"] in acc else sk
         # bound engine-managed state: union-merged quantile sketches
         # grow per trigger unless compacted before persisting
+        sketches = [acc[s.name] if s.name in acc else s.zero() for s in spec_list]
         sketches = [sk.compressed() if hasattr(sk, "compressed") else sk for sk in sketches]
         state.update(([bytearray(sk.to_bytes()) for sk in sketches], n_items))
         yield pd.DataFrame(

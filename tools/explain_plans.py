@@ -161,7 +161,7 @@ def main():
 
     cents = np.zeros((4, dim), dtype=np.float32)
     cents[np.arange(4), np.arange(4)] = 1.0
-    p6 = plan_of(_assign_lists(emb, cents, "embedding", "vec_id"))
+    p6 = plan_of(_assign_lists(emb, cents))
     sections.append((
         "IVF coarse-list assignment (pure map, no vector join)",
         p6,
