@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 
 from ..hashing import spark_xxhash64, splitmix64
 from ..io import TEXT
+from .textstats import _split_words, _word_hashes
 
 _U64 = np.uint64
 # the token n-gram length of minhash_signatures_tokens' shingles and the
@@ -60,18 +61,8 @@ def exact_dedup(df: DataFrame, max_ids: int = 16) -> DataFrame:
     min-lists — global min-k equals min-k of the union of per-
     partition min-ks, so the result is identical to the old global
     rank, with no Window, no per-group sort, and per-task state
-    bounded by O(partitions × max_ids).
-    max_ids=None keeps the full list (small-scale debugging only)."""
+    bounded by O(partitions × max_ids)."""
     keyed = df.select(F.xxhash64(F.col(TEXT)).alias("fp_exact"), "doc_id")
-    if max_ids is None:
-        return (
-            keyed.groupBy("fp_exact")
-            .agg(
-                F.count("*").alias("n_copies"),
-                F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),
-            )
-            .where(F.col("n_copies") > 1)
-        )
     pre = keyed.groupBy("fp_exact", F.spark_partition_id().alias("_pid")).agg(
         F.count("*").alias("_n"),
         F.slice(F.sort_array(F.collect_list("doc_id")), 1, max_ids).alias("_ids"),
@@ -137,7 +128,7 @@ def minhash_signatures(df: DataFrame, num_hashes: int = 64, shingle: int = 3) ->
     whole-batch one (which pays DRAM twice for a 47 MB transient);
     value-identical to both (test_minhash_batch_matches_per_doc_
     reference). k seeded permutations via splitmix64(h ^ seed_i)."""
-    word_hash = F.transform(F.split(F.col(TEXT), " "), lambda w: F.xxhash64(w))
+    word_hash = _word_hashes(_split_words(F.col(TEXT)))
     src = df.select("doc_id", "source", word_hash.alias("wh"))
     return src.mapInArrow(
         _make_sig_udf(num_hashes, shingle),
@@ -323,7 +314,7 @@ def simhash_buckets(df: DataFrame) -> DataFrame:
     sharing any _SIMHASH_BAND_BITS-wide band are near-dup candidates."""
     import pyarrow as pa
 
-    wh = F.transform(F.split(F.col(TEXT), " "), lambda w: F.xxhash64(w))
+    wh = _word_hashes(_split_words(F.col(TEXT)))
     src = df.select("doc_id", "source", wh.alias("wh"))
 
     def sim(iterator):
@@ -530,7 +521,7 @@ def ngram_jaccard_pairs(
     within source — small scales / verification) or restricted to an
     LSH candidate pair set (the 10^12-doc path). JVM set algebra only."""
     n = _NGRAM
-    words = F.split(F.col(TEXT), " ")
+    words = _split_words(F.col(TEXT))
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
@@ -690,7 +681,7 @@ def passage_fingerprints(
     whole-doc dedup (exact_dedup/minhash) owns that regime. Scale
     shape: a projection-only scan into one mapInArrow; output rows <=
     tokens/stride, shuffled only by downstream groupBys."""
-    word_hash = F.transform(F.split(F.col(TEXT), " "), lambda w: F.xxhash64(w))
+    word_hash = _word_hashes(_split_words(F.col(TEXT)))
     src = df.select("doc_id", word_hash.alias("wh"))
     extra = ", pos_list array<int>" if with_positions else ""
     return src.mapInArrow(
@@ -882,19 +873,23 @@ def mask_repeated_passages(
         .groupBy("doc_id")
         .agg(F.flatten(F.collect_list("_d")).alias("_drops"))
     )
-    return _mask_spans(df.join(drops, "doc_id", "left"), window)
+    return _mask_spans(df.join(drops, "doc_id", "left"), window, "n_tokens_removed").select(
+        "doc_id", F.col(TEXT).alias("text_clean"), "n_tokens_removed"
+    )
 
 
-def _kept_words(window: int):
-    """The words of the ``_words`` column outside every ``window``-word
-    span starting at a word position listed in ``_drops`` (null:
-    nothing to remove) — the mask of mask_repeated_passages,
+def _mask_spans(df, window: int, removed: str):
+    """``df`` with its text masked in place and the count of removed
+    words added as column ``removed``: the words outside every
+    ``window``-word span that starts at a word position listed in the
+    ``_drops`` column (null: nothing to remove; the column goes). The
+    one Spark mask of mask_repeated_passages,
     incremental.mask_against_history and the guard's Spark path."""
     # the no-drops branch is hoisted OUT of the per-element lambda
     # (round 6): the old formulation re-evaluated the _drops-is-null
     # test once per TOKEN, so the ~95% of docs with nothing to remove
     # still paid a full filter pass over their words
-    return F.when(F.col("_drops").isNull(), F.col("_words")).otherwise(
+    kept = F.when(F.col("_drops").isNull(), F.col("_words")).otherwise(
         F.filter(
             F.col("_words"),
             lambda w, i: ~F.exists(
@@ -902,20 +897,12 @@ def _kept_words(window: int):
             ),
         )
     )
-
-
-def _mask_spans(df, window: int):
-    """(doc_id, text_clean, n_tokens_removed) of ``df``, whose
-    ``_drops`` column lists the word positions at which a
-    ``window``-word span of the text is removed (_kept_words)."""
     return (
-        df.withColumn("_words", F.split(F.col(TEXT), " "))
-        .withColumn("_kept", _kept_words(window))
-        .select(
-            "doc_id",
-            F.array_join("_kept", " ").alias("text_clean"),
-            (F.size("_words") - F.size("_kept")).cast("int").alias("n_tokens_removed"),
-        )
+        df.withColumn("_words", _split_words(F.col(TEXT)))
+        .withColumn("_kept", kept)
+        .withColumn(TEXT, F.array_join("_kept", " "))
+        .withColumn(removed, (F.size("_words") - F.size("_kept")).cast("int"))
+        .drop("_drops", "_words", "_kept")
     )
 
 
@@ -949,12 +936,12 @@ def _read_bounded(src: DataFrame, cols, id_col: str, text_col: str, rows: int,
     cols = [F.col(c) if isinstance(c, str) else c for c in cols]
     split = F.col("_fgs_split")
     if wh:
-        cols.append(F.transform(split, lambda w: F.xxhash64(w)).alias("_fgs_wh"))
+        cols.append(_word_hashes(split).alias("_fgs_wh"))
     if words:
         cols += [split.alias("_fgs_words"), F.size(split).alias("_fgs_nw")]
     head = src
     if wh or words:  # split once
-        head = head.select("*", F.split(F.col(text_col), " ").alias("_fgs_split"))
+        head = head.select("*", _split_words(F.col(text_col)).alias("_fgs_split"))
     if nbytes is None:
         tbl = head.select(*cols).limit(rows + 1).toArrow()
         schema = tbl.schema

@@ -17,9 +17,22 @@ from ..io import TEXT
 # token = xxhash64(word) mod VOCAB — computed fully JVM-side.
 
 
+def _split_words(text: Column) -> Column:
+    """The word rule: ``text`` split on single spaces (DuckDB's
+    string_split). The one copy: every dedup kernel, the guard's driver
+    read and its Spark path derive band keys and passage fingerprints
+    from these words, so they agree bit for bit."""
+    return F.split(text, " ")
+
+
+def _word_hashes(words: Column) -> Column:
+    """Each word's xxhash64: the per-word hash of the dedup kernels."""
+    return F.transform(words, lambda w: F.xxhash64(w))
+
+
 def tokenize_words() -> Column:
-    """split on single spaces; keeps parity with DuckDB string_split."""
-    return F.split(F.col(TEXT), " ")
+    """The text column's words (_split_words)."""
+    return _split_words(F.col(TEXT))
 
 
 def tokens_from_text() -> Column:

@@ -457,8 +457,10 @@ def corpus_digest(rows) -> int:
 def tree_merge_global(partials_df, spec_name: str) -> Sketch:
     """Single global sketch via RDD.treeAggregate (log-depth fan-in,
     no driver bottleneck single-reduce; SURVEY.md §4.2)."""
+    from pyspark.sql import functions as F
+
     rdd = (
-        partials_df.where(f"spec = '{spec_name}'")
+        partials_df.where(F.col("spec") == spec_name)
         .select("payload")
         .rdd.map(lambda r: bytes(r[0]))
     )

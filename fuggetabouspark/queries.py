@@ -17,10 +17,11 @@ SEEN_DDL = "group string, key long, seen boolean"
 
 # worker-process-level cache of deserialized probe sketches, keyed on
 # a content hash of the state payloads (see seen_within_distributed).
-# Capacity raised to 4 in round 6: a four-granularity ingest guard
-# probes FOUR states per batch (exact fps + near band keys + passage
-# fps + emb bucket keys), and 2 slots would thrash between them,
-# re-inflating every trigger (round 4 set 2 for the exact+near pair).
+# 4 slots: a guard trigger on the Spark path probes up to four states
+# (exact fps, near band keys, passage fps, emb bucket keys), and the
+# repeated probes of one state version between commits hit instead of
+# re-inflating it. The guard's driver path probes on the driver and
+# broadcasts nothing.
 _PROBE_SKETCH_CACHE: dict = {}
 _PROBE_CACHE_SLOTS = 4
 
@@ -153,9 +154,11 @@ def seen_within_distributed(spark, state_df, spec_name, probes_df, now, only_see
     VERSION once, however many probe jobs hit it — the steady-state
     shape of incremental ingest. The cache keeps the newest
     _PROBE_CACHE_SLOTS (4) entries, evicting the oldest, so worker
-    memory is bounded at four state-sets — one per state a
-    four-family ingest guard probes per batch."""
-    rows = state_df.where(f"spec = '{spec_name}'").select("group", "payload").collect()
+    memory is bounded at four state-sets — one per state a guard
+    trigger on the Spark path probes."""
+    from pyspark.sql import functions as F
+
+    rows = state_df.where(F.col("spec") == spec_name).select("group", "payload").collect()
     payloads = [(r["group"], bytes(r["payload"])) for r in rows]
     return seen_within_payloads(spark, payloads, probes_df, now, only_seen)
 
@@ -189,20 +192,6 @@ def seen_within_payloads(spark, payloads, probes_df, now, only_seen=False):
             _q._PROBE_SKETCH_CACHE[cache_key] = sks
         if not sks:  # no groups for this spec: skip hashing entirely
             return
-        # per-group constant string column, built once per length and
-        # sliced per batch (round 6, guide §4.2): the old
-        # pa.array([g] * n) materialized a fresh n-element Python list
-        # + Arrow conversion per group per batch — at 20 groups x 10^6
-        # probes that is the probe job's dominant non-hash cost
-        garr: dict = {}
-
-        def gcol(g, m):
-            a = garr.get(g)
-            if a is None or len(a) < m:
-                a = garr[g] = pa.array([g] * max(m, 8192), pa.string())
-            return a.slice(0, m)
-
-        true_arr = None
         for tbl in iterator:
             keys = tbl.column("key").to_numpy(zero_copy_only=False).astype(np.int64)
             # hash the batch ONCE; every group's filter reuses the pair
@@ -210,26 +199,25 @@ def seen_within_payloads(spark, payloads, probes_df, now, only_seen=False):
             pair = hash_pair(keys)
             key_arr = pa.array(keys, pa.int64())
             for g, sk in sks:
+                # the group and seen=true columns are constants:
+                # pa.repeat builds them without a Python list
+                group = pa.scalar(g, pa.string())
                 seen = sk.contains_batch(keys, now, pair=pair)
                 if only_seen:
                     hit = np.flatnonzero(seen)
                     if hit.size == 0:
                         continue
-                    if true_arr is None or len(true_arr) < hit.size:
-                        true_arr = pa.array(
-                            np.ones(max(hit.size, 8192), dtype=bool)
-                        )
                     out = pa.RecordBatch.from_arrays(
                         [
-                            gcol(g, hit.size),
+                            pa.repeat(group, hit.size),
                             key_arr.take(pa.array(hit)) if hit.size < keys.size else key_arr,
-                            true_arr.slice(0, hit.size),
+                            pa.repeat(True, hit.size),
                         ],
                         ["group", "key", "seen"],
                     )
                 else:
                     out = pa.RecordBatch.from_arrays(
-                        [gcol(g, keys.size), key_arr, pa.array(seen)],
+                        [pa.repeat(group, keys.size), key_arr, pa.array(seen)],
                         ["group", "key", "seen"],
                     )
                 yield out

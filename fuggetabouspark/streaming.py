@@ -23,9 +23,12 @@ micro-batch's own build_sketches collect.
 
 Scale note: state is O(groups × m) bytes independent of stream
 length, and each micro-batch shuffles only its own partials — the
-same plan a 1000-executor cluster would run per trigger. A future
-per-key variant (e.g. per-user windows) would move to
-applyInPandasWithState; per-source sketch state does not need it.
+same plan a 1000-executor cluster would run per trigger.
+StreamingSketchBuilder is the one streaming builder: per-source sketch
+state is small enough to fold on the driver per trigger, so it needs no
+Spark-managed per-group state (applyInPandasWithState, which SURVEY.md
+§2 defers past v1). A per-key variant (e.g. per-user windows over
+millions of keys) would.
 """
 
 from __future__ import annotations
@@ -33,14 +36,8 @@ from __future__ import annotations
 import os
 import shutil
 
-from .pipeline import (
-    LINEAGE_SPEC,
-    SketchSpec,
-    build_sketches,
-    make_update_fn,
-    merge_rows_to_sketches,
-)
-from .sketches import Sketch, sketch_from_bytes
+from .pipeline import build_sketches, merge_rows_to_sketches
+from .sketches import Sketch
 from .state import _commit_row, _pa_read_table, _swap_dir
 
 
@@ -144,111 +141,7 @@ class StreamingSketchBuilder:
         )
 
 
-STATEFUL_OUTPUT_DDL = "source string, spec string, payload binary, n_items long"
-STATEFUL_STATE_DDL = "blobs array<binary>, n_items long"
-
-
-def stateful_stream_build(
-    spark,
-    specs: list[SketchSpec],
-    input_path: str,
-    schema,
-    checkpoint_dir: str,
-    trigger_seconds: int = 2,
-    queryable_sink: str | None = None,
-):
-    """Per-source sketch state as a true Structured Streaming stateful
-    operator: ``groupBy(source).applyInPandasWithState`` keeps each
-    group's serialized sketches in Spark-managed state (checkpointed,
-    fault-tolerant, co-located with the group), and every trigger emits
-    an updated snapshot row per touched (source, spec). The stream's
-    rows carry the corpus columns (``tokens`` included) and an optional
-    long ``tick``; each group's rows run through the batch pipeline's
-    update kernel (make_update_fn).
-
-    This is the applyInPandasWithState pattern the survey deferred
-    (SURVEY.md §2.1): unlike the foreachBatch fold (which re-reads and
-    rewrites the whole state table per trigger), state here lives
-    inside the streaming engine, so 10^6 groups would scale exactly
-    like any streaming aggregation — partitioned state, no
-    driver-side fold.
-
-    Returns the StreamingQuery; snapshots go to ``queryable_sink``
-    (memory table name) when given, else to parquet under
-    checkpoint_dir/snapshots.
-    """
-    import pandas as pd
-
-    spec_list = list(specs)
-    update_batch = make_update_fn(spec_list, (), 1)
-
-    def update(key, pdf_iter, state):
-        import pyarrow as pa
-
-        source = key[0]
-        acc = {}
-        n_items = 0
-        if state.exists:
-            blobs, n_items = state.get
-            acc = {s.name: sketch_from_bytes(bytes(b)) for s, b in zip(spec_list, blobs)}
-        # each pandas batch becomes one Arrow batch through the batch
-        # pipeline's own kernel (one group, salt 0); its partial rows
-        # merge into the group's state like any other partial, so the
-        # state stays byte-equal to a batch build over the same rows
-        batches = (pa.RecordBatch.from_pandas(pdf, preserve_index=False) for pdf in pdf_iter)
-        for part in update_batch(batches):
-            for row in part.to_pylist():
-                if row["spec"] == LINEAGE_SPEC:
-                    n_items += row["n_items"]
-                    continue
-                sk = sketch_from_bytes(row["payload"])
-                acc[row["spec"]] = acc[row["spec"]].merge(sk) if row["spec"] in acc else sk
-        # bound engine-managed state: union-merged quantile sketches
-        # grow per trigger unless compacted before persisting
-        sketches = [acc[s.name] if s.name in acc else s.zero() for s in spec_list]
-        sketches = [sk.compressed() if hasattr(sk, "compressed") else sk for sk in sketches]
-        state.update(([bytearray(sk.to_bytes()) for sk in sketches], n_items))
-        yield pd.DataFrame(
-            {
-                "source": [source] * len(spec_list),
-                "spec": [s.name for s in spec_list],
-                "payload": [bytearray(sk.to_bytes()) for sk in sketches],
-                "n_items": [sk.n_items for sk in sketches],
-            }
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(input_path)
-    )
-    # file sinks only accept append mode (each trigger appends a
-    # snapshot row; readers take the latest per group); the memory
-    # sink uses update mode but cannot recover from a checkpoint —
-    # both observed live, hence the split
-    mode = "update" if queryable_sink else "append"
-    out = stream.groupBy("source").applyInPandasWithState(
-        update,
-        outputStructType=STATEFUL_OUTPUT_DDL,
-        stateStructType=STATEFUL_STATE_DDL,
-        outputMode=mode,
-        timeoutConf="NoTimeout",
-    )
-    writer = (
-        out.writeStream.outputMode(mode)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "_ss_state_ckpt"))
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-    )
-    if queryable_sink:
-        return writer.format("memory").queryName(queryable_sink).start()
-    return writer.format("parquet").option(
-        "path", os.path.join(checkpoint_dir, "snapshots")
-    ).start()
-
-
 def _max_tick(sk: Sketch) -> int:
-    import numpy as np
-
     if hasattr(sk, "ticks"):
         return int(sk.ticks.max())
     if hasattr(sk, "tiers"):

@@ -166,79 +166,6 @@ class TestLateData:
             assert out_of_order[key].ticks.tobytes() == in_order[key].ticks.tobytes()
 
 
-class TestStatefulStreaming:
-    def test_applyinpandaswithstate_matches_batch(self, spark, tmp_path):
-        """Spark-managed per-group state (applyInPandasWithState):
-        latest snapshot per (source, spec) must byte-equal a batch
-        build over the same rows."""
-        import pyspark.sql.functions as F
-
-        from fuggetabouspark.sketches import sketch_from_bytes
-        from fuggetabouspark.streaming import stateful_stream_build
-
-        specs = [
-            SketchSpec("tbf", "tbf", TimingParams(30_000, 0.005, window_ticks=10**6), "tokens"),
-            SketchSpec("hll", "hll", HLLParams(p=12), "tokens"),
-        ]
-        inbox = str(tmp_path / "inbox2")
-        os.makedirs(inbox)
-        pdf = make_rows(0, 800)
-        # stream rows carry an explicit tick column
-        full = spark.createDataFrame(pdf).withColumn(
-            "tick", (F.regexp_extract("doc_id", r"(\d+)$", 1).cast("long") % 50) + 1
-        )
-        schema = full.schema
-        full.limit(0)  # no-op
-        spark.createDataFrame(make_rows(0, 400)).withColumn(
-            "tick", (F.regexp_extract("doc_id", r"(\d+)$", 1).cast("long") % 50) + 1
-        ).coalesce(1).write.parquet(inbox, mode="append")
-
-        q = stateful_stream_build(
-            spark, specs, inbox, schema, str(tmp_path / "sck"),
-            trigger_seconds=1, queryable_sink="snap",
-        )
-        try:
-            _wait_for(
-                lambda: _latest_n(spark, "snap", "tbf") == int(pdf.n_tok[:400].sum()), 90
-            )
-            spark.createDataFrame(make_rows(400, 800)).withColumn(
-                "tick", (F.regexp_extract("doc_id", r"(\d+)$", 1).cast("long") % 50) + 1
-            ).coalesce(1).write.parquet(inbox, mode="append")
-            _wait_for(
-                lambda: _latest_n(spark, "snap", "tbf") == int(pdf.n_tok.sum()), 90
-            )
-            snap = spark.sql(
-                "select source, spec, payload, n_items from snap"
-            ).toPandas()
-        finally:
-            q.stop()
-
-        # latest snapshot per (source, spec) = max n_items row
-        latest = snap.sort_values("n_items").groupby(["source", "spec"]).last()
-        batch_rows = build_sketches(
-            full, specs, tick_col=F.col("tick"), partitions=4
-        ).collect()
-        batch = merge_rows_to_sketches(batch_rows)
-        for (src, spec), row in latest.iterrows():
-            got = sketch_from_bytes(bytes(row["payload"]))
-            want = batch[(spec, src)]
-            if spec == "tbf":
-                assert got.ticks.tobytes() == want.ticks.tobytes(), f"{src}/{spec}"
-            else:
-                assert got.registers.tobytes() == want.registers.tobytes(), f"{src}/{spec}"
-
-
-def _latest_n(spark, table, spec):
-    try:
-        rows = spark.sql(
-            f"select sum(m) from (select source, max(n_items) m from {table} "
-            f"where spec = '{spec}' group by source)"
-        ).collect()
-        return rows[0][0] or 0
-    except Exception:
-        return 0
-
-
 def _counts(b):
     state = b.load_state()
     return [{"n_rows": sk.n_items} for sk in state.values()]

@@ -1,14 +1,15 @@
 """Query-verb extensions: last_seen estimation, generalized windowed
-merge (ring buckets for any sketch kind), HLL intersection.
+merge (ring buckets for any sketch kind), HLL intersection, and the
+CMS verbs multiplicity and heavy_hitters.
 """
 
 import numpy as np
 import pytest
 
 from fuggetabouspark import queries as Q
-from fuggetabouspark.params import HLLParams, KLLParams, TimingParams
+from fuggetabouspark.params import CMSParams, HLLParams, KLLParams, TimingParams
 from fuggetabouspark.pipeline import GROUP_SEP
-from fuggetabouspark.sketches import KLL, HyperLogLog, TimingBloomFilter
+from fuggetabouspark.sketches import KLL, CountMinSketch, HyperLogLog, TimingBloomFilter
 
 
 class TestLastSeen:
@@ -84,3 +85,33 @@ class TestHLLIntersection:
         b = HyperLogLog.zero(p).add_batch(np.concatenate([shared, only_b]))
         est = Q.hll_intersection(a, b)
         assert abs(est - 20_000) / 20_000 < 0.1
+
+
+class TestCMSVerbs:
+    def test_multiplicity_and_heavy_hitters_vs_exact(self):
+        """On skewed (Zipf) key streams: multiplicity lies in
+        [exact, exact + eps·N] for every key, and heavy_hitters over the
+        exact distinct keys returns the exact top-k."""
+        rng = np.random.default_rng(7)
+        p = CMSParams(eps=1e-4, delta=1e-4)
+        streams = {"news": rng.zipf(1.5, 30_000), "web": rng.zipf(1.3, 50_000)}
+        sks = {("f", g): CountMinSketch.zero(p).add_batch(s) for g, s in streams.items()}
+        sks[("other", "web")] = CountMinSketch.zero(p).add_batch(np.arange(10))
+        exact = {g: np.unique(s, return_counts=True) for g, s in streams.items()}
+
+        est = Q.multiplicity(sks, "f", exact["web"][0])
+        assert set(est) == {"news", "web"}
+        keys, counts = exact["web"]
+        assert (est["web"] >= counts).all()
+        assert (est["web"] <= counts + p.eps * streams["web"].size).all()
+
+        k = 10
+        top = Q.heavy_hitters(sks, "f", {g: keys for g, (keys, _) in exact.items()}, k)
+        for g, (keys, counts) in exact.items():
+            order = np.lexsort((keys, -counts))[:k]
+            assert [key for key, _ in top[g]] == keys[order].tolist(), g
+            got = np.array([n for _, n in top[g]])
+            assert (got >= counts[order]).all()
+            assert (got <= counts[order] + p.eps * streams[g].size).all()
+        # a group without candidates is skipped
+        assert set(Q.heavy_hitters(sks, "f", {"web": exact["web"][0]}, k)) == {"web"}

@@ -399,6 +399,36 @@ class TestSemantics:
         assert all(r["seen"] for r in filt)
         assert {(r["group"], r["key"]) for r in filt} == hits
 
+    def test_spec_name_with_quote(self, spark):
+        """A spec name is matched as a value, not spliced into SQL: a
+        name holding ' selects its own rows, and a crafted name
+        matches nothing."""
+        from fuggetabouspark.sketches import HyperLogLog, TimingBloomFilter
+
+        keys = np.arange(1, 201, dtype=np.int64)
+        tbf = TimingBloomFilter.zero(TimingParams(5_000, 0.001, window_ticks=100))
+        other = TimingBloomFilter.zero(TimingParams(5_000, 0.001, window_ticks=100))
+        state = spark.createDataFrame(
+            [("o'brien", "a", bytearray(tbf.add_batch(keys, 5).to_bytes())),
+             ("plain", "b", bytearray(other.add_batch(keys, 5).to_bytes()))],
+            "spec string, group string, payload binary",
+        )
+        probes = spark.createDataFrame([(int(k),) for k in keys[:20]], "key long")
+        got = Q.seen_within_distributed(spark, state, "o'brien", probes, now=5).collect()
+        assert sorted((r["group"], r["key"], r["seen"]) for r in got) == [
+            ("a", int(k), True) for k in keys[:20]
+        ]
+        assert Q.seen_within_distributed(spark, state, "x' OR 'a'='a", probes, now=5).collect() == []
+
+        parts = [HyperLogLog.zero(HLLParams(p=10)).add_batch(keys[i::2]) for i in range(2)]
+        partials = spark.createDataFrame(
+            [("o'brien", bytearray(sk.to_bytes())) for sk in parts]
+            + [("plain", bytearray(HyperLogLog.zero(HLLParams(p=10)).to_bytes()))],
+            "spec string, payload binary",
+        )
+        merged = tree_merge_global(partials, "o'brien")
+        assert merged.to_bytes() == parts[0].merge(parts[1]).to_bytes()
+
     def test_quantiles_vs_exact(self, built, corpus_pdf):
         sks = merge_rows_to_sketches(built)
         n_tok = corpus_pdf[corpus_pdf.source == "web"].n_tok.to_numpy()
