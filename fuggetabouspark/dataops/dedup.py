@@ -357,8 +357,13 @@ _LOCAL_CC_EDGES = 1 << 20
 
 _LOCAL_CC_TYPES = (ByteType(), ShortType(), IntegerType(), LongType(), StringType())
 
+# connected_components raises rather than return partial components
+# when its rounds have not converged after this many; pointer jumping
+# converges in O(log diameter) rounds.
+_CC_MAX_ROUNDS = 25
 
-def connected_components(edges: DataFrame, max_iter: int = 25, return_rounds: bool = False):
+
+def connected_components(edges: DataFrame, return_rounds: bool = False):
     """(node, component) for every node appearing in the ``doc_a`` and
     ``doc_b`` columns of ``edges``, where component = the minimum node
     id reachable through the pair graph —
@@ -378,8 +383,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25, return_rounds: bo
     would otherwise need diameter rounds; near-clique dedup graphs
     converge in 2-3 either way). Converges when a propagation changes
     no label (at that fixpoint the hop is the identity); raises if
-    max_iter rounds don't converge rather than returning partial
-    components. ``return_rounds=True`` returns ((node, component)
+    _CC_MAX_ROUNDS (25) rounds don't converge rather than returning
+    partial components. ``return_rounds=True`` returns ((node, component)
     frame, rounds) — the round count is the scaling evidence the chain
     bench reports.
 
@@ -408,14 +413,14 @@ def connected_components(edges: DataFrame, max_iter: int = 25, return_rounds: bo
     if fields[0].dataType == fields[1].dataType and fields[0].dataType in _LOCAL_CC_TYPES:
         tbl = pair.limit(_LOCAL_CC_EDGES + 1).toArrow()
         if tbl.num_rows <= _LOCAL_CC_EDGES:
-            out, rounds = _cc_local(edges.sparkSession, tbl, fields, max_iter)
+            out, rounds = _cc_local(edges.sparkSession, tbl, fields)
             return (out, rounds) if return_rounds else out
     ab = edges.select(
         F.coalesce("doc_a", "doc_b").alias("a"), F.coalesce("doc_b", "doc_a").alias("b")
     ).where(F.col("a").isNotNull())
     e = ab.union(ab.select("b", "a")).distinct().localCheckpoint()
     lab = None  # round 1 runs off identity labels synthesized from e
-    for rounds in range(1, max_iter + 1):
+    for rounds in range(1, _CC_MAX_ROUNDS + 1):
         if lab is None:
             # round-1 specialization (round 6): with comp(x) = x, the
             # edges⋈labels propagation join is the identity relabeling
@@ -466,10 +471,10 @@ def connected_components(edges: DataFrame, max_iter: int = 25, return_rounds: bo
             )
             .localCheckpoint()
         )
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    raise RuntimeError(f"connected_components did not converge in {_CC_MAX_ROUNDS} rounds")
 
 
-def _cc_rounds(tbl: pa.Table, max_iter: int):
+def _cc_rounds(tbl: pa.Table):
     """connected_components' rounds in numpy over the driver-held edge
     table ``tbl`` (columns: src, dst): ``(nodes, comps, rounds)``, the
     node ids in sorted order and each one's component as Arrow arrays.
@@ -486,20 +491,20 @@ def _cc_rounds(tbl: pa.Table, max_iter: int):
     rb = pc.index_in(b, ids).to_numpy().astype(np.int64)
     to, frm = np.concatenate([ra, rb]), np.concatenate([rb, ra])
     lab = np.arange(len(ids), dtype=np.int64)
-    for rounds in range(1, max_iter + 1):
+    for rounds in range(1, _CC_MAX_ROUNDS + 1):
         prop = lab.copy()
         np.minimum.at(prop, to, lab[frm])
         if np.array_equal(prop, lab):
             break
         lab = np.minimum(prop, prop[prop])
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        raise RuntimeError(f"connected_components did not converge in {_CC_MAX_ROUNDS} rounds")
     return ids, ids.take(pa.array(lab)), rounds
 
 
-def _cc_local(spark, tbl: pa.Table, fields, max_iter: int):
+def _cc_local(spark, tbl: pa.Table, fields):
     """_cc_rounds as connected_components' (node, comp) frame."""
-    ids, comps, rounds = _cc_rounds(tbl, max_iter)
+    ids, comps, rounds = _cc_rounds(tbl)
     id_type = fields[0].dataType
     schema = StructType([
         StructField("node", id_type, fields[0].nullable or fields[1].nullable),

@@ -74,9 +74,21 @@ are ShardLog's, stated once in fuggetabouspark.state. Every other
 per-family step is written once over the record: the lineage-gated
 ledger read (_ledger), the sketch probe (_probe), the shard commit
 (_commit_shard: the delta, then the ledgers inside ShardLog.commit),
-and expiry (expire_ledgers loops over _FAMILIES). The operators only
-add what differs: how keys are derived and how sketch hits are
-verified.
+and expiry (expire_ledgers loops over _FAMILIES). The four families
+follow one rule set:
+
+- every family is probed at its sketch's own window_ticks, and expiry
+  keeps exactly the rows that window can still see;
+- each has one key geometry, module constants that its operator and
+  both guard paths read; the passage and embedding geometry is
+  recorded in each shard's lineage meta and a call with another one
+  raises before anything is probed or written (_check_geometry);
+- each writes its lineage meta through one builder (_exact_meta,
+  _near_meta, _passage_meta, _emb_meta), shared by its operator and
+  the guard's driver path.
+
+The operators only add what differs: how keys are derived and how
+sketch hits are verified.
 """
 
 from __future__ import annotations
@@ -119,28 +131,14 @@ from .similarity import _planes, _vec_matrix
 
 DEDUP_SPEC = "dedup_fp"
 LEDGER_DDL = "fp long, doc_id string, tick long, shard int"
-ANNOTATED_DDL = (
-    "doc_id string, fp long, tick long, "
-    "is_dup_history boolean, is_dup_intra boolean, hist_doc_id string"
-)
 NEAR_SPEC = "near_dup_band"
 BAND_LEDGER_DDL = "bkey long, doc_id string, tick long, shard int"
 SIG_LEDGER_DDL = "doc_id string, sig array<long>, tick long, shard int"
-NEAR_ANNOTATED_DDL = (
-    "doc_id string, is_near_dup_history boolean, is_near_dup_intra boolean, "
-    "hist_doc_id string, est_jaccard double"
-)
 PASSAGE_SPEC = "passage_fp"
 PASSAGE_LEDGER_DDL = "fp long, keep_doc string, keep_pos int, tick long, shard int"
-PASSAGE_ANNOTATED_DDL = (
-    "doc_id string, n_windows int, n_hist_windows int, hist_positions array<int>"
-)
 EMB_SPEC = "emb_dup_bucket"
 EMB_BUCKET_LEDGER_DDL = "bkey long, vec_id string, tick long, shard int"
 EMB_VEC_LEDGER_DDL = "vec_id string, embedding array<float>, tick long, shard int"
-EMB_ANNOTATED_DDL = (
-    "vec_id string, is_emb_dup_history boolean, hist_vec_id string, cosine double"
-)
 
 
 # A guard trigger whose batch has at most this many rows runs every
@@ -161,14 +159,16 @@ _LOCAL_SCALARS = (
 # The key geometry of the near, passage and embedding families (their
 # columns are io.TEXT and io.EMBEDDING), named once: their operators,
 # the guard's Spark path (those operators) and its driver path (the
-# _local helpers) all read them here. A shard's keys must be derived exactly as history's were, or an
-# in-window duplicate's keys miss the checkpoint without any error. The
-# near and emb thresholds and the emb bits are the defaults of the
-# operators' own ``threshold``/``bits`` (the emb bits are checked
-# against the checkpoint's, _emb_check_geometry).
+# _local helpers) all read them here. A shard's keys must be derived
+# exactly as history's were, or an in-window duplicate's keys miss the
+# checkpoint without any error. The near and emb thresholds, the emb
+# bits and the passage window are the defaults of the operators' own
+# ``threshold``/``bits``/``window``; the emb and passage geometry is
+# recorded in each shard's lineage meta and checked against the
+# checkpoint's (_check_geometry).
 _NEAR_THRESHOLD, _NEAR_NUM_HASHES, _NEAR_BANDS, _NEAR_ROWS_PER_BAND = 0.8, 64, 16, 4
 _NEAR_SHINGLE = 3
-_PASSAGE_STRIDE = 1
+_PASSAGE_WINDOW, _PASSAGE_STRIDE = 50, 1
 _EMB_THRESHOLD, _EMB_BITS, _EMB_TABLES = 0.9, 12, 8
 
 
@@ -369,11 +369,11 @@ def expire_ledgers(spark, checkpoint_dir: str, now: int) -> dict:
 
     A family's row is retained iff ``tick >= now - w + 1``, with ``w``
     that family's own sketch window_ticks (a family without a sketch is
-    skipped): the oldest tick any future query can see, because query
-    windows may only ever NARROW a sketch's window
-    (queries._query_window) and ``now`` is monotone. A narrower ``w``
-    would drop rows that a later in-window sketch hit must verify
-    against, so a real duplicate would survive. Each ledger is
+    skipped): the oldest tick any future probe can see, because every
+    family is probed at its sketch's own window and ``now`` is
+    monotone. A narrower ``w`` would drop rows that a later in-window
+    sketch hit must verify against, so a real duplicate would survive.
+    Each ledger is
     rewritten via the same aside-rename swap as compaction (crash
     between renames → _read_swap falls back to the _old copy). Safe
     and idempotent any time; the sketch itself needs no pruning — it
@@ -430,27 +430,23 @@ def completed_shards(spark, checkpoint_dir: str) -> list[dict]:
 
 
 def _probe(spark, checkpoint_dir: str, fam: _Family, keys: DataFrame, now: int,
-           exclude_epoch, window: int | None = None):
+           exclude_epoch):
     """Probe ``fam``'s broadcast sketch with the one-column frame
     ``keys``: ``(hits, w, done)`` — the DISTINCT keys the sketch has
-    seen within the query window ``w`` (same column name as ``keys``),
-    the window itself (queries._query_window: the sketch's own
-    window_ticks unless the exact family narrows it with ``window``),
-    and the completed shards the state was merged from (the shards the
-    ledger verify must read). None when the family has no history yet.
+    seen within its own window_ticks ``w`` (same column name as
+    ``keys``), the window itself, and the completed shards the state
+    was merged from (the shards the ledger verify must read). None when
+    the family has no history yet.
 
-    The stored payload goes straight to the broadcast (content-cached)
-    when one row makes up the state and no re-window is needed,
-    skipping a zlib re-compress of the bucket array per probe (round
-    6)."""
-    from ..queries import _query_window, seen_within_payloads
+    The stored payload goes straight to the broadcast when one row
+    makes up the state, skipping a zlib re-compress of the bucket array
+    per probe (round 6)."""
+    from ..queries import seen_within_payloads, sk_window
 
-    done, stored, raw = _family_state(checkpoint_dir, fam, exclude_epoch)
-    if stored is None:
+    done, sk, raw = _family_state(checkpoint_dir, fam, exclude_epoch)
+    if sk is None:
         return None
-    sk, w = _query_window(stored, window)
-    if sk is not stored:
-        raw = None  # re-windowed: stored payload no longer matches
+    w = sk_window(sk)
     (col,) = keys.columns
     hits = (
         seen_within_payloads(
@@ -464,10 +460,10 @@ def _probe(spark, checkpoint_dir: str, fam: _Family, keys: DataFrame, now: int,
 
 
 def _probe_local(checkpoint_dir: str, fam: _Family, keys, now: int, exclude_epoch):
-    """_probe on the driver, for the int64 key array ``keys``, at the
-    sketch's own window (the guard never narrows it): ``(hits, w,
-    done)`` with ``hits`` the sorted distinct keys the driver-held
-    sketch has seen within ``w`` — no broadcast, no job."""
+    """_probe on the driver, for the int64 key array ``keys``: ``(hits,
+    w, done)`` with ``hits`` the sorted distinct keys the driver-held
+    sketch has seen within its own window ``w`` — no broadcast, no
+    job."""
     from ..queries import sk_window
 
     done, sk, _ = _family_state(checkpoint_dir, fam, exclude_epoch)
@@ -557,6 +553,57 @@ def _commit_shard(
     log.commit(shard, delta, {"now": int(now), **meta}, ledgers_then_hook)
 
 
+# ---- each family's lineage meta, built in one place for its operator
+# and the guard's driver path; the emb and passage metas record the key
+# geometry that _check_geometry reads back ----
+
+def _exact_meta(n: int, h: int, i: int, r: int, extra: dict | None = None) -> dict:
+    return {"n_docs": n, "n_dup_history": h, "n_dup_intra": i, "n_retained": r,
+            **(extra or {})}
+
+
+def _near_meta(n: int, h: int, i: int, extra: dict | None = None) -> dict:
+    return {"kind": "near_dup", "n_docs": n, "n_near_dup_history": h,
+            "n_near_dup_intra": i, "n_retained": n - h - i, **(extra or {})}
+
+
+def _passage_geometry(window: int) -> dict:
+    return {"window": int(window), "stride": _PASSAGE_STRIDE}
+
+
+def _passage_meta(window: int, n: int, n_windows: int, n_hist: int,
+                  extra: dict | None = None) -> dict:
+    return {"kind": "passages", **_passage_geometry(window), "n_docs": n,
+            "n_windows": n_windows, "n_hist_windows": n_hist, **(extra or {})}
+
+
+def _emb_geometry(bits: int, dim: int) -> dict:
+    return {"bits": int(bits), "tables": _EMB_TABLES, "dim": int(dim)}
+
+
+def _emb_meta(bits: int, dim: int, n: int, n_dup: int, extra: dict | None = None) -> dict:
+    return {"kind": "emb_dup", **_emb_geometry(bits, dim), "n_vecs": n,
+            "n_emb_dup_history": n_dup, "n_retained": n - n_dup, **(extra or {})}
+
+
+def _check_geometry(checkpoint_dir: str, fam: _Family, geometry: dict) -> None:
+    """``geometry`` must equal the key geometry recorded in the lineage
+    meta of ``fam``'s last shard that records one (a checkpoint written
+    before shards recorded it is not checked): keys derived with another
+    geometry never collide with retained keys, so every probe would
+    silently miss (code-review r05 third pass #2). Raises ValueError;
+    callers check before anything is probed or written."""
+    prior = [m for m in fam.log(checkpoint_dir).metas() if geometry.keys() <= m.keys()]
+    if prior and {k: prior[-1][k] for k in geometry} != geometry:
+        def fmt(g):
+            return " ".join(f"{k}={g[k]}" for k in geometry)
+
+        raise ValueError(
+            f"{fam.spec} checkpoint was built with {fmt(prior[-1])}; probing "
+            f"with {fmt(geometry)} would yield silent false negatives"
+        )
+
+
 def _shard_fps(new_df: DataFrame, text_col: str, now: int) -> DataFrame:
     """The shard's (doc_id, fp, tick) frame — the only shape the exact
     incremental operator ever looks at (one row per doc, ~25 B). Every
@@ -571,35 +618,27 @@ def _shard_fps(new_df: DataFrame, text_col: str, now: int) -> DataFrame:
 
 def annotate_against_history(
     spark,
-    new_df: DataFrame,
+    fps: DataFrame,
     checkpoint_dir: str,
     now: int,
-    window: int | None = None,
-    text_col: str = "text",
     exclude_epoch=None,
-    fps_df: DataFrame | None = None,
 ) -> DataFrame:
-    """The LAZY annotated-flags plan incremental_dedup materializes:
-    exposed separately so plan gates (tools/explain_plans.py) can
-    .explain() the real operator — the probe must stay a pure map and
-    the ledger verify a BroadcastHashJoin — instead of a hand-built
-    replica (code-review r04). Callers who want the flags should use
+    """The LAZY annotated-flags plan incremental_dedup materializes,
+    over the shard's _shard_fps frame ``fps`` (as near_history_matches
+    takes the signature frame): exposed separately so plan gates
+    (tools/explain_plans.py) can .explain() the real operator — the
+    probe must stay a pure map and the ledger verify a
+    BroadcastHashJoin — instead of a hand-built replica (code-review
+    r04). Callers who want the flags should use
     incremental_dedup(update_state=False): the raw plan re-reads the
-    checkpoint on every action. ``window`` narrows the query window
-    as in incremental_dedup.
+    checkpoint on every action.
 
-    ``fps_df``: a pre-computed (ideally localCheckpoint()ed) frame of
-    _shard_fps(new_df, ...) — the returned plan references the fp
-    frame THREE times (probe keys, intra-shard firsts, the annotated
-    left side), so a caller that materializes it once saves two
-    scan+hash passes over the shard text per action (round 6, guide
-    §2.4; incremental_dedup does exactly this)."""
-    fps = fps_df if fps_df is not None else _shard_fps(new_df, text_col, now)
-
+    The plan references ``fps`` THREE times (probe keys, intra-shard
+    firsts, the annotated left side), so a caller that materializes it
+    once saves two scan+hash passes over the shard text per action
+    (round 6, guide §2.4; incremental_dedup does exactly this)."""
     # ---- history probe: broadcast sketch, then exact ledger verify ----
-    probe = _probe(
-        spark, checkpoint_dir, EXACT, fps.select("fp"), now, exclude_epoch, window
-    )
+    probe = _probe(spark, checkpoint_dir, EXACT, fps.select("fp"), now, exclude_epoch)
     if probe is not None:
         hits, w, done = probe
         # candidates are the tiny side: broadcast them INTO the ledger
@@ -641,7 +680,6 @@ def incremental_dedup(
     new_df: DataFrame,
     checkpoint_dir: str,
     now: int,
-    window: int | None = None,
     params=None,
     text_col: str = TEXT,
     partitions: int | None = None,
@@ -653,12 +691,14 @@ def incremental_dedup(
     """Dedup ``new_df`` against corpus history AND itself; optionally
     append the survivors to the history state at tick ``now`` (every
     doc of a shard is one sighting at the shard's tick). Returns the
-    annotated frame (ANNOTATED_DDL), local-checkpointed so the flags
-    are frozen before the state writes (see inline note) and the
-    caller's actions never recompute the probe:
+    annotated frame (doc_id, fp, tick, is_dup_history, is_dup_intra,
+    hist_doc_id), local-checkpointed so the flags are frozen before the
+    state writes (see inline note) and the caller's actions never
+    recompute the probe:
 
     - ``is_dup_history``: an EARLIER ingest retained a doc with the
-      same text fingerprint whose tick is within the window —
+      same text fingerprint whose tick is within the sketch's
+      window_ticks —
       text-exact (sketch hits are verified against the ledger, so the
       sketch's FPR never leaks into the flags; sketch misses are
       proof-of-new because TBF/STBF have zero in-window false
@@ -676,9 +716,6 @@ def incremental_dedup(
     sketch exactly once across ALL shards, so for STBF either size
     capacity for the expected corpus-wide distinct count or cap the
     expected shard count via params.max_fill_factor yourself.
-    ``window`` narrows the query window below the sketch's configured
-    ``window_ticks``; a wider one raises ValueError, because older
-    sightings may already have decayed (queries._query_window).
     ``partitions`` caps the sketch-delta partials the state commit
     collects to the driver (``coalesce``, no shuffle): driver memory
     for the delta is at most ``partitions`` × payload; None keeps the
@@ -690,10 +727,7 @@ def incremental_dedup(
     # 6, guide §2.4 — measured 3 corpus scans in one job). Shard-sized
     # rows only (doc_id, fp, tick ≈ 25 B/doc).
     fps = _shard_fps(new_df, text_col, now).localCheckpoint(eager=True)
-    ann = annotate_against_history(
-        spark, new_df, checkpoint_dir, now, window=window, text_col=text_col,
-        exclude_epoch=exclude_epoch, fps_df=fps,
-    )
+    ann = annotate_against_history(spark, fps, checkpoint_dir, now, exclude_epoch)
     # localCheckpoint, not persist: the annotated plan READS the ledger
     # path this function is about to APPEND to, and Spark's cache
     # manager invalidates-and-recaches any cached plan whose source
@@ -717,13 +751,8 @@ def incremental_dedup(
         _commit_shard(
             checkpoint_dir, EXACT, {"fp_ledger": ann.where(kept)}, F.lit(now), now,
             params, partitions,
-            {
-                "n_docs": int(counts["n"]),
-                "n_dup_history": int(counts["h"] or 0),
-                "n_dup_intra": int(counts["i"] or 0),
-                "n_retained": int(counts["r"] or 0),
-                **(meta_extra or {}),
-            },
+            _exact_meta(int(counts["n"]), int(counts["h"] or 0), int(counts["i"] or 0),
+                        int(counts["r"] or 0), meta_extra),
             pre_lineage_hook and (lambda: pre_lineage_hook(ann)),
         )
     return ann
@@ -763,12 +792,13 @@ class StreamingIngestGuard:
     through ``params`` / ``near_params`` / ``passage_params`` /
     ``emb_params``). The near family runs MinHash-LSH at threshold 0.8
     with 64 hashes of 3-word shingles in 16 bands of 4 rows, the
-    passage family a stride of 1, the embedding family cosine 0.9 over
-    8 tables of 12 bits: defined once at the top of this module
-    (io.TEXT, io.EMBEDDING, _NEAR_*, _PASSAGE_STRIDE, _EMB_*) for both of
-    the paths below. The key geometry is fixed for every caller; only
-    the near and emb thresholds and the emb bits still vary, through
-    the operators' own ``threshold`` and ``bits``.
+    passage family 50-word windows at stride 1, the embedding family
+    cosine 0.9 over 8 tables of 12 bits: defined once at the top of
+    this module (io.TEXT, io.EMBEDDING, _NEAR_*, _PASSAGE_*, _EMB_*) for
+    both of the paths below. The passage and embedding shards record
+    their geometry in their lineage meta, and a trigger on a checkpoint
+    of another geometry raises ValueError before anything is probed or
+    written (_check_geometry).
 
     Commit path: every family's sketch delta, lineage row and
     compaction row is written from the driver (its ShardLog: a pyarrow
@@ -815,9 +845,9 @@ class StreamingIngestGuard:
     n_tokens_removed appended as ``_passage_tokens_removed``).
     Passage state commits under its own lineage strictly before the
     exact marker, with the same exclude_epoch replay protection;
-    span length via passage_window, sketch sizing via passage_params
-    (capacity ≈ retained distinct window fps). Requires ``clean_dir``
-    (the survivor set is only defined there).
+    sketch sizing via passage_params (capacity ≈ retained distinct
+    window fps). Requires ``clean_dir`` (the survivor set is only
+    defined there).
 
     ``embeddings=True`` (round 5) adds the SEMANTIC granularity: each
     batch's ``embedding`` vectors (keyed by doc_id) are FLAGGED
@@ -844,7 +874,6 @@ class StreamingIngestGuard:
         near_params=None,
         expire_every: int | None = None,
         passages: bool = False,
-        passage_window: int = 50,
         passage_params=None,
         embeddings: bool = False,
         emb_dim: int | None = None,
@@ -869,7 +898,6 @@ class StreamingIngestGuard:
                 "committed for the published survivor set only"
             )
         self.passages = passages
-        self.passage_window = passage_window
         self.passage_params = passage_params
         if embeddings and emb_dim is None:
             raise ValueError("embeddings=True requires emb_dim")
@@ -904,6 +932,12 @@ class StreamingIngestGuard:
         if any(m.get("epoch") == int(epoch_id) for m in done):
             return  # fully committed (incl. clean output — see class doc)
         ep, now = int(epoch_id), self.now_for_epoch(epoch_id)
+        # both paths derive keys at the module geometry: a checkpoint of
+        # another one fails here, before anything is probed or written
+        if self.passages:
+            _check_geometry(self.checkpoint_dir, PASSAGES, _passage_geometry(_PASSAGE_WINDOW))
+        if self.embeddings:
+            _check_geometry(self.checkpoint_dir, EMB, _emb_geometry(_EMB_BITS, self.emb_dim))
         tbl = _read_local(batch_df, TEXT, self.near or self.passages, self.passages)
         if tbl is None or not self._process_local(tbl, ep, now):
             self._process_spark(batch_df, ep, now)
@@ -951,12 +985,7 @@ class StreamingIngestGuard:
                     }),
                 },
                 now, now, self.near_params, None,
-                {
-                    "kind": "near_dup", "n_docs": n,
-                    "n_near_dup_history": int(near_hist.sum()),
-                    "n_near_dup_intra": int(near_intra.sum()),
-                    "n_retained": int(near_keep.sum()), "epoch": ep,
-                },
+                _near_meta(n, int(near_hist.sum()), int(near_intra.sum()), {"epoch": ep}),
             )
             keep &= near_keep
         exact_keep = ~hist & ~intra
@@ -966,11 +995,8 @@ class StreamingIngestGuard:
                 "fp": fps[exact_keep], "doc_id": ids.filter(pa.array(exact_keep)),
             })},
             now, now, self.params, None,
-            {
-                "n_docs": n, "n_dup_history": int(hist.sum()),
-                "n_dup_intra": int(intra.sum()), "n_retained": int(exact_keep.sum()),
-                "epoch": ep,
-            },
+            _exact_meta(n, int(hist.sum()), int(intra.sum()), int(exact_keep.sum()),
+                        {"epoch": ep}),
             lambda: self._publish_local(tbl.filter(pa.array(keep & exact_keep)), ep, now),
         )
         return True
@@ -989,14 +1015,13 @@ class StreamingIngestGuard:
         if self.embeddings:
             _emb_commit_local(
                 self.checkpoint_dir, ids, out.column(EMBEDDING), now, self.emb_dim,
-                self.emb_params, {"epoch": ep},
+                self.emb_params, ep,
             )
         names = [c for c in out.schema.names if not c.startswith("_fgs_")]
         cols = [out.column(c) for c in names]
         if self.passages:
             text, removed = _passages_local(
-                self.checkpoint_dir, out, now, self.passage_window,
-                self.passage_params, {"epoch": ep}, ep,
+                self.checkpoint_dir, out, now, self.passage_params, ep
             )
             cols[names.index(TEXT)] = text
             names.append("_passage_tokens_removed")
@@ -1090,7 +1115,7 @@ class StreamingIngestGuard:
                 # lineage lands strictly before the exact marker
                 pann = incremental_passages(
                     self.spark, out, self.checkpoint_dir, now=now,
-                    window=self.passage_window, params=self.passage_params,
+                    window=_PASSAGE_WINDOW, params=self.passage_params,
                     partitions=self.partitions,
                     meta_extra={"epoch": ep}, exclude_epoch=ep,
                 )
@@ -1104,7 +1129,7 @@ class StreamingIngestGuard:
                 ).dropDuplicates(["_k"])
                 out = _mask_spans(
                     out.withColumn("_k", F.col("doc_id").cast("string")).join(drops, "_k", "left"),
-                    self.passage_window, "_passage_tokens_removed",
+                    _PASSAGE_WINDOW, "_passage_tokens_removed",
                 ).drop("_k")
             # epoch-partitioned dynamic overwrite: a re-run of a
             # half-committed epoch replaces exactly its own partition
@@ -1372,7 +1397,6 @@ def incremental_near_dup(
             F.sum(F.col("is_near_dup_history").cast("long")).alias("h"),
             F.sum(F.col("is_near_dup_intra").cast("long")).alias("i"),
         ).collect()[0]
-        n, h, i = int(counts["n"]), int(counts["h"] or 0), int(counts["i"] or 0)
         keep = ann.where(
             ~F.col("is_near_dup_history") & ~F.col("is_near_dup_intra")
         ).select("doc_id")
@@ -1383,12 +1407,8 @@ def incremental_near_dup(
                 "sig_ledger": sig.join(F.broadcast(keep), "doc_id"),
             },
             F.lit(now), now, params, partitions,
-            {
-                "kind": "near_dup",
-                "n_docs": n, "n_near_dup_history": h, "n_near_dup_intra": i,
-                "n_retained": n - h - i,
-                **(meta_extra or {}),
-            },
+            _near_meta(int(counts["n"]), int(counts["h"] or 0), int(counts["i"] or 0),
+                       meta_extra),
         )
     return ann
 
@@ -1423,7 +1443,7 @@ def incremental_passages(
     new_df: DataFrame,
     checkpoint_dir: str,
     now: int,
-    window: int = 50,
+    window: int = _PASSAGE_WINDOW,
     params=None,
     partitions: int | None = None,
     update_state: bool = True,
@@ -1433,11 +1453,17 @@ def incremental_passages(
     """Flag every ``window``-token span (stride 1, _PASSAGE_STRIDE) of
     a new ingest shard's ``text`` (docs keyed by ``doc_id``) whose
     fingerprint matches a passage RETAINED in checkpointed history —
-    without re-joining history text. Returns one row per doc
-    (PASSAGE_ANNOTATED_DDL): total window count, historical-window
-    count, and the positions of historical spans (ready for masking —
-    see mask_against_history). Docs shorter than ``window`` emit
-    (0, 0, []) — whole-doc dedup owns that regime.
+    without re-joining history text. Returns one row per doc (doc_id,
+    n_windows, n_hist_windows, hist_positions): total window count,
+    historical-window count, and the positions of historical spans
+    (ready for masking — see mask_against_history). Docs shorter than
+    ``window`` emit (0, 0, []) — whole-doc dedup owns that regime.
+
+    ``window`` is fixed per checkpoint: each shard's lineage meta
+    records its window and stride, and a call with another window than
+    the checkpoint's raises ValueError before anything is probed or
+    written (_check_geometry) — its fingerprints would never match a
+    retained passage.
 
     State = a decaying membership sketch over 64-bit rolling window
     fingerprints + an fp ledger ``(fp, keep_doc, keep_pos, tick,
@@ -1465,6 +1491,7 @@ def incremental_passages(
     partials the state commit collects to the driver, as there."""
     from .dedup import passage_fingerprints
 
+    _check_geometry(checkpoint_dir, PASSAGES, _passage_geometry(window))
     src = new_df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col(TEXT).alias("text"),
@@ -1584,48 +1611,29 @@ def incremental_passages(
         _commit_shard(
             checkpoint_dir, PASSAGES, {"passage_ledger": newfp}, F.lit(now), now,
             params, partitions,
-            {
-                "kind": "passages",
-                "n_docs": int(counts["n"]),
-                "n_windows": int(counts["w"] or 0),
-                "n_hist_windows": int(counts["h"] or 0),
-                **(meta_extra or {}),
-            },
+            _passage_meta(window, int(counts["n"]), int(counts["w"] or 0),
+                          int(counts["h"] or 0), meta_extra),
         )
     return ann
 
 
-def mask_against_history(
-    spark,
-    new_df: DataFrame,
-    checkpoint_dir: str | None = None,
-    now: int | None = None,
-    window: int = 50,
-    ann: DataFrame | None = None,
-    **kwargs,
-) -> DataFrame:
+def mask_against_history(spark, new_df: DataFrame, ann: DataFrame,
+                         window: int = _PASSAGE_WINDOW) -> DataFrame:
     """Masking front end of incremental_passages: drop every span of
     the new shard that repeats a retained historical passage (history
     keeps its copy — strict drop-ALL-on-the-new-side, the incremental
     complement of mask_repeated_passages' keep-one-corpus-wide).
-    Returns (doc_id [original type], text_clean, n_tokens_removed).
+    ``ann`` is the frame incremental_passages returned for the SAME
+    new_df and window, so no second kernel+probe pass runs. Returns
+    (doc_id [original type], text_clean, n_tokens_removed).
 
-    Pass ``ann`` (a frame already returned by incremental_passages for
-    the SAME new_df/window) to reuse its annotation instead of paying
-    a second kernel+probe pass; otherwise this calls
-    incremental_passages itself with ``update_state=False`` by
-    DEFAULT — masking that also commits state in one call is the
-    exactly-once trap (a crash before the caller persists the masked
-    text makes the re-run see the shard's own fps as history and mask
-    everything away; code-review r05 #2). To commit state with a
-    durable masked output, tag the shard through ``meta_extra`` and
-    re-run a crashed shard with ``exclude_epoch``, as
-    StreamingIngestGuard does."""
-    if ann is None:
-        kwargs.setdefault("update_state", False)
-        ann = incremental_passages(
-            spark, new_df, checkpoint_dir, now, window=window, **kwargs
-        )
+    Masking and the state commit are separate calls on purpose: a crash
+    before the caller persists the masked text makes a re-run see the
+    shard's own fps as history and mask everything away (code-review
+    r05 #2). To commit state with a durable masked output, tag the
+    shard through incremental_passages' ``meta_extra`` and re-run a
+    crashed shard with ``exclude_epoch``, as StreamingIngestGuard
+    does."""
     drops = ann.where(F.size("hist_positions") > 0).select(
         F.col("doc_id").alias("_k"), F.col("hist_positions").alias("_drops")
     )
@@ -1651,7 +1659,7 @@ def compact_emb_checkpoint(spark, checkpoint_dir: str):
     return _compact(checkpoint_dir, EMB)
 
 
-def _emb_bucket_keys(dim: int, bits: int, seed_base: int = 101):
+def _emb_bucket_keys(dim: int, bits: int):
     """The emb family's one bucket-key function: ``keys(col)`` maps an
     Arrow list column of n vectors to ``(vecs, bkey)`` — the (n, dim)
     float32 matrix and the n·_EMB_TABLES int64 bucket keys, vector i's
@@ -1661,7 +1669,7 @@ def _emb_bucket_keys(dim: int, bits: int, seed_base: int = 101):
 
     Planes: _EMB_TABLES sets of ``bits`` seeded ±1 hyperplanes
     (similarity._planes, the hyperplane_buckets construction, at seed
-    seed_base + 13·t) stacked into one (tables·bits, dim) matrix, so
+    101 + 13·t) stacked into one (tables·bits, dim) matrix, so
     ONE matmul per batch yields every table's projections. A pure
     function of the seed: keys are splitmix64(bucket ⊕ mix(t)),
     deterministic across shards and partitionings. Null and
@@ -1669,7 +1677,7 @@ def _emb_bucket_keys(dim: int, bits: int, seed_base: int = 101):
     from ..hashing import splitmix64
 
     tables = _EMB_TABLES
-    planes = np.concatenate([_planes(seed_base + 13 * t, bits, dim) for t in range(tables)])
+    planes = np.concatenate([_planes(101 + 13 * t, bits, dim) for t in range(tables)])
     weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
     tsalt = splitmix64(np.arange(tables, dtype=np.uint64) + np.uint64(0xE3B))
 
@@ -1716,33 +1724,6 @@ def _emb_keyed(tbl, keys) -> dict:
         "vec_id": tbl.column("vec_id").take(pa.array(rows)),
         "bkey": pa.array(bkey, pa.int64()),
     }
-
-
-def _emb_meta(bits: int, dim: int, n: int, n_dup: int) -> dict:
-    """An emb shard's lineage meta: its key geometry (what
-    _emb_check_geometry reads back) and its vector counts."""
-    return {
-        "kind": "emb_dup", "bits": bits, "tables": _EMB_TABLES, "dim": dim,
-        "n_vecs": n, "n_emb_dup_history": n_dup, "n_retained": n - n_dup,
-    }
-
-
-def _emb_check_geometry(checkpoint_dir: str, bits: int, dim: int):
-    """Bucket-key geometry must match the checkpoint's: keys computed
-    with different bits/tables/dim never collide with retained keys,
-    so every probe would silently miss (code-review r05 third pass
-    #2). The geometry is recorded in each shard's lineage meta."""
-    tables = _EMB_TABLES
-    prior = [m for m in EMB.log(checkpoint_dir).metas() if "bits" in m]
-    if prior:
-        g = prior[-1]
-        if (int(g["bits"]), int(g["tables"]), int(g["dim"])) != (bits, tables, dim):
-            raise ValueError(
-                f"emb checkpoint was built with bits={g['bits']} "
-                f"tables={g['tables']} dim={g['dim']}; probing with "
-                f"bits={bits} tables={tables} dim={dim} would yield "
-                "silent false negatives"
-            )
 
 
 def _emb_hist_matches(
@@ -1944,7 +1925,7 @@ def _emb_annotate(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(src, keyed, lazy annotated plan) — the probe half shared by
     emb_annotate_plan and incremental_embedding_dedup."""
-    _emb_check_geometry(checkpoint_dir, bits, dim)
+    _check_geometry(checkpoint_dir, EMB, _emb_geometry(bits, dim))
     src, keyed = _emb_src_keyed(new_df, dim, bits, id_col)
     hist_matches = _emb_hist_matches(
         spark, src, keyed, checkpoint_dir, now, threshold, dim, bits, exclude_epoch,
@@ -1966,7 +1947,7 @@ def emb_annotate_plan(
     spark, new_df: DataFrame, checkpoint_dir: str, now: int, dim: int,
 ) -> DataFrame:
     """The LAZY annotated-flags plan incremental_embedding_dedup
-    materializes (EMB_ANNOTATED_DDL) at its defaults — exposed, like
+    materializes at its defaults — exposed, like
     annotate_against_history / near_history_matches, so plan tools can
     .explain() the real operator. Callers who want the flags should
     use incremental_embedding_dedup(update_state=False): this raw plan
@@ -1993,8 +1974,9 @@ def incremental_embedding_dedup(
     """Flag every vector of a new ingest shard (its ``embedding``
     column, keyed by ``id_col``) whose cosine similarity to a RETAINED
     historical vector in the sketch's window is >= ``threshold`` —
-    without re-joining history. Returns EMB_ANNOTATED_DDL, one row per
-    input vector (hist_vec_id / cosine = the best historical match).
+    without re-joining history. Returns (vec_id, is_emb_dup_history,
+    hist_vec_id, cosine), one row per input vector (hist_vec_id /
+    cosine = the best historical match).
 
     History state: a decaying membership sketch over hyperplane-LSH
     BUCKET KEYS (8 independent seeded plane sets, _EMB_TABLES, of
@@ -2018,7 +2000,7 @@ def incremental_embedding_dedup(
     vectors are fixed. Intra-shard duplicates are out of scope — run
     embedding_near_dup on the shard first (same composition rule as
     incremental_passages). ``bits`` must match the checkpoint's
-    (_emb_check_geometry). ``exclude_epoch`` mirrors incremental_dedup,
+    (_check_geometry). ``exclude_epoch`` mirrors incremental_dedup,
     and ``partitions`` caps the sketch-delta partials the state commit
     collects to the driver, as there."""
     src, keyed, ann = _emb_annotate(
@@ -2050,7 +2032,6 @@ def commit_emb_state(
     checkpoint_dir: str,
     now: int,
     dim: int,
-    bits: int = _EMB_BITS,
     params=None,
     id_col: str = "vec_id",
     partitions: int | None = None,
@@ -2063,17 +2044,17 @@ def commit_emb_state(
     embeddings mode does this; committing unpublished vectors would
     let them suppress future docs with no published keeper —
     code-review r05 fifth pass #1, the passages survivor-keeper rule
-    applied to the semantic half). Geometry must match the
-    checkpoint's (validated, like the probe path).
+    applied to the semantic half). The geometry is the default
+    (_EMB_BITS) and must match the checkpoint's (validated, like the
+    probe path).
     ``partitions`` caps the sketch-delta partials the commit collects
     to the driver, as in incremental_dedup."""
-    _emb_check_geometry(checkpoint_dir, bits, dim)
-    src, keyed = _emb_src_keyed(new_df, dim, bits, id_col)
-    n = int(src.count())
+    _check_geometry(checkpoint_dir, EMB, _emb_geometry(_EMB_BITS, dim))
+    src, keyed = _emb_src_keyed(new_df, dim, _EMB_BITS, id_col)
     _commit_shard(
         checkpoint_dir, EMB, {"bucket_ledger": keyed, "vec_ledger": src},
         F.lit(now), now, params, partitions,
-        {**_emb_meta(bits, dim, n, 0), **(meta_extra or {})},
+        _emb_meta(_EMB_BITS, dim, int(src.count()), 0, meta_extra),
     )
 
 
@@ -2186,7 +2167,7 @@ def _near_local(checkpoint_dir: str, ids, wh, now: int, exclude_epoch):
     a, b = (x[(sigs[a] == sigs[b]).sum(axis=1) / num_hashes >= threshold] for x in (a, b))
     intra = np.zeros(n, bool)
     if a.size:
-        nodes, comps, _ = _cc_rounds(pa.table({"a": ids.take(a), "b": ids.take(b)}), 25)
+        nodes, comps, _ = _cc_rounds(pa.table({"a": ids.take(a), "b": ids.take(b)}))
         intra = pc.is_in(ids, value_set=nodes.filter(pc.not_equal(nodes, comps))).to_numpy(
             zero_copy_only=False
         )
@@ -2223,8 +2204,8 @@ def _emb_flags_local(checkpoint_dir: str, ids, vecs, now: int, dim: int,
     driver-held batch, at the guard's geometry (_EMB_*): the sketch-hit
     bucket-ledger rows and the candidates' vectors feed the verify
     kernel (_emb_verify) directly — the same candidate state the Spark
-    path broadcasts."""
-    _emb_check_geometry(checkpoint_dir, _EMB_BITS, dim)
+    path broadcasts. The guard checked the geometry at the trigger's
+    start."""
     keys = _emb_bucket_keys(dim, _EMB_BITS)
     _, bkey = keys(vecs)  # the key kernel's null / ragged guards
     dup = np.zeros(len(ids), bool)
@@ -2247,10 +2228,9 @@ def _emb_flags_local(checkpoint_dir: str, ids, vecs, now: int, dim: int,
 
 
 def _emb_commit_local(checkpoint_dir: str, ids, vecs, now: int, dim: int, params,
-                      meta_extra: dict) -> None:
-    """commit_emb_state over driver-held survivors, at the guard's
-    geometry (_EMB_*)."""
-    _emb_check_geometry(checkpoint_dir, _EMB_BITS, dim)
+                      ep: int) -> None:
+    """commit_emb_state over the driver-held survivors of epoch ``ep``,
+    at the guard's geometry (_EMB_*)."""
     src = pa.RecordBatch.from_arrays([ids, vecs], ["vec_id", "embedding"])
     _commit_shard(
         checkpoint_dir, EMB,
@@ -2258,23 +2238,23 @@ def _emb_commit_local(checkpoint_dir: str, ids, vecs, now: int, dim: int, params
             "bucket_ledger": pa.table(_emb_keyed(src, _emb_bucket_keys(dim, _EMB_BITS))),
             "vec_ledger": pa.Table.from_batches([src]),
         },
-        now, now, params, None, {**_emb_meta(_EMB_BITS, dim, len(ids), 0), **meta_extra},
+        now, now, params, None, _emb_meta(_EMB_BITS, dim, len(ids), 0, {"epoch": ep}),
     )
 
 
-def _passages_local(checkpoint_dir: str, out, now: int, window: int, params,
-                    meta_extra: dict, exclude_epoch):
-    """incremental_passages (at stride _PASSAGE_STRIDE) then
-    mask_against_history over the driver-held survivors ``out`` (a
-    _read_local batch): commits the passage shard and returns the
-    masked text and n_tokens_removed columns. Same rules: a history
-    window's fp is in the sketch AND in a passage-ledger row of a
-    completed shard inside the window; a new fp enters history through
-    its first occurrence that overlaps no history window of its doc,
-    keeper = min (doc_id, pos); the mask drops every word of every
-    history window."""
+def _passages_local(checkpoint_dir: str, out, now: int, params, ep: int):
+    """incremental_passages (at the guard's geometry, _PASSAGE_WINDOW
+    and _PASSAGE_STRIDE) then mask_against_history over the driver-held
+    survivors ``out`` (a _read_local batch) of epoch ``ep``: commits
+    the passage shard and returns the masked text and n_tokens_removed
+    columns. Same rules: a history window's fp is in the sketch AND in
+    a passage-ledger row of a completed shard inside the window; a new
+    fp enters history through its first occurrence that overlaps no
+    history window of its doc, keeper = min (doc_id, pos); the mask
+    drops every word of every history window."""
     from .dedup import _passage_rollup
 
+    window = _PASSAGE_WINDOW
     ids, n = out.column("_fgs_id"), out.num_rows
     rows = _passage_rollup(
         pa.RecordBatch.from_arrays([pa.array(np.arange(n)), out.column("_fgs_wh")],
@@ -2289,7 +2269,7 @@ def _passages_local(checkpoint_dir: str, out, now: int, window: int, params,
         pos = rows["pos_list"].values.to_numpy().astype(np.int64)
         sizes = np.diff(rows["pos_list"].offsets.to_numpy())
     verified = np.zeros(0, np.int64)
-    probe = _probe_local(checkpoint_dir, PASSAGES, fp, now, exclude_epoch)
+    probe = _probe_local(checkpoint_dir, PASSAGES, fp, now, ep)
     if probe is not None and probe[0].size:
         hits, w, done = probe
         verified = _ledger_local(checkpoint_dir, PASSAGES, "passage_ledger", done, "fp",
@@ -2330,10 +2310,7 @@ def _passages_local(checkpoint_dir: str, out, now: int, window: int, params,
             "keep_pos": pa.array(k_pos[keep], pa.int32()),
         })},
         now, now, params, None,
-        {
-            "kind": "passages", "n_docs": n, "n_windows": int(sizes.sum()),
-            "n_hist_windows": int(is_hist.sum()), **meta_extra,
-        },
+        _passage_meta(window, n, int(sizes.sum()), int(is_hist.sum()), {"epoch": ep}),
     )
 
     # the mask (dedup._mask_spans): drop the words [p, p + window) of

@@ -22,10 +22,6 @@ _GOLDEN = _U64(0x9E3779B97F4A7C15)
 _MIX1 = _U64(0xBF58476D1CE4E5B9)
 _MIX2 = _U64(0x94D049BB133111EB)
 
-# numpy integer overflow in array ops wraps mod 2^64, which is exactly
-# what splitmix64 wants; silence the scalar-path warnings defensively.
-_err = np.errstate(over="ignore")
-
 
 def splitmix64(x: np.ndarray) -> np.ndarray:
     """splitmix64 finalizer over a uint64 array (wrapping arithmetic)."""

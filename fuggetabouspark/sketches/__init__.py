@@ -28,17 +28,10 @@ REGISTRY = {
 
 def sketch_from_bytes(buf: bytes) -> Sketch:
     """Dispatch on the serialized sketch name."""
-    import struct
-
-    from .base import decompress_blob
-
-    from .base import MAGIC
+    from .base import decompress_blob, read_header
 
     raw = decompress_blob(buf)
-    if bytes(raw[:4]) != MAGIC:
-        raise ValueError(f"bad sketch magic {bytes(raw[:4])!r}")
-    nlen = struct.unpack_from("<B", raw, 5)[0]
-    name = raw[6 : 6 + nlen].decode(errors="replace")
+    name = read_header(memoryview(raw))[0]
     if name not in REGISTRY:
         raise ValueError(f"unknown sketch kind {name!r}")
     return REGISTRY[name].from_bytes(raw)

@@ -53,26 +53,21 @@ def _le(a: np.ndarray) -> np.ndarray:
     return a.astype(dt, copy=False)
 
 
-def pack(name: str, params_json: str, n_items: int, arrays: list[np.ndarray]) -> bytes:
-    out = [MAGIC, struct.pack("<BB", VERSION, len(name)), name.encode()]
+def write_header(name: str, params_json: str, n_items: int, count: int) -> list[bytes]:
+    """The header every sketch payload starts with (module docstring):
+    magic, version, name, params, n_items and the ``count`` of the
+    parts that follow (arrays, or an STBF's tiers)."""
     pj = params_json.encode()
-    out.append(struct.pack("<I", len(pj)))
-    out.append(pj)
-    out.append(struct.pack("<QB", n_items, len(arrays)))
-    for a in arrays:
-        a = np.ascontiguousarray(_le(a))
-        ds = a.dtype.newbyteorder("<").str.encode()  # e.g. b'<u2'
-        out.append(struct.pack("<B", len(ds)))
-        out.append(ds)
-        out.append(struct.pack("<B", a.ndim))
-        out.append(struct.pack(f"<{a.ndim}Q", *a.shape) if a.ndim else b"")
-        out.append(a.tobytes())
-    return compress_blob(b"".join(out))
+    return [
+        MAGIC, struct.pack("<BB", VERSION, len(name)), name.encode(),
+        struct.pack("<I", len(pj)), pj, struct.pack("<QB", n_items, count),
+    ]
 
 
-def unpack(buf: bytes) -> tuple[str, str, int, list[np.ndarray]]:
-    buf = decompress_blob(buf)
-    mv = memoryview(buf)
+def read_header(mv: memoryview) -> tuple[str, str, int, int, int]:
+    """write_header's fields read back from the decompressed payload
+    ``mv``: ``(name, params_json, n_items, count, offset)``, with
+    ``offset`` where the parts begin."""
     if bytes(mv[:4]) != MAGIC:
         raise ValueError("bad sketch magic")
     ver, nlen = struct.unpack_from("<BB", mv, 4)
@@ -85,8 +80,26 @@ def unpack(buf: bytes) -> tuple[str, str, int, list[np.ndarray]]:
     off += 4
     params_json = bytes(mv[off : off + plen]).decode()
     off += plen
-    n_items, n_arrays = struct.unpack_from("<QB", mv, off)
-    off += 9
+    n_items, count = struct.unpack_from("<QB", mv, off)
+    return name, params_json, int(n_items), count, off + 9
+
+
+def pack(name: str, params_json: str, n_items: int, arrays: list[np.ndarray]) -> bytes:
+    out = write_header(name, params_json, n_items, len(arrays))
+    for a in arrays:
+        a = np.ascontiguousarray(_le(a))
+        ds = a.dtype.newbyteorder("<").str.encode()  # e.g. b'<u2'
+        out.append(struct.pack("<B", len(ds)))
+        out.append(ds)
+        out.append(struct.pack("<B", a.ndim))
+        out.append(struct.pack(f"<{a.ndim}Q", *a.shape) if a.ndim else b"")
+        out.append(a.tobytes())
+    return compress_blob(b"".join(out))
+
+
+def unpack(buf: bytes) -> tuple[str, str, int, list[np.ndarray]]:
+    mv = memoryview(decompress_blob(buf))
+    name, params_json, n_items, n_arrays, off = read_header(mv)
     arrays = []
     for _ in range(n_arrays):
         (dlen,) = struct.unpack_from("<B", mv, off)
@@ -102,7 +115,7 @@ def unpack(buf: bytes) -> tuple[str, str, int, list[np.ndarray]]:
         a = np.frombuffer(mv[off : off + nbytes], dtype=dtype).reshape(shape)
         off += nbytes
         arrays.append(a.copy())  # own the memory; native byte order
-    return name, params_json, int(n_items), arrays
+    return name, params_json, n_items, arrays
 
 
 def weighted_quantiles(values: np.ndarray, weights: np.ndarray, qs) -> np.ndarray:

@@ -26,7 +26,7 @@ import struct
 import numpy as np
 
 from ..params import ScalingParams, params_from_json, params_to_json
-from .base import MAGIC, Sketch, VERSION, compress_blob, decompress_blob
+from .base import Sketch, compress_blob, decompress_blob, read_header, write_header
 from .tbf import TimingBloomFilter
 
 
@@ -225,11 +225,7 @@ class ScalingTimingBloomFilter(Sketch):
         tiers = list(self.tiers)
         while tiers and not tiers[-1].ticks.any():
             tiers.pop()
-        pj = params_to_json(self.params).encode()
-        out = [MAGIC, struct.pack("<BB", VERSION, len(self.NAME)), self.NAME.encode()]
-        out.append(struct.pack("<I", len(pj)))
-        out.append(pj)
-        out.append(struct.pack("<QB", self.n_items, len(tiers)))
+        out = write_header(self.NAME, params_to_json(self.params), self.n_items, len(tiers))
         for t in tiers:
             blob = t.to_bytes()
             out.append(struct.pack("<Q", len(blob)))
@@ -238,28 +234,15 @@ class ScalingTimingBloomFilter(Sketch):
 
     @classmethod
     def from_bytes(cls, buf: bytes) -> "ScalingTimingBloomFilter":
-        buf = decompress_blob(buf)
-        mv = memoryview(buf)
-        if bytes(mv[:4]) != MAGIC:
-            raise ValueError("bad sketch magic")
-        ver, nlen = struct.unpack_from("<BB", mv, 4)
-        if ver != VERSION:
-            raise ValueError(f"unsupported sketch version {ver}")
-        off = 6
-        name = bytes(mv[off : off + nlen]).decode()
-        off += nlen
+        mv = memoryview(decompress_blob(buf))
+        name, params_json, n_items, n_tiers, off = read_header(mv)
         if name != cls.NAME:
             raise ValueError(f"expected {cls.NAME}, got {name}")
-        (plen,) = struct.unpack_from("<I", mv, off)
-        off += 4
-        params = params_from_json(bytes(mv[off : off + plen]).decode())
-        off += plen
-        n_items, n_tiers = struct.unpack_from("<QB", mv, off)
-        off += 9
+        params = params_from_json(params_json)
         tiers = []
         for _ in range(n_tiers):
             (blen,) = struct.unpack_from("<Q", mv, off)
             off += 8
             tiers.append(TimingBloomFilter.from_bytes(bytes(mv[off : off + blen])))
             off += blen
-        return cls(params, tiers, int(n_items))
+        return cls(params, tiers, n_items)

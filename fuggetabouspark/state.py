@@ -365,14 +365,10 @@ def build_resumable(
     n_shards: int = 8,
     tick_col=None,
     partitions: int | None = None,
-    fail_after_shard: int | None = None,
 ):
     """Build shard-by-shard with checkpointing; safe to re-invoke after
     a crash — completed shards (those with a lineage row) are skipped.
     Each shard is one build_sketches run, grouped by ``source``.
-
-    ``fail_after_shard`` deliberately raises after N shards (test hook
-    for the kill-and-resume gate in BASELINE.md).
     Returns the merged final sketches as {(spec, group): sketch}.
     """
     from pyspark.sql import functions as F
@@ -383,7 +379,6 @@ def build_resumable(
     done = completed_shards(spark, checkpoint_dir, expect_n_shards=n_shards)
     shard_col = F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
 
-    built = 0
     for shard in range(n_shards):
         if shard in done:
             continue
@@ -411,9 +406,6 @@ def build_resumable(
              "n_items": r["n_items"]}
             for r in rows if r["spec"] != LINEAGE_SPEC
         ], meta)
-        built += 1
-        if fail_after_shard is not None and built >= fail_after_shard:
-            raise RuntimeError(f"injected failure after shard {shard}")
     return load_state(spark, checkpoint_dir)
 
 

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -41,6 +42,28 @@ def jobs_in_group(spark, group, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextmanager
+def crash_after_shards(n):
+    """Inside the block, build_resumable crashes once it has committed
+    ``n`` shards: state.build_sketches raises RuntimeError("injected
+    failure") from its (n + 1)-th call on (the kill-and-resume gate)."""
+    from fuggetabouspark import state
+
+    real, calls = state.build_sketches, [0]
+
+    def build(*args, **kwargs):
+        if calls[0] == n:
+            raise RuntimeError("injected failure")
+        calls[0] += 1
+        return real(*args, **kwargs)
+
+    state.build_sketches = build
+    try:
+        yield
+    finally:
+        state.build_sketches = real
 
 
 @pytest.fixture()

@@ -5,7 +5,7 @@ Pinned here, with the distributed Spark loop as the reference:
 - null ids are not nodes, on both paths;
 - seeded random graphs (self-loops, duplicate edges, long and string
   ids) give identical rows, round counts and output schema;
-- max_iter non-convergence raises on both paths;
+- non-convergence within dedup._CC_MAX_ROUNDS raises on both paths;
 - a small graph costs exactly one Spark job, counting its clusters
   one more, and a graph over the budget still takes the Spark loop.
 """
@@ -91,10 +91,11 @@ class TestDriverMatchesSparkLoop:
 
     def test_max_iter_raises_on_both_paths(self, spark, monkeypatch):
         df = spark.createDataFrame([(i, i + 1) for i in range(6)], "doc_a long, doc_b long")
+        monkeypatch.setattr(dedup, "_CC_MAX_ROUNDS", 1)
 
         def one_round():
             with pytest.raises(RuntimeError, match="converge"):
-                connected_components(df, max_iter=1)
+                connected_components(df)
 
         _both_paths(monkeypatch, one_round)
 

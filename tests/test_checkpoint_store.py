@@ -24,7 +24,7 @@ import json
 import os
 
 import pytest
-from conftest import jobs_in_group
+from conftest import crash_after_shards, jobs_in_group
 from pyspark.sql import functions as F
 
 from fuggetabouspark.fixtures import make_rows
@@ -134,16 +134,16 @@ def test_resume_after_a_crashed_compaction_swap(spark, corpus, tmp_path):
     sketch_state_old; the resumed build must append to that history,
     not start a new primary dir that hides it."""
     ck, ref = str(tmp_path / "ck"), str(tmp_path / "ref")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_resumable(spark, corpus, SPECS, ck, n_shards=3, fail_after_shard=2, **_kw())
+    with pytest.raises(RuntimeError, match="injected failure"), crash_after_shards(2):
+        build_resumable(spark, corpus, SPECS, ck, n_shards=3, **_kw())
     compacted = _bytes(compact_checkpoint(spark, ck, now=60))
     state = os.path.join(ck, "sketch_state")
     os.rename(state, state + "_old")
     assert _bytes(load_state(spark, ck)) == compacted
     resumed = build_resumable(spark, corpus, SPECS, ck, n_shards=3, **_kw())
 
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_resumable(spark, corpus, SPECS, ref, n_shards=3, fail_after_shard=2, **_kw())
+    with pytest.raises(RuntimeError, match="injected failure"), crash_after_shards(2):
+        build_resumable(spark, corpus, SPECS, ref, n_shards=3, **_kw())
     compact_checkpoint(spark, ref, now=60)
     assert _bytes(resumed) == _bytes(build_resumable(spark, corpus, SPECS, ref, n_shards=3, **_kw()))
     assert sorted(os.listdir(ck)) == ["lineage", "sketch_state"]
@@ -212,8 +212,8 @@ def test_spark_written_checkpoint_resumes_to_identical_bytes(spark, corpus, fres
 
 def test_corrupt_lineage_part_raises(spark, corpus, tmp_path):
     ck = str(tmp_path / "ck")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_resumable(spark, corpus, SPECS, ck, n_shards=3, fail_after_shard=1, **_kw())
+    with pytest.raises(RuntimeError, match="injected failure"), crash_after_shards(1):
+        build_resumable(spark, corpus, SPECS, ck, n_shards=3, **_kw())
     with open(os.path.join(ck, "lineage", "part-corrupt.parquet"), "wb") as f:
         f.write(b"not a parquet file")
     with pytest.raises(Exception, match="(?i)parquet"):

@@ -273,12 +273,13 @@ class TestConnectedComponents:
             **{i: 20 for i in range(20, 29)},
         }
 
-    def test_non_convergence_raises(self, spark):
-        from fuggetabouspark.dataops import connected_components
+    def test_non_convergence_raises(self, spark, monkeypatch):
+        from fuggetabouspark.dataops import connected_components, dedup
 
+        monkeypatch.setattr(dedup, "_CC_MAX_ROUNDS", 1)
         df = spark.createDataFrame([(i, i + 1) for i in range(6)], "doc_a long, doc_b long")
         with pytest.raises(RuntimeError, match="converge"):
-            connected_components(df, max_iter=1)
+            connected_components(df)
 
 
 @pytest.mark.usefixtures("cc_spark_loop")
@@ -293,9 +294,8 @@ class TestDedupScaleShapes:
         #5): one giant 10^5-leaf star (the near-clique dedup shape at
         its most skewed) plus a 256-edge path chain (the worst case for
         plain min-label propagation, which needs diameter=256 rounds).
-        Pointer jumping must converge within max_iter=12 ≈
-        log2(256) + slack — the max_iter bound doubles as the
-        round-count assertion (non-convergence raises)."""
+        Pointer jumping must converge within 12 rounds ≈
+        log2(256) + slack."""
         from fuggetabouspark.dataops import connected_components
 
         star = spark.range(1, 100_001).select(
@@ -305,7 +305,8 @@ class TestDedupScaleShapes:
         path = spark.createDataFrame(
             [(base + i, base + i + 1) for i in range(256)], "doc_a long, doc_b long"
         )
-        cc = connected_components(star.unionAll(path), max_iter=12)
+        cc, rounds = connected_components(star.unionAll(path), return_rounds=True)
+        assert rounds <= 12
         comps = {r["node"]: r["comp"] for r in cc.collect()}
         assert len(comps) == 100_001 + 257
         assert all(comps[i] == 0 for i in range(100_001))

@@ -13,9 +13,7 @@ Pinned here:
   zero Spark jobs, and the driver-merged delta is byte-identical to
   build_sketches' payload whatever the input partitioning — and to the
   in-process delta the guard's driver path commits;
-- the loader merges only ungrouped (group '') state rows;
-- the probe broadcast cache never serves one SparkContext's broadcast
-  to another.
+- the loader merges only ungrouped (group '') state rows.
 """
 
 import json
@@ -249,37 +247,3 @@ class TestLoaderGroupFilter:
         _, sk, raw = _family_state(ck, EXACT)
         assert sk.to_bytes() == mine.to_bytes()
         assert raw == mine.to_bytes()  # exactly one row contributed
-
-
-class TestStateBroadcastCache:
-    def test_new_context_gets_new_broadcast(self, monkeypatch):
-        from fuggetabouspark import queries
-
-        monkeypatch.setattr(queries, "_STATE_BC_CACHE", {})
-
-        class Bc:
-            def __init__(self, value):
-                self.value, self.unpersisted = value, False
-
-            def unpersist(self):
-                self.unpersisted = True
-
-        class Sc:
-            def __init__(self):
-                self.made = []
-
-            def broadcast(self, value):
-                self.made.append(Bc(value))
-                return self.made[-1]
-
-        payloads = [("", b"state")]
-        old, new = Sc(), Sc()
-        first = queries._state_broadcast(old, payloads, "k")
-        assert queries._state_broadcast(old, payloads, "k") is first
-        assert len(old.made) == 1
-        fresh = queries._state_broadcast(new, payloads, "k")
-        assert fresh is not first and new.made == [fresh]
-        assert queries._state_broadcast(new, payloads, "k") is fresh
-        # the dead context's handle is dropped, not unpersisted
-        assert not first.unpersisted
-        assert all(c is new for c, _ in queries._STATE_BC_CACHE.values())

@@ -93,15 +93,16 @@ class TestDoubleInput:
 class TestCommitGeometry:
     def test_mismatched_bits_commits_nothing(self, spark, ck):
         ddl = "vec_id long, embedding array<float>"
-        commit_emb_state(
+        incremental_embedding_dedup(
             spark, spark.createDataFrame(_rows(5, 4), ddl), ck, now=1, dim=DIM,
             bits=6, params=P,
-        )
+        ).unpersist()
         assert len(EMB.log(ck).metas()) == 1
+        # commit_emb_state derives keys at the default 12 bits
         with pytest.raises(ValueError, match="bits"):
             commit_emb_state(
                 spark, spark.createDataFrame(_rows(5, 5, start=10), ddl), ck,
-                now=2, dim=DIM, bits=8, params=P,
+                now=2, dim=DIM, params=P,
             )
         assert len(EMB.log(ck).metas()) == 1
 

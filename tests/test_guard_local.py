@@ -56,6 +56,13 @@ DDL = "doc_id long, text string, embedding array<double>"
 I64, I32 = np.iinfo(np.int64), np.iinfo(np.int32)
 
 
+@pytest.fixture(autouse=True)
+def passage_window(monkeypatch):
+    """The guard's passages at 8-word windows, so the short planted
+    paragraph of _batches is a repeated passage."""
+    monkeypatch.setattr(I, "_PASSAGE_WINDOW", 8)
+
+
 def _batches(spark, n=24):
     """Three batches planting, from the second on, an exact clone, a
     near clone and a re-uploaded vector of the previous batch, and in
@@ -84,7 +91,7 @@ def _batches(spark, n=24):
 def _guard(spark, root):
     return StreamingIngestGuard(
         spark, str(root / "ck"), clean_dir=str(root / "clean"), params=P,
-        near=True, near_params=P, passages=True, passage_window=8, passage_params=P,
+        near=True, near_params=P, passages=True, passage_params=P,
         embeddings=True, emb_dim=DIM, emb_params=P, compact_every=None,
     )
 

@@ -631,13 +631,11 @@ class TestIncrementalPassages:
         assert got["10"].n_hist_windows == 11
         assert got["10"].hist_positions == list(range(40, 51))
         assert got["11"].n_hist_windows == 0
-        ann_b.unpersist()
         # masking drops the paragraph from doc 10 entirely (union of
         # spans [40, 101) = everything from position 40 on)
-        clean = mask_against_history(
-            spark, b, ck, now=2, window=50, params=self.P, update_state=False
-        )
+        clean = mask_against_history(spark, b, ann_b, window=50)
         rows = {r.doc_id: r for r in clean.collect()}
+        ann_b.unpersist()
         assert rows[10].n_tokens_removed == 60
         assert not any(w.startswith("pp") for w in rows[10].text_clean.split())
         assert rows[11].n_tokens_removed == 0
@@ -791,17 +789,21 @@ class TestIncrementalPassages:
         g.process_batch(b1, 1)
         assert spark.read.parquet(clean).count() == 2
 
-    def test_spark_path_publishes_each_duplicate_id_row_once(self, spark, ck, guard_spark_path):
+    def test_spark_path_publishes_each_duplicate_id_row_once(
+        self, spark, ck, guard_spark_path, monkeypatch
+    ):
         """A batch holding a doc id twice takes the guard's Spark path;
         each surviving row is published once, masked in place — also
         when its doc id repeats history passages."""
         import os
 
         from fuggetabouspark.dataops import StreamingIngestGuard
+        from fuggetabouspark.dataops import incremental as I
 
+        monkeypatch.setattr(I, "_PASSAGE_WINDOW", 3)
         clean = os.path.join(ck, "clean")
         g = StreamingIngestGuard(
-            spark, ck, clean_dir=clean, passages=True, passage_window=3,
+            spark, ck, clean_dir=clean, passages=True,
             params=self.P, passage_params=self.P, compact_every=None,
         )
         ddl = "doc_id long, text string"
@@ -871,6 +873,67 @@ class TestIncrementalPassages:
         out3 = spark.read.parquet(clean).where("_epoch = 3").collect()[0]
         assert out3._passage_tokens_removed == 60
         assert not any(w.startswith("zz") for w in out3.text.split())
+
+
+    @staticmethod
+    def _files(root):
+        import os
+
+        return sorted(
+            (os.path.join(d, f), os.path.getsize(os.path.join(d, f)))
+            for d, _, fs in os.walk(root) for f in fs
+        )
+
+    def test_window_is_fixed_per_checkpoint(self, spark, ck):
+        """A passage checkpoint built at window 50 refuses a call at
+        window 30 before anything is probed or written: 30-word
+        fingerprints never match a retained 50-word passage, so every
+        repeat would pass unflagged."""
+        from fuggetabouspark.dataops import incremental_passages
+        from fuggetabouspark.dataops.incremental import PASSAGES
+
+        para = [f"fx{j}" for j in range(60)]
+        ddl = "doc_id long, text string"
+        a = spark.createDataFrame([self._doc(1, 10, para)], ddl)
+        incremental_passages(spark, a, ck, now=1, window=50, params=self.P).unpersist()
+        b = spark.createDataFrame([self._doc(2, 10, para)], ddl)
+        before = self._files(ck)
+        for update_state in (False, True):
+            with pytest.raises(ValueError, match="window=50 stride=1"):
+                incremental_passages(
+                    spark, b, ck, now=2, window=30, params=self.P,
+                    update_state=update_state,
+                )
+        assert self._files(ck) == before
+        assert [(m["window"], m["stride"]) for m in PASSAGES.log(ck).metas()] == [(50, 1)]
+        # at the checkpoint's own window the repeat is flagged
+        r = incremental_passages(
+            spark, b, ck, now=2, window=50, params=self.P, update_state=False
+        ).collect()[0]
+        assert r.n_hist_windows == 60 - 50 + 1
+
+    def test_guard_refuses_a_checkpoint_of_another_window(self, spark, ck):
+        """The guard's passages run at window 50; a trigger on a
+        checkpoint built at window 30 raises before anything is probed
+        or written."""
+        import os
+
+        from fuggetabouspark.dataops import StreamingIngestGuard, incremental_passages
+
+        ddl = "doc_id long, text string"
+        para = [f"gw{j}" for j in range(60)]
+        incremental_passages(
+            spark, spark.createDataFrame([self._doc(1, 10, para)], ddl), ck, now=1,
+            window=30, params=self.P,
+        ).unpersist()
+        g = StreamingIngestGuard(
+            spark, ck, clean_dir=os.path.join(ck, "clean"), passages=True,
+            params=self.P, passage_params=self.P, compact_every=None,
+        )
+        before = self._files(ck)
+        with pytest.raises(ValueError, match="window=30 stride=1"):
+            g.process_batch(spark.createDataFrame([self._doc(2, 10, para)], ddl), 0)
+        assert self._files(ck) == before
 
 
 class TestIncrementalEmbeddingDedup:
@@ -1074,6 +1137,7 @@ TestIncrementalPassagesSparkPath = on_guard_spark_path(
     TestIncrementalPassages,
     "test_guard_passages_mode_masks_clean_output",
     "test_passage_state_covers_published_survivors_only",
+    "test_guard_refuses_a_checkpoint_of_another_window",
 )
 TestIncrementalEmbeddingDedupSparkPath = on_guard_spark_path(
     TestIncrementalEmbeddingDedup,

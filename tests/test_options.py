@@ -1,10 +1,15 @@
-"""Every option of the public API is set by some caller in the repo.
+"""Every option of the public API is set by some caller in the repo,
+and by some caller outside the tests.
 
 An optional parameter that nothing sets is a configuration no test or
-workload ever runs. This scan (AST only; no Spark session) reads every
+workload ever runs; one that only tests set is a test hook or a choice
+no user makes. This scan (AST only; no Spark session) reads every
 ``.py`` file of the repo and checks each optional parameter of a public
 module-level function under ``fuggetabouspark/`` and of the
 ``StreamingIngestGuard`` and ``StreamingSketchBuilder`` constructors.
+Callers under ``tests/`` and ``examples/`` do not count as callers for
+the second check, unless the option is listed in TEST_ONLY with a
+reason.
 
 A parameter counts as set when some call passes it, by keyword or by
 position. A value passed on under the same parameter name from an
@@ -16,7 +21,8 @@ function of the same file that returns one; any other ``**`` sets every
 option of the callee.
 
 Run it as a script (``python tests/test_options.py [repo]``) to print
-the count of settable values and the options nothing sets.
+the count of settable values, the options nothing sets and the options
+only tests set.
 """
 
 from __future__ import annotations
@@ -34,6 +40,30 @@ ALLOWED = {
     ("local_corpus", "seed"),
     ("spark_corpus", "seed"),
     ("write_corpus", "seed"),
+}
+# Directories whose calls are not callers for the test-only check.
+TEST_DIRS = ("tests", "examples")
+# Options that only calls under TEST_DIRS set, each with the reason it
+# stays an option.
+TEST_ONLY = {
+    ("exact_dedup", "max_ids"): "bounds one group's id list; a test plants a huge group",
+    ("ngram_jaccard_pairs", "threshold"): "the Jaccard cut of a standalone verify step",
+    ("ngram_jaccard_pairs", "candidates"): "verifies LSH candidates instead of every pair",
+    ("incremental_near_dup", "update_state"): "a pure query of near history",
+    ("encode_png", "cycle_filters"): "the unfiltered encoding the filter cycling is measured against",
+    ("embedding_near_dup", "bits"): "coarse bucket width, data dependent",
+    ("embedding_near_dup", "fine_bits"): "the split width of an over-full bucket",
+    ("embedding_near_dup", "max_bucket"): "when a bucket is split, data dependent",
+    ("ivf_centroids", "iters"): "Lloyd rounds, a cost/quality trade",
+    ("pq_topk", "query_chunk"): "driver memory per query chunk",
+    ("local_corpus", "scale"): "the fixture generator's corpus size",
+    ("hash64_strings", "seed"): "an independent hash family",
+    ("read_corpus", "fmt"): "the input format of a user's corpus",
+    ("build_sketches", "stbf_fanin"): "STBF partial fan-in, a memory/tier trade",
+    ("seen_within", "window"): "a narrower query window than the sketch's own",
+    ("StreamingSketchBuilder", "decay"): "whether each epoch decays its state",
+    ("StreamingSketchBuilder", "partitions"): "the partials each epoch collects",
+    ("StreamingSketchBuilder", "tick_col"): "the event-time column of a stream",
 }
 
 
@@ -145,9 +175,10 @@ class _Calls(ast.NodeVisitor):
         self.generic_visit(node)
 
 
-def scan(root: pathlib.Path = REPO):
+def scan(root: pathlib.Path = REPO, skip: tuple[str, ...] = ()):
     """(every settable value, the ones no call sets), each a sorted
-    list of (module, function, option)."""
+    list of (module, function, option). Calls in files under the
+    top-level directories ``skip`` do not count."""
     sources = list(_sources(root))
     targets, fns = [], {}
     for path, tree in sources:
@@ -174,8 +205,9 @@ def scan(root: pathlib.Path = REPO):
             for o in _options(n, False)
         ]
     setby: dict = {}
-    for _, tree in sources:
-        _Calls(fns, setby, tree).visit(tree)
+    for path, tree in sources:
+        if path.relative_to(root).parts[0] not in skip:
+            _Calls(fns, setby, tree).visit(tree)
 
     def is_set(key, seen=frozenset()):
         deps = setby.get(key)
@@ -199,9 +231,30 @@ def test_allowed_options_still_exist():
     assert ALLOWED <= {t[1:] for t in targets}
 
 
+def _test_only(root: pathlib.Path = REPO):
+    """The options that only calls under TEST_DIRS set."""
+    unset = set(scan(root)[1])
+    return [t for t in scan(root, TEST_DIRS)[1] if t not in unset]
+
+
+def test_no_option_only_tests_set():
+    only = _test_only()
+    unlisted = [t for t in only if t[1:] not in TEST_ONLY]
+    assert not unlisted, "options only tests set:\n" + "\n".join(
+        f"  {m}: {f}({o})" for m, f, o in unlisted
+    )
+    # an entry whose option went, or gained a caller, leaves the list
+    assert set(TEST_ONLY) == {t[1:] for t in only}
+
+
 if __name__ == "__main__":
-    targets, unset = scan(pathlib.Path(sys.argv[1]) if len(sys.argv) > 1 else REPO)
+    root = pathlib.Path(sys.argv[1]) if len(sys.argv) > 1 else REPO
+    targets, unset = scan(root)
     unused = [t for t in unset if t[1:] not in ALLOWED]
     print(f"{len(targets)} settable values, {len(unset)} set by nothing, {len(unused)} not allowed")
     for m, f, o in unused:
+        print(f"  {m}: {f}({o})")
+    only = [t for t in _test_only(root) if t[1:] not in TEST_ONLY]
+    print(f"{len(only)} set only under {', '.join(TEST_DIRS)} and not in TEST_ONLY")
+    for m, f, o in only:
         print(f"  {m}: {f}({o})")

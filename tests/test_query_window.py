@@ -3,12 +3,13 @@
 A decaying sketch forgets sightings older than its window_ticks, so a
 query over a wider window could miss them: a false negative, which the
 library never gives in-window. Pinned here:
-- queries.seen_within and incremental_dedup(window=...) raise ValueError
-  for a window wider than the sketch's window_ticks, and a narrower one
-  answers exactly like the sketch re-windowed by queries._with_window;
-- expire_ledgers prunes each family at its own sketch's window_ticks, so
-  in one call two families with different windows each keep exactly
-  their own in-window rows.
+- queries.seen_within raises ValueError for a window wider than the
+  sketch's window_ticks, and a narrower one answers exactly like the
+  sketch re-windowed by queries._with_window;
+- the incremental families are probed at their sketch's own
+  window_ticks, and expire_ledgers prunes each family at that window,
+  so in one call two families with different windows each keep
+  exactly their own in-window rows.
 """
 
 import shutil
@@ -16,15 +17,9 @@ import tempfile
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from fuggetabouspark import queries as Q
-from fuggetabouspark.dataops import (
-    StreamingIngestGuard,
-    expire_ledgers,
-    incremental_dedup,
-    load_dedup_state,
-)
+from fuggetabouspark.dataops import StreamingIngestGuard, expire_ledgers
 from fuggetabouspark.dataops import incremental as I
 from fuggetabouspark.params import TimingParams
 from fuggetabouspark.sketches import TimingBloomFilter
@@ -65,36 +60,6 @@ class TestSeenWithinWindow:
             assert got == (keys >= 9 - w).tolist()
         default = [s for _, _, s in Q.seen_within(sks, "t", keys, now=8)]
         assert default == sk.contains_batch(keys, 8).tolist() == [True] * 8
-
-
-class TestIncrementalDedupWindow:
-    P = TimingParams(capacity=1000, error=0.001, window_ticks=5)
-
-    def test_window_is_only_narrowed(self, spark, ck):
-        incremental_dedup(spark, spark.createDataFrame(
-            [(1, "old text"), (2, "older text")], DDL), ck, now=1, params=self.P)
-        incremental_dedup(spark, spark.createDataFrame(
-            [(3, "recent text")], DDL), ck, now=4, params=self.P)
-        shard = spark.createDataFrame(
-            [(10, "old text"), (11, "recent text"), (12, "new text")], DDL
-        )
-        with pytest.raises(ValueError, match="exceeds the sketch's window_ticks 5"):
-            incremental_dedup(spark, shard, ck, now=5, window=6, update_state=False)
-
-        sk = load_dedup_state(spark, ck)
-        fps = np.array(
-            [r.fp for r in shard.select(F.xxhash64("text").alias("fp")).collect()], np.int64
-        )
-        want = {None: [True, True, False], 5: [True, True, False], 2: [False, True, False]}
-        for w, flags in want.items():
-            ann = incremental_dedup(spark, shard, ck, now=5, window=w, update_state=False)
-            got = [r.is_dup_history for r in ann.orderBy("doc_id").collect()]
-            assert got == flags, w
-            rewindowed = sk if w is None else Q._with_window(sk, w)
-            assert got == rewindowed.contains_batch(fps, 5).tolist(), w
-            ann.unpersist()
-        # the queries were pure: still one committed shard per ingest
-        assert len(I.EXACT.log(ck).metas()) == 2
 
 
 class TestExpireMixedWindows:

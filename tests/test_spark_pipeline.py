@@ -12,6 +12,7 @@
 
 import numpy as np
 import pytest
+from conftest import crash_after_shards
 
 from fuggetabouspark import queries as Q
 from fuggetabouspark.fixtures import docs_per_tick, local_corpus, spark_corpus
@@ -473,10 +474,9 @@ class TestResume:
         ck1 = str(tmp_path / "ck_full")
         full = build_resumable(spark, df, specs, ck1, n_shards=4, tick_col=_tick_col(), partitions=4)
         ck2 = str(tmp_path / "ck_interrupted")
-        with pytest.raises(RuntimeError, match="injected failure"):
+        with pytest.raises(RuntimeError, match="injected failure"), crash_after_shards(2):
             build_resumable(
-                spark, df, specs, ck2, n_shards=4, tick_col=_tick_col(), partitions=4,
-                fail_after_shard=2,
+                spark, df, specs, ck2, n_shards=4, tick_col=_tick_col(), partitions=4
             )
         resumed = build_resumable(spark, df, specs, ck2, n_shards=4, tick_col=_tick_col(), partitions=4)
         assert set(full) == set(resumed)

@@ -270,16 +270,16 @@ def main():
     import tempfile
 
     from fuggetabouspark.dataops import incremental_dedup
-    from fuggetabouspark.dataops.incremental import annotate_against_history
+    from fuggetabouspark.dataops.incremental import _shard_fps, annotate_against_history
 
     ck = tempfile.mkdtemp(prefix="fgs_plans_incr_")
     try:
         incremental_dedup(
             spark, docs.select("doc_id", "text").limit(64), ck, now=1, partitions=4
         ).unpersist()
-        p10 = plan_of(
-            annotate_against_history(spark, docs.select("doc_id", "text"), ck, now=2)
-        )
+        p10 = plan_of(annotate_against_history(
+            spark, _shard_fps(docs.select("doc_id", "text"), "text", 2), ck, now=2
+        ))
     finally:
         shutil.rmtree(ck, ignore_errors=True)
     sections.append((
