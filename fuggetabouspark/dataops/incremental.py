@@ -785,6 +785,14 @@ class StreamingIngestGuard:
       epoch is replaced on re-run (epoch-partitioned dynamic
       overwrite).
 
+    Reading ``clean_dir``: each epoch is one ``_epoch=N`` partition
+    directory. Spark's parquet reader sees every epoch, but pyarrow's
+    dataset discovery skips path components that start with ``_``, so
+    ``pyarrow.dataset.dataset`` or ``pyarrow.parquet.read_table`` over
+    ``clean_dir`` returns no rows: read it with Spark, or read one
+    ``_epoch=N`` directory at a time with pyarrow. The directory name
+    stays, because existing readers address ``_epoch=N`` by name.
+
     Fixed inputs: a batch's ``doc_id`` keys its docs, ``text`` holds
     their text and, with ``embeddings=True``, ``embedding`` their
     vectors. The dedup clock tick of epoch e is now_for_epoch(e) = e + 1,

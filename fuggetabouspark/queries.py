@@ -124,7 +124,8 @@ def seen_within_distributed(spark, state_df, spec_name, probes_df, now, only_see
     shape of incremental ingest. The cache keeps the newest
     _PROBE_CACHE_SLOTS (4) entries, evicting the oldest, so worker
     memory is bounded at four state-sets — one per state a guard
-    trigger on the Spark path probes."""
+    trigger on the Spark path probes. The probe runs at most one task
+    per core (see seen_within_payloads)."""
     from pyspark.sql import functions as F
 
     rows = state_df.where(F.col("spec") == spec_name).select("group", "payload").collect()
@@ -141,8 +142,15 @@ def seen_within_payloads(spark, payloads, probes_df, now, only_seen=False):
     guide §5: the driver should do almost no data work).
 
     ``payloads``: list of (group, bytes). Same output as
-    seen_within_distributed for a state_df holding those rows."""
+    seen_within_distributed for a state_df holding those rows.
+
+    The probe frame is coalesced (no shuffle) to at most one task per
+    core before the mapInArrow (session._one_task_per_core), so a probe
+    over many small scan splits pays the Python worker's fixed per-task
+    cost once per core, not once per split."""
     import pyarrow as pa
+
+    from .session import _one_task_per_core
 
     cache_key = _payload_cache_key(payloads)
     bc = spark.sparkContext.broadcast(payloads)
@@ -191,7 +199,7 @@ def seen_within_payloads(spark, payloads, probes_df, now, only_seen=False):
                     )
                 yield out
 
-    return probes_df.mapInArrow(probe, schema=SEEN_DDL)
+    return _one_task_per_core(probes_df).mapInArrow(probe, schema=SEEN_DDL)
 
 
 def windowed_merge(

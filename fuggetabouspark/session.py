@@ -50,6 +50,20 @@ def get_spark(
     return spark
 
 
+def _one_task_per_core(df):
+    """``df`` coalesced to at most ``sparkContext.defaultParallelism``
+    partitions: the width of every library stage that sends a caller's
+    frame through an Arrow UDF. Each Python UDF task pays a fixed
+    worker cost before it reads a row (pyspark's worker re-reads its
+    cached zip-import directories at every task start), so a stage with
+    more tasks than cores pays that cost for splits that would have
+    queued anyway. ``coalesce`` merges splits without a shuffle and
+    never widens a frame. The trade-off: the width is read when the
+    plan is built, so under dynamic allocation it counts only the
+    cores registered at call time."""
+    return df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+
+
 def ship_package(spark: SparkSession) -> str:
     """Ship this package to executor Python workers — the programmatic
     equivalent of ``spark-submit --py-files`` (BASELINE.json:6).

@@ -8,11 +8,13 @@
 - resume-from-checkpoint == uninterrupted build
 - estimates cross-checked against Spark builtins / exact SQL
 - treeAggregate global merge == groupBy merge
+- Arrow stages over a caller's frame run at most one task per core
+  (the storage-aligned build: at most ``partitions``), output unchanged
 """
 
 import numpy as np
 import pytest
-from conftest import crash_after_shards
+from conftest import crash_after_shards, jobs_in_group
 
 from fuggetabouspark import queries as Q
 from fuggetabouspark.fixtures import docs_per_tick, local_corpus, spark_corpus
@@ -168,6 +170,77 @@ class TestInvariance:
         via_group = merge_rows_to_sketches(rows)[("hllg", "")]
         assert global_sk.to_bytes() == via_group.to_bytes()
         partials.unpersist()
+
+
+WIDE = 12  # scan splits of the width test's frames: more than any cap
+
+
+def _first_stage_tasks(spark, group, fn):
+    """Run fn() in Spark job group ``group``: (fn's result, the task
+    count of the group's first stage: the stage that holds the Arrow
+    UDF, because the caller's frame reaches it without an exchange)."""
+    out, _ = jobs_in_group(spark, group, fn)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed asynchronously
+    tracker = sc.statusTracker()
+    stages = [s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds]
+    return out, tracker.getStageInfo(min(stages)).numTasks
+
+
+@pytest.mark.parametrize("stage", ["probe", "probe_only_seen", "sigs_tokens", "build_storage"])
+def test_arrow_stage_width(spark, built, corpus_pdf, stage):
+    """An Arrow stage over a caller's frame of WIDE splits runs at most
+    one task per core (defaultParallelism), and a storage-aligned build
+    at most ``partitions`` tasks, with the output of the uncoalesced
+    reference: probe rows equal as sets, each doc's signature unchanged,
+    build payloads byte-equal for the byte-invariant specs."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from fuggetabouspark.dataops.dedup import _NGRAM, _minhash_sigs, minhash_signatures_tokens
+
+    width = spark.sparkContext.defaultParallelism
+    assert WIDE > width
+    if stage.startswith("probe"):
+        only_seen = stage == "probe_only_seen"
+        sks = merge_rows_to_sketches(built)
+        keys = np.arange(0, 60_000, 7, dtype=np.int64)
+        now = WINDOW
+        state = spark.createDataFrame(
+            [("tbf", g, bytearray(sk.to_bytes())) for (s, g), sk in sks.items() if s == "tbf"],
+            "spec string, group string, payload binary",
+        )
+        probes = spark.range(0, 60_000, 7, WIDE).select(F.col("id").alias("key"))
+        out = Q.seen_within_distributed(spark, state, "tbf", probes, now, only_seen)
+        rows, tasks = _first_stage_tasks(spark, stage, out.collect)
+        full = set(Q.seen_within(sks, "tbf", keys, now))
+        assert {s for *_, s in full} == {True, False}
+        ref = {row for row in full if row[2] or not only_seen}
+        assert {(r["group"], r["key"], r["seen"]) for r in rows} == ref
+        assert len(rows) == len(ref)
+    elif stage == "sigs_tokens":
+        out = minhash_signatures_tokens(spark_corpus(spark, "xs", partitions=WIDE), num_hashes=64)
+        rows, tasks = _first_stage_tasks(spark, stage, out.collect)
+        wh = pa.array([t.astype(np.int64) for t in corpus_pdf.tokens], pa.list_(pa.int64()))
+        ref = dict(zip(corpus_pdf.doc_id, _minhash_sigs(wh, 64, _NGRAM).tolist()))
+        assert {r["doc_id"]: list(r["sig"]) for r in rows} == ref
+        assert len(rows) == len(ref)
+    else:
+        width = 2
+        out = build_sketches(
+            spark_corpus(spark, "xs", partitions=WIDE),
+            [s for s in ALL_SPECS if s.name in BYTE_INVARIANT],
+            tick_col=_tick_col(),
+            partitions=width,
+            align="storage",
+        )
+        rows, tasks = _first_stage_tasks(spark, stage, out.collect)
+        a, b = _payloads(built), _payloads(rows)
+        assert set(b) == {k for k in a if k[0] in BYTE_INVARIANT}
+        for key in b:
+            assert a[key] == b[key], f"{key}: coalesced build diverged"
+        assert corpus_digest(rows) == corpus_digest(built)
+    assert tasks <= width, f"{stage}: {tasks} Arrow tasks, cap {width}"
 
 
 class TestSemantics:
