@@ -35,7 +35,7 @@ from pyspark.sql.types import (
 
 from ..hashing import spark_xxhash64, splitmix64
 from ..io import TEXT
-from ..session import _one_task_per_core
+from ..session import _merge_small_splits
 from .textstats import _split_words, _word_hashes
 
 _U64 = np.uint64
@@ -129,12 +129,12 @@ def minhash_signatures(df: DataFrame, num_hashes: int = 64, shingle: int = 3) ->
     whole-batch one (which pays DRAM twice for a 47 MB transient);
     value-identical to both (test_minhash_batch_matches_per_doc_
     reference). k seeded permutations via splitmix64(h ^ seed_i).
-    The UDF runs at most one task per core (session._one_task_per_core:
-    a no-shuffle coalesce of the scan splits), and each doc's signature
-    does not depend on the partitioning."""
+    Scan splits finer than Spark's default are merged (no shuffle)
+    before the UDF by session._merge_small_splits, and each doc's
+    signature does not depend on the partitioning."""
     word_hash = _word_hashes(_split_words(F.col(TEXT)))
     src = df.select("doc_id", "source", word_hash.alias("wh"))
-    return _one_task_per_core(src).mapInArrow(
+    return _merge_small_splits(src).mapInArrow(
         _make_sig_udf(num_hashes, shingle),
         schema=f"doc_id {_id_type(df)}, source string, sig array<long>",
     )
@@ -153,8 +153,8 @@ def minhash_signatures_tokens(df: DataFrame, num_hashes: int = 64) -> DataFrame:
     json:15): documents arrive pre-tokenized as tokens:array<int32>,
     so the signature shingles token _NGRAM-grams directly — no text split,
     no per-word xxhash64, the scan reads only (doc_id, source, tokens).
-    Same kernel as the text path (shared _make_sig_udf), at the same
-    width: at most one task per core."""
+    Same kernel as the text path (shared _make_sig_udf), with the same
+    split merge."""
     src = df.select(
         "doc_id",
         "source",
@@ -164,7 +164,7 @@ def minhash_signatures_tokens(df: DataFrame, num_hashes: int = 64) -> DataFrame:
             F.col("tokens").cast("array<long>"), F.array().cast("array<long>")
         ).alias("wh"),
     )
-    return _one_task_per_core(src).mapInArrow(
+    return _merge_small_splits(src).mapInArrow(
         _make_sig_udf(num_hashes, _NGRAM),
         schema=f"doc_id {_id_type(df)}, source string, sig array<long>",
     )

@@ -250,8 +250,11 @@ def _sketch_delta(
 
     ``partitions`` caps the partials collected to the driver
     (``coalesce``, which does not shuffle): driver memory for the
-    delta is at most ``partitions`` × payload. An empty frame gives no
-    row — a shard that retained nothing adds nothing to the sketch.
+    delta is at most ``partitions`` × payload. It is a hard cap on
+    driver memory, so it does not follow session._merge_small_splits,
+    which widens with the input's size and stands aside under dynamic
+    allocation. An empty frame gives no row — a shard that retained
+    nothing adds nothing to the sketch.
     ``params``: see _delta_spec."""
     from ..pipeline import PARTIAL_DDL, make_update_fn
 

@@ -2,9 +2,6 @@
 
     read corpus ──► repartition(P, source ⊕ salt)      explicit shuffle,
                                                         skew-salted
-                    (align="storage": coalesce(P)       no shuffle: the
-                                                        scan splits merge
-                                                        into ≤ P tasks)
       ──► mapInArrow(update)                            Arrow batches →
             ListArray.flatten() → numpy scatter         explode-free, no
             ONE partial sketch row per (spec×group)     per-row Python
@@ -344,11 +341,10 @@ def build_sketches(
     - ``tick_col``: a Column expression evaluated as int64 event-time
       tick per row (default: constant 1). Making time an explicit
       column keeps decay deterministic (SURVEY.md §7.6).
-    - ``partitions``: the map-side width, i.e. the number of update
-      tasks and so of partials: the repartition width for
-      align="shuffle", and the cap the scan splits are coalesced to for
-      align="storage"; default 2 × defaultParallelism (BASELINE.json:6
-      explicit repartitioning).
+    - ``partitions``: explicit repartition width; default
+      2 × defaultParallelism (BASELINE.json:6 explicit repartitioning).
+      With align="storage" the update runs one task per scan split,
+      whatever ``partitions``.
     - ``salt_mod``: stage-1 salt fan-out for hot groups. The salted
       pre-merge runs only when ``partitions`` > 64, i.e. when a group
       would otherwise collect > 64 partials in a single merge task (the
@@ -382,9 +378,13 @@ def build_sketches(
       shuffle is the dominant cost and buys nothing; skew is handled
       by the scan's file splitting (a hot source's files split into
       many map tasks automatically via maxPartitionBytes). The splits
-      are coalesced (no shuffle) to at most ``partitions`` update
-      tasks: each Python task pays a fixed worker start-up cost, so a
-      task per split would only add start-ups and partials.
+      are not merged, unlike the probe's and the signatures' (session.
+      _merge_small_splits): an update task holds one sketch per (spec,
+      group) it has seen until it ends, so a task over many sources'
+      splits holds all their sketches. With perfbench's 7 corpus specs
+      (local[2], 200 docs per source), peak worker RSS was 139 MB per
+      split against 193, 390 and 638 MB for tasks over 4, 16 and 32
+      sources (ROADMAP item 11).
     """
     from pyspark.sql import functions as F
 
@@ -398,9 +398,7 @@ def build_sketches(
     if align not in ("storage", "shuffle"):
         raise ValueError(f"align must be 'shuffle' or 'storage', got {align!r}")
     if align == "storage":
-        # sketch the scan splits in place, no corpus shuffle: coalesce
-        # merges them into at most ``partitions`` map tasks
-        salted = sel.coalesce(partitions)
+        salted = sel  # sketch the scan splits in place — no corpus shuffle
     else:
         # explicit skew-salted shuffle: spread each hot group over many
         # partitions; the salt is a deterministic hash of doc_id

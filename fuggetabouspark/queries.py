@@ -124,8 +124,9 @@ def seen_within_distributed(spark, state_df, spec_name, probes_df, now, only_see
     shape of incremental ingest. The cache keeps the newest
     _PROBE_CACHE_SLOTS (4) entries, evicting the oldest, so worker
     memory is bounded at four state-sets — one per state a guard
-    trigger on the Spark path probes. The probe runs at most one task
-    per core (see seen_within_payloads)."""
+    trigger on the Spark path probes. Splits of ``probes_df`` finer than
+    Spark's default are merged before the probe (see
+    seen_within_payloads)."""
     from pyspark.sql import functions as F
 
     rows = state_df.where(F.col("spec") == spec_name).select("group", "payload").collect()
@@ -144,13 +145,13 @@ def seen_within_payloads(spark, payloads, probes_df, now, only_seen=False):
     ``payloads``: list of (group, bytes). Same output as
     seen_within_distributed for a state_df holding those rows.
 
-    The probe frame is coalesced (no shuffle) to at most one task per
-    core before the mapInArrow (session._one_task_per_core), so a probe
-    over many small scan splits pays the Python worker's fixed per-task
-    cost once per core, not once per split."""
+    The probe frame's splits are merged (no shuffle) before the
+    mapInArrow by session._merge_small_splits, so a probe over scan
+    splits finer than Spark's default pays the Python worker's fixed
+    per-task cost once per core, not once per split."""
     import pyarrow as pa
 
-    from .session import _one_task_per_core
+    from .session import _merge_small_splits
 
     cache_key = _payload_cache_key(payloads)
     bc = spark.sparkContext.broadcast(payloads)
@@ -199,7 +200,7 @@ def seen_within_payloads(spark, payloads, probes_df, now, only_seen=False):
                     )
                 yield out
 
-    return _one_task_per_core(probes_df).mapInArrow(probe, schema=SEEN_DDL)
+    return _merge_small_splits(probes_df).mapInArrow(probe, schema=SEEN_DDL)
 
 
 def windowed_merge(

@@ -50,18 +50,35 @@ def get_spark(
     return spark
 
 
-def _one_task_per_core(df):
-    """``df`` coalesced to at most ``sparkContext.defaultParallelism``
-    partitions: the width of every library stage that sends a caller's
-    frame through an Arrow UDF. Each Python UDF task pays a fixed
-    worker cost before it reads a row (pyspark's worker re-reads its
-    cached zip-import directories at every task start), so a stage with
-    more tasks than cores pays that cost for splits that would have
-    queued anyway. ``coalesce`` merges splits without a shuffle and
-    never widens a frame. The trade-off: the width is read when the
-    plan is built, so under dynamic allocation it counts only the
-    cores registered at call time."""
-    return df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+# Spark's default spark.sql.files.maxPartitionBytes: no merged task reads more
+_SPLIT_BYTES = 128 << 20
+
+
+def _merge_small_splits(df):
+    """``df`` coalesced (``coalesce``: no shuffle, never wider) to
+    max(``sparkContext.defaultParallelism``, plan size / 128 MB) tasks:
+    the input of a library stage that sends a caller's frame through an
+    Arrow UDF. Each Python UDF task pays a fixed worker cost, about
+    0.2 CPU-s, before it reads a row (ROADMAP item 11), so splits finer
+    than Spark's default sizing, such as a caller's small
+    ``spark.sql.files.maxPartitionBytes``, are merged into one task per
+    core. Under Spark's default scan sizing nothing merges: a small scan
+    already has about one split per core, and a large one keeps its
+    default-sized (128 MB) tasks, so load balancing and retry cost stay
+    Spark's. ``defaultParallelism`` is the core count unless
+    ``spark.default.parallelism`` is set; on a cluster it counts the
+    cores of the executors registered when the plan is built, so a plan
+    built before any register gets a width of 2, which the 128 MB cap
+    bounds. The
+    frame keeps its splits when its plan has no size estimate, and
+    under dynamic allocation, where executors come and go after the
+    plan is built."""
+    sc = df.sparkSession.sparkContext
+    if sc.getConf().get("spark.dynamicAllocation.enabled", "false").lower() == "true":
+        return df
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    tasks = max(sc.defaultParallelism, -(-size // _SPLIT_BYTES))
+    return df.coalesce(tasks) if tasks < 2**31 else df  # 2**63 - 1: no estimate
 
 
 def ship_package(spark: SparkSession) -> str:

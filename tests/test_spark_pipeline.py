@@ -8,8 +8,9 @@
 - resume-from-checkpoint == uninterrupted build
 - estimates cross-checked against Spark builtins / exact SQL
 - treeAggregate global merge == groupBy merge
-- Arrow stages over a caller's frame run at most one task per core
-  (the storage-aligned build: at most ``partitions``), output unchanged
+- Arrow stages over a caller's frame of fine splits run at most one task
+  per core, output unchanged; the storage-aligned build keeps one task per
+  split
 """
 
 import numpy as np
@@ -189,11 +190,12 @@ def _first_stage_tasks(spark, group, fn):
 
 @pytest.mark.parametrize("stage", ["probe", "probe_only_seen", "sigs_tokens", "build_storage"])
 def test_arrow_stage_width(spark, built, corpus_pdf, stage):
-    """An Arrow stage over a caller's frame of WIDE splits runs at most
-    one task per core (defaultParallelism), and a storage-aligned build
-    at most ``partitions`` tasks, with the output of the uncoalesced
-    reference: probe rows equal as sets, each doc's signature unchanged,
-    build payloads byte-equal for the byte-invariant specs."""
+    """The probe's and the signatures' Arrow stage over a small frame of
+    WIDE splits runs at most one task per core (defaultParallelism),
+    while a storage-aligned build keeps one update task per split (a
+    merged task would hold every source's sketches). Outputs equal the
+    per-split references: probe rows as sets, each doc's signature,
+    build payloads byte for byte for the byte-invariant specs."""
     import pyarrow as pa
     from pyspark.sql import functions as F
 
@@ -218,6 +220,7 @@ def test_arrow_stage_width(spark, built, corpus_pdf, stage):
         ref = {row for row in full if row[2] or not only_seen}
         assert {(r["group"], r["key"], r["seen"]) for r in rows} == ref
         assert len(rows) == len(ref)
+        assert tasks <= width, f"{tasks} probe tasks, cap {width}"
     elif stage == "sigs_tokens":
         out = minhash_signatures_tokens(spark_corpus(spark, "xs", partitions=WIDE), num_hashes=64)
         rows, tasks = _first_stage_tasks(spark, stage, out.collect)
@@ -225,22 +228,43 @@ def test_arrow_stage_width(spark, built, corpus_pdf, stage):
         ref = dict(zip(corpus_pdf.doc_id, _minhash_sigs(wh, 64, _NGRAM).tolist()))
         assert {r["doc_id"]: list(r["sig"]) for r in rows} == ref
         assert len(rows) == len(ref)
+        assert tasks <= width, f"{tasks} signature tasks, cap {width}"
     else:
-        width = 2
         out = build_sketches(
             spark_corpus(spark, "xs", partitions=WIDE),
             [s for s in ALL_SPECS if s.name in BYTE_INVARIANT],
             tick_col=_tick_col(),
-            partitions=width,
+            partitions=2,
             align="storage",
         )
         rows, tasks = _first_stage_tasks(spark, stage, out.collect)
         a, b = _payloads(built), _payloads(rows)
         assert set(b) == {k for k in a if k[0] in BYTE_INVARIANT}
         for key in b:
-            assert a[key] == b[key], f"{key}: coalesced build diverged"
+            assert a[key] == b[key], f"{key}: storage build diverged"
         assert corpus_digest(rows) == corpus_digest(built)
-    assert tasks <= width, f"{stage}: {tasks} Arrow tasks, cap {width}"
+        assert tasks == WIDE, f"{tasks} update tasks over {WIDE} splits"
+
+
+def test_merge_small_splits_bounds(spark, monkeypatch):
+    """session._merge_small_splits merges a small frame's splits into
+    one task per core, keeps a large frame's tasks at 128 MB by the
+    plan's estimate, and leaves a frame without an estimate, or any
+    frame under dynamic allocation, as it is. Plans only: no job runs."""
+    from pyspark import SparkContext
+
+    from fuggetabouspark.session import _SPLIT_BYTES, _merge_small_splits
+
+    width = spark.sparkContext.defaultParallelism
+    small = spark.range(0, 1_000, 1, WIDE)
+    assert _merge_small_splits(small).rdd.getNumPartitions() == width
+    large = spark.range(0, 10**10, 1, 1_000)  # 8 bytes a row: 80 GB by the estimate
+    assert _merge_small_splits(large).rdd.getNumPartitions() == -(-8 * 10**10 // _SPLIT_BYTES)
+    unsized = spark.createDataFrame(spark.sparkContext.parallelize([(i,) for i in range(WIDE)], WIDE), "a long")
+    assert _merge_small_splits(unsized) is unsized
+    conf = spark.sparkContext.getConf().set("spark.dynamicAllocation.enabled", "true")
+    monkeypatch.setattr(SparkContext, "getConf", lambda self: conf)
+    assert _merge_small_splits(small) is small
 
 
 class TestSemantics:
