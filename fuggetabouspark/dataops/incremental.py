@@ -58,10 +58,10 @@ the caller's step of ShardLog.commit, written one of two ways:
   the ledger rows whose key is a sketch hit (the exact, near and
   embedding Spark plans broadcast the same sets through the driver),
   and at most _LOCAL_NEAR_PAIRS (2^20) intra-batch candidate pairs. Larger
-  batches, other column types, non-unique or null doc ids and hotter
-  band buckets take the Spark path unchanged, with identical
-  artifacts. expire_ledgers likewise rewrites a ledger of at most
-  2^14 rows on the driver.
+  batches, other column types and hotter band buckets take the Spark
+  path unchanged, with identical artifacts; a batch with a repeated or
+  null doc id is refused on either path. expire_ledgers likewise
+  rewrites a ledger of at most 2^14 rows on the driver.
 
 One record per family: the four granularities (exact doc, near doc,
 passage, embedding) keep the SAME three artifacts — a decaying
@@ -69,8 +69,9 @@ membership sketch and a lineage dir (the family's ShardLog) plus one or
 two ledgers — under their own subdirectory, so each is described by
 one _Family record (EXACT, NEAR, PASSAGES, EMB: subdir, sketch spec,
 ledger report name → (dir, DDL)). The recovery rules — lineage-gated
-loads, merge-all, same-epoch exclusion, the commit order, compaction —
-are ShardLog's, stated once in fuggetabouspark.state. Every other
+loads, merge-all, the commit order, compaction — are ShardLog's,
+stated once in fuggetabouspark.state; the guard's replay rule (which
+epoch-tagged shards are history) is _family_state's. Every other
 per-family step is written once over the record: the lineage-gated
 ledger read (_ledger), the sketch probe (_probe), the shard commit
 (_commit_shard: the delta, then the ledgers inside ShardLog.commit),
@@ -119,6 +120,7 @@ from ..io import EMBEDDING, TEXT
 from ..state import (
     ShardLog,
     _commit_table,
+    _ddl_columns,
     _ddl_schema,
     _heal_swap,
     _live,
@@ -296,15 +298,28 @@ def _merged_delta(partials, name: str) -> list[dict]:
     return [{"spec": name, "group": "", "payload": sk.to_bytes(), "n_items": int(sk.n_items)}]
 
 
-def _family_state(checkpoint_dir: str, fam: _Family, exclude_epoch=None):
-    """``(done, sketch, raw)``: ``fam``'s completed shards (without the
-    shards of ``exclude_epoch``), its membership sketch merged over them
-    (None before the first) and the stored payload when one row makes
-    it up (ShardLog.load). Only the ungrouped ``(spec, '')`` sketch is
-    the family's: a grouped row in the same directory is a different
-    sketch."""
+def _family_state(checkpoint_dir: str, fam: _Family):
+    """``(done, sketch, raw)``: ``fam``'s history shards, its membership
+    sketch merged over them (None before the first) and the stored
+    payload when one row makes it up (ShardLog.load). Only the
+    ungrouped ``(spec, '')`` sketch is the family's: a grouped row in
+    the same directory is a different sketch.
+
+    The guard's replay rule: a shard whose lineage meta carries a guard
+    ``epoch`` is history only once the exact lineage, the epoch's
+    marker, records that epoch. Until then it belongs to an attempt
+    that did not finish — a crash its replay must not read as history
+    (every doc would dup itself), or an abandoned epoch that never
+    published its docs. Exact and untagged shards are history once
+    complete; the exact lineage is read only when ``fam`` holds tagged
+    shards. ``done`` restricts every ledger verify, so the keys of an
+    unmarked shard that a compaction folded in flag nothing."""
     log = fam.log(checkpoint_dir)
-    done = log.done(exclude_epoch)
+    metas = log.metas()
+    if fam is not EXACT and any("epoch" in m for m in metas):
+        marked = {m.get("epoch") for m in EXACT.log(checkpoint_dir).metas()}
+        metas = [m for m in metas if "epoch" not in m or m["epoch"] in marked]
+    done = [int(m["shard"]) for m in metas]
     sk, raw = log.load(done, with_raw=True).get((fam.spec, ""), (None, None))
     return done, sk, raw
 
@@ -337,7 +352,7 @@ def compact_dedup_checkpoint(spark, checkpoint_dir: str):
 
 def _ledger(spark, checkpoint_dir: str, fam: _Family, name: str, done: list[int],
             now: int | None = None, w: int | None = None) -> DataFrame:
-    """Ledger ``name`` of ``fam`` restricted to the completed shards
+    """Ledger ``name`` of ``fam`` restricted to the history shards
     ``done`` and, when ``w`` is given, to ticks in [now - w + 1, now] —
     the window filter mirrors TimingBloomFilter.contains_batch. Only
     called once a probe found a non-empty sketch, which implies a
@@ -432,21 +447,20 @@ def completed_shards(spark, checkpoint_dir: str) -> list[dict]:
     return EXACT.log(checkpoint_dir).metas()
 
 
-def _probe(spark, checkpoint_dir: str, fam: _Family, keys: DataFrame, now: int,
-           exclude_epoch):
+def _probe(spark, checkpoint_dir: str, fam: _Family, keys: DataFrame, now: int):
     """Probe ``fam``'s broadcast sketch with the one-column frame
     ``keys``: ``(hits, w, done)`` — the DISTINCT keys the sketch has
     seen within its own window_ticks ``w`` (same column name as
-    ``keys``), the window itself, and the completed shards the state
-    was merged from (the shards the ledger verify must read). None when
-    the family has no history yet.
+    ``keys``), the window itself, and the history shards the state
+    was merged from (_family_state; the shards the ledger verify must
+    read). None when the family has no history yet.
 
     The stored payload goes straight to the broadcast when one row
     makes up the state, skipping a zlib re-compress of the bucket array
     per probe (round 6)."""
     from ..queries import seen_within_payloads, sk_window
 
-    done, sk, raw = _family_state(checkpoint_dir, fam, exclude_epoch)
+    done, sk, raw = _family_state(checkpoint_dir, fam)
     if sk is None:
         return None
     w = sk_window(sk)
@@ -462,14 +476,14 @@ def _probe(spark, checkpoint_dir: str, fam: _Family, keys: DataFrame, now: int,
     return hits, w, done
 
 
-def _probe_local(checkpoint_dir: str, fam: _Family, keys, now: int, exclude_epoch):
+def _probe_local(checkpoint_dir: str, fam: _Family, keys, now: int):
     """_probe on the driver, for the int64 key array ``keys``: ``(hits,
     w, done)`` with ``hits`` the sorted distinct keys the driver-held
     sketch has seen within its own window ``w`` — no broadcast, no
     job."""
     from ..queries import sk_window
 
-    done, sk, _ = _family_state(checkpoint_dir, fam, exclude_epoch)
+    done, sk, _ = _family_state(checkpoint_dir, fam)
     if sk is None:
         return None
     keys = np.unique(np.asarray(keys, np.int64))
@@ -480,7 +494,7 @@ def _ledger_local(checkpoint_dir: str, fam: _Family, name: str, done: list[int],
                   key: str, values, columns: list[str], now: int | None = None,
                   w: int | None = None) -> pa.Table:
     """_ledger on the driver: the ``columns`` of ledger ``name``'s rows
-    in the completed shards ``done`` (and, when ``w`` is given, at
+    in the history shards ``done`` (and, when ``w`` is given, at
     ticks in [now - w + 1, now]) whose ``key`` is one of ``values``.
     pyarrow applies the filter while it scans, so only matching rows
     are held."""
@@ -527,7 +541,7 @@ def _commit_shard(
     log = fam.log(checkpoint_dir)
     shard = len(log.metas())
     first = next(iter(fam.ledgers))
-    key = fam.ledgers[first][1].split(" ", 1)[0]
+    key = _ddl_columns(fam.ledgers[first][1])[0][0]
     local = isinstance(rows[first], pa.Table)
     if local:
         delta = _sketch_keys(rows[first].column(key).combine_chunks(), tick, fam.spec, params)
@@ -545,10 +559,8 @@ def _commit_shard(
                 _commit_table(path, t, ddl)
                 continue
             derived = {"tick": tick, "shard": F.lit(shard)}
-            # the DDLs hold no struct types, so ", " separates columns
-            cols = [c.split(" ", 1) for c in ddl.split(", ")]
             rows[name].select(*(
-                derived.get(c, F.col(c)).cast(t).alias(c) for c, t in cols
+                derived.get(c, F.col(c)).cast(t).alias(c) for c, t in _ddl_columns(ddl)
             )).write.mode("append").parquet(path)
         if hook is not None:
             hook()
@@ -624,7 +636,6 @@ def annotate_against_history(
     fps: DataFrame,
     checkpoint_dir: str,
     now: int,
-    exclude_epoch=None,
 ) -> DataFrame:
     """The LAZY annotated-flags plan incremental_dedup materializes,
     over the shard's _shard_fps frame ``fps`` (as near_history_matches
@@ -641,7 +652,7 @@ def annotate_against_history(
     once saves two scan+hash passes over the shard text per action
     (round 6, guide §2.4; incremental_dedup does exactly this)."""
     # ---- history probe: broadcast sketch, then exact ledger verify ----
-    probe = _probe(spark, checkpoint_dir, EXACT, fps.select("fp"), now, exclude_epoch)
+    probe = _probe(spark, checkpoint_dir, EXACT, fps.select("fp"), now)
     if probe is not None:
         hits, w, done = probe
         # candidates are the tiny side: broadcast them INTO the ledger
@@ -689,7 +700,6 @@ def incremental_dedup(
     update_state: bool = True,
     meta_extra: dict | None = None,
     pre_lineage_hook=None,
-    exclude_epoch=None,
 ) -> DataFrame:
     """Dedup ``new_df`` against corpus history AND itself; optionally
     append the survivors to the history state at tick ``now`` (every
@@ -730,7 +740,7 @@ def incremental_dedup(
     # 6, guide §2.4 — measured 3 corpus scans in one job). Shard-sized
     # rows only (doc_id, fp, tick ≈ 25 B/doc).
     fps = _shard_fps(new_df, text_col, now).localCheckpoint(eager=True)
-    ann = annotate_against_history(spark, fps, checkpoint_dir, now, exclude_epoch)
+    ann = annotate_against_history(spark, fps, checkpoint_dir, now)
     # localCheckpoint, not persist: the annotated plan READS the ledger
     # path this function is about to APPEND to, and Spark's cache
     # manager invalidates-and-recaches any cached plan whose source
@@ -779,14 +789,14 @@ class StreamingIngestGuard:
       so a skipped epoch has by construction already published its
       clean output; code-review r04 found the previous ordering could
       lose an epoch's output to a crash between lineage and clean);
-    - a HALF-committed epoch (crash anywhere before lineage) is
-      invisible to the loader (lineage-gated recovery) and its re-run
-      is self-correcting by the operator's own semantics: any doc
-      whose fingerprint already reached the ledger is flagged
-      duplicate and retained zero times, so replaying docs can never
-      double-enter history. The clean_dir output of a half-committed
-      epoch is replaced on re-run (epoch-partitioned dynamic
-      overwrite).
+    - a HALF-committed epoch (crash anywhere before that marker) is
+      invisible to its re-run. This is the replay rule
+      (_family_state): the near, passage and embedding shards of epoch
+      e carry ``epoch`` e in their lineage meta and are history only
+      once the exact lineage records e, so an epoch never retried
+      never suppresses a later doc either. The clean_dir output of a
+      half-committed epoch is replaced on re-run (epoch-partitioned
+      dynamic overwrite).
 
     Reading ``clean_dir``: each epoch is one ``_epoch=N`` partition
     directory. Spark's parquet reader sees every epoch, but pyarrow's
@@ -798,11 +808,14 @@ class StreamingIngestGuard:
 
     Fixed inputs: a batch's ``doc_id`` keys its docs, ``text`` holds
     their text and, with ``embeddings=True``, ``embedding`` their
-    vectors. The dedup clock tick of epoch e is now_for_epoch(e) = e + 1,
-    and every family is probed at its sketch's own window_ticks (set
-    through ``params`` / ``near_params`` / ``passage_params`` /
-    ``emb_params``). The near family runs MinHash-LSH at threshold 0.8
-    with 64 hashes of 3-word shingles in 16 bands of 4 rows, the
+    vectors. A doc is keyed by its doc id as a string, so a batch
+    whose doc ids repeat or hold a null raises ValueError before
+    anything is probed or written. The dedup clock tick of epoch e is
+    now_for_epoch(e) = e + 1, and every family is probed at its
+    sketch's own window_ticks (set through ``params`` /
+    ``near_params`` / ``passage_params`` / ``emb_params``). The near
+    family runs MinHash-LSH at threshold 0.8 with 64 hashes of 3-word
+    shingles in 16 bands of 4 rows, the
     passage family 50-word windows at stride 1, the embedding family
     cosine 0.9 over 8 tables of 12 bits: defined once at the top of
     this module (io.TEXT, io.EMBEDDING, _NEAR_*, _PASSAGE_*, _EMB_*) for
@@ -817,15 +830,22 @@ class StreamingIngestGuard:
     crash mid-commit leaves an invisible temp file, never a torn row,
     and the epoch marker is either fully present or absent. Each
     trigger first reads the batch once, bounded: at most 2^14 + 1 rows
-    in one Spark job (_read_local). A batch that fits — at most
-    _LOCAL_TRIGGER_ROWS = 2^14 rows, columns of integral, float,
-    double, boolean, string or binary type or arrays of them, unique
-    non-null doc ids — runs every family on the driver over that Arrow
-    batch and writes its ledgers and its clean partition with pyarrow
-    too: one Spark job per trigger, driver memory bounded by the batch
-    plus the hit-matching ledger rows. Any other batch runs each
-    family's Spark operator, whose ledgers and clean output are Spark
-    writes; ``partitions`` caps the sketch-delta partials each of
+    in one Spark job (_read_local). A batch that fits runs every
+    family on the driver over that Arrow batch and writes its ledgers
+    and its clean partition with pyarrow too: one Spark job per
+    trigger, driver memory bounded by the batch plus the hit-matching
+    ledger rows. These batches take the Spark path instead:
+
+    - more than _LOCAL_TRIGGER_ROWS = 2^14 rows;
+    - a column whose type is not integral, float, double, boolean,
+      string or binary, nor an array of one;
+    - a ``text`` column that is not a string;
+    - with ``near=True``, more than _LOCAL_NEAR_PAIRS intra-batch
+      candidate pairs (a hot band bucket).
+
+    Such a batch first runs one aggregate that checks its doc ids, then
+    each family's Spark operator, whose ledgers and clean output are
+    Spark writes; ``partitions`` caps the sketch-delta partials each of
     those commits collects to the driver (``coalesce``, no shuffle).
     Both paths commit in the same order and leave identical artifacts,
     so one checkpoint may mix them.
@@ -835,12 +855,8 @@ class StreamingIngestGuard:
     protocol: near state commits first (its own lineage under near/),
     the exact-dedup lineage row remains the FINAL epoch marker, and
     the clean output keeps only docs that survive BOTH operators.
-    Replay of an epoch whose near half committed but whose final
-    marker didn't re-runs near with ``exclude_epoch`` set, so a prior
-    attempt's own shards are not treated as history (every doc would
-    otherwise be flagged a near-dup of itself and the epoch's clean
-    output lost); the retry's duplicate near-state rows are harmless —
-    merge-all membership semantics — and bounded by compaction/expiry.
+    A retry's duplicate near-state rows are harmless (merge-all
+    membership semantics) and bounded by compaction/expiry.
 
     ``expire_every`` (round 5, VERDICT r04 #1) prunes decayed ledger
     rows every N batches via expire_ledgers, keeping checkpoint bytes
@@ -855,7 +871,7 @@ class StreamingIngestGuard:
     passage masked out of ``text`` (drop-all-on-the-new-side;
     n_tokens_removed appended as ``_passage_tokens_removed``).
     Passage state commits under its own lineage strictly before the
-    exact marker, with the same exclude_epoch replay protection;
+    exact marker, under the same replay rule;
     sketch sizing via passage_params (capacity ≈ retained distinct
     window fps). Requires ``clean_dir`` (the survivor set is only
     defined there).
@@ -950,6 +966,14 @@ class StreamingIngestGuard:
         if self.embeddings:
             _check_geometry(self.checkpoint_dir, EMB, _emb_geometry(_EMB_BITS, self.emb_dim))
         tbl = _read_local(batch_df, TEXT, self.near or self.passages, self.passages)
+        if tbl is None:
+            # the read also declines repeated or null doc ids; one
+            # aggregate tells them apart from its other reasons
+            n, ids = batch_df.select(
+                F.count(F.lit(1)), F.count_distinct(F.col("doc_id").cast("string"))
+            ).first()
+            if n != ids:
+                raise ValueError(f"epoch {ep}: the batch holds a repeated or null doc_id")
         if tbl is None or not self._process_local(tbl, ep, now):
             self._process_spark(batch_df, ep, now)
         self._batches_done += 1
@@ -973,13 +997,13 @@ class StreamingIngestGuard:
         ids, n = tbl.column("_fgs_id"), tbl.num_rows
         keep = np.ones(n, bool)  # survives every doc-level family
         if self.embeddings:
-            keep &= ~_emb_flags_local(ck, ids, tbl.column(EMBEDDING), now, self.emb_dim, ep)
+            keep &= ~_emb_flags_local(ck, ids, tbl.column(EMBEDDING), now, self.emb_dim)
         if self.near:
-            near = _near_local(ck, ids, tbl.column("_fgs_wh"), now, ep)
+            near = _near_local(ck, ids, tbl.column("_fgs_wh"), now)
             if near is None:
                 return False
         fps = tbl.column("_fgs_fp").to_numpy()
-        hist, intra = _exact_local(ck, ids, fps, now, ep)
+        hist, intra = _exact_local(ck, ids, fps, now)
         if self.near:
             near_hist, near_intra, sig, bkeys = near
             near_keep = ~near_hist & ~near_intra
@@ -1062,20 +1086,17 @@ class StreamingIngestGuard:
                 self.spark, batch_df, self.checkpoint_dir, now=now,
                 dim=self.emb_dim, params=self.emb_params,
                 partitions=self.partitions, id_col="doc_id",
-                update_state=False, exclude_epoch=ep,
+                update_state=False,
             )
 
         near_ann = None
         if self.near:
             # near state commits under its own lineage, before the
-            # exact lineage row below (the epoch's final marker). On a
-            # crash-replay, exclude_epoch keeps a prior attempt's
-            # committed near shards out of the history this attempt
-            # probes (see class doc).
+            # exact lineage row below (the epoch's final marker)
             near_ann = incremental_near_dup(
                 self.spark, batch_df, self.checkpoint_dir, now=now,
                 params=self.near_params, partitions=self.partitions,
-                meta_extra={"epoch": ep}, exclude_epoch=ep,
+                meta_extra={"epoch": ep},
             )
 
         def publish_clean(ann):
@@ -1112,9 +1133,8 @@ class StreamingIngestGuard:
                 out = out.localCheckpoint(eager=True)
             if self.embeddings:
                 # survivor-only semantic state commit (flags were
-                # computed on the full batch above); no probe happens
-                # here, so replay safety needs no epoch exclusion —
-                # but the shard is epoch-tagged for it anyway
+                # computed on the full batch above), tagged with the
+                # epoch for the replay rule
                 commit_emb_state(
                     self.spark, out, self.checkpoint_dir, now=now,
                     dim=self.emb_dim, params=self.emb_params, id_col="doc_id",
@@ -1128,16 +1148,14 @@ class StreamingIngestGuard:
                     self.spark, out, self.checkpoint_dir, now=now,
                     window=_PASSAGE_WINDOW, params=self.passage_params,
                     partitions=self.partitions,
-                    meta_extra={"epoch": ep}, exclude_epoch=ep,
+                    meta_extra={"epoch": ep},
                 )
                 # the survivors are masked in place, each row its own
                 # text, with the annotation reused (no second kernel
-                # pass). One drops row per doc id: a batch holding a doc
-                # id twice has it twice in the annotation too, and a
-                # join on it would repeat those rows
+                # pass)
                 drops = pann.where(F.size("hist_positions") > 0).select(
                     F.col("doc_id").alias("_k"), F.col("hist_positions").alias("_drops")
-                ).dropDuplicates(["_k"])
+                )
                 out = _mask_spans(
                     out.withColumn("_k", F.col("doc_id").cast("string")).join(drops, "_k", "left"),
                     _PASSAGE_WINDOW, "_passage_tokens_removed",
@@ -1152,7 +1170,6 @@ class StreamingIngestGuard:
             self.spark, batch_df, self.checkpoint_dir, now=now,
             params=self.params, partitions=self.partitions,
             meta_extra={"epoch": ep}, pre_lineage_hook=publish_clean,
-            exclude_epoch=ep,
         )
 
     def start(self, input_path: str, schema, trigger_seconds: int | None = 2,
@@ -1223,7 +1240,6 @@ def near_history_matches(
     checkpoint_dir: str,
     now: int,
     threshold: float = _NEAR_THRESHOLD,
-    exclude_epoch=None,
 ) -> DataFrame:
     """The LAZY history-match plan of incremental_near_dup — exposed,
     like annotate_against_history, so tools/explain_plans.py can gate
@@ -1247,7 +1263,7 @@ def near_history_matches(
     The only exchanges left are distinct/groupBy over SHARD-sized
     candidate rows."""
     banded = _near_band_keys(sig)
-    probe = _probe(spark, checkpoint_dir, NEAR, banded.select("bkey"), now, exclude_epoch)
+    probe = _probe(spark, checkpoint_dir, NEAR, banded.select("bkey"), now)
     if probe is None:
         return spark.createDataFrame(
             [], "doc_id string, hist_doc_id string, est_jaccard double"
@@ -1301,7 +1317,6 @@ def incremental_near_dup(
     partitions: int | None = None,
     update_state: bool = True,
     meta_extra: dict | None = None,
-    exclude_epoch=None,
 ) -> DataFrame:
     """NEAR-duplicate dedup of a new ingest shard (``doc_id``,
     ``text``) against checkpointed history — the MinHash-LSH analogue
@@ -1340,10 +1355,9 @@ def incremental_near_dup(
     so neither operator's compaction, shard numbering, or recovery can
     touch the other's (code-review r04).
 
-    ``meta_extra`` / ``exclude_epoch`` mirror incremental_dedup
-    exactly (epoch tagging and same-epoch shard exclusion on
-    multi-operator replay — see StreamingIngestGuard). History is
-    probed at the sketch's own window_ticks.
+    ``meta_extra`` mirrors incremental_dedup; its key ``epoch`` is
+    reserved for StreamingIngestGuard's replay rule (_family_state).
+    History is probed at the sketch's own window_ticks.
     ``partitions`` caps the sketch-delta partials the state commit
     collects to the driver, as in incremental_dedup."""
     # one signature pass, reused below
@@ -1352,10 +1366,7 @@ def incremental_near_dup(
     # ---- history probe over band keys (lazy plan: see
     # near_history_matches — explicitly broadcast shard-side, gated by
     # tools/explain_plans.py check 13) ----
-    hist_matches = near_history_matches(
-        spark, sig, checkpoint_dir, now, threshold=threshold,
-        exclude_epoch=exclude_epoch,
-    )
+    hist_matches = near_history_matches(spark, sig, checkpoint_dir, now, threshold=threshold)
 
     # ---- intra-shard near-dups (batch LSH within the new shard) ----
     from .dedup import minhash_lsh_candidates
@@ -1459,7 +1470,6 @@ def incremental_passages(
     partitions: int | None = None,
     update_state: bool = True,
     meta_extra: dict | None = None,
-    exclude_epoch=None,
 ) -> DataFrame:
     """Flag every ``window``-token span (stride 1, _PASSAGE_STRIDE) of
     a new ingest shard's ``text`` (docs keyed by ``doc_id``) whose
@@ -1497,9 +1507,10 @@ def incremental_passages(
     scope — run the batch operator (mask_repeated_passages) on the
     shard first, then this against history.
     History is probed at the sketch's own window_ticks.
-    ``meta_extra`` / ``exclude_epoch`` mirror incremental_dedup (see
-    StreamingIngestGuard), and ``partitions`` caps the sketch-delta
-    partials the state commit collects to the driver, as there."""
+    ``meta_extra`` mirrors incremental_dedup; its key ``epoch`` is
+    reserved for StreamingIngestGuard's replay rule (_family_state).
+    ``partitions`` caps the sketch-delta partials the state commit
+    collects to the driver, as there."""
     from .dedup import passage_fingerprints
 
     _check_geometry(checkpoint_dir, PASSAGES, _passage_geometry(window))
@@ -1513,9 +1524,7 @@ def incremental_passages(
         src, window=window, stride=_PASSAGE_STRIDE, with_positions=True
     ).localCheckpoint(eager=True)
 
-    probe = _probe(
-        spark, checkpoint_dir, PASSAGES, wf.select("fp").distinct(), now, exclude_epoch
-    )
+    probe = _probe(spark, checkpoint_dir, PASSAGES, wf.select("fp").distinct(), now)
     if probe is not None:
         hits, w, done = probe
         # hit fps (tiny) broadcast into the ledger scan — history
@@ -1617,8 +1626,7 @@ def incremental_passages(
         # a crash after lineage but before the caller persisted the
         # masked text re-runs against history that now contains this
         # very shard and would mask the entire shard away (code-review
-        # r05 #2): the caller tags the shard (meta_extra epoch) and
-        # the re-run excludes it (exclude_epoch), as the guard does
+        # r05 #2): see mask_against_history
         _commit_shard(
             checkpoint_dir, PASSAGES, {"passage_ledger": newfp}, F.lit(now), now,
             params, partitions,
@@ -1641,10 +1649,10 @@ def mask_against_history(spark, new_df: DataFrame, ann: DataFrame,
     Masking and the state commit are separate calls on purpose: a crash
     before the caller persists the masked text makes a re-run see the
     shard's own fps as history and mask everything away (code-review
-    r05 #2). To commit state with a durable masked output, tag the
-    shard through incremental_passages' ``meta_extra`` and re-run a
-    crashed shard with ``exclude_epoch``, as StreamingIngestGuard
-    does."""
+    r05 #2). So persist the masked text of an ``update_state=False``
+    annotation before committing the shard; StreamingIngestGuard's
+    epoch tag (the ``meta_extra`` key ``epoch``, reserved for it) keeps
+    the shard out of history until its clean output lands."""
     drops = ann.where(F.size("hist_positions") > 0).select(
         F.col("doc_id").alias("_k"), F.col("hist_positions").alias("_drops")
     )
@@ -1739,13 +1747,13 @@ def _emb_keyed(tbl, keys) -> dict:
 
 def _emb_hist_matches(
     spark, src: DataFrame, keyed: DataFrame, checkpoint_dir: str, now: int,
-    threshold: float, dim: int, bits: int, exclude_epoch,
+    threshold: float, dim: int, bits: int,
 ) -> DataFrame:
     """The LAZY history-match plan of incremental_embedding_dedup —
     sketch probe over bucket keys, bucket-ledger candidate fetch, exact
     cosine verify against the vec ledger. Exposed (via
     emb_annotate_plan) so plan tools can explain the REAL operator."""
-    probe = _probe(spark, checkpoint_dir, EMB, keyed.select("bkey"), now, exclude_epoch)
+    probe = _probe(spark, checkpoint_dir, EMB, keyed.select("bkey"), now)
     if probe is None:
         return spark.createDataFrame(
             [], "vec_id string, hist_vec_id string, cosine double"
@@ -1932,14 +1940,14 @@ def _emb_verify(tbl, cand: tuple, keys, threshold: float):
 
 
 def _emb_annotate(
-    spark, new_df, checkpoint_dir, now, dim, threshold, bits, id_col, exclude_epoch,
+    spark, new_df, checkpoint_dir, now, dim, threshold, bits, id_col,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(src, keyed, lazy annotated plan) — the probe half shared by
     emb_annotate_plan and incremental_embedding_dedup."""
     _check_geometry(checkpoint_dir, EMB, _emb_geometry(bits, dim))
     src, keyed = _emb_src_keyed(new_df, dim, bits, id_col)
     hist_matches = _emb_hist_matches(
-        spark, src, keyed, checkpoint_dir, now, threshold, dim, bits, exclude_epoch,
+        spark, src, keyed, checkpoint_dir, now, threshold, dim, bits,
     )
     ann = (
         src.select("vec_id")
@@ -1964,7 +1972,7 @@ def emb_annotate_plan(
     use incremental_embedding_dedup(update_state=False): this raw plan
     re-reads the checkpoint on every action."""
     return _emb_annotate(
-        spark, new_df, checkpoint_dir, now, dim, _EMB_THRESHOLD, _EMB_BITS, "vec_id", None
+        spark, new_df, checkpoint_dir, now, dim, _EMB_THRESHOLD, _EMB_BITS, "vec_id"
     )[2]
 
 
@@ -1980,7 +1988,6 @@ def incremental_embedding_dedup(
     id_col: str = "vec_id",
     partitions: int | None = None,
     update_state: bool = True,
-    exclude_epoch=None,
 ) -> DataFrame:
     """Flag every vector of a new ingest shard (its ``embedding``
     column, keyed by ``id_col``) whose cosine similarity to a RETAINED
@@ -2011,11 +2018,10 @@ def incremental_embedding_dedup(
     vectors are fixed. Intra-shard duplicates are out of scope — run
     embedding_near_dup on the shard first (same composition rule as
     incremental_passages). ``bits`` must match the checkpoint's
-    (_check_geometry). ``exclude_epoch`` mirrors incremental_dedup,
-    and ``partitions`` caps the sketch-delta partials the state commit
-    collects to the driver, as there."""
+    (_check_geometry). ``partitions`` caps the sketch-delta partials
+    the state commit collects to the driver, as in incremental_dedup."""
     src, keyed, ann = _emb_annotate(
-        spark, new_df, checkpoint_dir, now, dim, threshold, bits, id_col, exclude_epoch,
+        spark, new_df, checkpoint_dir, now, dim, threshold, bits, id_col,
     )
     ann = ann.localCheckpoint(eager=True)
 
@@ -2059,7 +2065,8 @@ def commit_emb_state(
     (_EMB_BITS) and must match the checkpoint's (validated, like the
     probe path).
     ``partitions`` caps the sketch-delta partials the commit collects
-    to the driver, as in incremental_dedup."""
+    to the driver, as in incremental_dedup. The ``meta_extra`` key
+    ``epoch`` is reserved for StreamingIngestGuard's replay rule."""
     _check_geometry(checkpoint_dir, EMB, _emb_geometry(_EMB_BITS, dim))
     src, keyed = _emb_src_keyed(new_df, dim, _EMB_BITS, id_col)
     _commit_shard(
@@ -2093,8 +2100,7 @@ def _read_local(batch_df: DataFrame, text_col: str, wh: bool, words: bool):
     None — take the Spark path — when a column's type is not one of
     _LOCAL_SCALARS or an array of one, the text is not a string, the
     batch has more than _LOCAL_TRIGGER_ROWS rows, or its doc ids are
-    not unique and non-null (the Spark path's doc-id joins then drop or
-    repeat rows, which the driver path does not reproduce)."""
+    not unique and non-null (process_batch then refuses the batch)."""
     if not all(_local_type(f.dataType) for f in batch_df.schema.fields):
         return None
     cols = [
@@ -2105,14 +2111,14 @@ def _read_local(batch_df: DataFrame, text_col: str, wh: bool, words: bool):
     return _read_bounded(batch_df, cols, "_fgs_id", text_col, _LOCAL_TRIGGER_ROWS, None, wh, words)
 
 
-def _exact_local(checkpoint_dir: str, ids, fps: np.ndarray, now: int, exclude_epoch):
+def _exact_local(checkpoint_dir: str, ids, fps: np.ndarray, now: int):
     """annotate_against_history's flags over a driver-held batch
     (unique string ids, int64 fingerprints): ``(is_dup_history,
     is_dup_intra)``. Same rules: a history dup's fp is in the sketch
-    AND in an fp-ledger row of a completed shard inside the window; an
+    AND in an fp-ledger row of a history shard inside the window; an
     intra dup is any other doc that is not its fp's min doc id."""
     hist = np.zeros(len(ids), bool)
-    probe = _probe_local(checkpoint_dir, EXACT, fps, now, exclude_epoch)
+    probe = _probe_local(checkpoint_dir, EXACT, fps, now)
     if probe is not None and probe[0].size:
         hits, w, done = probe
         led = _ledger_local(checkpoint_dir, EXACT, "fp_ledger", done, "fp",
@@ -2148,7 +2154,7 @@ def _lsh_pairs(buckets: np.ndarray, rank: np.ndarray):
     return code // n, code % n
 
 
-def _near_local(checkpoint_dir: str, ids, wh, now: int, exclude_epoch):
+def _near_local(checkpoint_dir: str, ids, wh, now: int):
     """incremental_near_dup's flags over a driver-held batch, at the
     guard's geometry (_NEAR_*):
     ``(is_dup_history, is_dup_intra, sig, bkeys)`` with the signature
@@ -2184,7 +2190,7 @@ def _near_local(checkpoint_dir: str, ids, wh, now: int, exclude_epoch):
         )
 
     hist = np.zeros(n, bool)
-    probe = _probe_local(checkpoint_dir, NEAR, bkeys.ravel(), now, exclude_epoch)
+    probe = _probe_local(checkpoint_dir, NEAR, bkeys.ravel(), now)
     if probe is not None and probe[0].size:
         hits, w, done = probe
         hit = np.isin(bkeys.ravel(), hits)
@@ -2209,8 +2215,7 @@ def _near_local(checkpoint_dir: str, ids, wh, now: int, exclude_epoch):
     return hist, ~hist & intra, _sig_list(sigs), bkeys
 
 
-def _emb_flags_local(checkpoint_dir: str, ids, vecs, now: int, dim: int,
-                     exclude_epoch) -> np.ndarray:
+def _emb_flags_local(checkpoint_dir: str, ids, vecs, now: int, dim: int) -> np.ndarray:
     """incremental_embedding_dedup's is_emb_dup_history over a
     driver-held batch, at the guard's geometry (_EMB_*): the sketch-hit
     bucket-ledger rows and the candidates' vectors feed the verify
@@ -2220,7 +2225,7 @@ def _emb_flags_local(checkpoint_dir: str, ids, vecs, now: int, dim: int,
     keys = _emb_bucket_keys(dim, _EMB_BITS)
     _, bkey = keys(vecs)  # the key kernel's null / ragged guards
     dup = np.zeros(len(ids), bool)
-    probe = _probe_local(checkpoint_dir, EMB, bkey, now, exclude_epoch)
+    probe = _probe_local(checkpoint_dir, EMB, bkey, now)
     if probe is None or not probe[0].size:
         return dup
     hits, w, done = probe
@@ -2259,7 +2264,7 @@ def _passages_local(checkpoint_dir: str, out, now: int, params, ep: int):
     survivors ``out`` (a _read_local batch) of epoch ``ep``: commits
     the passage shard and returns the masked text and n_tokens_removed
     columns. Same rules: a history window's fp is in the sketch AND in
-    a passage-ledger row of a completed shard inside the window; a new
+    a passage-ledger row of a history shard inside the window; a new
     fp enters history through its first occurrence that overlaps no
     history window of its doc, keeper = min (doc_id, pos); the mask
     drops every word of every history window."""
@@ -2280,7 +2285,7 @@ def _passages_local(checkpoint_dir: str, out, now: int, params, ep: int):
         pos = rows["pos_list"].values.to_numpy().astype(np.int64)
         sizes = np.diff(rows["pos_list"].offsets.to_numpy())
     verified = np.zeros(0, np.int64)
-    probe = _probe_local(checkpoint_dir, PASSAGES, fp, now, ep)
+    probe = _probe_local(checkpoint_dir, PASSAGES, fp, now)
     if probe is not None and probe[0].size:
         hits, w, done = probe
         verified = _ledger_local(checkpoint_dir, PASSAGES, "passage_ledger", done, "fp",

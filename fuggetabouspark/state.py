@@ -30,13 +30,6 @@ one more, under its own subdirectory. Its protocol:
   the folded shards stay complete. Because the fold is lineage-gated
   too, an orphan is never folded in and then rebuilt by a resume,
   which would double-count every additive sketch.
-- ``done(exclude_epoch)`` leaves out the shards whose meta carries
-  that stream epoch: when a multi-family guard crashes after one
-  family committed the epoch but before the final marker, the replay
-  must not treat that family's own half-epoch output as history (every
-  doc would be flagged a duplicate of itself). A shard=-1 row never
-  holds such a shard, because compaction only runs after an epoch
-  fully commits.
 
 The log's owner picks one of two merge rules:
 
@@ -213,16 +206,19 @@ def _ddl_type(t: str):
     }[t]
 
 
+def _ddl_columns(ddl: str) -> list[tuple[str, str]]:
+    """``[(name, type)]`` of a flat Spark DDL string (``"fp long,
+    doc_id string, sig array<long>"``). Flat DDLs only: without struct
+    types, ", " separates columns."""
+    return [tuple(c.split(" ", 1)) for c in ddl.split(", ")]
+
+
 def _ddl_schema(ddl: str):
-    """The pyarrow schema of a flat Spark DDL string (``"fp long,
-    doc_id string, sig array<long>"``) — the types Spark's writer gives
-    those columns."""
+    """The pyarrow schema of a flat Spark DDL string — the types Spark's
+    writer gives those columns."""
     import pyarrow as pa
 
-    # flat DDLs only: no struct type, so ", " separates columns
-    return pa.schema([
-        pa.field(name, _ddl_type(t)) for name, t in (c.split(" ", 1) for c in ddl.split(", "))
-    ])
+    return pa.schema([pa.field(name, _ddl_type(t)) for name, t in _ddl_columns(ddl)])
 
 
 def _commit_table(path: str, table, ddl: str) -> None:
@@ -265,14 +261,9 @@ class ShardLog(NamedTuple):
         metas = _pa_read_table(self.lineage, columns=["meta"]).column("meta").to_pylist()
         return sorted((json.loads(m) for m in metas), key=lambda m: m["shard"])
 
-    def done(self, exclude_epoch=None) -> list[int]:
-        """Completed shard ids, without the shards an earlier attempt of
-        stream epoch ``exclude_epoch`` committed."""
-        return [
-            int(m["shard"])
-            for m in self.metas()
-            if exclude_epoch is None or m.get("epoch") != int(exclude_epoch)
-        ]
+    def done(self) -> list[int]:
+        """Completed shard ids."""
+        return [int(m["shard"]) for m in self.metas()]
 
     def commit(self, shard: int, state_rows: list[dict], meta: dict,
                before_lineage=None) -> None:
@@ -292,8 +283,9 @@ class ShardLog(NamedTuple):
 
     def load(self, done: list[int], with_raw: bool = False) -> dict:
         """{(spec, group): sketch} merged by the log's merge rule from
-        the rows of the completed shards ``done`` and the shard=-1
-        rows, read through _live; {} when ``done`` is empty.
+        the rows of the shards ``done`` (completed ones; the owner may
+        pass a subset) and the shard=-1 rows, read through _live; {}
+        when ``done`` is empty.
 
         ``with_raw=True`` maps each key to ``(sketch, payload)``:
         ``payload`` is the stored bytes when exactly one row made up

@@ -15,10 +15,15 @@ Pinned here:
 - job counts: a steady four-family trigger runs at most 3 Spark jobs,
   guard_spark_path really forces the Spark path, and a batch over the
   budget gives identical artifacts;
-- which batches fall back to the Spark path: duplicate or null doc ids,
-  other column types, a non-string text, a hot band bucket;
+- which batches the driver read declines: duplicate or null doc ids
+  (the guard then refuses them, on either path), other column types, a
+  non-string text, a hot band bucket;
 - driver-side expiry: 0 Spark jobs, the same report and rows as the
-  Spark rewrite, and a fully expired ledger still reads schema-less.
+  Spark rewrite, and a fully expired ledger still reads schema-less;
+- the replay rule, on both paths: a crash right after the near, emb or
+  passage lineage row, then a replay, leaves what an uninterrupted run
+  does, and an abandoned epoch's shards suppress nothing, before or
+  after a compaction.
 """
 
 import json
@@ -118,6 +123,16 @@ def _artifacts(spark, g):
     out["clean schema"] = clean.schema
     out["clean"] = _rowset(clean)
     return out
+
+
+def _files(g):
+    """(path, size) of every file under the guard's checkpoint and clean
+    output."""
+    return sorted(
+        (os.path.join(d, f), os.path.getsize(os.path.join(d, f)))
+        for root in (g.checkpoint_dir, g.clean_dir)
+        for d, _, fs in os.walk(root) for f in fs
+    )
 
 
 def _maintain(spark, g, now):
@@ -350,14 +365,151 @@ class TestUnreadableLineage:
                   "wb") as f:
             f.write(b"not a parquet file")
 
-        def files():
-            return sorted(
-                (os.path.join(d, f), os.path.getsize(os.path.join(d, f)))
-                for root in (g.checkpoint_dir, g.clean_dir)
-                for d, _, fs in os.walk(root) for f in fs
-            )
-
-        before = files()
+        before = _files(g)
         with pytest.raises(Exception, match="(?i)parquet"):
             g.process_batch(b1, 1)
-        assert files() == before
+        assert _files(g) == before
+
+
+def _clean(spark, g, epoch):
+    return _rowset(spark.read.parquet(g.clean_dir).where(f"_epoch = {epoch}"))
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    """The guard of _guard after _batches ran uninterrupted, on the
+    driver path (both paths leave the same artifacts)."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(I, "_PASSAGE_WINDOW", 8)
+        g = _guard(spark, tmp_path_factory.mktemp("uninterrupted"))
+        for e, b in enumerate(_batches(spark)):
+            g.process_batch(b, e)
+    return g
+
+
+class TestReplayRule:
+    """A near, passage or emb shard tagged with a guard epoch is history
+    only once the exact lineage records that epoch (the epoch's
+    marker)."""
+
+    @pytest.mark.parametrize("family", ["near", "emb", "passages"])
+    def test_crash_after_a_family_commit_then_replay(
+        self, spark, tmp_path, monkeypatch, guard_path, family, uninterrupted
+    ):
+        """Epoch 1 crashes right after ``family``'s lineage row lands, is
+        replayed, and epoch 2 runs: the clean output and every family's
+        epoch-2 counts equal an uninterrupted run's."""
+        from fuggetabouspark.state import ShardLog
+
+        batches, want = _batches(spark), uninterrupted
+        g = _guard(spark, tmp_path)
+        g.process_batch(batches[0], 0)
+        commit = ShardLog.commit
+
+        def crash(log, shard, state_rows, meta, before_lineage=None):
+            commit(log, shard, state_rows, meta, before_lineage)
+            if meta.get("epoch") == 1 and os.path.basename(log.root) == family:
+                raise RuntimeError("injected crash")
+
+        monkeypatch.setattr(ShardLog, "commit", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            g.process_batch(batches[1], 1)
+        monkeypatch.setattr(ShardLog, "commit", commit)
+        g.process_batch(batches[1], 1)
+        g.process_batch(batches[2], 2)
+
+        for e in (1, 2):
+            assert _clean(spark, g, e) == _clean(spark, want, e), e
+
+        def epoch2(guard, fam):
+            (meta,) = [m for m in fam.log(guard.checkpoint_dir).metas() if m["epoch"] == 2]
+            return {k: v for k, v in meta.items() if k != "shard"}
+
+        for fam in I._FAMILIES:
+            assert epoch2(g, fam) == epoch2(want, fam), fam.spec
+
+    @pytest.mark.parametrize("family", ["near", "emb", "passages"])
+    def test_abandoned_epoch_suppresses_nothing(self, spark, tmp_path, guard_path, family):
+        """Epoch 1's ``family`` shard committed, and epoch 1 was never
+        retried: epoch 2's copy of its text and vector is published
+        whole, and a compaction changes no probe's flags."""
+        from fuggetabouspark.dataops import (
+            commit_emb_state,
+            incremental_embedding_dedup,
+            incremental_near_dup,
+            incremental_passages,
+        )
+
+        def batch(*ids):
+            text = [" ".join(f"t{i}w{j}" for j in range(20)) for i in ids]
+            vecs = [np.random.default_rng(i).standard_normal(DIM).tolist() for i in ids]
+            return spark.createDataFrame(list(zip(ids, text, vecs)), DDL)
+
+        def doc(new_id, like):
+            return batch(like).withColumn("doc_id", F.lit(new_id).cast("long"))
+
+        g = _guard(spark, tmp_path)
+        ck, window = g.checkpoint_dir, I._PASSAGE_WINDOW
+        g.process_batch(batch(1), 0)
+        # epoch 1's shard of ``family`` lands (docs 10 and 11); its
+        # exact marker never does
+        abandoned = batch(10, 11)
+        if family == "near":
+            incremental_near_dup(spark, abandoned, ck, now=2, params=P, meta_extra={"epoch": 1})
+        elif family == "passages":
+            incremental_passages(spark, abandoned, ck, now=2, window=window, params=P,
+                                 meta_extra={"epoch": 1})
+        else:
+            commit_emb_state(spark, abandoned, ck, now=2, dim=DIM, params=P, id_col="doc_id",
+                             meta_extra={"epoch": 1})
+
+        # epoch 2 carries doc 10's text and vector as doc 20
+        g.process_batch(doc(20, 10), 2)
+        (row,) = spark.read.parquet(g.clean_dir).where("_epoch = 2").collect()
+        (want,) = doc(20, 10).collect()
+        assert (row.doc_id, row.text, row.embedding) == tuple(want)
+        assert row._passage_tokens_removed == 0
+
+        # docs 30 and 31 repeat docs 20 (history) and 11 (abandoned)
+        probe = doc(30, 10).unionByName(doc(31, 11))
+
+        def flags():
+            """{doc id: its flags}"""
+            if family == "near":
+                ann = incremental_near_dup(spark, probe, ck, now=3, update_state=False)
+                cols = ["doc_id", "is_near_dup_history", "hist_doc_id"]
+            elif family == "passages":
+                ann = incremental_passages(spark, probe, ck, now=3, window=window,
+                                           update_state=False)
+                cols = ["doc_id", "hist_positions"]
+            else:
+                ann = incremental_embedding_dedup(spark, probe, ck, now=3, dim=DIM,
+                                                  id_col="doc_id", update_state=False)
+                cols = ["vec_id", "is_emb_dup_history", "hist_vec_id"]
+            return {r[0]: tuple(r[1:]) for r in ann.select(*cols).collect()}
+
+        before = flags()
+        unflagged = ([],) if family == "passages" else (False, None)
+        assert before["31"] == unflagged != before["30"], before
+        compact = {"near": compact_near_checkpoint, "passages": compact_passages_checkpoint,
+                   "emb": compact_emb_checkpoint}[family]
+        compact(spark, ck)
+        assert flags() == before
+
+
+class TestDocIdRefusal:
+    def test_repeated_or_null_doc_id_is_refused(self, spark, tmp_path, guard_path):
+        """A batch whose doc ids repeat or hold a null raises before
+        anything is probed or written, on either path."""
+        g = StreamingIngestGuard(
+            spark, str(tmp_path / "ck"), clean_dir=str(tmp_path / "clean"),
+            params=TimingParams(10_000, 0.001, window_ticks=8), compact_every=None,
+        )
+        ddl = "doc_id long, text string"
+        g.process_batch(spark.createDataFrame([(1, "a b c d e")], ddl), 0)
+        before = _files(g)
+        for rows in ([(7, "a b c d e"), (7, "x y z w v"), (8, "a b c d e")],
+                     [(7, "x y z w v"), (None, "a b c d e")]):
+            with pytest.raises(ValueError, match="repeated or null doc_id"):
+                g.process_batch(spark.createDataFrame(rows, ddl), 1)
+            assert _files(g) == before

@@ -790,34 +790,26 @@ class TestIncrementalPassages:
         assert spark.read.parquet(clean).count() == 2
 
     def test_spark_path_publishes_each_duplicate_id_row_once(
-        self, spark, ck, guard_spark_path, monkeypatch
+        self, spark, ck, guard_spark_path
     ):
-        """A batch holding a doc id twice takes the guard's Spark path;
-        each surviving row is published once, masked in place — also
-        when its doc id repeats history passages."""
+        """A batch holding a doc id twice is refused on the guard's Spark
+        path too (the rows of one doc id cannot each be masked and
+        published on their own): it raises, and nothing is written."""
         import os
 
         from fuggetabouspark.dataops import StreamingIngestGuard
-        from fuggetabouspark.dataops import incremental as I
 
-        monkeypatch.setattr(I, "_PASSAGE_WINDOW", 3)
         clean = os.path.join(ck, "clean")
         g = StreamingIngestGuard(
             spark, ck, clean_dir=clean, passages=True,
             params=self.P, passage_params=self.P, compact_every=None,
         )
-        ddl = "doc_id long, text string"
-        g.process_batch(spark.createDataFrame(
-            [(1, "a b c d e"), (1, "a b c d e"), (2, "f g h i"), (3, "j k l m")], ddl
-        ), 0)
-        out0 = spark.read.parquet(clean).where("_epoch = 0")
-        assert sorted(r.doc_id for r in out0.collect()) == [1, 1, 2, 3]
-        g.process_batch(spark.createDataFrame(
-            [(7, "z a b c y"), (7, "z a b c y"), (8, "n o p")], ddl
-        ), 1)
-        out1 = sorted(tuple(r) for r in spark.read.parquet(clean).where("_epoch = 1")
-                      .select("doc_id", "text", "_passage_tokens_removed").collect())
-        assert out1 == [(7, "z y", 3), (7, "z y", 3), (8, "n o p", 0)]
+        with pytest.raises(ValueError, match="repeated or null doc_id"):
+            g.process_batch(spark.createDataFrame(
+                [(1, "a b c d e"), (1, "a b c d e"), (2, "f g h i"), (3, "j k l m")],
+                "doc_id long, text string",
+            ), 0)
+        assert os.listdir(ck) == [] and not os.path.exists(clean)
 
     def test_passage_state_covers_published_survivors_only(self, spark, ck):
         """code-review r05 (third pass): a doc dropped by doc-level
